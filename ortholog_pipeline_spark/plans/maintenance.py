@@ -1,6 +1,6 @@
 """§3.3 — the `--fixXRefDataSet` maintenance flow.
 
-One ``withColumn`` per table + a changed-row count + snapshot write — the Spark
+One fixed-rows frame per table, counted and staged as keyed updates — the Spark
 restatement of the full-scan UPDATE loops at OrthologRelationDao.java:707-767. The
 update rule is the reference's exact guard: replace the packed evidence set only when
 the sanitized form is STRICTLY shorter (Dao.java:720-732).
@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ortholog_pipeline_spark.functions.strings import sanitize_if_shorter
@@ -24,38 +25,28 @@ class FixXrefResult:
     associations_version: int
 
 
-def run_fix_xref_data_set(store: StateStore) -> FixXrefResult:
-    orthologs = store.read("orthologs")
-    fixed_o = orthologs.withColumn(
-        "xref_data_set", sanitize_if_shorter("xref_data_set")
-    )
-    n_o = (
-        fixed_o.join(
-            orthologs.select("genetogene_key", F.col("xref_data_set").alias("_old")),
-            "genetogene_key",
-        )
-        .filter(
-            F.col("xref_data_set").eqNullSafe(F.col("_old")) == F.lit(False)
-        )
-        .count()
-    )
-    o_version = store.write("orthologs", fixed_o)
+def _fixed_rows(df: DataFrame, col: str, fixed: Column) -> DataFrame:
+    """The rows whose ``col`` the fix changes, carrying the fixed value."""
+    return df.filter(~fixed.eqNullSafe(F.col(col))).withColumn(col, fixed)
 
-    associations = store.read("associations")
-    is_weak = F.col("assoc_type") == "weak_ortholog"
-    fixed_a = associations.withColumn(
+
+def run_fix_xref_data_set(store: StateStore) -> FixXrefResult:
+    """Both tables' fixed rows stage as keyed updates in one `StateStore.run`:
+    readers see both tables fixed or neither."""
+    fixed_o = _fixed_rows(
+        store.read("orthologs"),
+        "xref_data_set",
+        sanitize_if_shorter("xref_data_set"),
+    )
+    fixed_a = _fixed_rows(
+        store.read("associations").filter(F.col("assoc_type") == "weak_ortholog"),
         "assoc_subtype",
-        F.when(is_weak, sanitize_if_shorter("assoc_subtype")).otherwise(
-            F.col("assoc_subtype")
-        ),
+        sanitize_if_shorter("assoc_subtype"),
     )
-    n_a = (
-        fixed_a.join(
-            associations.select("assoc_key", F.col("assoc_subtype").alias("_old")),
-            "assoc_key",
-        )
-        .filter(F.col("assoc_subtype").eqNullSafe(F.col("_old")) == F.lit(False))
-        .count()
+    n_o, n_a = fixed_o.count(), fixed_a.count()
+    with store.run(["orthologs", "associations"]) as run:
+        run.stage("orthologs", updates=fixed_o, update_key=["genetogene_key"])
+        run.stage("associations", updates=fixed_a, update_key=["assoc_key"])
+    return FixXrefResult(
+        n_o, n_a, run.versions["orthologs"], run.versions["associations"]
     )
-    a_version = store.write("associations", fixed_a)
-    return FixXrefResult(n_o, n_a, o_version, a_version)

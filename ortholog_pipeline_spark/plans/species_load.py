@@ -307,326 +307,322 @@ def run_species_load(
 
     ``relations`` is the parsed + projected HCOP∪NCBI relation stream (U1) with
     external ids; ``run_ts`` stamps every write (C11 — captured once, deterministic).
+    The whole flow is one `StateStore.run` over orthologs + associations: both
+    tables publish together or not at all (SURVEY §1.4 run-snapshot contract).
     """
-    genes = store.read("genes")
-    rgd_ids = store.read("rgd_ids")
-    xrefs = store.read("xrefs")
-    orthologs = store.read("orthologs")
-    associations = store.read("associations")
-    agr = store.read("agr_orthologs")
+    with store.run(["orthologs", "associations"]) as run:
+        genes = store.read("genes")
+        rgd_ids = store.read("rgd_ids")
+        xrefs = store.read("xrefs")
+        orthologs = store.read("orthologs")
+        associations = store.read("associations")
+        agr = store.read("agr_orthologs")
 
-    # J1 resolution via broadcast dimension join
-    dim = resolve.build_resolution_dim(xrefs, genes, rgd_ids)
-    resolved = resolve.resolve_relations(relations, dim)
-    clean, dropped = resolve.split_resolved(resolved)
-    res_metrics = resolve.resolution_metrics(resolved)
+        # J1 resolution via broadcast dimension join
+        dim = resolve.build_resolution_dim(xrefs, genes, rgd_ids)
+        resolved = resolve.resolve_relations(relations, dim)
+        clean, dropped = resolve.split_resolved(resolved)
+        res_metrics = resolve.resolution_metrics(resolved)
 
-    # A1/A2 group + dedup-merge, then U4 symmetric closure. ``closed`` feeds the
-    # tier cascade AND the weak-association candidates AND (via picks) the conflict
-    # join — persist it so the parse→resolve→merge lineage computes once, not once
-    # per downstream action.
-    #
-    # Guard counters ride the materializing action via the Observation API
-    # (VERDICT r3 item 3): the non-human-source structural assert is observed on
-    # ``clean`` (pre-merge rows, where reversed twins don't exist yet) and the
-    # A2 unmergeable check on ``closed`` itself (the closure preserves null
-    # data_source rows, so the failure set is identical) — both fill during the
-    # ONE ``closed.count()`` instead of each paying its own parse→resolve scan.
-    # On the (exceptional) failure path we re-run the precise helper to produce
-    # the reference's detailed error.
-    clean_obs, human_guard = quality.observed(
-        clean,
-        "species_load_src_guard",
-        F.sum(
-            F.when(F.col("src_species_type_key") != grouping.HUMAN, 1).otherwise(0)
-        ).alias("n_nonhuman"),
-    )
-    merged = grouping.merge_duplicate_relations(clean_obs)
-    closed, merge_guard = quality.observed(
-        grouping.complement_closure(merged),
-        "species_load_merge_guard",
-        F.sum(F.when(F.col("data_source").isNull(), 1).otherwise(0)).alias(
-            "n_unmergeable"
-        ),
-    )
-    # localCheckpoint instead of persist: closed's parse->resolve->merge
-    # lineage re-enters EVERY downstream plan (tiers, weak candidates,
-    # conflict join); truncating it here shrinks each of those plan trees
-    # and the per-action planning cost with them
-    closed = IT.round_checkpoint(closed)
-
-    # existing orthologs relevant to this run: keys of either direction
-    in_scope = (F.col("dest_species_type_key") == dest_species_type_key) | (
-        F.col("src_species_type_key") == dest_species_type_key
-    )
-    species_scope = orthologs.filter(in_scope)
-    # ONE job serves all three driver-side scalars: the ortholog surrogate-key
-    # high-water mark, the churn-guard denominator (max() already visits every
-    # partition, so the conditional count rides the same scan), AND the
-    # association high-water mark — previously its own collect between the two
-    # snapshot commits; the union of the two 1-row aggregates runs both table
-    # scans as parallel stages of a single action (flow job-count budget,
-    # VERDICT r4 item 1).
-    #
-    # r11 (guide §2.6): this scalar job reads only the SNAPSHOT tables — it
-    # shares no producer edge with the parse→resolve→merge chain — so it is
-    # submitted from a second scheduler thread and OVERLAPS the `closed`
-    # materialization instead of following it. Spark job groups/descriptions
-    # inherit through InheritableThreadLocal, so the job-budget pin still
-    # counts it; job count is unchanged, only the serial wall between the two
-    # actions goes away.
-    _stats_plan = (
-        orthologs.agg(
-            F.max("genetogene_key").alias("_mx"),
-            F.sum(F.when(in_scope, 1).otherwise(0)).alias("_n_scope"),
+        # A1/A2 group + dedup-merge, then U4 symmetric closure. ``closed`` feeds
+        # the tier cascade AND the weak-association candidates AND (via picks)
+        # the conflict join — persist it so the parse→resolve→merge lineage
+        # computes once, not once per downstream action.
+        #
+        # Guard counters ride the materializing action via the Observation API
+        # (VERDICT r3 item 3): the non-human-source structural assert is observed on
+        # ``clean`` (pre-merge rows, where reversed twins don't exist yet) and the
+        # A2 unmergeable check on ``closed`` itself (the closure preserves null
+        # data_source rows, so the failure set is identical) — both fill during the
+        # ONE ``closed.count()`` instead of each paying its own parse→resolve scan.
+        # On the (exceptional) failure path we re-run the precise helper to produce
+        # the reference's detailed error.
+        clean_obs, human_guard = quality.observed(
+            clean,
+            "species_load_src_guard",
+            F.sum(
+                F.when(F.col("src_species_type_key") != grouping.HUMAN, 1).otherwise(0)
+            ).alias("n_nonhuman"),
         )
-        .select(F.lit("orth").alias("_t"), "_mx", "_n_scope")
-        .unionByName(
-            associations.agg(F.max("assoc_key").alias("_mx")).select(
-                F.lit("assoc").alias("_t"),
-                "_mx",
-                F.lit(None).cast("long").alias("_n_scope"),
+        merged = grouping.merge_duplicate_relations(clean_obs)
+        closed, merge_guard = quality.observed(
+            grouping.complement_closure(merged),
+            "species_load_merge_guard",
+            F.sum(F.when(F.col("data_source").isNull(), 1).otherwise(0)).alias(
+                "n_unmergeable"
+            ),
+        )
+        # localCheckpoint instead of persist: closed's parse->resolve->merge
+        # lineage re-enters EVERY downstream plan (tiers, weak candidates,
+        # conflict join); truncating it here shrinks each of those plan trees
+        # and the per-action planning cost with them
+        closed = IT.round_checkpoint(closed)
+
+        # existing orthologs relevant to this run: keys of either direction
+        in_scope = (F.col("dest_species_type_key") == dest_species_type_key) | (
+            F.col("src_species_type_key") == dest_species_type_key
+        )
+        species_scope = orthologs.filter(in_scope)
+        # ONE job serves all three driver-side scalars: the ortholog surrogate-key
+        # high-water mark, the churn-guard denominator (max() already visits every
+        # partition, so the conditional count rides the same scan), AND the
+        # association high-water mark — the union of the two 1-row aggregates runs
+        # both table scans as parallel stages of a single action (flow job-count
+        # budget, VERDICT r4 item 1).
+        #
+        # The job reads only the SNAPSHOT tables and shares no producer edge with
+        # the parse→resolve→merge chain, so `run.submit` runs it in the background
+        # while `closed` materializes (r11, guide §2.6); the run scope joins it
+        # before it commits or aborts.
+        _stats_plan = (
+            orthologs.agg(
+                F.max("genetogene_key").alias("_mx"),
+                F.sum(F.when(in_scope, 1).otherwise(0)).alias("_n_scope"),
+            )
+            .select(F.lit("orth").alias("_t"), "_mx", "_n_scope")
+            .unionByName(
+                associations.agg(F.max("assoc_key").alias("_mx")).select(
+                    F.lit("assoc").alias("_t"),
+                    "_mx",
+                    F.lit(None).cast("long").alias("_n_scope"),
+                )
             )
         )
-    )
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _stats_pool:
-        _stats_fut = _stats_pool.submit(_stats_plan.collect)
+        stats_job = run.submit(_stats_plan.collect)
         closed.count()
         if human_guard.get["n_nonhuman"]:
             raise ValueError("ortholog group keyed by a non-human source gene")
         if merge_guard.get["n_unmergeable"]:
             grouping.check_mergeable(closed)  # raises with the offending pair
-        _stat_rows = _stats_fut.result()
-    _stats = {r["_t"]: r for r in _stat_rows}
-    max_key_row = _stats["orth"]["_mx"]
-    n_scope = _stats["orth"]["_n_scope"] or 0
-    max_ak = _stats["assoc"]["_mx"]
+        _stats = {r["_t"]: r for r in stats_job.result()}
+        max_key_row = _stats["orth"]["_mx"]
+        n_scope = _stats["orth"]["_n_scope"] or 0
+        max_ak = _stats["assoc"]["_mx"]
 
-    # 4-tier cascade → per-key pick. Persisted: the conflict join, the
-    # pick_keys semi/anti probes in the delete derivation, and the result
-    # object all re-enter this frame, and its lineage (4-way tier union with
-    # two best-fit windows) is the most expensive recompute in the plan.
-    tiers = _tier_candidates(closed, genes, species_scope, agr)
-    picks = IT.round_checkpoint(_cascade_pick(tiers))
+        # 4-tier cascade → per-key pick. Persisted: the conflict join, the
+        # pick_keys semi/anti probes in the delete derivation, and the result
+        # object all re-enter this frame, and its lineage (4-way tier union with
+        # two best-fit windows) is the most expensive recompute in the plan.
+        tiers = _tier_candidates(closed, genes, species_scope, agr)
+        picks = IT.round_checkpoint(_cascade_pick(tiers))
 
-    # J7 conflict verdicts vs existing — consumed by inserts, deletes, stale, touch,
-    # downgrades and the result object: persist to stop 6× recomputation of the
-    # cascade + full-outer join lineage
-    verdicts, ex_ranked = _conflict_verdicts(picks, species_scope, genes)
-    verdicts = IT.round_checkpoint(verdicts)
-    ex_ranked = IT.round_checkpoint(ex_ranked)
+        # J7 conflict verdicts vs existing — consumed by inserts, deletes,
+        # stale, touch, downgrades and the result object: persist to stop 6×
+        # recomputation of the cascade + full-outer join lineage
+        verdicts, ex_ranked = _conflict_verdicts(picks, species_scope, genes)
+        verdicts = IT.round_checkpoint(verdicts)
+        ex_ranked = IT.round_checkpoint(ex_ranked)
 
-    ts = F.lit(run_ts)
-    species_of = F.broadcast(
-        genes.select("rgd_id", "species_type_key")
-    )
-
-    def _mk_orthologs(df: DataFrame) -> DataFrame:
-        out = (
-            df.select(
-                "src_rgd_id",
-                "dest_rgd_id",
-                "dest_species_type_key",
-                "xref_data_src",
-                "xref_data_set",
-            )
-            .join(
-                species_of.withColumnsRenamed(
-                    {"rgd_id": "src_rgd_id", "species_type_key": "src_species_type_key"}
-                ),
-                "src_rgd_id",
-            )
-            .withColumn("group_id", F.lit(None).cast("int"))
-            .withColumn("ortholog_type_key", F.lit(ORTHOLOG_TYPE_DIRECT))
-            .withColumn("percent_homology", F.lit(None).cast("double"))
-            .withColumn("created_by", F.lit(PIPELINE_USER_ID))
-            .withColumn("created_date", ts)
-            .withColumn("last_modified_by", F.lit(PIPELINE_USER_ID))
-            .withColumn("last_modified_date", ts)
+        ts = F.lit(run_ts)
+        species_of = F.broadcast(
+            genes.select("rgd_id", "species_type_key")
         )
-        return out
 
-    inserts_raw = _mk_orthologs(
-        verdicts.filter(F.col("verdict").isin("INSERT", "DELETE_EXISTING"))
-    )
-    # lazily localCheckpointed (NOT merely persisted): consumed by the
-    # provisional snapshot (W2 input), BOTH concurrent snapshot commits, and
-    # the result object. A persist would keep the full keygen+cascade lineage
-    # in every consumer's logical plan — and with the association commit now
-    # built on the logical next-snapshot frame instead of a parquet re-read,
-    # those plan trees compound until planning itself is the cost (measured:
-    # tree stringification alone OOMed an 8g driver late in a bench run).
-    # localCheckpoint truncates the plan to a LogicalRDD leaf; eager=False
-    # keeps construction job-free (the keygen-laziness pin).
-    inserts = (
-        next_surrogate_keys(inserts_raw, (max_key_row or 0), "genetogene_key")
-        .select(*[f.name for f in orthologs.schema.fields])
-    )
-    inserts = IT.round_checkpoint(inserts)
+        def _mk_orthologs(df: DataFrame) -> DataFrame:
+            out = (
+                df.select(
+                    "src_rgd_id",
+                    "dest_rgd_id",
+                    "dest_species_type_key",
+                    "xref_data_src",
+                    "xref_data_set",
+                )
+                .join(
+                    species_of.withColumnsRenamed(
+                        {
+                            "rgd_id": "src_rgd_id",
+                            "species_type_key": "src_species_type_key",
+                        }
+                    ),
+                    "src_rgd_id",
+                )
+                .withColumn("group_id", F.lit(None).cast("int"))
+                .withColumn("ortholog_type_key", F.lit(ORTHOLOG_TYPE_DIRECT))
+                .withColumn("percent_homology", F.lit(None).cast("double"))
+                .withColumn("created_by", F.lit(PIPELINE_USER_ID))
+                .withColumn("created_date", ts)
+                .withColumn("last_modified_by", F.lit(PIPELINE_USER_ID))
+                .withColumn("last_modified_date", ts)
+            )
+            return out
 
-    # deletes, three sources (all manual-guarded, churn-gated before commit):
-    #   replaced — best existing outranked by the incoming pick (DELETE_EXISTING);
-    #   surplus  — rank>1 rows of keys WITH a pick: getKeyForMatchingOrtholog prunes
-    #              every probed key to its comparator-best row (Dao.java:121-133),
-    #              regardless of whether the incoming then replaces or downgrades;
-    #   stale    — rows of keys with NO pick this run (Loader.java:657-672), under
-    #              REQUIREMENT 2 (Dao.java:92-99): never delete a key's LAST row —
-    #              when nothing else (manual / non-pipeline-owned) would survive,
-    #              the comparator-best stale candidate is kept.
-    replaced = verdicts.filter(F.col("verdict") == "DELETE_EXISTING").select(
-        F.col("ex_key").alias("genetogene_key")
-    )
-    pick_keys = picks.select(*KEY).dropDuplicates(KEY)
-    surplus = (
-        ex_ranked.filter(F.col("_rn") > 1)
-        .join(pick_keys, KEY, "left_semi")
-        .select(F.col("ex_key").alias("genetogene_key"))
-    )
-    is_cand = (F.col("ex_created_by") == PIPELINE_USER_ID) & (
-        F.col("ex_src") != "RGD"
-    )
-    nopick = ex_ranked.join(pick_keys, KEY, "left_anti")
-    protected_counts = (
-        nopick.filter(~is_cand).groupBy(*KEY).agg(F.count("*").alias("_n_prot"))
-    )
-    w_cand = Window.partitionBy(*KEY).orderBy(F.col("_rn").asc())
-    stale = (
-        nopick.filter(is_cand)
-        .join(protected_counts, KEY, "left")
-        .fillna(0, subset=["_n_prot"])
-        .withColumn("_crn", F.row_number().over(w_cand))
-        # deletable unless it is the key's last surviving row
-        .filter((F.col("_n_prot") > 0) | (F.col("_crn") > 1))
-        .select(F.col("ex_key").alias("genetogene_key"))
-    )
-    manual_keys = species_scope.filter(F.col("xref_data_src") == "RGD").select(
-        "genetogene_key"
-    )
-    # persisted: the churn guard counts this key list and the snapshot write
-    # consumes it twice (directly and inside the provisional W2 input) — a tiny
-    # frame whose lineage spans the whole cascade
-    deletes = (
-        replaced.unionByName(surplus)
-        .unionByName(stale)
-        .join(manual_keys, "genetogene_key", "left_anti")
-        .persist()
-    )
-    if n_scope:
-        sync.guard_delete_threshold(deletes.count(), n_scope, delete_threshold_pct)
-
-    # W2 duplicate cleanup over the would-be next snapshot
-    provisional = (
-        orthologs.join(deletes, "genetogene_key", "left_anti").unionByName(inserts)
-    )
-    _, dup_deletes = bestfit.duplicate_cleanup(provisional, PIPELINE_USER_ID)
-    # lazily localCheckpointed: BOTH concurrent commits consume this key list
-    # (the ortholog anti-join and the assoc thread's next-snapshot pair frame).
-    # The checkpoint (a) computes the W2 duplicate-cleanup window once instead
-    # of once per commit, and (b) truncates the cascade lineage out of both
-    # commit plans — see the `inserts` note above for why plan-tree size is
-    # the real constraint here.
-    all_deletes = IT.round_checkpoint(
-        deletes.unionByName(dup_deletes.select("genetogene_key"))
-    )
-
-    # S10: matched rows get their last-modified stamp refreshed
-    matched_keys = verdicts.filter(F.col("verdict") == "MATCH").select(
-        F.col("ex_key").alias("genetogene_key")
-    )
-    touched = sync.touch_last_modified(
-        orthologs, matched_keys, ["genetogene_key"], run_ts, PIPELINE_USER_ID
-    )
-
-    # associations: every closed relation is a weak candidate (Loader.java:116-136),
-    # plus DOWNGRADEd picks; minus pairs covered by strong orthologs (J5).
-    # J5 probes the NEXT ortholog snapshot — expressed here as the logical
-    # frame ((current − all_deletes) ∪ inserts) rather than a re-read of the
-    # just-written parquet: the timestamp-only `touched` updates cannot change
-    # any (src, dest) pair, so pair coverage is identical, and cutting the
-    # disk round-trip is what lets the two snapshot commits below run under
-    # one fused wall-clock window instead of strictly in sequence.
-    next_strong_pairs = (
-        orthologs.join(all_deletes, "genetogene_key", "left_anti")
-        .select("src_rgd_id", "dest_rgd_id")
-        .unionByName(inserts.select("src_rgd_id", "dest_rgd_id"))
-    )
-    downgraded = verdicts.filter(F.col("verdict") == "DOWNGRADE")
-    weak_candidates = (
-        closed.select(
-            F.col("src_rgd_id").alias("master_rgd_id"),
-            F.col("dest_rgd_id").alias("detail_rgd_id"),
-            F.col("data_set_name").alias("assoc_subtype"),
+        inserts_raw = _mk_orthologs(
+            verdicts.filter(F.col("verdict").isin("INSERT", "DELETE_EXISTING"))
         )
-        .unionByName(
-            downgraded.select(
+        # lazily localCheckpointed (NOT merely persisted): consumed by the
+        # provisional snapshot (W2 input), BOTH concurrent snapshot commits, and
+        # the result object. A persist would keep the full keygen+cascade lineage
+        # in every consumer's logical plan — and with the association commit now
+        # built on the logical next-snapshot frame instead of a parquet re-read,
+        # those plan trees compound until planning itself is the cost (measured:
+        # tree stringification alone OOMed an 8g driver late in a bench run).
+        # localCheckpoint truncates the plan to a LogicalRDD leaf; eager=False
+        # keeps construction job-free (the keygen-laziness pin).
+        inserts = (
+            next_surrogate_keys(inserts_raw, (max_key_row or 0), "genetogene_key")
+            .select(*[f.name for f in orthologs.schema.fields])
+        )
+        inserts = IT.round_checkpoint(inserts)
+
+        # deletes, three sources (all manual-guarded, churn-gated before commit):
+        #   replaced — best existing outranked by the incoming pick
+        #              (DELETE_EXISTING);
+        #   surplus  — rank>1 rows of keys WITH a pick: getKeyForMatchingOrtholog
+        #              prunes every probed key to its comparator-best row
+        #              (Dao.java:121-133), regardless of whether the incoming
+        #              then replaces or downgrades;
+        #   stale    — rows of keys with NO pick this run (Loader.java:657-672),
+        #              under REQUIREMENT 2 (Dao.java:92-99): never delete a
+        #              key's LAST row — when nothing else (manual /
+        #              non-pipeline-owned) would survive, the comparator-best
+        #              stale candidate is kept.
+        replaced = verdicts.filter(F.col("verdict") == "DELETE_EXISTING").select(
+            F.col("ex_key").alias("genetogene_key")
+        )
+        pick_keys = picks.select(*KEY).dropDuplicates(KEY)
+        surplus = (
+            ex_ranked.filter(F.col("_rn") > 1)
+            .join(pick_keys, KEY, "left_semi")
+            .select(F.col("ex_key").alias("genetogene_key"))
+        )
+        is_cand = (F.col("ex_created_by") == PIPELINE_USER_ID) & (
+            F.col("ex_src") != "RGD"
+        )
+        nopick = ex_ranked.join(pick_keys, KEY, "left_anti")
+        protected_counts = (
+            nopick.filter(~is_cand).groupBy(*KEY).agg(F.count("*").alias("_n_prot"))
+        )
+        w_cand = Window.partitionBy(*KEY).orderBy(F.col("_rn").asc())
+        stale = (
+            nopick.filter(is_cand)
+            .join(protected_counts, KEY, "left")
+            .fillna(0, subset=["_n_prot"])
+            .withColumn("_crn", F.row_number().over(w_cand))
+            # deletable unless it is the key's last surviving row
+            .filter((F.col("_n_prot") > 0) | (F.col("_crn") > 1))
+            .select(F.col("ex_key").alias("genetogene_key"))
+        )
+        manual_keys = species_scope.filter(F.col("xref_data_src") == "RGD").select(
+            "genetogene_key"
+        )
+        # persisted: the churn guard counts this key list and the snapshot write
+        # consumes it twice (directly and inside the provisional W2 input) — a tiny
+        # frame whose lineage spans the whole cascade
+        deletes = (
+            replaced.unionByName(surplus)
+            .unionByName(stale)
+            .join(manual_keys, "genetogene_key", "left_anti")
+            .persist()
+        )
+        if n_scope:
+            sync.guard_delete_threshold(deletes.count(), n_scope, delete_threshold_pct)
+
+        # W2 duplicate cleanup over the would-be next snapshot
+        provisional = (
+            orthologs.join(deletes, "genetogene_key", "left_anti").unionByName(inserts)
+        )
+        _, dup_deletes = bestfit.duplicate_cleanup(provisional, PIPELINE_USER_ID)
+        # lazily localCheckpointed: BOTH concurrent commits consume this key list
+        # (the ortholog anti-join and the assoc thread's next-snapshot pair frame).
+        # The checkpoint (a) computes the W2 duplicate-cleanup window once instead
+        # of once per commit, and (b) truncates the cascade lineage out of both
+        # commit plans — see the `inserts` note above for why plan-tree size is
+        # the real constraint here.
+        all_deletes = IT.round_checkpoint(
+            deletes.unionByName(dup_deletes.select("genetogene_key"))
+        )
+
+        # S10: matched rows get their last-modified stamp refreshed
+        matched_keys = verdicts.filter(F.col("verdict") == "MATCH").select(
+            F.col("ex_key").alias("genetogene_key")
+        )
+        touched = sync.touch_last_modified(
+            orthologs, matched_keys, ["genetogene_key"], run_ts, PIPELINE_USER_ID
+        )
+
+        # associations: every closed relation is a weak candidate (Loader.java:116-136),
+        # plus DOWNGRADEd picks; minus pairs covered by strong orthologs (J5).
+        # J5 probes the NEXT ortholog snapshot — expressed here as the logical
+        # frame ((current − all_deletes) ∪ inserts) rather than a re-read of the
+        # just-written parquet: the timestamp-only `touched` updates cannot change
+        # any (src, dest) pair, so pair coverage is identical, and cutting the
+        # disk round-trip is what lets the two snapshot commits below run under
+        # one fused wall-clock window instead of strictly in sequence.
+        next_strong_pairs = (
+            orthologs.join(all_deletes, "genetogene_key", "left_anti")
+            .select("src_rgd_id", "dest_rgd_id")
+            .unionByName(inserts.select("src_rgd_id", "dest_rgd_id"))
+        )
+        downgraded = verdicts.filter(F.col("verdict") == "DOWNGRADE")
+        weak_candidates = (
+            closed.select(
                 F.col("src_rgd_id").alias("master_rgd_id"),
                 F.col("dest_rgd_id").alias("detail_rgd_id"),
-                F.col("xref_data_set").alias("assoc_subtype"),
+                F.col("data_set_name").alias("assoc_subtype"),
             )
+            .unionByName(
+                downgraded.select(
+                    F.col("src_rgd_id").alias("master_rgd_id"),
+                    F.col("dest_rgd_id").alias("detail_rgd_id"),
+                    F.col("xref_data_set").alias("assoc_subtype"),
+                )
+            )
+            # deterministic by construction: one pair can arrive from several sources
+            # (e.g. both an HGNC and an NCBI relation after complement_closure) — a
+            # dropDuplicates pick would depend on partitioning, so reduce to the
+            # minimum subtype instead
+            .groupBy("master_rgd_id", "detail_rgd_id")
+            .agg(F.min("assoc_subtype").alias("assoc_subtype"))
+            .withColumn("assoc_type", F.lit("weak_ortholog"))
+            .withColumn("src_pipeline", F.lit("ORTHOLOGS"))
         )
-        # deterministic by construction: one pair can arrive from several sources
-        # (e.g. both an HGNC and an NCBI relation after complement_closure) — a
-        # dropDuplicates pick would depend on partitioning, so reduce to the
-        # minimum subtype instead
-        .groupBy("master_rgd_id", "detail_rgd_id")
-        .agg(F.min("assoc_subtype").alias("assoc_subtype"))
-        .withColumn("assoc_type", F.lit("weak_ortholog"))
-        .withColumn("src_pipeline", F.lit("ORTHOLOGS"))
-    )
-    weak = sync.drop_covered_by_strong(weak_candidates, next_strong_pairs)
+        weak = sync.drop_covered_by_strong(weak_candidates, next_strong_pairs)
 
-    # J10 full-outer sync vs existing weak associations
-    existing_weak = associations.filter(F.col("assoc_type") == "weak_ortholog")
-    assoc_key_cols = ["master_rgd_id", "detail_rgd_id", "assoc_type", "src_pipeline"]
-    # persisted: a_ins (keygen count pass + write), a_del, a_upd and the result
-    # object all branch off this full-outer join — one materialization instead
-    # of four runs of the weak-candidate sync lineage
-    assoc_verdicts = sync.sync_full_outer(
-        weak, existing_weak, assoc_key_cols, ["assoc_subtype"]
-    ).persist()
+        # J10 full-outer sync vs existing weak associations
+        existing_weak = associations.filter(F.col("assoc_type") == "weak_ortholog")
+        assoc_key_cols = [
+            "master_rgd_id", "detail_rgd_id", "assoc_type", "src_pipeline"
+        ]
+        # persisted: a_ins (keygen count pass + write), a_del, a_upd and the result
+        # object all branch off this full-outer join — one materialization instead
+        # of four runs of the weak-candidate sync lineage
+        assoc_verdicts = sync.sync_full_outer(
+            weak, existing_weak, assoc_key_cols, ["assoc_subtype"]
+        ).persist()
 
-    a_ins_raw = assoc_verdicts.filter(F.col("sync_verdict") == sync.INSERT).select(
-        *assoc_key_cols, "assoc_subtype"
-    )
-    a_del = assoc_verdicts.filter(F.col("sync_verdict") == sync.DELETE).select(
-        *assoc_key_cols
-    )
-    # J9: an insert whose reverse is queued for delete cancels both
-    a_ins_raw, a_del = sync.reconcile_reverse_associations(a_ins_raw, a_del)
-
-    a_ins = (
-        next_surrogate_keys(a_ins_raw, (max_ak or 0), "assoc_key")
-        .withColumn("creation_date", ts)
-        .select(*[f.name for f in associations.schema.fields])
-    )
-    a_upd = (
-        assoc_verdicts.filter(F.col("sync_verdict") == sync.UPDATE)
-        .select(*assoc_key_cols, "assoc_subtype")
-        .join(
-            associations.select(*assoc_key_cols, "assoc_key", "creation_date"),
-            assoc_key_cols,
+        a_ins_raw = assoc_verdicts.filter(F.col("sync_verdict") == sync.INSERT).select(
+            *assoc_key_cols, "assoc_subtype"
         )
-        .select(*[f.name for f in associations.schema.fields])
-    )
+        a_del = assoc_verdicts.filter(F.col("sync_verdict") == sync.DELETE).select(
+            *assoc_key_cols
+        )
+        # J9: an insert whose reverse is queued for delete cancels both
+        a_ins_raw, a_del = sync.reconcile_reverse_associations(a_ins_raw, a_del)
 
-    # Fused snapshot commits (VERDICT r4 item 1) under a run-grain two-phase
-    # publish (VERDICT r5 item 1): the ortholog and association commits touch
-    # DIFFERENT tables and — after the logical next-snapshot frame above —
-    # share no producer/consumer edge, so both STAGE concurrently on two
-    # scheduler threads (local[n] or a real cluster overlaps their stages; the
-    # flow pays max(commit) instead of commit₁ + commit₂). Neither _CURRENT
-    # marker moves during staging; `commit_run` flips ONE atomic run manifest
-    # and only then advances both markers — a crash anywhere in this window
-    # rolls back (before the manifest flip) or forward (after) as a unit, so
-    # readers can never observe orthologs advanced without associations or
-    # vice versa. The churn guard already ran (deletes.count() above), so a
-    # guard abort still precedes ANY staging.
-    from concurrent.futures import ThreadPoolExecutor
+        a_ins = (
+            next_surrogate_keys(a_ins_raw, (max_ak or 0), "assoc_key")
+            .withColumn("creation_date", ts)
+            .select(*[f.name for f in associations.schema.fields])
+        )
+        a_upd = (
+            assoc_verdicts.filter(F.col("sync_verdict") == sync.UPDATE)
+            .select(*assoc_key_cols, "assoc_subtype")
+            .join(
+                associations.select(*assoc_key_cols, "assoc_key", "creation_date"),
+                assoc_key_cols,
+            )
+            .select(*[f.name for f in associations.schema.fields])
+        )
 
-    def _stage_orthologs() -> int:
-        return store.apply_changes(
+        # Both snapshot commits stage in the background under the run scope
+        # (VERDICT r4 item 1, r5 item 1): they touch different tables and share no
+        # producer/consumer edge, so the flow pays max(commit₁, commit₂) instead of
+        # their sum. On a clean exit the scope publishes both _CURRENT markers with
+        # one atomic manifest flip; on any failure it joins both writers and then
+        # rolls back — readers never see orthologs advanced without associations
+        # or vice versa. The churn guard already ran (deletes.count() above), so a
+        # guard abort still precedes ANY staging.
+        run.stage(
             "orthologs",
             inserts=inserts,
             deletes=all_deletes,
@@ -635,33 +631,15 @@ def run_species_load(
             update_key=["genetogene_key"],
             # hot filter of every species run (species_scope) → partition pruning
             partition_by=["dest_species_type_key"],
-            publish=False,
         )
-
-    def _stage_associations() -> int:
-        return store.apply_changes(
+        run.stage(
             "associations",
             inserts=a_ins,
             deletes=a_del,
             delete_key=assoc_key_cols,
             updates=a_upd,
             update_key=assoc_key_cols,
-            publish=False,
         )
-
-    store.begin_run(["orthologs", "associations"])
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            orth_f = pool.submit(_stage_orthologs)
-            assoc_f = pool.submit(_stage_associations)
-            orthologs_version = orth_f.result()
-            associations_version = assoc_f.result()
-        store.commit_run(
-            {"orthologs": orthologs_version, "associations": associations_version}
-        )
-    except BaseException:
-        store.abort_run()
-        raise
 
     return SpeciesLoadResult(
         resolved_dropped=dropped,
@@ -672,6 +650,6 @@ def run_species_load(
         deleted=all_deletes,
         downgraded=downgraded,
         assoc_verdicts=assoc_verdicts,
-        orthologs_version=orthologs_version,
-        associations_version=associations_version,
+        orthologs_version=run.versions["orthologs"],
+        associations_version=run.versions["associations"],
     )

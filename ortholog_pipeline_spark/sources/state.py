@@ -14,9 +14,12 @@ Layout:  <root>/<table>/v=<n>/  (parquet), with <root>/<table>/_CURRENT holding 
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
+from collections.abc import Iterator
+from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -156,7 +159,7 @@ class StateStore:
     # §1.4: "the run's effect is a deterministic new snapshot" — the reference
     # commits per statement, OrthologRelationLoader.java:599-672, so a mid-run
     # failure there CAN tear cross-table state; this engine promises better).
-    # Protocol:
+    # Flows go through the `run(tables)` scope, which drives this protocol:
     #   begin_run(tables)  → atomic PREPARED manifest at <root>/_RUN_PENDING
     #   stage each table   → apply_changes(..., publish=False): data dirs
     #                        written, no _CURRENT moves
@@ -291,8 +294,6 @@ class StateStore:
         alive (e.g. a wedged writer on another host that a human has verified
         dead) — the destructive override, never taken implicitly. Returns
         True iff a manifest was resolved."""
-        import contextlib
-
         p = self._pending_path
         if not os.path.exists(p):
             return False
@@ -319,8 +320,6 @@ class StateStore:
         No-op while the owning run is still alive — in this process (the
         store object that began it), or in another live process on this host
         (pid + start-time match), or on another host (unverifiable)."""
-        import contextlib
-
         p = self._pending_path
         # no exists() pre-check here and FileNotFoundError suppressed below:
         # two readers can both pass the dead-owner check concurrently, and the
@@ -345,7 +344,6 @@ class StateStore:
                 if v is not None and self._raw_current(table) < v:
                     self._publish(table, v)
         else:  # PREPARED — the run never reached its commit point
-            import contextlib
             import shutil
 
             for table in m["tables"]:
@@ -477,6 +475,29 @@ class StateStore:
         self._active_run = None
         _LIVE_RUNS.pop(os.path.abspath(self.root), None)
         self._recover()  # PREPARED → rolls back; COMMITTED → rolls forward
+
+    @contextlib.contextmanager
+    def run(self, tables: list[str]) -> Iterator[RunScope]:
+        """One run-grain transaction over ``tables``, owning its staging
+        threads. Entering calls `begin_run`; ``stage``/``submit`` run on the
+        scope's own executor (one worker per table). A clean exit waits for
+        every future, then `commit_run`s the staged versions and exposes them
+        as ``versions``. Any exception — raised in the body or by a future —
+        first waits for every in-flight future, then `abort_run`s and
+        re-raises, so an abort never races a staging writer."""
+        scope = RunScope(self, tables)
+        self.begin_run(tables)
+        try:
+            yield scope
+            for fut in scope._futures:
+                fut.result()  # re-raises a failed staging write
+            scope.versions = {t: f.result() for t, f in scope._staged.items()}
+            self.commit_run(scope.versions)
+        except BaseException:
+            scope._pool.shutdown(wait=True, cancel_futures=True)
+            self.abort_run()
+            raise
+        scope._pool.shutdown()
 
     def _publish(self, table: str, version: int) -> None:
         marker = os.path.join(self._table_dir(table), "_CURRENT")
@@ -749,6 +770,40 @@ class StateStore:
             else:
                 nxt = nxt.unionByName(inserts.select(*nxt.columns))
         return self.write(table, nxt, partition_by=partition_by, publish=publish)
+
+
+class RunScope:
+    """What `StateStore.run` yields: staging and background work for one run,
+    all on the scope's executor so the scope can join them before it commits
+    or aborts."""
+
+    def __init__(self, store: StateStore, tables: list[str]):
+        self._store = store
+        self._tables = set(tables)
+        self._pool = ThreadPoolExecutor(
+            max_workers=len(tables), thread_name_prefix="state-store-run"
+        )
+        self._futures: list[Future] = []
+        self._staged: dict[str, Future] = {}
+        self.versions: dict[str, int] = {}  # table → committed version
+
+    def submit(self, fn, *args, **kwargs) -> Future:
+        """Run ``fn`` in the background; the scope joins it before it ends."""
+        fut = self._pool.submit(fn, *args, **kwargs)
+        self._futures.append(fut)
+        return fut
+
+    def stage(self, table: str, **changes) -> Future:
+        """Stage ``table``'s next version: `apply_changes` with
+        ``publish=False``, in the background. The version is published by the
+        scope's `commit_run`, together with every other staged table."""
+        if table not in self._tables or table in self._staged:
+            raise ValueError(f"{table!r} is not an unstaged table of this run")
+        fut = self.submit(
+            self._store.apply_changes, table, publish=False, **changes
+        )
+        self._staged[table] = fut
+        return fut
 
 
 def next_surrogate_keys(

@@ -123,6 +123,22 @@ def test_abort_run_restores_before_state(spark, tmp_path):
     assert not os.path.exists(store._pending_path)
 
 
+def test_run_scope_stages_only_its_own_tables(spark, tmp_path):
+    """`run.stage` refuses a table outside the run's manifest (recovery could
+    never roll it back) or one staged twice; the raise aborts the whole run,
+    so the table already staged reads its before-state."""
+    store = _two_table_store(spark, tmp_path)
+    df = spark.createDataFrame([(2, "b")], "k int, v string")
+    for second in ("t2", "t1"):
+        with pytest.raises(ValueError, match=f"'{second}' is not an unstaged"):
+            with store.run(["t1"]) as run:
+                run.stage("t1", inserts=df)
+                run.stage(second, inserts=df)
+        assert _rows(store, "t1") == [(1, "a")]
+        assert store.current_version("t1") == 0
+        assert not os.path.exists(store._pending_path)
+
+
 def test_species_load_publish_crash_is_all_or_nothing(
     spark, tmp_path, monkeypatch
 ):
@@ -197,6 +213,40 @@ def test_species_load_staging_crash_rolls_back_both(spark, tmp_path, monkeypatch
     assert not os.path.exists(fresh._pending_path)
 
 
+def test_fix_xref_staging_crash_keeps_orthologs(spark, tmp_path, monkeypatch):
+    """Fix-xref rewrites two tables: a failure while associations is being
+    staged must leave orthologs at its before-version and rows — no torn
+    publish of one table without the other."""
+    from ortholog_pipeline_spark.plans import run_fix_xref_data_set
+
+    store = _seed_store(spark, tmp_path / "fixxref")
+    dirty = store.read("orthologs").withColumn(
+        "xref_data_set",
+        F.when(
+            F.col("genetogene_key") == 2, F.lit("OrthoDB,Ensembl,OrthoDB")
+        ).otherwise(F.col("xref_data_set")),
+    )
+    store.write("orthologs", dirty)  # a row the fix would change
+    before, before_v = _rows(store, "orthologs"), store.current_version("orthologs")
+
+    real_write = StateStore.write
+
+    def exploding_write(self, table, df, partition_by=None, publish=True):
+        if table == "associations":
+            raise OSError("injected crash while staging associations")
+        return real_write(self, table, df, partition_by=partition_by,
+                          publish=publish)
+
+    monkeypatch.setattr(StateStore, "write", exploding_write)
+    with pytest.raises(OSError, match="injected crash"):
+        run_fix_xref_data_set(store)
+    monkeypatch.undo()
+
+    assert store.current_version("orthologs") == before_v
+    assert _rows(store, "orthologs") == before
+    assert not os.path.exists(store._pending_path)
+
+
 def test_agr_load_crash_rolls_back_mints(spark, tmp_path, monkeypatch):
     """The AGR flow mints genes/rgd_ids/xrefs BEFORE its final agr_orthologs
     upsert. Under the run txn a failure in the final commit must also unwind
@@ -230,6 +280,68 @@ def test_agr_load_crash_rolls_back_mints(spark, tmp_path, monkeypatch):
     res = run_agr_load(store, _agr_lines(spark), RUN_TS, delete_threshold_pct=100.0)
     assert res.unresolved.count() == 0
     assert store.read("xrefs").filter(F.col("acc_id") == "FB:F1").count() == 1
+
+
+def test_agr_load_abort_waits_for_mint_writers(spark, tmp_path, monkeypatch):
+    """VERDICT r11 #4: the mint tables stage in the background while the AGR
+    flow builds its verdicts. A failure in that window (here the verdict sync
+    raises) must abort only after every staging writer has finished: no
+    apply_changes may still run when abort_run starts, no staged v= dir may
+    outlive the abort, and all four tables read their before-state."""
+    import threading
+    import time
+
+    from ortholog_pipeline_spark.operators import sync
+
+    tables = ("genes", "rgd_ids", "xrefs", "agr_orthologs")
+    store = _seed_store(spark, tmp_path / "agrwindow")
+    before = {t: _rows(store, t) for t in tables}
+    before_v = {t: store.current_version(t) for t in tables}
+
+    lock = threading.Lock()
+    running = {"n": 0}
+    running_at_abort = []
+    real_ac, real_abort = StateStore.apply_changes, StateStore.abort_run
+
+    def slow_apply(self, table, *args, **kwargs):
+        with lock:
+            running["n"] += 1
+        try:
+            if table in ("genes", "rgd_ids", "xrefs"):
+                time.sleep(2.0)  # keep the mint writers busy past the failure
+            return real_ac(self, table, *args, **kwargs)
+        finally:
+            with lock:
+                running["n"] -= 1
+
+    def recording_abort(self):
+        with lock:
+            running_at_abort.append(running["n"])
+        return real_abort(self)
+
+    def failing_sync(*args, **kwargs):
+        raise RuntimeError("injected failure inside the mint window")
+
+    monkeypatch.setattr(StateStore, "apply_changes", slow_apply)
+    monkeypatch.setattr(StateStore, "abort_run", recording_abort)
+    monkeypatch.setattr(sync, "sync_full_outer", failing_sync)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_agr_load(store, _agr_lines(spark), RUN_TS, delete_threshold_pct=100.0)
+    monkeypatch.undo()
+
+    assert running_at_abort == [0], (
+        f"abort_run started while {running_at_abort} staging writers ran"
+    )
+    for t in tables:
+        cur = store.current_version(t)
+        staged = [
+            d for d in os.listdir(os.path.join(store.root, t))
+            if d.startswith("v=") and int(d.split("=", 1)[1]) > cur
+        ]
+        assert staged == [], (t, staged)
+        assert cur == before_v[t], t
+        assert _rows(store, t) == before[t], t
+    assert not os.path.exists(store._pending_path)
 
 
 # ---------------------------------------------------------------------------
