@@ -118,10 +118,11 @@ def append_ann_index(
 ) -> int:
     """Incremental index growth: assign NEW vectors to the existing coarse
     cells (seeds are immutable — queries must probe the same geometry the
-    corpus was assigned under) and publish the union as the next snapshot
-    version. The rewrite stays partitioned by cell, so query-side directory
-    pruning is unchanged; readers on the previous version are untouched
-    (snapshot isolation). Re-seed by rebuilding only when drift makes cell
+    corpus was assigned under) and append them as the next snapshot version:
+    the store hardlinks the existing cell files and writes only the new
+    vectors into their cell partitions, so query-side directory pruning is
+    unchanged; readers on the previous version are untouched (snapshot
+    isolation). Re-seed by rebuilding only when drift makes cell
     sizes pathological — that decision is a maintenance-window call, not a
     per-append one."""
     seed_rows = store.read(f"{name}_seeds").orderBy("cell").collect()
@@ -131,5 +132,4 @@ def append_ann_index(
         F.col(id_col),
         as_double(F.col(vec_col)).alias("vec"),
     ).withColumn("cell", ivf_assign_udf(seed_mat, 1)(F.col("vec"))[0])
-    merged = store.read(name).unionByName(assigned)
-    return store.write(name, merged, partition_by=["cell"])
+    return store.apply_changes(name, inserts=assigned)

@@ -1,8 +1,9 @@
-"""W1-W5 — per-group top-1 selection windows, the semantic heart of the pipeline.
+"""W1/W2/W5 — per-group top-1 selection windows, the semantic heart of the pipeline.
 
 Reference: the best-fit picker (OrthologRelationLoader.java:537-588), the in-DB
-duplicate cleanup window (OrthologRelationDao.java:798-819), the ortholog comparator
-(Dao.java:164-188), and the prefer-mutual-best subset (OrthoTool.java:150-164).
+duplicate cleanup window (OrthologRelationDao.java:798-819) and the prefer-mutual-best
+subset (OrthoTool.java:150-164). The W3/W4 ortholog comparator (Dao.java:164-188)
+lives in the species load's conflict join (`plans.species_load._conflict_verdicts`).
 
 All are expressed as `row_number()` windows. The W1 tie-break subtlety (SURVEY.md §7):
 the reference takes the greatest-evidence candidate only when it is a *strict* winner;
@@ -85,34 +86,6 @@ def best_fit(
             F.col(final_tiebreak_col).asc(),
         ],
     )
-
-
-def comparator_rank(
-    orthologs: DataFrame,
-    partition_cols: list[str],
-    source_col: str = "xref_data_src",
-    evidence_col: str = "xref_data_set",
-    src_symbol_col: str = "src_gene_symbol",
-    dest_symbol_col: str = "dest_gene_symbol",
-    key_col: str = "genetogene_key",
-) -> DataFrame:
-    """W3/W4 — rank rows by the in-DB ortholog comparator
-    (OrthologRelationDao.java:164-188): source priority (RGD>Alliance>HGNC>NCBI) →
-    evidence count → symbol match → *descending* case-insensitive dest symbol (:187 —
-    note it differs from W1's ascending). Adds ``_rank``; rank 1 = best. W4 keep-one =
-    ``filter(_rank == 1)``.
-    """
-    order = [
-        source_priority(source_col).desc(),
-        evidence_count(evidence_col).desc(),
-        F.when(
-            F.lower(F.col(dest_symbol_col)) == F.lower(F.col(src_symbol_col)), 1
-        ).otherwise(0).desc(),
-        F.lower(F.col(dest_symbol_col)).desc_nulls_last(),
-        F.col(key_col).asc(),
-    ]
-    w = Window.partitionBy(*partition_cols).orderBy(*order)
-    return orthologs.withColumn("_rank", F.row_number().over(w))
 
 
 def duplicate_cleanup(

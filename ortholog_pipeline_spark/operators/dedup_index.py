@@ -122,7 +122,9 @@ def append_to_index(
     bands: int = 4,
 ) -> None:
     """Admit a batch into the index (idempotent: already-indexed ids are
-    skipped), publishing new snapshot versions of both derived tables."""
+    skipped), publishing new snapshot versions of both derived tables. Both
+    take the store's append path: the previous files are hardlinked and the
+    band table keeps its ``band`` layout."""
     existing = store.read(f"{name}_shingles").select(F.col(id_col))
     fresh = batch.dropDuplicates([id_col]).join(existing, id_col, "left_anti")
     hashed, banded = _hashed_and_banded(
@@ -130,7 +132,5 @@ def append_to_index(
     )
     store.apply_changes(f"{name}_shingles", inserts=hashed.select(id_col, "h31"))
     store.apply_changes(
-        f"{name}_bands",
-        inserts=banded.select("band", "band_key", id_col),
-        partition_by=["band"],  # keep the probe's partition-pruned layout
+        f"{name}_bands", inserts=banded.select("band", "band_key", id_col)
     )

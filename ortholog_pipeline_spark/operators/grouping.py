@@ -13,16 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ortholog_pipeline_spark.schemas import HUMAN
-
-
-def assert_human_sources(relations: DataFrame) -> None:
-    """Structural assert of OrthologRelationLoader.java:383-384: every grouped source
-    gene must be human. Driver-side guard, evaluated once."""
-    bad = relations.filter(F.col("src_species_type_key") != HUMAN).limit(1).count()
-    if bad:
-        raise ValueError("ortholog group keyed by a non-human source gene")
-
 
 def merge_duplicate_relations(relations: DataFrame) -> DataFrame:
     """A2 — merge rows with the same (src_rgd_id, dest_rgd_id).

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ortholog_pipeline_spark.operators import bestfit, grouping, quality, resolve, sync
 from ortholog_pipeline_spark.operators import iterate as IT
 from ortholog_pipeline_spark.schemas import (
+    HUMAN,
     ORTHOLOG_TYPE_DIRECT,
     PIPELINE_USER_ID,
 )
@@ -341,7 +342,7 @@ def run_species_load(
             clean,
             "species_load_src_guard",
             F.sum(
-                F.when(F.col("src_species_type_key") != grouping.HUMAN, 1).otherwise(0)
+                F.when(F.col("src_species_type_key") != HUMAN, 1).otherwise(0)
             ).alias("n_nonhuman"),
         )
         merged = grouping.merge_duplicate_relations(clean_obs)
@@ -629,8 +630,6 @@ def run_species_load(
             delete_key=["genetogene_key"],
             updates=touched,
             update_key=["genetogene_key"],
-            # hot filter of every species run (species_scope) → partition pruning
-            partition_by=["dest_species_type_key"],
         )
         run.stage(
             "associations",

@@ -781,6 +781,10 @@ def _clone_tree_hardlink(src: str, dst: str) -> None:
                 shutil.copy2(s, d)
 
 
+#: The production store's partition layouts (orthologs pruned by dest species).
+_LAYOUTS = {"orthologs": ["dest_species_type_key"]}
+
+
 def _seed_store(
     spark: SparkSession,
     world: dict[str, DataFrame],
@@ -803,7 +807,7 @@ def _seed_store(
     store = StateStore(spark, tempfile.mkdtemp(prefix=prefix))
     for t in ("genes", "rgd_ids", "xrefs", "orthologs", "associations", "agr_orthologs"):
         if t in world:
-            store.write(t, world[t])
+            store.write(t, world[t], partition_by=_LAYOUTS.get(t))
     return store
 
 

@@ -10,6 +10,9 @@ requiring Delta in the container; on a cluster the same layout maps 1:1 onto Del
 `MERGE`.
 
 Layout:  <root>/<table>/v=<n>/  (parquet), with <root>/<table>/_CURRENT holding n.
+A partitioned table's versions hold ``col=value`` subdirectories. The partition
+layout belongs to the table: it is read back from those directory names, so
+every rewrite, append and maintenance call keeps it without being told.
 """
 
 from __future__ import annotations
@@ -559,6 +562,24 @@ class StateStore:
             )
         return sorted(out, key=lambda r: r["version"])
 
+    def _layout(self, table: str) -> list[str]:
+        """The partition columns of ``table``'s current version, outermost
+        first, read from its ``col=value`` directory names; ``[]`` for a flat
+        or unwritten table."""
+        cur = self.current_version(table)
+        path = os.path.join(self._table_dir(table), f"v={cur}")
+        layout: list[str] = []
+        while cur >= 0 and (
+            parts := [
+                e
+                for e in os.scandir(path)
+                if e.is_dir() and "=" in e.name and e.name[0] not in "_."
+            ]
+        ):
+            layout.append(parts[0].name.split("=", 1)[0])
+            path = parts[0].path
+        return layout
+
     def write(
         self,
         table: str,
@@ -566,17 +587,26 @@ class StateStore:
         partition_by: list[str] | None = None,
         publish: bool = True,
     ) -> int:
-        """Write ``df`` as the next version and publish it. ``partition_by`` lets hot
-        tables (orthologs by dest_species_type_key) prune partitions on read.
+        """Write ``df`` as the next version and publish it.
+
+        The partition layout is the table's own: ``partition_by`` declares it
+        for the table's first version (e.g. orthologs by
+        dest_species_type_key, so species runs prune partitions on read).
+        Every later version keeps the current layout; a ``partition_by`` that
+        differs from it raises ``ValueError``.
+
         ``publish=False`` stages the version for a run-grain txn: the data dir
         is written but _CURRENT stays — `commit_run` flips it atomically with
         the run's other tables."""
         v = self.current_version(table) + 1
+        layout = self._layout(table) if v > 0 else list(partition_by or [])
+        if partition_by is not None and list(partition_by) != layout:
+            raise ValueError(
+                f"state table {table} is laid out by {layout}; "
+                f"partition_by={list(partition_by)} cannot change that"
+            )
         path = os.path.join(self._table_dir(table), f"v={v}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        df.write.mode("overwrite").partitionBy(*layout).parquet(path)
         if publish:
             self._publish(table, v)
         return v
@@ -614,7 +644,6 @@ class StateStore:
         self,
         table: str,
         target_file_bytes: int = 128 * 1024 * 1024,
-        partition_by: list[str] | None = None,
     ) -> int:
         """Rewrite the current snapshot with right-sized files: many small files
         (the residue of high-parallelism writes) become ~``target_file_bytes``
@@ -632,16 +661,13 @@ class StateStore:
         )
         n_files = max(1, round(on_disk / target_file_bytes))
         df = self.spark.read.parquet(path)
-        return self.write(
-            table, df.coalesce(n_files), partition_by=partition_by
-        )
+        return self.write(table, df.coalesce(n_files))
 
     def forget_keys(
         self,
         table: str,
         keys: "DataFrame",
         key_cols: list[str],
-        partition_by: list[str] | None = None,
     ) -> dict:
         """Right-to-be-forgotten erasure: anti-join the keys out of the
         current snapshot, publish, then PURGE every older version — time
@@ -658,9 +684,7 @@ class StateStore:
         before = self.read(table)
         key_df = keys.select(*key_cols).dropDuplicates()
         removed = before.join(key_df, key_cols, "left_semi").count()
-        self.apply_changes(
-            table, deletes=key_df, delete_key=key_cols, partition_by=partition_by
-        )
+        self.apply_changes(table, deletes=key_df, delete_key=key_cols)
         purged = self.vacuum(table, keep=1)
         residual = 0
         tdir = self._table_dir(table)
@@ -684,11 +708,15 @@ class StateStore:
         never rewrites old ones) re-expressed in the versioned-directory
         layout; without it every insert-only change would rewrite the whole
         snapshot, which at 100 TB turns a thousand-row mint into a full-table
-        job. Vacuum stays safe: removing an old version unlinks names, the
-        shared inodes live until the last referencing version goes."""
+        job. A partitioned table keeps its layout: the linked files keep
+        their ``col=value`` directories and the inserts are written
+        ``partitionBy`` the same columns into them. Vacuum stays safe:
+        removing an old version unlinks names, the shared inodes live until
+        the last referencing version goes."""
         import shutil
 
         cur = self.current_version(table)
+        layout = self._layout(table)
         src = os.path.join(self._table_dir(table), f"v={cur}")
         v = cur + 1
         dst = os.path.join(self._table_dir(table), f"v={v}")
@@ -704,7 +732,7 @@ class StateStore:
                     os.link(s, d)
                 except OSError:  # cross-device or FS without hardlinks
                     shutil.copy2(s, d)
-        inserts.write.mode("append").parquet(dst)
+        inserts.write.mode("append").partitionBy(*layout).parquet(dst)
         if publish:
             self._publish(table, v)
         return v
@@ -719,26 +747,23 @@ class StateStore:
         updates: DataFrame | None = None,
         update_key: list[str] | None = None,
         schema: T.StructType | None = None,
-        partition_by: list[str] | None = None,
         evolve_schema: bool = False,
         publish: bool = True,
     ) -> int:
         """next = ((current − deletes) updated-by updates) ∪ inserts, one shuffle per
         set — the snapshot-algebra equivalent of the reference's batched DML
-        (S8/S9/S11/S12). ``partition_by`` lays the new snapshot out for partition
-        pruning on its hot filter column (e.g. orthologs by species).
+        (S8/S9/S11/S12). The next version keeps the table's partition layout
+        (see `write`); callers never restate it.
 
         Insert-only changes take the append fast path (`_append_version`):
         existing data files are linked into the new version untouched and only
-        the inserts run through Spark. Gated to the unpartitioned,
-        fixed-schema case — a partitioned append must match the previous
-        layout and additive evolution needs mergeSchema-style reads, so both
-        fall through to the full rewrite."""
+        the inserts run through Spark, partitioned or not. Additive schema
+        evolution needs mergeSchema-style reads, so it falls through to the
+        full rewrite."""
         if (
             inserts is not None
             and deletes is None
             and updates is None
-            and partition_by is None
             and not evolve_schema
             and self.current_version(table) >= 0
         ):
@@ -769,7 +794,7 @@ class StateStore:
                 nxt = nxt.unionByName(inserts, allowMissingColumns=True)
             else:
                 nxt = nxt.unionByName(inserts.select(*nxt.columns))
-        return self.write(table, nxt, partition_by=partition_by, publish=publish)
+        return self.write(table, nxt, publish=publish)
 
 
 class RunScope:

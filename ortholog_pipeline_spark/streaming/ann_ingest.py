@@ -17,7 +17,8 @@ build on.
 
 Scale shape per micro-batch: one broadcast of the (tiny, immutable) seed matrix
 for cell assignment, one anti-join shuffle on vec_id against the index ids, one
-partitioned-by-cell snapshot write. No global state in the driver.
+append of the batch into the cell partitions (the existing cell files are
+hardlinked, not rewritten). No global state is held outside the store.
 """
 
 from __future__ import annotations

@@ -16,8 +16,8 @@ Overrides, strongest first:
 
 - a session conf ``spark.ortholog.streaming.stateStore=hdfs`` (or anything
   other than ``rocksdb``) disables the upgrade entirely — the explicit "I
-  really want the stock provider" escape hatch (bench.py's provider-fallback
-  leg uses it so a rocksdbjni-less host can still run streams);
+  really want the stock provider" escape hatch (e.g. so a rocksdbjni-less
+  host can still run streams);
 - a providerClass already set to a CUSTOM provider (neither the stock HDFS
   class nor RocksDB) is respected untouched — a deliberate third-party store
   choice must not be silently replaced.

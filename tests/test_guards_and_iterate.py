@@ -6,6 +6,8 @@ generations persisted (no per-round storage leak)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,3 +73,41 @@ def test_step_generation_correct_chain(spark):
     rows = {r["node"]: r["v"] for r in df.collect()}
     assert rows[7] == 28 and rows[0] == 0
     prev.unpersist()
+
+
+def test_connected_components_reliable_checkpoints(spark, tmp_path):
+    """spark.ortholog.checkpoint.reliable=true switches every round boundary
+    to a reliable checkpoint: the same components as the local-checkpoint
+    default with a checkpoint dir, a ValueError without one. The session's
+    conf and checkpoint dir are restored afterwards."""
+    from ortholog_pipeline_spark.operators.components import connected_components
+    from ortholog_pipeline_spark.operators.iterate import RELIABLE_CHECKPOINT_CONF
+
+    # a path long enough to take several rounds, plus two small components
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(50, 58)] + [(2, 1), (2, 3), (10, 11)],
+        ["id_1", "id_2"],
+    )
+    want = sorted(map(tuple, connected_components(edges).collect()))
+
+    jsc = spark.sparkContext._jsc.sc()
+    set_dir = getattr(jsc, "checkpointDir_$eq")  # Scala var setter
+    saved_dir = jsc.getCheckpointDir()
+    saved_conf = spark.conf.get(RELIABLE_CHECKPOINT_CONF, None)
+    spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true")
+    try:
+        set_dir(spark._jvm.scala.Option.empty())
+        with pytest.raises(ValueError, match="setCheckpointDir"):
+            connected_components(edges)
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+        got = sorted(map(tuple, connected_components(edges).collect()))
+        written = [d for _, ds, _ in os.walk(tmp_path / "ckpt") for d in ds]
+        assert any(d.startswith("rdd-") for d in written), "nothing checkpointed"
+    finally:
+        set_dir(saved_dir)
+        if saved_conf is None:
+            spark.conf.unset(RELIABLE_CHECKPOINT_CONF)
+        else:
+            spark.conf.set(RELIABLE_CHECKPOINT_CONF, saved_conf)
+    assert got == want
+    assert spark.conf.get(RELIABLE_CHECKPOINT_CONF, None) == saved_conf

@@ -11,19 +11,25 @@ from pyspark.sql import functions as F
 from ortholog_pipeline_spark.plans.homologene import run_homologene_load
 from ortholog_pipeline_spark.schemas import HOMOLOGENE_SCHEMA, ORTHOLOGS_SCHEMA, XREFS_SCHEMA
 from ortholog_pipeline_spark.sources.state import StateStore
+from test_state_store import is_partitioned_by
 
 TS = datetime(2024, 1, 2)
 T0 = datetime(2020, 1, 1)
 
 
-def _store(spark, tmp_path, xrefs, orthologs):
+def _store(spark, tmp_path, xrefs, orthologs, orthologs_layout=None):
     store = StateStore(spark, str(tmp_path / "state"))
     store.write("xrefs", spark.createDataFrame(xrefs, XREFS_SCHEMA))
-    store.write("orthologs", spark.createDataFrame(orthologs, ORTHOLOGS_SCHEMA))
+    store.write(
+        "orthologs",
+        spark.createDataFrame(orthologs, ORTHOLOGS_SCHEMA),
+        partition_by=orthologs_layout,
+    )
     return store
 
 
-def test_homologene_pairs_cdc_and_scope_fence(spark, tmp_path):
+def _group7(spark, tmp_path, orthologs_layout=None):
+    """The store and file entries of the group-7 CDC case."""
     # genes: EG1->101, EG2->102, EG3->103; EGM multi (2 rows); EGX absent
     xrefs = [
         (1, 101, "EG1", 3, "E", T0),
@@ -53,7 +59,11 @@ def test_homologene_pairs_cdc_and_scope_fence(spark, tmp_path):
         orow(3, 7, 101, 998, "HGNC"),         # other source, same group -> fenced
         orow(4, 8, 201, 202, "HOMOLOGENE"),   # group absent from file -> fenced
     ]
-    store = _store(spark, tmp_path, xrefs, orthologs)
+    return _store(spark, tmp_path, xrefs, orthologs, orthologs_layout), entries
+
+
+def test_homologene_pairs_cdc_and_scope_fence(spark, tmp_path):
+    store, entries = _group7(spark, tmp_path)
     res = run_homologene_load(store, entries, TS)
 
     # 3 resolved entries -> 3 unordered pairs -> 6 directed incoming rows;
@@ -80,6 +90,24 @@ def test_homologene_pairs_cdc_and_scope_fence(spark, tmp_path):
     assert (102, 103) in pairs and (103, 102) in pairs
     # ... and the complement of the matched direction was inserted too
     assert (102, 101) in pairs
+
+
+def test_homologene_keeps_partitioned_orthologs_layout(spark, tmp_path):
+    """On orthologs partitioned by dest species the load writes the same rows
+    as on a flat table, and the new version stays partitioned."""
+    flat, entries = _group7(spark, tmp_path / "flat")
+    part, _ = _group7(spark, tmp_path / "part", ["dest_species_type_key"])
+    for store in (flat, part):
+        run_homologene_load(store, entries, TS)
+
+    def rows(store):
+        return sorted(
+            tuple(sorted(r.asDict().items()))
+            for r in store.read("orthologs").collect()
+        )
+
+    assert is_partitioned_by(part, "orthologs", "dest_species_type_key")
+    assert rows(part) == rows(flat)
 
 
 def test_homologene_empty_group_deletes_all_in_scope(spark, tmp_path):

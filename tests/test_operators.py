@@ -162,16 +162,6 @@ def test_complement_closure_symmetry(spark):
     assert pairs == {(1, 2), (2, 1)}
 
 
-def test_assert_human_sources(spark):
-    rels = spark.createDataFrame(
-        [(2, 1, 3, 1, "HGNC", "e")],
-        "src_rgd_id int, dest_rgd_id int, src_species_type_key int,"
-        " dest_species_type_key int, data_source string, data_set_name string",
-    )
-    with pytest.raises(ValueError, match="non-human"):
-        grouping.assert_human_sources(rels)
-
-
 # ---------------------------------------------------------------------------
 # W1 best-fit tie-break cascade
 # ---------------------------------------------------------------------------
@@ -258,22 +248,6 @@ def test_duplicate_cleanup_priority_and_ownership(spark):
     kept, deleted = bestfit.duplicate_cleanup(df, pipeline_user_id=70)
     assert {r.genetogene_key for r in deleted.collect()} == {2}
     assert {r.genetogene_key for r in kept.collect()} == {1, 3, 4, 5}
-
-
-def test_comparator_rank_descending_alpha(spark):
-    # W3's final key is DESCENDING case-insensitive dest symbol (Dao.java:187),
-    # opposite of W1
-    df = spark.createDataFrame(
-        [
-            (1, 10, 20, "NCBI", "A", "g", "aaa"),
-            (2, 10, 21, "NCBI", "B", "g", "BBB"),
-        ],
-        "genetogene_key long, src_rgd_id int, dest_rgd_id int, xref_data_src string,"
-        " xref_data_set string, src_gene_symbol string, dest_gene_symbol string",
-    )
-    ranked = bestfit.comparator_rank(df, ["src_rgd_id"])
-    best = ranked.filter(F.col("_rank") == 1).collect()[0]
-    assert best.dest_rgd_id == 21  # 'BBB' > 'aaa' case-insensitively → wins desc
 
 
 def test_prefer_mutual_best(spark):
@@ -1082,6 +1056,27 @@ def test_dedup_index_probe_matches_recompute_and_appends_idempotently(
     self_hits = DI.probe_dedup_index(store, batch, threshold=0.99)
     pairs = {(r.batch_id, r.index_id) for r in self_hits.collect()}
     assert all(b == i for b, i in pairs) and len(pairs) > 0
+
+
+def test_append_to_index_links_previous_band_files(spark, tmp_path):
+    """Admitting a batch appends to the band table: every previous ``band=``
+    file is hardlinked into the new version, none is rewritten."""
+    from ortholog_pipeline_spark.operators import dedup_index as DI
+    from ortholog_pipeline_spark.sources.state import StateStore
+    from test_state_store import data_files, is_partitioned_by
+
+    docs = spark.createDataFrame(
+        [(i, f"record {i} about gene {i % 7} in species {i % 3}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    store = StateStore(spark, str(tmp_path / "ix"))
+    DI.build_dedup_index(store, docs.filter(F.col("doc_id") % 10 != 7))
+    before = data_files(store, "dedup_index_bands")
+    DI.append_to_index(store, docs.filter(F.col("doc_id") % 10 == 7))
+    after = data_files(store, "dedup_index_bands")
+    assert before.items() <= after.items(), "previous band files must be linked"
+    assert len(after) > len(before)
+    assert is_partitioned_by(store, "dedup_index_bands", "band")
 
 
 def test_bloom_prefilter_actually_filters(spark):

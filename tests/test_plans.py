@@ -26,13 +26,14 @@ from ortholog_pipeline_spark.schemas import (
     XREFS_SCHEMA,
 )
 from ortholog_pipeline_spark.sources.state import StateStore
+from test_state_store import is_partitioned_by
 
 RUN_TS = dt.datetime(2026, 1, 15, 12, 0, 0)
 OLD_TS = dt.datetime(2025, 12, 1, 0, 0, 0)
 RAT = 3
 
 
-def _seed_store(spark, tmp_path) -> StateStore:
+def _seed_store(spark, tmp_path, orthologs_layout=None) -> StateStore:
     store = StateStore(spark, str(tmp_path / "state"))
 
     genes = [
@@ -98,7 +99,11 @@ def _seed_store(spark, tmp_path) -> StateStore:
         # (getKeyForMatchingOrtholog, Dao.java:121-133)
         (7, 2, 103, 1, RAT, None, "NCBI", "NCBI", 11, None, 70, OLD_TS, 70, OLD_TS),
     ]
-    store.write("orthologs", spark.createDataFrame(orthologs, ORTHOLOGS_SCHEMA))
+    store.write(
+        "orthologs",
+        spark.createDataFrame(orthologs, ORTHOLOGS_SCHEMA),
+        partition_by=orthologs_layout,
+    )
 
     store.write(
         "associations", spark.createDataFrame([], ASSOCIATIONS_SCHEMA)
@@ -289,6 +294,72 @@ def test_conflict_verdict_symbol_tiebreak(spark):
     assert verdicts2.collect()[0].verdict == "DOWNGRADE"
 
 
+def test_conflict_verdicts_w4_descending_alpha(spark):
+    """W4's last comparator key is DESCENDING case-insensitive dest symbol
+    (Dao.java:187), the opposite of W1: of two existing rows tied on source
+    and evidence, 'BBB' outranks 'aaa'."""
+    from ortholog_pipeline_spark.plans.species_load import _conflict_verdicts
+
+    genes = spark.createDataFrame(
+        [(10, "g", "protein-coding", None, 1),
+         (20, "aaa", "protein-coding", None, RAT),
+         (21, "BBB", "protein-coding", None, RAT)],
+        GENES_SCHEMA,
+    )
+    existing = spark.createDataFrame(
+        [(1, 10, 20, 1, RAT, None, "NCBI", "A", 11, None, 70, OLD_TS, 70, OLD_TS),
+         (2, 10, 21, 1, RAT, None, "NCBI", "B", 11, None, 70, OLD_TS, 70, OLD_TS)],
+        ORTHOLOGS_SCHEMA,
+    )
+    picks = spark.createDataFrame(
+        [],
+        "src_rgd_id int, dest_species_type_key int, tier int, dest_rgd_id int,"
+        "xref_data_src string, xref_data_set string",
+    )
+    verdicts, ex_ranked = _conflict_verdicts(picks, existing, genes)
+    ranks = {r.ex_dest_rgd_id: r._rn for r in ex_ranked.collect()}
+    assert ranks == {21: 1, 20: 2}
+    [v] = verdicts.collect()
+    assert (v.verdict, v.ex_dest_rgd_id) == ("STALE", 21)
+
+
+def test_species_load_rejects_non_human_source(spark, store):
+    """A relation keyed by a non-human source gene aborts the species load
+    (OrthologRelationLoader.java:383-384) before either table moves."""
+    before = {t: store.current_version(t) for t in ("orthologs", "associations")}
+    rat_keyed = spark.createDataFrame(
+        [("r100", "h1", RAT, 1, "HGNC", "Ensembl")], RELATION_SCHEMA
+    )
+    with pytest.raises(ValueError, match="non-human"):
+        run_species_load(
+            store,
+            _relations(spark).unionByName(rat_keyed),
+            RUN_TS,
+            RAT,
+            delete_threshold_pct=100.0,
+        )
+    assert {t: store.current_version(t) for t in before} == before
+
+
+def test_species_load_keeps_orthologs_layout(spark, tmp_path):
+    """The flow states no layout: on a store partitioned by dest species it
+    writes the same rows as on a flat one, and stays partitioned."""
+    snaps = {}
+    for layout in (None, ["dest_species_type_key"]):
+        store = _seed_store(
+            spark, tmp_path / ("part" if layout else "flat"), orthologs_layout=layout
+        )
+        run_species_load(
+            store, _relations(spark), RUN_TS, RAT, delete_threshold_pct=100.0
+        )
+        snaps[bool(layout)] = sorted(
+            tuple(sorted(r.asDict().items()))
+            for r in store.read("orthologs").collect()
+        )
+    assert is_partitioned_by(store, "orthologs", "dest_species_type_key")
+    assert snaps[True] == snaps[False]
+
+
 def test_species_load_delete_threshold_trips(spark, store):
     with pytest.raises(RuntimeError, match="threshold"):
         # default 10% cap: the stale + replaced deletes exceed it on this fixture
@@ -384,6 +455,27 @@ def test_fix_xref_data_set(spark, store):
         r.genetogene_key: r.xref_data_set for r in store.read("orthologs").collect()
     }
     assert fixed[2] == "Ensembl, OrthoDB"
+
+
+def test_fix_xref_and_compact_keep_orthologs_layout(spark, tmp_path):
+    """On the production layout the fix-xref flow's keyed updates and a
+    compact rewrite orthologs within its dest_species_type_key partitions."""
+    layout = ["dest_species_type_key"]
+    store = _seed_store(spark, tmp_path, orthologs_layout=layout)
+    dirty = store.read("orthologs").withColumn(
+        "xref_data_set",
+        F.when(
+            F.col("genetogene_key") == 2, F.lit("OrthoDB,Ensembl,OrthoDB")
+        ).otherwise(F.col("xref_data_set")),
+    )
+    store.write("orthologs", dirty, partition_by=layout)
+
+    assert run_fix_xref_data_set(store).n_orthologs_fixed == 1
+    assert is_partitioned_by(store, "orthologs", "dest_species_type_key")
+    fixed = sorted(map(tuple, store.read("orthologs").collect()))
+    store.compact("orthologs")
+    assert is_partitioned_by(store, "orthologs", "dest_species_type_key")
+    assert sorted(map(tuple, store.read("orthologs").collect())) == fixed
 
 
 def test_audit_outputs_and_driver_loop(spark, store, tmp_path):

@@ -214,3 +214,133 @@ def test_chunk_starts_cover_all_tokens_property(spark, texts, stride):
         assert starts[0] == 1
         assert all(b - a == stride for a, b in zip(starts, starts[1:]))
         assert n - starts[-1] < stride
+
+
+# ---------------------------------------------------------------------------
+# Species-load tier cascade: min_by pick ≡ row_number over tier
+# ---------------------------------------------------------------------------
+
+TIERS_DDL = (
+    "src_rgd_id int, dest_species_type_key int, tier int, dest_rgd_id int,"
+    " blocked boolean, xref_data_src string, xref_data_set string"
+)
+
+
+def _row_number_pick(tiers):
+    """The window form `_cascade_pick` replaced: first tier per key wins, a
+    blocked winner yields no pick."""
+    from pyspark.sql import Window
+
+    from ortholog_pipeline_spark.plans.species_load import KEY
+
+    w = Window.partitionBy(*KEY).orderBy("tier")
+    return (
+        tiers.withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") == 1) & ~F.col("blocked"))
+        .drop("_rn", "blocked")
+    )
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.select(sorted(df.columns)).collect()), key=repr)
+
+
+@given(
+    keys=st.dictionaries(
+        st.tuples(st.integers(0, 3), st.sampled_from([2, 3])),
+        st.dictionaries(
+            st.sampled_from([1, 2, 3, 4]),
+            st.tuples(st.integers(0, 20), st.booleans()),
+            min_size=1,
+        ),
+        min_size=1,
+        max_size=6,
+    )
+)
+@settings(**SETTINGS)
+def test_cascade_pick_matches_row_number(spark, keys):
+    from ortholog_pipeline_spark.plans.species_load import _cascade_pick
+
+    names = {1: "RGD", 2: "Alliance", 3: "HGNC", 4: "NCBI"}
+    rows = [
+        # only the manual and Alliance tiers can be blocked (A8 conflict)
+        (src, sp, tier, None if (blocked and tier <= 2) else dest,
+         blocked and tier <= 2, names[tier], f"set{dest}")
+        for (src, sp), by_tier in keys.items()
+        for tier, (dest, blocked) in by_tier.items()
+    ]
+    tiers = spark.createDataFrame(rows, TIERS_DDL)
+    assert _sorted_rows(_cascade_pick(tiers)) == _sorted_rows(_row_number_pick(tiers))
+
+
+HUMAN_IDS, RAT_IDS = [1, 2, 3], [10, 11, 12, 13]
+
+
+@given(
+    symbols=st.lists(
+        st.sampled_from(["A1", "a1", "B2", None]), min_size=7, max_size=7
+    ),
+    closed=st.lists(
+        st.tuples(
+            st.sampled_from(HUMAN_IDS),
+            st.sampled_from(RAT_IDS),
+            st.sampled_from(["HGNC", "NCBI"]),
+            st.sampled_from(["E", "E, O", "E, O, M"]),
+        ),
+        max_size=12,
+    ),
+    manual=st.lists(
+        st.tuples(st.sampled_from(HUMAN_IDS), st.sampled_from(RAT_IDS)), max_size=5
+    ),
+    agr=st.lists(
+        st.tuples(
+            st.sampled_from(HUMAN_IDS + RAT_IDS),
+            st.sampled_from(HUMAN_IDS + RAT_IDS),
+            st.sampled_from(["Y", "N"]),
+        ),
+        max_size=6,
+    ),
+)
+@settings(**SETTINGS)
+def test_tier_candidates_one_row_per_key_and_tier(spark, symbols, closed, manual, agr):
+    """Each tier subframe emits at most one row per key — the invariant that
+    keeps `_cascade_pick`'s min_by free of ties — and the cascade over the
+    real tiers equals the row_number reference."""
+    from ortholog_pipeline_spark.plans.species_load import (
+        KEY,
+        _cascade_pick,
+        _tier_candidates,
+    )
+    from ortholog_pipeline_spark.schemas import (
+        AGR_ORTHOLOGS_SCHEMA,
+        GENES_SCHEMA,
+        ORTHOLOGS_SCHEMA,
+    )
+
+    genes = spark.createDataFrame(
+        [(g, sym, "protein-coding", None, 1 if g in HUMAN_IDS else 3)
+         for g, sym in zip(HUMAN_IDS + RAT_IDS, symbols)],
+        GENES_SCHEMA,
+    )
+    closed_df = spark.createDataFrame(
+        [(s, d, 1, 3, src, ev) for s, d, src, ev in closed],
+        "src_rgd_id int, dest_rgd_id int, src_species_type_key int,"
+        " dest_species_type_key int, data_source string, data_set_name string",
+    )
+    existing = spark.createDataFrame(
+        [(i, s, d, 1, 3, None, "RGD", None, 11, None, 1, None, 1, None)
+         for i, (s, d) in enumerate(manual)],
+        ORTHOLOGS_SCHEMA,
+    )
+    agr_df = spark.createDataFrame(
+        [(a, b, "c", y, y, "m", None, None) for a, b, y in agr], AGR_ORTHOLOGS_SCHEMA
+    )
+    tiers = _tier_candidates(closed_df, genes, existing, agr_df).persist()
+    try:
+        dup = tiers.groupBy(*KEY, "tier").count().filter(F.col("count") > 1)
+        assert dup.count() == 0
+        assert _sorted_rows(_cascade_pick(tiers)) == _sorted_rows(
+            _row_number_pick(tiers)
+        )
+    finally:
+        tiers.unpersist()

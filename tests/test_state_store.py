@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ortholog_pipeline_spark.sources.state import StateStore
@@ -57,6 +58,91 @@ def test_partitioned_snapshot_prunes(spark, tmp_path):
     )
     # partition pruning: the scan reports a partition filter on sp
     assert "PartitionFilters" in plan and "sp" in plan.split("PartitionFilters")[1][:100]
+
+
+def data_files(store, table, version=None) -> dict[str, int]:
+    """{path under the version dir: inode} of a table version's data files."""
+    v = store.current_version(table) if version is None else version
+    vdir = os.path.join(store.root, table, f"v={v}")
+    return {
+        os.path.relpath(os.path.join(d, f), vdir): os.stat(os.path.join(d, f)).st_ino
+        for d, _, files in os.walk(vdir)
+        for f in files
+        if not f.startswith(("_", "."))
+    }
+
+
+def is_partitioned_by(store, table, col) -> bool:
+    """Every data file of the current version sits under a ``col=`` directory."""
+    files = data_files(store, table)
+    return bool(files) and all(p.startswith(f"{col}=") for p in files)
+
+
+def test_partitioned_insert_only_append_keeps_layout(spark, tmp_path):
+    """An insert-only change on a partitioned table takes the append path: the
+    inserts land in their partitions, every previous file is hardlinked, and
+    Spark reads every row back."""
+    store = StateStore(spark, str(tmp_path))
+    store.write(
+        "t",
+        spark.createDataFrame([(1, 1), (2, 2)], "k int, sp int"),
+        partition_by=["sp"],
+    )
+    before = data_files(store, "t")
+    store.apply_changes(
+        "t", inserts=spark.createDataFrame([(3, 1)], "k int, sp int")
+    )
+    after = data_files(store, "t")
+    assert sorted((r.k, r.sp) for r in store.read("t").collect()) == [
+        (1, 1), (2, 2), (3, 1)
+    ]
+    assert is_partitioned_by(store, "t", "sp")
+    assert before.items() <= after.items(), "previous files must be hardlinked"
+    assert len(after) > len(before)
+
+
+def test_write_declares_layout_once(spark, tmp_path):
+    """``partition_by`` declares the first version's layout; later writes keep
+    it, and a different one raises instead of silently relaying the table."""
+    store = StateStore(spark, str(tmp_path))
+    df = spark.createDataFrame([(1, 1), (2, 2)], "k int, sp int")
+    store.write("t", df, partition_by=["sp"])
+    store.write("t", df)
+    store.write("t", df, partition_by=["sp"])
+    assert is_partitioned_by(store, "t", "sp")
+    for other in (["k"], [], ["sp", "k"]):
+        with pytest.raises(ValueError, match="partition_by"):
+            store.write("t", df, partition_by=other)
+    store.write("flat", df)
+    with pytest.raises(ValueError, match="partition_by"):
+        store.write("flat", df, partition_by=["sp"])
+    assert store.current_version("t") == 2
+    assert store.current_version("flat") == 0
+
+
+def test_maintenance_keeps_partition_layout(spark, tmp_path):
+    """Keyed updates, compact and forget_keys rewrite a partitioned table
+    within its layout."""
+    store = StateStore(spark, str(tmp_path))
+    store.write(
+        "t",
+        spark.range(20).select(
+            F.col("id").alias("k"), (F.col("id") % 3).cast("int").alias("sp")
+        ),
+        partition_by=["sp"],
+    )
+    store.apply_changes(
+        "t",
+        updates=spark.createDataFrame([(4, 2)], "k long, sp int"),
+        update_key=["k"],
+    )
+    assert is_partitioned_by(store, "t", "sp")
+    store.compact("t")
+    assert is_partitioned_by(store, "t", "sp")
+    store.forget_keys("t", spark.createDataFrame([(5,)], "k long"), ["k"])
+    assert is_partitioned_by(store, "t", "sp")
+    got = {r.k: r.sp for r in store.read("t").collect()}
+    assert len(got) == 19 and 5 not in got and got[4] == 2
 
 
 def test_sliding_counts_batch(spark):
