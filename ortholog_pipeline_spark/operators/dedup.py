@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ortholog_pipeline_spark.functions.text import fingerprint, tokens
+from ortholog_pipeline_spark.operators import iterate as IT
 
 
 #: Row ceiling for the declared brute-force baselines below.  Both are
@@ -495,7 +496,7 @@ def minhash_lsh_dedup(
     hashed = shingle_sig_frame(df, text_col, id_col, num_hashes, k=k)
     groups = None
     if collapse_exact:
-        groups = (
+        groups = IT.round_checkpoint(
             hashed.withColumn(
                 "_gk",
                 F.md5(
@@ -516,11 +517,10 @@ def minhash_lsh_dedup(
                 F.first("h31").alias("h31"),
                 F.first("sig").alias("sig"),
             )
-            .persist()
         )
         base = groups.select(F.col("_rep").alias(id_col), "h31", "sig")
     else:
-        base = hashed.persist()
+        base = IT.round_checkpoint(hashed)
 
     with_sig = base
     cands = lsh_candidate_pairs(
@@ -712,16 +712,16 @@ def contamination_check(
     # r10: h31 from the Arrow-batched producer (set-identical); the holdout
     # flag is a pure function of the id, recomputed after the projection.
     # r11: sig-free variant (num_hashes=0 — only h31 is consumed here, so the
-    # 16 affine min-reductions were wasted NumPy work per doc) and persisted —
+    # 16 affine min-reductions were wasted NumPy work per doc) and checkpointed —
     # the frame feeds the posting explode AND the holdout-size branch, so the
     # Arrow UDF stage otherwise runs once per consuming branch (ADVICE r10).
-    hashed = shingle_sig_frame(df, text_col, id_col, 0).select(
+    hashed = IT.round_checkpoint(shingle_sig_frame(df, text_col, id_col, 0).select(
         F.col(id_col),
         (
             sample_bucket(F.col(id_col), "s0") < int(holdout_fraction * BUCKETS)
         ).alias("is_holdout"),
         "h31",
-    ).persist()
+    ))
 
     posting = hashed.select(id_col, "is_holdout", F.explode("h31").alias("h"))
     rare = (
@@ -895,11 +895,13 @@ def _hashed_and_banded(
     # r10: same Arrow-batched (h31, sig) producer as minhash_lsh_dedup —
     # value-identical to the expression path, so band keys and stored
     # shingle tables are unchanged (an existing index stays valid).
-    # r11: persisted — the frame feeds the banded branch AND (via `hashed`)
-    # the posting/size branches, so without the persist the Arrow UDF stage
+    # r11: checkpointed — the frame feeds the banded branch AND (via `hashed`)
+    # the posting/size branches, so without the checkpoint the Arrow UDF stage
     # (per-token md5 + affine min-reductions) re-executes once per consuming
     # branch (ADVICE r10; guide §5 reuse rule).
-    with_sig = shingle_sig_frame(df, text_col, id_col, num_hashes, k=k).persist()
+    with_sig = IT.round_checkpoint(
+        shingle_sig_frame(df, text_col, id_col, num_hashes, k=k)
+    )
     hashed = with_sig.select(id_col, "h31")
     banded = with_sig.select(
         F.col(id_col),

@@ -1,25 +1,21 @@
-"""Bounded-storage generation stepping for iterative DataFrame fixpoints.
+"""The package's one way to store a DataFrame: stored until unreferenced.
 
-Level-synchronous graph algorithms (BFS, Bellman-Ford min-plus relaxation,
-label propagation) produce one new "generation" frame per round.  Persisting
-each generation without releasing the previous one leaks executor storage
-linearly in the round count: harmless at 3 rounds on a 2 000-node demo graph,
-fatal at a 100-round fixpoint on a production graph (the dead generations
-pin memory/disk until the session dies).
+Every frame with more than one reader — a flow junction, a query's shared
+intermediate, one round of a fixpoint loop — goes through
+:func:`round_checkpoint`. It truncates the frame's lineage lazily, and the
+blocks it stores live exactly as long as some frame still references them:
+once the last reference goes, Spark's ContextCleaner frees the blocks (and,
+with ``spark.cleaner.referenceTracking.cleanCheckpoints``, the reliable
+checkpoint files). Nothing needs an explicit release, so a long-lived session
+does not accumulate storage, and a result frame stays readable for as long as
+its holder keeps it.
 
-``step_generation`` is the one correct ordering:
+``.persist()`` is not used: a CacheManager entry is held until someone calls
+``unpersist``, and its cached plan pins every checkpoint below it.
 
-1. persist the NEW generation,
-2. eagerly materialize it (so the cached blocks exist and no later job
-   re-reads the parent's lineage),
-3. THEN unpersist the previous generation.
-
-Storage is thereby bounded at two live generations at any instant, one
-between rounds.  ``operators/components.py`` achieves the same bound with
-``localCheckpoint`` (it also needs O(1) lineage for an unbounded round
-count); for fixed small round counts the persist/unpersist pair is cheaper
-(no block-manager write of a truncated plan) and keeps the plan visible to
-Catalyst end-to-end.
+Iterative loops (BFS, Bellman-Ford min-plus relaxation, label propagation,
+the large/small-star rounds in ``operators/components.py``) checkpoint each
+round; a superseded round is freed when the next round no longer needs it.
 
 Reference parity: the reference has no iterative operator (its deepest loop
 is the 4-tier cascade, OrthologRelationLoader.java:460-504, which is
@@ -36,27 +32,30 @@ RELIABLE_CHECKPOINT_CONF = "spark.ortholog.checkpoint.reliable"
 
 
 def round_checkpoint(df: DataFrame) -> DataFrame:
-    """Truncate lineage at an iteration/flow round boundary (lazily).
+    """Store ``df`` (lazily) until no frame references it.
 
     Default: ``localCheckpoint(eager=False)`` — blocks live on executors
-    (MEMORY_AND_DISK) with NO reliable copy. The fault-tolerance tradeoff
-    (ADVICE r10): after materialization, losing an executor (crash, OOM, or a
-    dynamic-allocation decommission) makes the RDD unrecoverable and fails the
-    job — local checkpointing is documented-unsafe with dynamic allocation.
-    On the bench's single-JVM local mode the executor IS the driver, so the
-    exposure is zero there; on a long-lived production cluster set
+    (MEMORY_AND_DISK) with NO reliable copy, and the first action that reads
+    the frame writes them (lazy means no result job here; under AQE the
+    shuffle stages of ``df``'s plan do run at the call). They are the
+    frame's only copy, so they are never
+    released by hand: the ContextCleaner frees them once the returned frame
+    and every frame built on it are garbage.
+
+    The fault-tolerance tradeoff (ADVICE r10): losing an executor (crash,
+    OOM, or a dynamic-allocation decommission) makes a materialized local
+    checkpoint unrecoverable and fails the job — local checkpointing is
+    documented-unsafe with dynamic allocation. On the bench's single-JVM
+    local mode the executor IS the driver, so the exposure is zero there; on
+    a long-lived production cluster set
 
         spark.ortholog.checkpoint.reliable=true   (+ sc.setCheckpointDir)
 
-    and every round boundary switches to reliable ``checkpoint(eager=False)``:
-    blocks go to the checkpoint dir (HDFS/object store), surviving executor
-    loss, at the cost of a write+read per boundary. Superseded round frames
-    are NOT unpersisted here: a locally-checkpointed RDD's persisted blocks
-    are its ONLY copy (unpersisting one invalidates it — Spark refuses
-    lineage recomputation past a checkpoint), and dead generations' blocks
-    are evictable storage-pool entries (MEMORY_AND_DISK, LRU) rather than a
-    leak; the reliable path's files are bounded by the session's checkpoint
-    dir lifecycle."""
+    and every call switches to reliable ``checkpoint(eager=False)``: blocks go
+    to the checkpoint dir (HDFS/object store), surviving executor loss, at the
+    cost of a write+read per boundary. The session sets
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, so those files
+    follow the same rule and are removed once unreferenced."""
     spark = df.sparkSession
     reliable = (
         str(spark.conf.get(RELIABLE_CHECKPOINT_CONF, "false")).lower() == "true"
@@ -69,16 +68,3 @@ def round_checkpoint(df: DataFrame) -> DataFrame:
             )
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
-
-
-def step_generation(new: DataFrame, prev: DataFrame | None) -> DataFrame:
-    """Persist + materialize ``new``, then release ``prev``'s storage.
-
-    Returns ``new`` (persisted).  ``prev`` may be None (first round) or an
-    unpersisted frame (``unpersist`` on one is a no-op warning-free call).
-    """
-    new = new.persist()
-    new.count()
-    if prev is not None:
-        prev.unpersist()
-    return new

@@ -17,10 +17,9 @@ The caller's order must be TOTAL (include a unique tie-break column):
 rows with equal keys may straddle a range boundary, and only a total order
 makes the resulting rank well-defined and engine-reproducible.
 
-The sorted+indexed frame is persisted so the counts job and the caller's job
-see the same computation once; call ``.unpersist()`` on the result's lineage
-when done, or accept recompute. At 100 TB prefer the persist (the frame is
-read twice) on MEMORY_AND_DISK — which is the default used here.
+The sorted+indexed frame is stored with ``round_checkpoint`` so the counts
+job and the caller's job see the same computation once (MEMORY_AND_DISK —
+the frame is read twice); it is freed once the result is unreferenced.
 """
 
 from __future__ import annotations
@@ -32,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ortholog_pipeline_spark.operators import iterate as IT
 
 
 def global_rank(
@@ -67,7 +68,7 @@ def global_rank(
             i += len(pdf)
             yield pdf
 
-    indexed = sorted_df.mapInPandas(add_index, out_schema).persist()
+    indexed = IT.round_checkpoint(sorted_df.mapInPandas(add_index, out_schema))
     counts = {
         r["_pid"]: r["n"]
         for r in indexed.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -148,7 +149,7 @@ def global_prefix_sum(
             acc = int(csum[-1]) if len(csum) else acc
             yield pdf
 
-    local = sorted_df.mapInPandas(add_local_sum, out_schema).persist()
+    local = IT.round_checkpoint(sorted_df.mapInPandas(add_local_sum, out_schema))
     # Partition total = sum of the values (order-independent integer sum) —
     # NOT max(_localsum), which is wrong as soon as values can be negative
     # (e.g. ±1 concurrency deltas make the running sum non-monotonic).

@@ -158,16 +158,15 @@ def run_agr_load(
 
         # Both dims feed a broadcast join PER SIDE, and the per-side column
         # renames make the two broadcast subplans non-identical, so ReuseExchange
-        # cannot dedup them — without the persist the gene-scan + groupBy behind
+        # cannot dedup them — without the checkpoint the gene-scan + groupBy behind
         # symbol_dim runs twice (measured 2 s each at sf0.1). Both frames are
         # dimension-sized (bounded by the gene/xref universe, not the file).
-        curie_dim = (
+        curie_dim = IT.round_checkpoint(
             xrefs.filter(F.col("xdb_key") == XDB_KEY_AGR_GENE)
             .select("acc_id", "rgd_id")
-            .persist()
         )
         active = rgd_ids.filter(F.col("object_status") == "ACTIVE").select("rgd_id")
-        symbol_dim = (
+        symbol_dim = IT.round_checkpoint(
             genes.join(active, "rgd_id", "left_semi")
             .select(
                 F.lower("gene_symbol").alias("gene_symbol_lc"),
@@ -176,7 +175,6 @@ def run_agr_load(
             )
             .groupBy("gene_symbol_lc", "species_type_key")
             .agg(F.min("rgd_id").alias("rgd_id"))  # first-wins determinism (§7)
-            .persist()
         )
 
         # consumed by minting (2 branches), resolved, unresolved, and the merge

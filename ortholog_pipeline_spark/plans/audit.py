@@ -4,7 +4,7 @@ The reference fans run events into 18 per-concern log4j files (log4j2.xml append
 README.md:137-144: matched/unmatched/multipleMatch/withdrawn/inserted/deleted/...).
 The engine's equivalent: each concern is a DataFrame side-output written as a
 parquet audit table under ``<root>/audit/<run_id>/<concern>/`` — queryable,
-schema'd, and cheap (each is a filter over an already-persisted frame, no extra
+schema'd, and cheap (each is a filter over an already-checkpointed frame, no extra
 lineage recomputation).
 """
 

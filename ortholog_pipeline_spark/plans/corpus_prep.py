@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ortholog_pipeline_spark.functions import text as TXT
 from ortholog_pipeline_spark.operators import dedup as DD
+from ortholog_pipeline_spark.operators import iterate as IT
 
 
 @dataclass
@@ -49,13 +50,13 @@ def run_corpus_prep(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> CorpusPrepResult:
-    annotated = docs.select(
+    annotated = IT.round_checkpoint(docs.select(
         id_col,
         text_col,
         TXT.lang_id(text_col).alias("predicted_lang"),
         F.round(TXT.quality_score(text_col), 6).alias("quality"),
         TXT.fingerprint(text_col).alias("fp"),
-    ).persist()
+    ))
 
     lang_ok = F.col("predicted_lang").isin(*keep_langs)
     dropped_lang = annotated.filter(~lang_ok)

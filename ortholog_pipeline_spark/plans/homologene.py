@@ -27,6 +27,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ortholog_pipeline_spark.operators import iterate as IT
 from ortholog_pipeline_spark.schemas import (
     ORTHOLOG_TYPE_DIRECT,
     PIPELINE_USER_ID,
@@ -123,15 +124,15 @@ def run_homologene_load(
     )
 
     key = ["group_id", "src_rgd_id", "dest_rgd_id"]
-    # lazily localCheckpointed: matches (touch), ins_raw (write), deletes
-    # (write) and the fused scalar-counts job all branch off this full-outer
-    # verdict join — at ~sf1 this frame is 350M+ rows, so one materialization
-    # and LogicalRDD-leaf plans for every consumer (species-flow lesson)
-    j = incoming.withColumn("_inc", F.lit(1)).join(
+    # checkpointed: matches (touch), ins_raw (write), deletes (write) and the
+    # fused scalar-counts job all branch off this full-outer verdict join — at
+    # ~sf1 this frame is 350M+ rows, so one materialization and LogicalRDD-leaf
+    # plans for every consumer (species-flow lesson)
+    j = IT.round_checkpoint(incoming.withColumn("_inc", F.lit(1)).join(
         scope.select(*key, "genetogene_key").withColumn("_exi", F.lit(1)),
         key,
         "full_outer",
-    ).localCheckpoint(eager=False)
+    ))
     matches = j.filter(F.col("_inc").isNotNull() & F.col("_exi").isNotNull())
     ins_raw = j.filter(F.col("_exi").isNull())  # species cols ride along
     deletes = j.filter(F.col("_inc").isNull()).select("genetogene_key")
@@ -186,7 +187,7 @@ def run_homologene_load(
         .withColumn("last_modified_by", F.lit(PIPELINE_USER_ID))
         .withColumn("last_modified_date", ts)
         .select(*[f.name for f in orthologs.schema.fields])
-        # no persist: consumed once (the write); keygen's internal persist
+        # not stored: consumed once (the write); keygen's internal checkpoint
         # already covers its own double-read of the subtree
     )
     touched = (

@@ -119,8 +119,8 @@ def _tier_candidates(
 
     # -- tiers 3/4: per-source best-fit over the resolved relations (F4 + W1),
     # with gene symbols joined in for the tie-break rules
-    # persisted: broadcast twice under src/dest renames (see _conflict_verdicts)
-    sym = genes.select("rgd_id", "gene_symbol").persist()
+    # checkpointed: broadcast twice under src/dest renames (see _conflict_verdicts)
+    sym = IT.round_checkpoint(genes.select("rgd_id", "gene_symbol"))
     with_syms = (
         closed.join(
             F.broadcast(sym.withColumnsRenamed(
@@ -216,13 +216,13 @@ def _conflict_verdicts(
         source_priority,
     )
 
-    # persisted: the symbol dim feeds FOUR broadcast joins under different
+    # checkpointed: the symbol dim feeds FOUR broadcast joins under different
     # renames (src/ex-dest on the existing side, src/inc-dest on the incoming
     # side) — non-identical subtrees, so ReuseExchange would rebuild the gene
-    # scan per join without the persist (same lesson as the AGR dims)
-    sym = F.broadcast(
-        genes.select("rgd_id", F.lower("gene_symbol").alias("_sym_lc")).persist()
-    )
+    # scan per join without the checkpoint (same lesson as the AGR dims)
+    sym = F.broadcast(IT.round_checkpoint(
+        genes.select("rgd_id", F.lower("gene_symbol").alias("_sym_lc"))
+    ))
     ex = (
         existing.select(
             *KEY,
@@ -327,7 +327,7 @@ def run_species_load(
 
         # A1/A2 group + dedup-merge, then U4 symmetric closure. ``closed`` feeds
         # the tier cascade AND the weak-association candidates AND (via picks)
-        # the conflict join — persist it so the parse→resolve→merge lineage
+        # the conflict join — checkpoint it so the parse→resolve→merge lineage
         # computes once, not once per downstream action.
         #
         # Guard counters ride the materializing action via the Observation API
@@ -353,7 +353,7 @@ def run_species_load(
                 "n_unmergeable"
             ),
         )
-        # localCheckpoint instead of persist: closed's parse->resolve->merge
+        # checkpointed, not cached: closed's parse->resolve->merge
         # lineage re-enters EVERY downstream plan (tiers, weak candidates,
         # conflict join); truncating it here shrinks each of those plan trees
         # and the per-action planning cost with them
@@ -408,7 +408,7 @@ def run_species_load(
         picks = IT.round_checkpoint(_cascade_pick(tiers))
 
         # J7 conflict verdicts vs existing — consumed by inserts, deletes,
-        # stale, touch, downgrades and the result object: persist to stop 6×
+        # stale, touch, downgrades and the result object: checkpoint to stop 6×
         # recomputation of the cascade + full-outer join lineage
         verdicts, ex_ranked = _conflict_verdicts(picks, species_scope, genes)
         verdicts = IT.round_checkpoint(verdicts)
@@ -450,15 +450,14 @@ def run_species_load(
         inserts_raw = _mk_orthologs(
             verdicts.filter(F.col("verdict").isin("INSERT", "DELETE_EXISTING"))
         )
-        # lazily localCheckpointed (NOT merely persisted): consumed by the
+        # checkpointed (NOT merely cached): consumed by the
         # provisional snapshot (W2 input), BOTH concurrent snapshot commits, and
-        # the result object. A persist would keep the full keygen+cascade lineage
+        # the result object. A cache would keep the full keygen+cascade lineage
         # in every consumer's logical plan — and with the association commit now
         # built on the logical next-snapshot frame instead of a parquet re-read,
         # those plan trees compound until planning itself is the cost (measured:
         # tree stringification alone OOMed an 8g driver late in a bench run).
-        # localCheckpoint truncates the plan to a LogicalRDD leaf; eager=False
-        # keeps construction job-free (the keygen-laziness pin).
+        # The checkpoint truncates the plan to a LogicalRDD leaf.
         inserts = (
             next_surrogate_keys(inserts_raw, (max_key_row or 0), "genetogene_key")
             .select(*[f.name for f in orthologs.schema.fields])
@@ -506,14 +505,13 @@ def run_species_load(
         manual_keys = species_scope.filter(F.col("xref_data_src") == "RGD").select(
             "genetogene_key"
         )
-        # persisted: the churn guard counts this key list and the snapshot write
+        # checkpointed: the churn guard counts this key list and the snapshot write
         # consumes it twice (directly and inside the provisional W2 input) — a tiny
         # frame whose lineage spans the whole cascade
-        deletes = (
+        deletes = IT.round_checkpoint(
             replaced.unionByName(surplus)
             .unionByName(stale)
             .join(manual_keys, "genetogene_key", "left_anti")
-            .persist()
         )
         if n_scope:
             sync.guard_delete_threshold(deletes.count(), n_scope, delete_threshold_pct)
@@ -584,12 +582,12 @@ def run_species_load(
         assoc_key_cols = [
             "master_rgd_id", "detail_rgd_id", "assoc_type", "src_pipeline"
         ]
-        # persisted: a_ins (keygen count pass + write), a_del, a_upd and the result
+        # checkpointed: a_ins (keygen count pass + write), a_del, a_upd and the result
         # object all branch off this full-outer join — one materialization instead
         # of four runs of the weak-candidate sync lineage
-        assoc_verdicts = sync.sync_full_outer(
+        assoc_verdicts = IT.round_checkpoint(sync.sync_full_outer(
             weak, existing_weak, assoc_key_cols, ["assoc_subtype"]
-        ).persist()
+        ))
 
         a_ins_raw = assoc_verdicts.filter(F.col("sync_verdict") == sync.INSERT).select(
             *assoc_key_cols, "assoc_subtype"

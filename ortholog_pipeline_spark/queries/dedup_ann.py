@@ -1371,20 +1371,19 @@ def emb_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wq = Window.orderBy(F.col("sim_q").desc(), F.col("vec_id"))
-    # persisted: the greedy rounds re-enter cand (and pw below) once per pick;
-    # without the persist each of the 4 rounds re-runs the corpus-sized ANN
+    # checkpointed: the greedy rounds re-enter cand (and pw below) once per
+    # pick; without the checkpoint each of the 4 rounds re-runs the corpus-sized ANN
     # scoring pass that produced this 8-row frame
-    cand = (
+    cand = IT.round_checkpoint(
         scored.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= 8)
         .select("vec_id", "v", "sim_q")
-        .persist()
     )
     a = cand.select(F.col("vec_id").alias("ida"), F.col("v").alias("va"))
     b = cand.select(F.col("vec_id").alias("idb"), F.col("v").alias("vb"))
-    pw = (
-        a.join(b, F.col("ida") != F.col("idb"))
-        .select(
+    # 56 rows, re-entered once per greedy round
+    pw = IT.round_checkpoint(
+        a.join(b, F.col("ida") != F.col("idb")).select(
             "ida",
             "idb",
             (
@@ -1395,7 +1394,6 @@ def emb_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("sim"),
         )
-        .persist()  # 56 rows, re-entered once per greedy round
     )
     wm = Window.orderBy(F.col("mmr").desc(), F.col("vec_id"))
 
@@ -1735,29 +1733,27 @@ def emb_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates — the vector is always 64 rows, the corpus passes are the
     only O(n) work, exactly how a 100 TB single-component PCA runs."""
     emb = _t(spark, sf_dir, "embeddings")
-    ev = emb.select(
+    ev = IT.round_checkpoint(emb.select(
         "vec_id", F.posexplode("embedding").alias("p", "e0")
     ).select(
         "vec_id", (F.col("p") + 1).alias("d"), F.col("e0").cast("double").alias("e")
-    ).persist()
+    ))
     v = None  # 64-row (d, val) frame
     spark_dims = spark.range(1, 65).select(F.col("id").alias("d"))
     v = spark_dims.select(
         "d", F.when(F.col("d") == 1, 1.0).otherwise(0.0).alias("val")
     )
     lam = None
-    prev = None
     for _ in range(3):
         dots = (
             ev.join(F.broadcast(v), "d")
             .groupBy("vec_id")
             .agg(F.sum(F.col("e") * F.col("val")).alias("dt"))
         )
-        w = prev = IT.step_generation(
+        w = IT.round_checkpoint(
             ev.join(dots, "vec_id")
             .groupBy("d")
-            .agg(F.sum(F.col("e") * F.col("dt")).alias("w")),
-            prev,
+            .agg(F.sum(F.col("e") * F.col("dt")).alias("w"))
         )
         nrm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("l"))
         lam = nrm
@@ -1825,11 +1821,11 @@ def emb_covariance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapped to integer 1e-8 units so the top-20 SET is engine-stable even
     when two covariances differ below the rounding floor."""
     emb = _t(spark, sf_dir, "embeddings")
-    ev = emb.select(
+    ev = IT.round_checkpoint(emb.select(
         "vec_id", F.posexplode("embedding").alias("p", "e0")
     ).select(
         "vec_id", (F.col("p") + 1).alias("d"), F.col("e0").cast("double").alias("e")
-    ).persist()
+    ))
     mu = ev.groupBy("d").agg(F.avg("e").alias("m"))
     a = ev.select("vec_id", F.col("d").alias("d1"), F.col("e").alias("ea"))
     b = ev.select("vec_id", F.col("d").alias("d2"), F.col("e").alias("eb"))
@@ -1922,7 +1918,7 @@ def emb_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot = lambda x, y: F.aggregate(  # noqa: E731
         F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
     )
-    scored = (
+    scored = IT.round_checkpoint(
         e.crossJoin(anchors)
         .filter(F.col("vec_id") != F.col("a_id"))
         .select(
@@ -1939,7 +1935,6 @@ def emb_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("sim"),
         )
-        .persist()
     )
     w_pos = Window.partitionBy("a_id").orderBy(F.col("sim").asc(), "vec_id")
     pos = (
@@ -2036,10 +2031,10 @@ def emb_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planted defects: every 50th vector scaled 1.5x (corpus is otherwise
     # unit-normalized, which would make the screen trivially empty)
     scale = F.when(F.col("vec_id") % 50 == 0, F.lit(1.5)).otherwise(F.lit(1.0))
-    norms = e.select(
+    norms = IT.round_checkpoint(e.select(
         "vec_id",
         F.round(F.sqrt(dot_vv) * scale * 1000000).cast("long").alias("nrm_micro"),
-    ).persist()
+    ))
     w_n = Window.orderBy("nrm_micro", "vec_id")
     wa = Window.partitionBy()
     med = (
@@ -2123,16 +2118,15 @@ def dedup_lsh_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # also returns is dropped here — the memoized md5 still wins).
     # r11: sig-free variant (num_hashes=0) — the dropped sig no longer costs
     # 16 affine min-reductions per doc.
-    hashed = (
+    hashed = IT.round_checkpoint(
         DD.shingle_sig_frame(docs, "text", "doc_id", 0)
         .select("doc_id", "h31")
-        .persist()
     )
     posting = hashed.select("doc_id", F.explode("h31").alias("hsh"))
     p1 = posting.select(F.col("doc_id").alias("id_1"), "hsh")
     p2 = posting.select(F.col("doc_id").alias("id_2"), "hsh")
     sizes = hashed.select("doc_id", F.size("h31").alias("sz"))
-    exact = (
+    exact = IT.round_checkpoint(
         p1.join(p2, "hsh")
         .filter(F.col("id_1") < F.col("id_2"))
         .groupBy("id_1", "id_2")
@@ -2149,11 +2143,10 @@ def dedup_lsh_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("jaccard") >= 0.5)
         .select("id_1", "id_2", "jaccard")
-        .persist()
     )
-    lsh = DD.minhash_lsh_dedup(
+    lsh = IT.round_checkpoint(DD.minhash_lsh_dedup(
         docs, k=3, num_hashes=16, bands=4, threshold=0.5
-    ).persist()
+    ))
     missed = exact.join(lsh.select("id_1", "id_2"), ["id_1", "id_2"], "left_anti")
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     n_lsh = lsh.agg(F.count(F.lit(1)).alias("n_lsh"))
@@ -2423,20 +2416,20 @@ def emb_cluster_purity_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = e.select(
         "label", SIM.hyperplane_bucket(F.col("v"), 4).alias("cluster")
     )
-    cont = assigned.groupBy("cluster", "label").agg(
+    cont = IT.round_checkpoint(assigned.groupBy("cluster", "label").agg(
         F.count(F.lit(1)).alias("n_ij")
-    ).persist()
+    ))
     w_c = Window.partitionBy("cluster")
     w_l = Window.partitionBy("label")
     wa = Window.partitionBy()
-    margins = cont.select(
+    margins = IT.round_checkpoint(cont.select(
         "cluster",
         "label",
         "n_ij",
         F.sum("n_ij").over(w_c).alias("a_i"),
         F.sum("n_ij").over(w_l).alias("b_j"),
         F.sum("n_ij").over(wa).alias("n"),
-    ).persist()
+    ))
     comb = lambda c: (c * (c - 1) / 2)  # noqa: E731
     sum_ij = margins.agg(
         F.sum(comb(F.col("n_ij"))).alias("sum_comb_ij"),

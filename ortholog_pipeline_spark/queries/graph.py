@@ -73,14 +73,13 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     a = (F.col("l_orderkey") % 20000).alias("a")
     b = (F.col("l_partkey") % 20000).alias("b")
-    e = (
+    e = IT.round_checkpoint(
         li.select(a, b)
         .filter(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
         )
         .dropDuplicates()
-        .persist()
     )
     e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
@@ -225,25 +224,23 @@ def g_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
     # lazy round_checkpoint (r10, guide §2.4/§5; r11: config-gated reliable
     # variant — see operators/iterate.round_checkpoint for the
-    # fault-tolerance tradeoff): every step_generation round is an eager
-    # action whose plan re-derives e (lineitem scan + distinct shuffle) —
-    # 3 rounds + the final action paid it 4x. One materialization of the
-    # narrow (long, long) edge list serves all rounds. Measured at sf0.1
+    # fault-tolerance tradeoff): every round's plan would otherwise
+    # re-derive e (lineitem scan + distinct shuffle) — 3 rounds + the final
+    # action paid it 4x. One materialization of the narrow (long, long) edge
+    # list serves all rounds. Measured at sf0.1
     # (interleaved best-of-3, identical output): 4.08 s -> 3.34 s.
     )
     e = IT.round_checkpoint(e)
     dist = spark.createDataFrame(
         [(0, 0), (1, 0), (2, 0)], schema="node long, d long"
     )
-    prev = None
     for _ in range(3):
         expanded = (
             dist.join(e, dist["node"] == e["u"])
             .select(F.col("v").alias("node"), (F.col("d") + 1).alias("d"))
         )
-        dist = prev = IT.step_generation(
-            dist.unionByName(expanded).groupBy("node").agg(F.min("d").alias("d")),
-            prev,
+        dist = IT.round_checkpoint(
+            dist.unionByName(expanded).groupBy("node").agg(F.min("d").alias("d"))
         )
     return dist.groupBy(F.col("d").alias("hops")).agg(
         F.count(F.lit(1)).alias("n_nodes"),
@@ -380,23 +377,21 @@ def g_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lazy round_checkpoint per round (r10, guide §2.4/§5; r11:
         # config-gated reliable variant — see operators/iterate
         # .round_checkpoint for the executor-loss/dynamic-allocation
-        # tradeoff and why superseded round frames are not unpersisted):
-        # each peel
-        # round's degree aggregate AND its two semi-joins re-enter the edge
-        # frame, so the unrolled lineage multiplies ~5x per round — the
-        # final single-action plan carried 564 Exchange / 750 scan operators
-        # (22.9k plan lines) and NONE were deduped at plan time (AQE builds
-        # stages per exchange subtree; the duplicated degree subtrees are
-        # sibling broadcasts inside one stage, which stage reuse cannot
+        # tradeoff): each peel round's degree aggregate AND its two semi-joins
+        # re-enter the edge frame, so the unrolled lineage multiplies ~5x per
+        # round — the final single-action plan carried 564 Exchange / 750 scan
+        # operators (22.9k plan lines) and NONE were deduped at plan time (AQE
+        # builds stages per exchange subtree; the duplicated degree subtrees
+        # are sibling broadcasts inside one stage, which stage reuse cannot
         # collapse). Truncating lineage at the round boundary makes every
-        # round O(1) plan depth — the same bound components.py documents —
-        # and the materialized frame is the SHRINKING edge list (narrow
-        # (long, long) rows), exactly what a 100 TB peel wants between
-        # rounds. Measured at sf0.1 (interleaved best-of-3, identical
-        # output): 10.05 s -> 2.71 s. (The r2 note that a persist() here was
-        # a 7x regression measured CACHING the frame while keeping full
-        # lineage in every consumer's plan — localCheckpoint replaces the
-        # lineage, which is the part that was quadratic.)
+        # round O(1) plan depth — the same bound components.py documents — and
+        # the materialized frame is the SHRINKING edge list (narrow (long,
+        # long) rows), exactly what a 100 TB peel wants between rounds.
+        # Measured at sf0.1 (interleaved best-of-3, identical output): 10.05 s
+        # -> 2.71 s. (The r2 note that a persist() here was a 7x regression
+        # measured CACHING the frame while keeping full lineage in every
+        # consumer's plan — localCheckpoint replaces the lineage, which is the
+        # part that was quadratic.)
     )
     edges = IT.round_checkpoint(edges)
     k = 60
@@ -524,7 +519,7 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = e0.unionByName(
         e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
     # lazy round_checkpoint (r10; r11 config-gated reliable variant — see
-    # operators/iterate.round_checkpoint): e re-enters every eager vote round
+    # operators/iterate.round_checkpoint): e re-enters every vote round
     # AND the labels init — same per-round re-derivation as g_bfs_distance;
     # one materialization serves all. Measured at sf0.1: 2.76 s -> 2.45 s,
     # identical output.
@@ -533,7 +528,6 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = e.select(F.col("u").alias("node")).distinct().withColumn(
         "lab", F.col("node")
     )
-    prev = None
     for _ in range(3):
         votes = (
             e.join(labels, e["v"] == labels["node"])
@@ -541,11 +535,10 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         w = Window.partitionBy("nd").orderBy(F.col("cnt").desc(), F.col("lab"))
-        labels = prev = IT.step_generation(
+        labels = IT.round_checkpoint(
             votes.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
-            .select(F.col("nd").alias("node"), "lab"),
-            prev,
+            .select(F.col("nd").alias("node"), "lab")
         )
     comm = labels.groupBy(F.col("lab").alias("community")).agg(
         F.count(F.lit(1)).alias("size")
@@ -598,7 +591,7 @@ def g_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     an anti-join on the canonical (min,max) pair; ranking is by integer
     common-count with pair tie-break."""
     li = _t(spark, sf_dir, "lineitem")
-    e0 = (
+    e0 = IT.round_checkpoint(
         li.filter((F.col("l_orderkey") * 31 + F.col("l_partkey")) % 11 == 0)
         .select(
             F.least(F.col("l_orderkey") % 1000, F.col("l_partkey") % 1000).alias(
@@ -610,7 +603,6 @@ def g_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     adj = e0.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionByName(
         e0.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
@@ -721,11 +713,10 @@ def g_neighbor_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w_u = Window.partitionBy("u").orderBy(hsh.asc(), F.col("v"))
-    sampled = e.withColumn("rn", F.row_number().over(w_u)).persist()
-    h1 = (
+    sampled = IT.round_checkpoint(e.withColumn("rn", F.row_number().over(w_u)))
+    h1 = IT.round_checkpoint(
         sampled.filter((F.col("u") < 50) & (F.col("rn") <= 3))
         .select(F.col("u").alias("seed"), "v")
-        .persist()
     )
     s2 = sampled.filter(F.col("rn") <= 2).select(
         F.col("u").alias("mid"), F.col("v").alias("w")
@@ -883,22 +874,20 @@ def g_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(10),
         ),
     )
-    e = we.unionByName(
+    e = IT.round_checkpoint(we.unionByName(
         we.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    ).persist()
+    ))
     dist = spark.createDataFrame(
         [(0, 0), (1, 0), (2, 0)], schema="node long, dist long"
     )
-    prev = None
     for _ in range(3):
         relaxed = dist.join(e, dist["node"] == e["u"]).select(
             F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        dist = prev = IT.step_generation(
+        dist = IT.round_checkpoint(
             dist.unionByName(relaxed)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist")),
-            prev,
+            .agg(F.min("dist").alias("dist"))
         )
     return dist.groupBy(F.col("dist").alias("distance")).agg(
         F.count(F.lit(1)).alias("n_nodes"),
@@ -960,9 +949,9 @@ def _blocking_quality_report(
     entry audits a 1/10 key sample; the ~sf1 slice certification (slice_cert)
     deepens to 1/1000 so the exhaustive-truth cross join stays at the sf0.1
     cost while reading the full scaled table."""
-    cust = _t(spark, sf_dir, "customer").filter(
+    cust = IT.round_checkpoint(_t(spark, sf_dir, "customer").filter(
         F.col("c_custkey") % modulus == 0
-    ).select("c_custkey", "c_name", "c_nationkey").persist()
+    ).select("c_custkey", "c_name", "c_nationkey"))
     n = cust.agg(F.count(F.lit(1)).alias("n"))
     a = cust.select(
         F.col("c_custkey").alias("u"),
@@ -974,20 +963,18 @@ def _blocking_quality_report(
         F.col("c_name").alias("name_v"),
         F.col("c_nationkey").alias("nat_v"),
     )
-    truth = (
+    truth = IT.round_checkpoint(
         a.crossJoin(b)
         .filter(
             (F.col("u") < F.col("v"))
             & (F.levenshtein("name_u", "name_v") <= 1)
         )
         .select("u", "v")
-        .persist()
     )
-    blocked = (
+    blocked = IT.round_checkpoint(
         a.join(b, F.col("nat_u") == F.col("nat_v"))
         .filter(F.col("u") < F.col("v"))
         .select("u", "v")
-        .persist()
     )
     found = truth.join(blocked, ["u", "v"])
     nc = blocked.agg(F.count(F.lit(1)).alias("n_candidate_pairs"))
@@ -1093,7 +1080,7 @@ def g_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-per-community aggregate — evaluating a partition is two
     aggregates once the labels exist."""
     li = _t(spark, sf_dir, "lineitem")
-    e0 = (
+    e0 = IT.round_checkpoint(
         li.filter((F.col("l_orderkey") * 31 + F.col("l_partkey")) % 13 == 0)
         .select(
             F.least(F.col("l_orderkey") % 2000, F.col("l_partkey") % 2000).alias(
@@ -1105,13 +1092,11 @@ def g_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     e = e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
     labels = e.select(F.col("u").alias("node")).distinct().withColumn(
         "lab", F.col("node")
     )
-    prev = None
     for _ in range(3):
         votes = (
             e.join(labels, e["v"] == labels["node"])
@@ -1119,11 +1104,10 @@ def g_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         w = Window.partitionBy("nd").orderBy(F.col("cnt").desc(), F.col("lab"))
-        labels = prev = IT.step_generation(
+        labels = IT.round_checkpoint(
             votes.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
-            .select(F.col("nd").alias("node"), "lab"),
-            prev,
+            .select(F.col("nd").alias("node"), "lab")
         )
     m_edges = e0.agg(F.count(F.lit(1)).alias("m"))
     la = labels.select(F.col("node").alias("u"), F.col("lab").alias("lab_u"))

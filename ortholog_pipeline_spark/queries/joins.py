@@ -5,6 +5,7 @@ from ortholog_pipeline_spark.queries._shared import (  # noqa: F401
     DD,
     DataFrame,
     F,
+    IT,
     RJ,
     SKW,
     SparkSession,
@@ -491,10 +492,9 @@ def j_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     item would salt the self-join at scale; here the shuffle key is the
     basket id, which is unskewed by construction."""
     li = _t(spark, sf_dir, "lineitem")
-    b = (
+    b = IT.round_checkpoint(
         li.select("l_orderkey", (F.col("l_partkey") % 200).alias("item"))
         .dropDuplicates()
-        .persist()
     )
     n_orders = b.select("l_orderkey").distinct().count()
     item_n = b.groupBy("item").agg(F.count("*").alias("c"))
@@ -1165,11 +1165,10 @@ def j_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("lx") - F.col("x")) * (F.col("lx") - F.col("x"))
         + (F.col("ly") - F.col("y")) * (F.col("ly") - F.col("y"))
     )
-    pairs = (
+    pairs = IT.round_checkpoint(
         probes.join(a, ["cx", "cy"])
         .filter((F.col("lid") < F.col("id")) & (dist < _GEO_EPS))
         .select(F.col("lid").alias("i1"), F.col("id").alias("i2"))
-        .persist()
     )
     sym = pairs.select(F.col("i1").alias("u"), F.col("i2").alias("v")).unionByName(
         pairs.select(F.col("i2").alias("u"), F.col("i1").alias("v"))
@@ -1177,21 +1176,20 @@ def j_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = sym.groupBy(F.col("u").alias("id")).agg(
         F.count(F.lit(1)).alias("nbrs")
     )
-    core = deg.filter(F.col("nbrs") >= 2).select("id").persist()
+    core = IT.round_checkpoint(deg.filter(F.col("nbrs") >= 2).select("id"))
     core_edges = (
         pairs.join(core.withColumnRenamed("id", "i1"), "i1", "left_semi")
         .join(core.withColumnRenamed("id", "i2"), "i2", "left_semi")
         .select(F.col("i1").alias("id_1"), F.col("i2").alias("id_2"))
     )
     comp_raw = CCop.connected_components(core_edges)
-    comp = (
+    comp = IT.round_checkpoint(
         core.join(
             comp_raw.withColumnRenamed("node", "id"), "id", "left_outer"
         )
         .select(
             "id", F.coalesce(F.col("component"), F.col("id")).alias("cluster_id")
         )
-        .persist()
     )
     border = (
         sym.join(
@@ -1462,7 +1460,7 @@ def j_haversine_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         * 360
         - 180
     )
-    g = cust.select(
+    g = IT.round_checkpoint(cust.select(
         F.col("c_custkey").alias("id"), lat.alias("lat"), lon.alias("lon")
     ).select(
         "id",
@@ -1470,7 +1468,7 @@ def j_haversine_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lon",
         F.floor(F.col("lat") / 5).cast("long").alias("gy"),
         F.floor(F.col("lon") / 5).cast("long").alias("gx"),
-    ).persist()
+    ))
     queries_df = g.filter(F.col("id") < 60)
     offsets = F.explode(
         F.array(
@@ -1565,12 +1563,12 @@ def j_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-snapped score. The same plan serves any query size — the df
     frame is |query terms| rows."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
+    toks = IT.round_checkpoint(docs.select(
         "doc_id",
         F.explode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
         ).alias("tok"),
-    ).persist()
+    ))
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("f"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len"))
     stats = dl.agg(

@@ -3,6 +3,7 @@ from ortholog_pipeline_spark.queries._shared import (  # noqa: F401
     DD,
     DataFrame,
     F,
+    IT,
     SMP,
     SparkSession,
     TXT,
@@ -568,14 +569,13 @@ def sample_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    interactions = (
+    interactions = IT.round_checkpoint(
         orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(
             F.col("o_custkey").alias("user_id"),
             F.col("l_partkey").alias("item_id"),
         )
         .distinct()
-        .persist()
     )
     active = (
         interactions.groupBy("user_id")

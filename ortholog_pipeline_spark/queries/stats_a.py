@@ -3,6 +3,7 @@ from ortholog_pipeline_spark.queries._shared import (  # noqa: F401
     DD,
     DataFrame,
     F,
+    IT,
     QC,
     RK,
     SK,
@@ -557,16 +558,16 @@ def a_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ortholog_pipeline_spark.operators.ranking import global_prefix_sum
 
     orders = _t(spark, sf_dir, "orders")
-    # consumed twice (total aggregate + prefix-sum pipeline) — persist so the
+    # consumed twice (total aggregate + prefix-sum pipeline) — checkpoint so the
     # orders scan+agg runs once
-    r = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
+    r = IT.round_checkpoint(orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
             "rev_cents"
         )
-    ).persist()
-    # total FIRST: the collect materializes the persisted r, so every job the
-    # prefix sum launches (range sampling, local sums, offsets) reads the
-    # cache instead of re-running the orders aggregation
+    ))
+    # total FIRST: the collect materializes the checkpointed r, so every job
+    # the prefix sum launches (range sampling, local sums, offsets) reads the
+    # stored blocks instead of re-running the orders aggregation
     total = r.agg(F.sum("rev_cents")).collect()[0][0]
     # total order: revenue DESC then custkey — encode as (-rev, key) ascending
     r2 = r.withColumn("_negrev", -F.col("rev_cents"))
@@ -724,13 +725,12 @@ def a_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     sketch = SK.cm_sketch(li, "l_partkey", width=_CM_W, depth=_CM_D)
     # the 20-row exact-contrast frame feeds both the probe and the final join —
-    # persist so its full-table aggregation runs once, not twice
-    top = (
+    # checkpoint so its full-table aggregation runs once, not twice
+    top = IT.round_checkpoint(
         li.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("n_exact"))
         .orderBy(F.desc("n_exact"), "l_partkey")
         .limit(20)
-        .persist()
     )
     est = SK.cm_estimate(sketch, top, "l_partkey", width=_CM_W, depth=_CM_D)
     return top.join(est, "l_partkey").select("l_partkey", "n_exact", "cm_estimate")
@@ -2140,7 +2140,7 @@ def a_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("date"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("date"))
     )
-    rev = (
+    rev = IT.round_checkpoint(
         li.groupBy("l_suppkey")
         .agg(
             F.round(
@@ -2149,7 +2149,6 @@ def a_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rev_cents")
         )
-        .persist()
     )
     mx = rev.agg(F.max("rev_cents").alias("mx"))
     supp = _t(spark, sf_dir, "supplier")
@@ -2468,14 +2467,14 @@ def a_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_mktsegment").alias("x"), F.col("r_name").alias("y"))
         .agg(F.count(F.lit(1)).alias("n_xy"))
     )
-    m = xy.select(
+    m = IT.round_checkpoint(xy.select(
         "x",
         "y",
         "n_xy",
         F.sum("n_xy").over(Window.partitionBy("x")).alias("n_x"),
         F.sum("n_xy").over(Window.partitionBy("y")).alias("n_y"),
         F.sum("n_xy").over(Window.partitionBy()).alias("n"),
-    ).persist()
+    ))
     mi = F.sum(
         (F.col("n_xy") * 1.0 / F.col("n"))
         * F.log(F.col("n_xy") * 1.0 * F.col("n") / (F.col("n_x") * F.col("n_y")))

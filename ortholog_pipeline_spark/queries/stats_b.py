@@ -3,6 +3,7 @@ from ortholog_pipeline_spark.queries._shared import (  # noqa: F401
     DD,
     DataFrame,
     F,
+    IT,
     SparkSession,
     Window,
     _SIG_CTES,
@@ -747,14 +748,14 @@ def a_fair_share_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.col("d")
         ).alias("cum_below"),
     )
-    flagged = ordered.crossJoin(F.broadcast(cap)).withColumn(
+    flagged = IT.round_checkpoint(ordered.crossJoin(F.broadcast(cap)).withColumn(
         "fully_served",
         F.when(
             F.col("cum_below") + F.col("d") * (F.col("n") - F.col("i") + 1)
             <= F.col("c"),
             1,
         ).otherwise(0),
-    ).persist()
+    ))
     lvl = (
         flagged.filter(F.col("fully_served") == 0)
         .orderBy("i")
@@ -835,7 +836,7 @@ def a_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 25 == 0,
         F.md5(F.concat(F.lit("syndicated"), (F.col("doc_id") % 10).cast("string"))),
     ).otherwise(F.md5("text"))
-    hashed = docs.select("source", th.alias("th")).distinct().persist()
+    hashed = IT.round_checkpoint(docs.select("source", th.alias("th")).distinct())
     a = hashed.select(F.col("source").alias("source_1"), "th")
     b = hashed.select(F.col("source").alias("source_2"), "th")
     pairs = (
@@ -1052,10 +1053,9 @@ def a_lsh_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r10: signatures from the Arrow-batched producer (value-identical to the
     # higher-order-function expression path it replaced — see
     # operators/dedup._mh_h31_sig_udf, measured 4.1x on this stage)
-    sig = (
+    sig = IT.round_checkpoint(
         DD.shingle_sig_frame(docs, "text", "doc_id", 16)
         .select("doc_id", "sig")
-        .persist()
     )
     outs = []
     for n_bands in (2, 4, 8):
@@ -1155,13 +1155,13 @@ def a_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     w_u = Window.partitionBy("user_id")
     w_o = Window.partitionBy("user_id").orderBy("wk")
-    marked = uw.select(
+    marked = IT.round_checkpoint(uw.select(
         "user_id",
         "wk",
         F.min("wk").over(w_u).alias("first_wk"),
         F.lag("wk").over(w_o).alias("prev_wk"),
         F.lead("wk").over(w_o).alias("next_wk"),
-    ).persist()
+    ))
     maxwk = marked.agg(F.max("wk").alias("mw"))
     states = marked.groupBy("wk").agg(
         F.sum(F.when(F.col("wk") == F.col("first_wk"), 1).otherwise(0)).alias(
@@ -1247,12 +1247,11 @@ def a_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     cust_d = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
-    cust = (
+    cust = IT.round_checkpoint(
         orders.join(F.broadcast(cust_d), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "n_name")
         .agg(F.round(F.sum("o_totalprice") * 100).cast("long").alias("cents"))
-        .persist()
     )
     tot = cust.agg(F.avg("cents").alias("mu"), F.count(F.lit(1)).alias("n"))
     grp = cust.groupBy("n_name").agg(
@@ -1416,9 +1415,9 @@ def a_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w_rn).alias("rn"),
         F.count(F.lit(1)).over(wa).alias("n"),
     )
-    interior = trended.filter(
+    interior = IT.round_checkpoint(trended.filter(
         (F.col("rn") > 3) & (F.col("rn") <= F.col("n") - 3)
-    ).persist()
+    ))
     seasonal = interior.groupBy("dow").agg(
         F.avg(F.col("cents") - F.col("trend")).alias("s")
     )
@@ -2231,7 +2230,7 @@ def a_james_stein_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
-    grp = (
+    grp = IT.round_checkpoint(
         orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
@@ -2240,7 +2239,6 @@ def a_james_stein_means(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.var_samp("o_totalprice").alias("v"),
         )
-        .persist()
     )
     grand_df = grp.agg(F.avg("xbar").alias("grand"))
     g = (
@@ -2454,7 +2452,7 @@ def a_ind_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
 
     def check(name, lhs, rhs):
-        d = lhs.distinct().persist()
+        d = IT.round_checkpoint(lhs.distinct())
         n_lhs = d.agg(F.count(F.lit(1)).alias("n_lhs"))
         orphans = d.join(
             rhs, d[d.columns[0]] == rhs[rhs.columns[0]], "left_anti"

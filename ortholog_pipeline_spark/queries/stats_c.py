@@ -3,6 +3,7 @@ from ortholog_pipeline_spark.queries._shared import (  # noqa: F401
     DD,
     DataFrame,
     F,
+    IT,
     SparkSession,
     Window,
     _POIS24,
@@ -356,10 +357,10 @@ def a_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape), a support floor before ranking (confidence on 3 baskets is
     noise), top-15 by integer-snapped confidence."""
     li = _t(spark, sf_dir, "lineitem")
-    baskets = li.select(
+    baskets = IT.round_checkpoint(li.select(
         F.col("l_orderkey").alias("basket"),
         (F.col("l_partkey") % 200).alias("item"),
-    ).distinct().persist()
+    ).distinct())
     nb = baskets.agg(F.countDistinct("basket").alias("nb"))
     item_n = baskets.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
     a = baskets.select("basket", F.col("item").alias("x"))
@@ -1489,9 +1490,9 @@ def a_ab_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0,
         0,
     ).otherwise(1)
-    users = ev.groupBy("user_id").agg(
+    users = IT.round_checkpoint(ev.groupBy("user_id").agg(
         F.round(F.sum("value") * 100).cast("long").alias("cents")
-    ).select("user_id", treated.alias("treated"), "cents").persist()
+    ).select("user_id", treated.alias("treated"), "cents"))
     hashed = users.select(
         "user_id",
         "treated",
@@ -1627,7 +1628,9 @@ def a_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("cur"),
         F.lead("event_type").over(w).alias("nxt"),
     ).filter(F.col("nxt").isNotNull())
-    trans = seq.groupBy("cur", "nxt").agg(F.count(F.lit(1)).alias("n")).persist()
+    trans = IT.round_checkpoint(
+        seq.groupBy("cur", "nxt").agg(F.count(F.lit(1)).alias("n"))
+    )
     m = trans.select(
         "cur",
         "nxt",
@@ -1739,14 +1742,14 @@ def a_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = rated.groupBy("rater_a", "rater_b").agg(
         F.count(F.lit(1)).alias("n")
     )
-    m = cells.select(
+    m = IT.round_checkpoint(cells.select(
         "rater_a",
         "rater_b",
         "n",
         F.sum("n").over(Window.partitionBy("rater_a")).alias("n_a"),
         F.sum("n").over(Window.partitionBy("rater_b")).alias("n_b"),
         F.sum("n").over(Window.partitionBy()).alias("total"),
-    ).persist()
+    ))
     agree = m.agg(
         (
             F.sum(
@@ -1949,7 +1952,7 @@ def a_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         0,
     ).otherwise(1)
     cutoff = F.lit("2024-01-16").cast("date")
-    users = ev.groupBy("user_id").agg(
+    users = IT.round_checkpoint(ev.groupBy("user_id").agg(
         F.sum(
             F.when(F.col("ts").cast("date") < cutoff, F.col("value")).otherwise(0.0)
         ).alias("pre"),
@@ -1958,7 +1961,7 @@ def a_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 0.0
             )
         ).alias("post"),
-    ).select("user_id", treated.alias("treated"), "pre", "post").persist()
+    ).select("user_id", treated.alias("treated"), "pre", "post"))
     theta = users.agg(
         (F.covar_samp("pre", "post") / F.var_samp("pre")).alias("th"),
         F.avg("pre").alias("mean_pre"),
@@ -2132,7 +2135,7 @@ def a_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back."""
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
-    seg = (
+    seg = IT.round_checkpoint(
         orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
@@ -2141,7 +2144,6 @@ def a_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
             ).alias("k"),
         )
-        .persist()
     )
     moments = seg.agg(
         F.avg(F.col("k") * 1.0 / F.col("n")).alias("mu"),
@@ -2454,9 +2456,9 @@ def a_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0,
         0,
     ).otherwise(1)
-    users = ev.groupBy("user_id").agg(
+    users = IT.round_checkpoint(ev.groupBy("user_id").agg(
         F.round(F.sum("value") * 100).cast("long").alias("cents")
-    ).select("user_id", treated.alias("treated"), "cents").persist()
+    ).select("user_id", treated.alias("treated"), "cents"))
     observed = users.agg(
         (
             F.avg(F.when(F.col("treated") == 1, F.col("cents")))

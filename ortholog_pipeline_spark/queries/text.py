@@ -4,6 +4,7 @@ from ortholog_pipeline_spark.queries._shared import (  # noqa: F401
     DataFrame,
     F,
     G,
+    IT,
     PII,
     SparkSession,
     TXT,
@@ -490,15 +491,15 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ortholog_pipeline_spark.functions import text as TXT
 
     docs = _t(spark, sf_dir, "documents")
-    # bg feeds BOTH the count table and the scoring join — persist the skinny
+    # bg feeds BOTH the count table and the scoring join — checkpoint the skinny
     # exploded frame so the n-gram build runs once; uni_counts feeds the vocab
     # count action and the scoring broadcast
-    bg = docs.select(
+    bg = IT.round_checkpoint(docs.select(
         "doc_id", F.explode(TXT.ngram_strings("text", 2)).alias("g")
-    ).persist()
+    ))
     uni = docs.select("doc_id", F.explode(TXT.tokens("text")).alias("t"))
     bg_counts = bg.groupBy("g").agg(F.count("*").alias("cb"))
-    uni_counts = uni.groupBy("t").agg(F.count("*").alias("cu")).persist()
+    uni_counts = IT.round_checkpoint(uni.groupBy("t").agg(F.count("*").alias("cu")))
     vocab = uni_counts.count()
     scored = (
         bg.join(F.broadcast(bg_counts), "g")
@@ -1177,7 +1178,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc×term zero matrix). Top-15 burstiest among terms with ≥ 100
     occurrences, integer-snapped ranking."""
     docs = _t(spark, sf_dir, "documents")
-    per_doc = (
+    per_doc = IT.round_checkpoint(
         docs.select(
             "doc_id",
             F.explode(
@@ -1186,7 +1187,6 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
     )
     nd = per_doc.agg(F.countDistinct("doc_id").alias("nd"))
     stats = per_doc.groupBy("tok").agg(
@@ -1253,12 +1253,12 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanout exactly 1 per token, never a doc-wide product); unigram and
     pair counts collapse map-side; top-15 on integer-snapped PMI."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
+    toks = IT.round_checkpoint(docs.select(
         "doc_id",
         F.posexplode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
         ).alias("pos", "tok"),
-    ).persist()
+    ))
     nt = toks.agg(F.count(F.lit(1)).alias("nt"))
     uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     # pnext is materialized as an ATTRIBUTE so Catalyst extracts
@@ -1450,12 +1450,12 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(DISTINCT) window. Growth curve sampled every 10 docs for the
     fit."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
+    toks = IT.round_checkpoint(docs.select(
         "doc_id",
         F.explode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
         ).alias("tok"),
-    ).persist()
+    ))
     doc_tokens = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_toks"))
     new_types = (
         toks.groupBy("tok")
@@ -1543,10 +1543,10 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
         ).alias("tok"),
     )
-    tf = toks.groupBy("tok").agg(
+    tf = IT.round_checkpoint(toks.groupBy("tok").agg(
         F.sum(F.when(F.col("side") == "p", 1).otherwise(0)).alias("np"),
         F.sum(F.when(F.col("side") == "q", 1).otherwise(0)).alias("nq"),
-    ).persist()
+    ))
     tots = tf.agg(
         F.sum("np").alias("tp"),
         F.sum("nq").alias("tq"),

@@ -3,6 +3,7 @@ from ortholog_pipeline_spark.queries._shared import (  # noqa: F401
     DD,
     DataFrame,
     F,
+    IT,
     RK,
     SparkSession,
     Window,
@@ -1874,7 +1875,7 @@ def w_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sxy"
         ),
     )
-    fitted = daily.crossJoin(F.broadcast(m)).select(
+    fitted = IT.round_checkpoint(daily.crossJoin(F.broadcast(m)).select(
         "d",
         "t",
         "y",
@@ -1885,7 +1886,7 @@ def w_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "h"
         ),
         "n",
-    ).persist()
+    ))
     mse = fitted.agg(
         (F.sum(F.pow(F.col("y") - F.col("yhat"), 2)) / (F.max("n") - 2)).alias(
             "s2"
@@ -2066,13 +2067,13 @@ def w_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs with the runs test: runs says 'is it random', MK says 'is the
     non-randomness a monotone trend'."""
     li = _t(spark, sf_dir, "lineitem")
-    monthly = li.groupBy(
+    monthly = IT.round_checkpoint(li.groupBy(
         F.date_trunc("month", F.col("l_shipdate").cast("date")).alias("m")
     ).agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100)
         .cast("long")
         .alias("cents")
-    ).persist()
+    ))
     a = monthly.select(F.col("m").alias("ma"), F.col("cents").alias("ca"))
     b = monthly.select(F.col("m").alias("mb"), F.col("cents").alias("cb"))
     pairs = a.join(b, F.col("ma") < F.col("mb")).select(

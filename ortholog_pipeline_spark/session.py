@@ -107,6 +107,9 @@ def get_spark(
         # events loader converts with exact integer division (see queries._t).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # stored frames (operators/iterate.round_checkpoint) are freed once
+        # unreferenced; reliable checkpoint files follow the same rule
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     # 100 TB-state streaming store (see STREAMING_STATE_CONF): inert for batch,

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ortholog_pipeline_spark.functions.strings import sanitize_evidence_set
+from ortholog_pipeline_spark.operators import iterate as IT
 from ortholog_pipeline_spark.schemas import AGR_SCHEMA, HCOP_SCHEMA, HUMAN, NCBI_SCHEMA
 
 HUMAN_TAX_ID = "9606"
@@ -191,14 +192,14 @@ def read_jsonl_documents(
     PERMISSIVE mode with the corrupt line captured whole, gzip handled by the
     codec from the extension. The split mirrors the engine's audit-stream
     pattern: bad lines land in a reviewable frame instead of killing the run.
-    The scan is cached before filtering — Spark requires the corrupt-record
-    column be materialized before it can be referenced in a filter."""
-    raw = (
+    The scan is checkpointed before filtering — Spark requires the
+    corrupt-record column be materialized before it can be referenced in a
+    filter."""
+    raw = IT.round_checkpoint(
         spark.read.schema(_documents_jsonl_schema())
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .cache()
     )
     good = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = raw.filter(F.col("_corrupt_record").isNotNull()).select(

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ortholog_pipeline_spark.operators import iterate as IT
+
 # In-process registry of live run txns: store root → run_id. Recovery only
 # rolls a pending manifest whose run has NO live owner — i.e. the writing
 # process died (a real crash clears this dict with the process). Lets a second
@@ -119,6 +121,28 @@ _HEARTBEAT_STALE_FACTOR = 20.0
 #: has held the single-writer lock for an hour — recover it (ADVICE r9:
 #: the unconditional dead verdict could destroy a live mixed-version run).
 _PROMISELESS_STALE_HORIZON_S = 3600.0
+#: Written into a version dir that holds no data file (an empty frame written
+#: partitioned leaves none): the schema and layout a read cannot infer.
+_EMPTY_VERSION = "_EMPTY_VERSION.json"
+
+
+def _seal_if_empty(path: str, schema: T.StructType, layout: list[str]) -> None:
+    """Record ``schema`` (partition columns last, as a read orders them) and
+    ``layout`` beside a version that Spark wrote without any data file."""
+    if any(f[0] not in "_." for _, _, files in os.walk(path) for f in files):
+        return
+    fields = [f for f in schema if f.name not in layout]
+    fields += [schema[c] for c in layout]
+    with open(os.path.join(path, _EMPTY_VERSION), "w") as fh:
+        json.dump({"schema": T.StructType(fields).jsonValue(), "layout": layout}, fh)
+
+
+def _empty_version(path: str) -> dict | None:
+    try:
+        with open(os.path.join(path, _EMPTY_VERSION)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
 
 
 def _owner_token() -> dict:
@@ -530,6 +554,9 @@ class StateStore:
                 f"state table {table} has no retained version {version} "
                 f"(vacuumed or never written)"
             )
+        if (empty := _empty_version(path)) is not None:
+            schema = T.StructType.fromJson(empty["schema"])
+            return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(path)
 
     def history(self, table: str) -> list[dict]:
@@ -564,10 +591,12 @@ class StateStore:
 
     def _layout(self, table: str) -> list[str]:
         """The partition columns of ``table``'s current version, outermost
-        first, read from its ``col=value`` directory names; ``[]`` for a flat
-        or unwritten table."""
+        first, read from its ``col=value`` directory names (from the record of
+        a version with no data file); ``[]`` for a flat or unwritten table."""
         cur = self.current_version(table)
         path = os.path.join(self._table_dir(table), f"v={cur}")
+        if (empty := _empty_version(path)) is not None:
+            return empty["layout"]
         layout: list[str] = []
         while cur >= 0 and (
             parts := [
@@ -607,6 +636,7 @@ class StateStore:
             )
         path = os.path.join(self._table_dir(table), f"v={v}")
         df.write.mode("overwrite").partitionBy(*layout).parquet(path)
+        _seal_if_empty(path, df.schema, layout)
         if publish:
             self._publish(table, v)
         return v
@@ -660,8 +690,7 @@ class StateStore:
             if not f.startswith(("_", "."))
         )
         n_files = max(1, round(on_disk / target_file_bytes))
-        df = self.spark.read.parquet(path)
-        return self.write(table, df.coalesce(n_files))
+        return self.write(table, self.read(table).coalesce(n_files))
 
     def forget_keys(
         self,
@@ -690,7 +719,7 @@ class StateStore:
         tdir = self._table_dir(table)
         for d in os.listdir(tdir):
             if d.startswith("v="):
-                snap = self.spark.read.parquet(os.path.join(tdir, d))
+                snap = self.read(table, version=int(d.split("=", 1)[1]))
                 residual += snap.join(key_df, key_cols, "left_semi").count()
         return {
             "rows_removed": removed,
@@ -733,6 +762,7 @@ class StateStore:
                 except OSError:  # cross-device or FS without hardlinks
                     shutil.copy2(s, d)
         inserts.write.mode("append").partitionBy(*layout).parquet(dst)
+        _seal_if_empty(dst, inserts.schema, layout)
         if publish:
             self._publish(table, v)
         return v
@@ -842,17 +872,17 @@ def next_surrogate_keys(
     are hashed into ``buckets`` sub-partitions, numbered with a PARTITIONED window,
     and offset by per-bucket cumulative counts. The offsets are computed IN-PLAN
     (a ≤``buckets``-row aggregate + one tiny single-partition window, broadcast
-    back) rather than collected to the driver: keygen stays fully lazy — no
-    eager job materializing the insert lineage at plan-construction time. The
+    back) rather than collected to the driver: keygen runs no result job at
+    plan-construction time (only, under AQE, the input's own shuffle stages
+    that the checkpoint below takes). The
     offsets branch re-reads the input subtree inside the same job (the two
     `_skb` exchanges differ below — partial-agg vs raw rows — so Catalyst
-    can't reuse one), so the bucketed frame is persist()ed HERE: persist is
-    lazy (no job at construction), and it makes the dense-key guarantee hold
-    for any input — an unpersisted or non-deterministic frame whose two reads
-    disagreed would otherwise yield bucket offsets inconsistent with the row
-    bucketing (duplicate or gapped keys with no detection). The cached blocks
-    are released by the caller's usual clearCache()/unpersist hygiene; they
-    are exactly the insert set, which every caller materializes anyway.
+    can't reuse one), so the bucketed frame is stored HERE with
+    ``round_checkpoint``: it makes the dense-key guarantee hold for any input
+    — a non-deterministic frame whose two reads disagreed would otherwise
+    yield bucket offsets inconsistent with the row bucketing (duplicate or
+    gapped keys with no detection). The stored blocks are exactly the insert
+    set, and they are freed once the returned frame is unreferenced.
     Keys are dense in [start+1, start+n],
     deterministic for a given input set (hash-bucket + full column order,
     offsets by ascending bucket id — identical to the former driver-side
@@ -860,7 +890,7 @@ def next_surrogate_keys(
     (SURVEY.md §7)."""
     cols = [F.col(c) for c in df.columns]
     bucket = F.pmod(F.xxhash64(*cols), F.lit(buckets)).cast("int")
-    with_bucket = df.withColumn("_skb", bucket).persist()
+    with_bucket = IT.round_checkpoint(df.withColumn("_skb", bucket))
 
     w_off = Window.orderBy("_skb").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (

@@ -9,15 +9,33 @@ from __future__ import annotations
 import pytest
 
 from ortholog_pipeline_spark import queries as Q
+from ortholog_pipeline_spark.operators import iterate as IT
 
 SF = "/root/testdata/sf0.001"
 
 
-def _plan(spark, name: str) -> str:
-    df = Q.queries()[name](spark, SF)
+def _frames(spark, name: str) -> list:
+    """The query's frame, then every frame it stores through
+    ``round_checkpoint``: a checkpoint cuts the query's own plan at a
+    LogicalRDD leaf, and the audited operators may sit below it."""
+    stored = []
+    real = IT.round_checkpoint
+    IT.round_checkpoint = lambda df: stored.append(df) or real(df)
+    try:
+        return [Q.queries()[name](spark, SF), *stored]
+    finally:
+        IT.round_checkpoint = real
+
+
+def _explain(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def _plan(spark, name: str) -> str:
+    """The formatted plans of the query and of every frame it stores."""
+    return "\n".join(_explain(spark, f) for f in _frames(spark, name))
 
 
 def test_filter_and_projection_pushed_to_scan(spark):
@@ -686,6 +704,6 @@ def test_iterative_graph_queries_truncate_round_lineage(spark):
     O(1) instead of O(5^rounds)."""
     for name, bound in (("g_kcore_peel", 4), ("g_bfs_distance", 8),
                         ("g_label_propagation", 4)):
-        plan = _plan(spark, name)
+        plan = _explain(spark, _frames(spark, name)[0])
         n_scans = plan.count("Scan parquet")
         assert n_scans <= bound, f"{name}: {n_scans} parquet scans (> {bound})"

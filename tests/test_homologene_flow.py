@@ -3,6 +3,7 @@ HomoloGene flow (S5 + J13 + per-group CDC; HomologeneLoader.java:95-205)."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 import pytest
@@ -123,3 +124,25 @@ def test_homologene_empty_group_deletes_all_in_scope(spark, tmp_path):
     res = run_homologene_load(store, entries, TS)
     assert res.n_deleted == 1 and res.n_inserted == 0
     assert store.read("orthologs").count() == 0
+
+
+def test_homologene_honours_reliable_checkpoints(spark, tmp_path, monkeypatch):
+    """With spark.ortholog.checkpoint.reliable=true the flow's stored frames
+    are written to the checkpoint dir: no junction bypasses the switch."""
+    from ortholog_pipeline_spark.operators import iterate as IT
+    from test_guards_and_iterate import reliable_checkpoints
+
+    # keep every stored frame referenced until the dir is listed: the
+    # session cleans checkpoint files once their frame is unreferenced
+    stored = []
+    real = IT.round_checkpoint
+    monkeypatch.setattr(
+        IT, "round_checkpoint", lambda df: stored.append(real(df)) or stored[-1]
+    )
+    store, entries = _group7(spark, tmp_path)
+    ckpt = tmp_path / "ckpt"
+    with reliable_checkpoints(spark, str(ckpt)):
+        res = run_homologene_load(store, entries, TS)
+        written = [d for _, ds, _ in os.walk(ckpt) for d in ds]
+    assert res.n_inserted == 5 and res.n_deleted == 1
+    assert any(d.startswith("rdd-") for d in written), "nothing checkpointed"

@@ -1407,3 +1407,30 @@ def test_mh_udf_matches_expression_path(spark):
     a = {r["doc_id"]: (list(r["h31"]), list(r["sig"])) for r in expr.collect()}
     b = {r["doc_id"]: (sorted(r["h31"]), list(r["sig"])) for r in udf.collect()}
     assert a == b
+
+
+def test_h31_identical_across_sig_variants(spark):
+    """The sig-free producer (``num_hashes=0``) and the signature producer
+    (``num_hashes=16``) emit the same h31 array per doc, and both hold the
+    shingle set of the ``hashed_shingles31`` reference twin."""
+    from pyspark.sql import functions as F
+
+    from ortholog_pipeline_spark.operators import dedup as DD
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        "doc_id", "text"
+    )
+
+    def h31(num_hashes):
+        frame = DD.shingle_sig_frame(docs, "text", "doc_id", num_hashes)
+        return {r["doc_id"]: list(r["h31"]) for r in frame.collect()}
+
+    ref = docs.select("doc_id", DD.hashed_shingles31("text", 3).alias("h31"))
+    ref = {
+        r["doc_id"]: sorted(r["h31"])
+        for r in ref.filter(F.size("h31") > 0).collect()
+    }
+    sig_free, with_sig = h31(0), h31(16)
+    assert len(ref) > 100
+    assert sig_free == with_sig
+    assert {k: sorted(v) for k, v in sig_free.items()} == ref

@@ -242,6 +242,25 @@ def test_agr_load_job_budget(spark, store):
     )
 
 
+def test_flow_storage_lives_as_long_as_the_results(spark, store):
+    """Flow frames are stored with round_checkpoint (operators/iterate): the
+    CacheManager stays empty while the results are held, and once they are
+    dropped and GC runs no RDD the flows made keeps cached partitions."""
+    from test_guards_and_iterate import cached_rdds_after_gc
+
+    spark.catalog.clearCache()
+    first = spark.sparkContext.parallelize([0]).id()
+    results = [
+        run_species_load(
+            store, _relations(spark), RUN_TS, RAT, delete_threshold_pct=100.0
+        ),
+        run_agr_load(store, _agr_lines(spark), RUN_TS, delete_threshold_pct=100.0),
+    ]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    del results
+    assert cached_rdds_after_gc(spark, first) == []
+
+
 def test_conflict_verdict_symbol_tiebreak(spark):
     """compareOrthologs symbol stages (OrthologRelationDao.java:180-188): on a
     priority+evidence tie, existing-dest-matches-src wins, then

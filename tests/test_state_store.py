@@ -120,6 +120,34 @@ def test_write_declares_layout_once(spark, tmp_path):
     assert store.current_version("flat") == 0
 
 
+def test_emptied_partitioned_table_reads_and_keeps_layout(spark, tmp_path):
+    """A rewrite that deletes every row of a partitioned table leaves no data
+    file to infer the schema or the layout from: the version still reads as
+    0 rows with the table's schema, and the next insert lands in ``sp=``."""
+    store = StateStore(spark, str(tmp_path))
+    store.write(
+        "t", spark.createDataFrame([(1, 1)], "k int, sp int"), partition_by=["sp"]
+    )
+    schema = store.read("t").schema
+    store.apply_changes(
+        "t", deletes=spark.createDataFrame([(1,)], "k int"), delete_key=["k"]
+    )
+    emptied = store.read("t")
+    assert emptied.schema == schema and emptied.count() == 0
+    assert store._layout("t") == ["sp"]
+    assert store.history("t")[-1]["bytes"] == 0
+    store.apply_changes("t", inserts=spark.createDataFrame([(2, 3)], "k int, sp int"))
+    assert [(r.k, r.sp) for r in store.read("t").collect()] == [(2, 3)]
+    assert is_partitioned_by(store, "t", "sp")
+    # a full rewrite from the empty version keeps the layout too
+    store.apply_changes(
+        "t", deletes=spark.createDataFrame([(2,)], "k int"), delete_key=["k"]
+    )
+    store.write("t", spark.createDataFrame([(4, 5)], "k int, sp int"))
+    assert is_partitioned_by(store, "t", "sp")
+    assert [(r.k, r.sp) for r in store.read("t").collect()] == [(4, 5)]
+
+
 def test_maintenance_keeps_partition_layout(spark, tmp_path):
     """Keyed updates, compact and forget_keys rewrite a partitioned table
     within its layout."""
