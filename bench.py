@@ -340,6 +340,14 @@ HEADLINE = [
 HISTORY_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_history.json")
 
 
+def _git_head() -> str:
+    """HEAD of this checkout, stamped into every JSON file the bench writes."""
+    return subprocess.run(
+        ["git", "rev-parse", "HEAD"],
+        capture_output=True, text=True, cwd=os.path.dirname(os.path.abspath(__file__)),
+    ).stdout.strip()
+
+
 def calibration_probe(spark) -> float:
     """Fixed environment anchor (VERDICT r6 item 3): a pinned-size pure-JVM
     workload — range → md5 → group-sort-agg, no I/O, no Python, no data
@@ -562,12 +570,9 @@ def mem_envelope() -> None:
         failures["stream_state_scale"] = f"{type(ex).__name__}: {ex}"[:300]
 
     repo = os.path.dirname(os.path.abspath(__file__))
-    head = subprocess.run(
-        ["git", "rev-parse", "HEAD"], capture_output=True, text=True, cwd=repo
-    ).stdout.strip()
     artifact = {
         "metric": "mem_envelope_total",
-        "git_head": head,
+        "git_head": _git_head(),
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": sf,
@@ -1417,7 +1422,8 @@ def main() -> None:
         else "all entries within 1.3x of history on best-of-2"
     )
     hist.append(
-        {"sf": sf_val, "queries": timings, "skew_ratio": skew_ratio,
+        {"sf": sf_val, "git_head": _git_head(), "queries": timings,
+         "skew_ratio": skew_ratio,
          "stream_state": stream_state, "retimed": sorted(retimed),
          "calibration_sec": calibration_sec,
          "calibration_end_sec": calibration_end_sec,

@@ -431,29 +431,18 @@ def minhash_lsh_dedup(
     bands: int = 4,
     threshold: float = 0.5,
     collapse_exact: bool = False,
-    expand_groups: bool = True,
-    target_members_per_bucket: int | None = 256,
+    target_members_per_bucket: int = 256,
 ) -> DataFrame:
     """Full MinHash→LSH→verify pipeline: near-duplicate pairs ≥ threshold Jaccard.
 
-    ``expand_groups=False`` (with ``collapse_exact=True``) returns the
-    REPRESENTATIVE-level pairs without expanding identical-text groups back
-    to members: the output a keeper-decision consumer needs (each group acts
-    as one document) and the seam the scale probes use to time the
-    candidate+verify stages separately from the semantically-quadratic pair
-    materialization. No-op when collapse_exact is off.
-
-    ``target_members_per_bucket`` sizes the intra-group expansion's bucketed
-    triangle join: a group fans out over ``least(defaultParallelism,
-    ceil(g / target))`` buckets, so small identical-text groups (pairs,
-    triples — the common case in a lightly-duplicated corpus) keep the
-    replication-free single-bucket path and only genuinely large groups pay
-    the spread that keeps their C(g, 2) output off one task. ``None``
-    forces the flat pre-r9 sizing (every multi-member group fans out over
-    defaultParallelism buckets) — the baseline knob the scale probes use to
-    put a measured receipt on the per-group sizing win; output is identical
-    either way (the exactly-once triangle invariant holds for any bucket
-    count).
+    ``target_members_per_bucket`` (a positive int) sizes the intra-group
+    expansion's bucketed triangle join under ``collapse_exact``: a g-member
+    group fans out over ``least(defaultParallelism, ceil(g / target))``
+    buckets, so small identical-text groups (pairs, triples — the common case
+    in a lightly-duplicated corpus) keep the replication-free single-bucket
+    path and only genuinely large groups pay the spread that keeps their
+    C(g, 2) output off one task. Output does not depend on it: the
+    exactly-once triangle invariant holds for any bucket count.
 
     Scale shape: tokenize+md5 runs ONCE — documents are reduced to distinct 31-bit
     shingle hashes up front (int arrays, ~100× smaller than text), then the
@@ -484,6 +473,11 @@ def minhash_lsh_dedup(
     collides iff its representatives collide and carries exactly the
     representatives' Jaccard. Group key is md5 over the sorted shingle-hash
     array (128-bit: no false merges at any corpus size)."""
+    if not isinstance(target_members_per_bucket, int) or target_members_per_bucket < 1:
+        raise ValueError(
+            "target_members_per_bucket must be a positive int, "
+            f"got {target_members_per_bucket!r}"
+        )
     # A small input (one parquet file) scans as ONE partition, serializing the
     # whole tokenize+md5 map stage; spread it first. At real scale file splits
     # already provide map parallelism and this branch never fires.
@@ -522,12 +516,9 @@ def minhash_lsh_dedup(
     else:
         base = IT.round_checkpoint(hashed)
 
-    with_sig = base
-    cands = lsh_candidate_pairs(
-        with_sig, id_col, "sig", bands, num_hashes // bands
-    )
+    cands = lsh_candidate_pairs(base, id_col, "sig", bands, num_hashes // bands)
     rep_pairs = jaccard_verify(base, cands, id_col, "h31", threshold)
-    if not collapse_exact or not expand_groups:
+    if not collapse_exact:
         return rep_pairs
 
     members = groups.select("_rep", F.explode("_members").alias("_m"))
@@ -565,23 +556,16 @@ def minhash_lsh_dedup(
         # to defaultParallelism — a g-member group replicates its rows
         # ~B_g/2× while its per-bucket fan-out stays ≥ target size.
         B = df.sparkSession.sparkContext.defaultParallelism
-        nb_expr = (
-            F.lit(B).cast("int")  # flat legacy sizing (probe baseline)
-            if target_members_per_bucket is None
-            else F.least(
-                F.lit(B),
-                F.ceil(
-                    F.size("_members") / F.lit(target_members_per_bucket)
-                ),
-            ).cast("int")
-        )
         multi = (
             groups.filter(F.size("_members") >= 2)
             .withColumn(
                 "_nb",  # per-group bucket count (NOT "_B": Spark resolves
                 # column names case-insensitively, so "_B" would collide
                 # with the per-row bucket id "_b")
-                nb_expr,
+                F.least(
+                    F.lit(B),
+                    F.ceil(F.size("_members") / F.lit(target_members_per_bucket)),
+                ).cast("int"),
             )
             .select("_rep", "_nb", F.explode("_members").alias("_m"))
         )

@@ -25,13 +25,12 @@ def sync_full_outer(
     existing: DataFrame,
     unique_key: list[str],
     content_cols: list[str],
-    case_insensitive_content: bool = True,
 ) -> DataFrame:
     """J10 — AssociationSyncer.qc as one full-outer join.
 
     Unique key for associations = (master_rgd_id, detail_rgd_id, assoc_type,
-    src_pipeline) (decompiled rgdcore ``Association.equals``); content compare adds
-    assoc_subtype case-insensitively (``objectsAreEqualByContent``). Verdicts:
+    src_pipeline) (decompiled rgdcore ``Association.equals``); content columns
+    compare case-insensitively as strings (``objectsAreEqualByContent``). Verdicts:
     both + equal content → match; both + different content → update (take incoming
     content); incoming-only → insert; existing-only → delete.
 
@@ -48,9 +47,8 @@ def sync_full_outer(
     j = inc.join(exi, unique_key, "full_outer")
 
     def _eq(c: str) -> F.Column:
-        a, b = F.col(f"_inc_{c}"), F.col(f"_exi_{c}")
-        if case_insensitive_content:
-            a, b = F.lower(a.cast("string")), F.lower(b.cast("string"))
+        a = F.lower(F.col(f"_inc_{c}").cast("string"))
+        b = F.lower(F.col(f"_exi_{c}").cast("string"))
         return (a == b) | (a.isNull() & b.isNull())
 
     content_equal = F.lit(True)

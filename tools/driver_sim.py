@@ -191,13 +191,13 @@ def main() -> int:
         finally:
             if name in sliced and name in report:
                 report[name]["mode"] = report[name].get("mode", "exact") + "+slice"
-            # session hygiene across a 300-query sweep: queries persist their
-            # own intermediates and ship broadcasts; without releasing them the
-            # driver heap accumulates until late queries die in
+            # session hygiene across a 300-query sweep: queries checkpoint
+            # their own intermediates and ship broadcasts, which the
+            # ContextCleaner frees only after a JVM GC finds them unreferenced;
+            # without it the driver heap accumulates until late queries die in
             # broadcast-exchange OOM (observed at sf0.1 after ~1300 s: three
             # spurious "Not enough memory to broadcast" failures that all pass
             # in a fresh session)
-            spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
     print(json.dumps(report, indent=1))
     print(f"PASS={n_pass} FAIL={n_fail} NO_ORACLE={sum(1 for r in report.values() if r.get('err') == 'no_oracle')}", file=sys.stderr)

@@ -250,14 +250,13 @@ def _timed(fn, repeat: int = 2):
     pause on a 100x entry biased growth ratios UP). The returned payload is
     the first run's (all runs are equal by construction).
 
-    Between runs the finished run's storage is RELEASED, not just uncached:
-    the CC/ER operators lazily localCheckpoint their junction frames, and
-    checkpoint blocks are freed only after the Python references die and the
-    ContextCleaner processes them — clearCache() alone leaves them resident,
-    and the 100x ER probe's SECOND run then OOMs on the first run's
-    accumulated blocks (measured: UNABLE_TO_ACQUIRE_MEMORY in stage-1493
-    aggregation at 100x customers). gc + JVM gc + a short cleaner drain
-    bound the resident set at one run's worth."""
+    Between runs the finished run's storage is released: operators store
+    frames as lazy checkpoints, whose blocks are freed only after the Python
+    references die and the ContextCleaner processes them, and the 100x ER
+    probe's SECOND run otherwise OOMs on the first run's accumulated blocks
+    (measured: UNABLE_TO_ACQUIRE_MEMORY in stage-1493 aggregation at 100x
+    customers). gc + JVM gc + a short cleaner drain bound the resident set at
+    one run's worth."""
     import gc
 
     from pyspark.sql import SparkSession
@@ -272,7 +271,6 @@ def _timed(fn, repeat: int = 2):
         gc.collect()
         s = SparkSession.getActiveSession()
         if s is not None:
-            s.catalog.clearCache()
             s.sparkContext._jvm.System.gc()
         if i + 1 < repeat:
             time.sleep(2)  # let the async ContextCleaner drain
@@ -343,7 +341,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
     # the denominators of every growth ratio — aren't billed for startup
     warm = _docs_at(spark, src, dir100, 1, replicas)
     DD.minhash_lsh_dedup(warm, k=3, num_hashes=16, bands=4, threshold=0.5).count()
-    spark.catalog.clearCache()
 
     for s in scales:
         docs = _docs_at(spark, src, dir100, s, replicas)
@@ -354,7 +351,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
         )
         out["times"][f"minhash_{s}x"] = sec
         out["counts"][f"minhash_pairs_{s}x"] = n_pairs
-        spark.catalog.clearCache()
 
         sec, n_comp = _timed(
             lambda: CC.dedup_clusters(
@@ -366,7 +362,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
         )
         out["times"][f"cluster_assign_{s}x"] = sec
         out["counts"][f"cluster_rows_{s}x"] = n_comp
-        spark.catalog.clearCache()
 
         cust = _cust_at(spark, src, dir100, s, replicas)
 
@@ -395,7 +390,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
         sec, n_cl = _timed(_er)
         out["times"][f"er_{s}x"] = sec
         out["counts"][f"er_clusters_{s}x"] = n_cl
-        spark.catalog.clearCache()
 
         # benchmark decontamination (VERDICT r6 item 7) — same plan as
         # queries/text.py:text_decontaminate_ngrams: distinct word 4-grams,
@@ -418,11 +412,9 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
         sec, n_hit = _timed(_decontam(False))
         out["times"][f"decontam_{s}x"] = sec
         out["counts"][f"decontam_hits_{s}x"] = n_hit
-        spark.catalog.clearCache()
         sec, n_hit = _timed(_decontam(True))
         out["times"][f"decontam_fixed_eval_{s}x"] = sec
         out["counts"][f"decontam_fixed_eval_hits_{s}x"] = n_hit
-        spark.catalog.clearCache()
 
     # linear-regime check: TRUE pairs grow exactly linearly under the suffix
     # construction; REPORTED pairs are per-replica banded-LSH catches, so a
@@ -461,7 +453,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
             _seed_store(spark, world, "sf10_flow_", cache_key=f"sf10_species:{src}"),
             rel1, RUN_TS, 3, delete_threshold_pct=95.0,
         )
-        spark.catalog.clearCache()
         with tempfile.TemporaryDirectory(prefix="sf10_rel_") as td:
             for s in scales:
                 parts = [rel1] + [
@@ -491,7 +482,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
 
                 sec, _ = _timed(_flow_run)
                 out["times"][f"flow_species_{s}x"] = sec
-                spark.catalog.clearCache()
 
         # AGR upsert flow (VERDICT r6 item 7): replicas tag `algorithms`, so
         # methods_matched — part of the 3-col upsert key — differs per
@@ -509,7 +499,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
             _seed_store(spark, aworld, "sf10_agr_", cache_key=f"sf10_agr:{src}"),
             al1, RUN_TS, delete_threshold_pct=100.0,
         )  # warmup (untimed): flow DAG first-use codegen
-        spark.catalog.clearCache()
         with tempfile.TemporaryDirectory(prefix="sf10_agr_") as td:
             for s in scales:
                 parts = [al1] + [
@@ -536,7 +525,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
 
                 sec, _ = _timed(_agr_run)
                 out["times"][f"flow_agr_{s}x"] = sec
-                spark.catalog.clearCache()
 
     # skew legs at the biggest scale: CC star (linear) at full fraction;
     # MinHash hot bucket as a FIXED 500-doc identical cluster (constant
@@ -556,46 +544,22 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
         ).count()
 
     sec_u, _ = _timed(_skew_minhash(docs_top))
-    spark.catalog.clearCache()
     sec_h, _ = _timed(_skew_minhash(docs_hot))
-    spark.catalog.clearCache()
     out["times"][f"skew_minhash_uniform_{top}x"] = sec_u
     out["times"][f"skew_minhash_hot500_{top}x"] = sec_h
     out["skew_minhash_ratio"] = round(sec_h / sec_u, 2) if sec_u else None
 
-    # duplicate-heavy twins (reworked r8, VERDICT r7 ask 2): the r7 twin
-    # timed .count() over the FULL pipeline at a single cluster size, and
-    # the corpus-proportional signature/banding floor (~30 s over 500k
-    # docs) plus the C(5000,2)=12.5M-pair output materialization dominated
-    # both legs (40.10 vs 40.07 s — discriminating nothing). Two changes:
-    #   * per-stage timing — `collapsed_stages` times the collapse + sig +
-    #     band + verify stages at REPRESENTATIVE granularity
-    #     (expand_groups=False, the new operator seam), separating what
-    #     collapse optimizes from the semantically-quadratic expansion;
-    #   * a second cluster size (200/replica -> 20k docs, C=200M pairs,
-    #     16x the quadratic work at identical corpus size) so the
-    #     quadratic component is visible above the linear floor — at
-    #     g=5000 the honest negative is RECORDED: collapse saves only the
-    #     small verify delta there because banding the 500k-doc corpus
-    #     dominates, which is exactly the right 100 TB shape.
-    # Both full twins emit identical rows (pinned by
-    # test_minhash_collapse_exact_output_identical); the intra-group
-    # expansion is a bucketed triangle join since r8 (dedup.py), so the
-    # collapsed leg no longer serializes C(g,2) rows through one task.
-    # g5k RETIRED r9 (VERDICT r8 ask 5): its honest negative is recorded in
-    # the r8 artifact (collapse saves only the small verify delta at g=5000
-    # because banding the 500k-doc corpus dominates — exactly the right
-    # 100 TB shape); the g20k twin carries the discrimination (7.4x on
-    # stages, OOM-vs-not at 8 GiB) AND would catch any regression the g5k
-    # canary would (a collapse regression shows strictly larger at larger
-    # g), so keeping g5k bought ~70 s of probe wall per round for nothing.
-    # collapse-path warm-up (r10): retiring the g5k twin silently made the
-    # g20k stages leg the session's FIRST collapse_exact run, so its
-    # best-of-2 absorbed codegen/JIT warm-up and read +32% vs r8 on
-    # byte-identical code (r9's 29.43 s vs r8's 22.31 s; standalone
-    # best-of-3 converges to 23.1 s once a cheap 1x collapse run precedes
-    # it — verified r10). One unrecorded 1x-corpus run restores the
-    # steady-state measurement the g20k history was built on.
+    # duplicate-heavy twins: the full pipeline with and without
+    # collapse_exact over the top-scale corpus with one 200-doc-per-replica
+    # identical-text cluster (20k docs, C(20k, 2) = 200M output pairs), so
+    # the quadratic verify work collapse removes shows above the
+    # corpus-proportional signature/banding floor (at 5k docs banding
+    # dominates and the twins discriminate nothing). Both legs emit
+    # identical rows (pinned by test_minhash_collapse_exact_output_identical);
+    # a collapse regression shows as the collapsed leg closing on the
+    # uncollapsed one. One untimed collapse run over the 1x corpus first, so
+    # the first timed collapse_exact leg is not billed for its codegen/JIT
+    # warm-up.
     docs_warm = (
         spark.read.parquet(f"{src}/documents.parquet")
         .select("doc_id", "text")
@@ -607,87 +571,25 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
         )
     )
     DD.minhash_lsh_dedup(
-        docs_warm, k=3, num_hashes=16, bands=4, threshold=0.5,
-        collapse_exact=True, expand_groups=False,
+        docs_warm, k=3, num_hashes=16, bands=4, threshold=0.5, collapse_exact=True
     ).count()
-    spark.catalog.clearCache()
 
-    for g_per_rep, gtag in ((200, "g20k"),):
-        docs_big = docs_top.withColumn(
-            "text",
-            F.when(F.col("doc_id") % OFF < g_per_rep, F.lit(hot_text)).otherwise(
-                F.col("text")
-            ),
-        )
+    docs_big = docs_top.withColumn(
+        "text",
+        F.when(F.col("doc_id") % OFF < 200, F.lit(hot_text)).otherwise(
+            F.col("text")
+        ),
+    )
+    for collapse in (False, True):
         sec, n = _timed(
             lambda: DD.minhash_lsh_dedup(
                 docs_big, k=3, num_hashes=16, bands=4, threshold=0.5,
-                collapse_exact=True, expand_groups=False,
+                collapse_exact=collapse,
             ).count()
         )
-        out["times"][f"dupheavy_{gtag}_collapsed_stages_{top}x"] = sec
-        out["counts"][f"dupheavy_{gtag}_rep_pairs_{top}x"] = n
-        spark.catalog.clearCache()
-        for collapse in (False, True):
-            sec, n = _timed(
-                lambda: DD.minhash_lsh_dedup(
-                    docs_big, k=3, num_hashes=16, bands=4, threshold=0.5,
-                    collapse_exact=collapse,
-                ).count()
-            )
-            key = "collapsed" if collapse else "uncollapsed"
-            out["times"][f"dupheavy_{gtag}_{key}_full_{top}x"] = sec
-            out["counts"][f"dupheavy_{gtag}_pairs_{key}_{top}x"] = n
-            spark.catalog.clearCache()
-
-    # small-groups twin (r10, VERDICT r9 ask 6): a measured receipt on the
-    # per-group bucket sizing (ADVICE r8). Corpus: PURE pair/triple
-    # identical-text groups — 3000 docs/replica in runs of 3 (~100k groups,
-    # 300k docs at 100x), no background corpus, so the expansion term is as
-    # visible as it can be above the corpus-proportional banding floor. The
-    # r8 flat-B sizing replicated every member of every group ~(B+1)/2x
-    # (~16x at B=32) to fix a straggler that cannot exist at g<=3; the
-    # per-group sizing gives those groups a single bucket (1x). Same
-    # corpus, same pipeline, identical output pairs — the only difference
-    # is the sizing policy (default target vs None = forced flat legacy).
-    # The receipt is the RECORDED replication-row pair (exact by
-    # construction: every group here is <= 256 members, so per-group sizing
-    # emits exactly one row per member, flat-B emits ~(B+1)/2 per member)
-    # plus the timing twins; at local B=32 the row tax may sit inside the
-    # banding floor's noise — on a fleet B is defaultParallelism (O(1000))
-    # and the same corpus pays ~500x row replication, which is the point.
-    n_small = 3000
-    # EVERY token carries the group id: cross-group shingle overlap must be
-    # zero (a shared 5-token prefix leaves 3/5 trigrams common = Jaccard
-    # 0.6 ≥ threshold, which quietly turns 100k triples into one 300k-member
-    # near-dup blob — measured 412M pairs before this construction)
-    _gid = F.floor(F.col("doc_id") / 3).cast("string")
-    docs_small = docs_top.filter(F.col("doc_id") % OFF < n_small).withColumn(
-        "text",
-        F.concat_ws(
-            " ",
-            F.concat(F.lit("sga"), _gid),
-            F.concat(F.lit("sgb"), _gid),
-            F.concat(F.lit("sgc"), _gid),
-            F.concat(F.lit("sgd"), _gid),
-            F.concat(F.lit("sge"), _gid),
-        ),
-    )
-    small_members = n_small * replicas
-    out["counts"][f"smallgrp_expansion_rows_pergroup_{top}x"] = small_members
-    out["counts"][f"smallgrp_expansion_rows_flatB_{top}x"] = int(
-        small_members * (spark.sparkContext.defaultParallelism + 1) / 2
-    )
-    for policy, tgt in (("pergroup", 256), ("flatB", None)):
-        sec, n = _timed(
-            lambda tgt=tgt: DD.minhash_lsh_dedup(
-                docs_small, k=3, num_hashes=16, bands=4, threshold=0.5,
-                collapse_exact=True, target_members_per_bucket=tgt,
-            ).count()
-        )
-        out["times"][f"dupheavy_small_groups_{policy}_{top}x"] = sec
-        out["counts"][f"dupheavy_small_groups_pairs_{policy}_{top}x"] = n
-        spark.catalog.clearCache()
+        key = "collapsed" if collapse else "uncollapsed"
+        out["times"][f"dupheavy_g20k_{key}_full_{top}x"] = sec
+        out["counts"][f"dupheavy_g20k_pairs_{key}_{top}x"] = n
 
     edges = (
         spark.read.parquet(f"{src}/lineitem.parquet")
@@ -723,7 +625,6 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
             out["times"][
                 f"skew_cc_{'hot' if hot else 'uniform'}_{top}x"
             ] = sec
-            spark.catalog.clearCache()
     u, h = (
         out["times"][f"skew_cc_uniform_{top}x"],
         out["times"][f"skew_cc_hot_{top}x"],
@@ -767,7 +668,6 @@ def extra_growth_decade(spark, src: str, extra: int, times: dict,
     sec, n_hit = _timed(lambda: decontam_count(docs, False))
     times[f"decontam_{extra}x"] = sec
     out[f"decontam_hits_{extra}x"] = n_hit
-    spark.catalog.clearCache()
 
     if not skip_flow:
         from ortholog_pipeline_spark.plans.agr_load import run_agr_load
@@ -864,7 +764,6 @@ def extra_growth_decade(spark, src: str, extra: int, times: dict,
             "hand_rule_datum": {"shuffle_partitions": scaled_parts,
                                 "runs": 1},
         }
-        spark.catalog.clearCache()
     return out
 
 
