@@ -683,6 +683,32 @@ def steady_drift(batch_ms: list, skip: int = 4) -> float | None:
     return round(med(last) / base, 2)
 
 
+#: Start/end calibration anchors further apart than this mean the box shifted
+#: mid-run: a single-point anchor is then under-determined.
+ANCHOR_SPREAD_BAR = 1.15
+
+
+def env_shift_estimate(
+    calibration_sec: float,
+    prev_calibration: float | None,
+    median_ratio: float,
+    anchor_spread: float | None,
+) -> tuple[float, str]:
+    """Environment shift vs the previous same-sf run, and its source: the
+    calibration ratio, the median entry ratio when history predates the
+    anchor, or — when this run's own anchors disagree beyond
+    ANCHOR_SPREAD_BAR — a raw 1.0 (normalization refused, so a box that moved
+    mid-run cannot raise the regression bar)."""
+    if anchor_spread and anchor_spread > ANCHOR_SPREAD_BAR:
+        return 1.0, (
+            f"raw: start/end anchors disagree {anchor_spread}x "
+            f"(> {ANCHOR_SPREAD_BAR}), normalization refused"
+        )
+    if prev_calibration:
+        return calibration_sec / prev_calibration, "calibration"
+    return median_ratio, "median_prev_ratio (no calibration in history)"
+
+
 def stream_state_probe(
     spark, sf_dir: str, key_replicas: int = 10, n_files: int = 48,
     files_per_trigger: int = 2,
@@ -813,10 +839,10 @@ def main() -> None:
     calibration_sec = calibration_probe(spark)
     # r11 (VERDICT r10 ask 7): the box's load comes in waves, so a single-point
     # anchor is under-determined — sample the anchor AND loadavg at session
-    # start and again after the last timed entry. env_shift semantics are
-    # unchanged (start anchor vs history, same as every prior round); the end
-    # anchor + spread are ADDITIVE fields so tools/compare_rounds.py can
-    # refuse to normalize a run whose two anchors disagree > 15%.
+    # start and again after the last timed entry. env_shift is the start
+    # anchor vs history unless the two anchors disagree beyond
+    # ANCHOR_SPREAD_BAR, in which case env_shift_estimate refuses to
+    # normalize.
     try:
         loadavg_start = list(os.getloadavg())
     except OSError:
@@ -1328,7 +1354,7 @@ def main() -> None:
     # r11 closing anchor (VERDICT r10 ask 7): same pinned probe, re-measured
     # after the LAST timed entry. A >15% spread between the two anchors means
     # the box shifted mid-run and calibration-normalized totals from this run
-    # are under-determined — recorded here, enforced in tools/compare_rounds.py.
+    # are under-determined — env_shift_estimate then refuses to normalize.
     calibration_end_sec = calibration_probe(spark)
     try:
         loadavg_end = list(os.getloadavg())
@@ -1344,10 +1370,10 @@ def main() -> None:
         else None
     )
     anchor_note = (
-        f"start/end calibration anchors disagree {anchor_spread}x (> 1.15): "
-        "the box shifted mid-run; normalized cross-round totals from this run "
-        "are under-determined"
-        if anchor_spread and anchor_spread > 1.15
+        f"start/end calibration anchors disagree {anchor_spread}x "
+        f"(> {ANCHOR_SPREAD_BAR}): the box shifted mid-run; normalized "
+        "cross-round totals from this run are under-determined"
+        if anchor_spread and anchor_spread > ANCHOR_SPREAD_BAR
         else None
     )
 
@@ -1380,15 +1406,12 @@ def main() -> None:
     # for manual review rather than absorbed into the bar.
     median_ratio = sorted(prev_ratio.values())[len(prev_ratio) // 2] if prev_ratio else 1.0
     prev_calibration = same_sf[-1].get("calibration_sec") if same_sf else None
-    if prev_calibration:
-        env_shift = calibration_sec / prev_calibration
-        shift_source = "calibration"
-    else:
-        env_shift = median_ratio
-        shift_source = "median_prev_ratio (no calibration in history)"
+    env_shift, shift_source = env_shift_estimate(
+        calibration_sec, prev_calibration, median_ratio, anchor_spread
+    )
     bar = 1.5 * max(1.0, env_shift)
     shift_review_note = None
-    if median_ratio > 1.3 * max(1.0, env_shift if prev_calibration else 0.0) and prev_calibration:
+    if shift_source == "calibration" and median_ratio > 1.3 * max(1.0, env_shift):
         shift_review_note = (
             f"median entry ratio {median_ratio} exceeds the calibration shift "
             f"{round(env_shift, 2)} — a uniform slowdown NOT explained by the "

@@ -37,12 +37,13 @@ identical restricted result):
   over ``l_orderkey < 10M`` at sf0.1 cost.
 
 At an UNSCALED dir (all keys < 10M, one replica) every slice twin degrades to
-an exact full-result compare, which is how tests validate them at sf0.01.
+an exact full-result compare.
 
-Used by ``tools/driver_sim.py --slice`` / ``tools/sweep.py --slice-heavy``;
-deliberately NOT in the main registry — these are certification harness twins
-of existing entries, not new operators (COVERAGE.md stays 1:1 with
-operators)."""
+Used by the registry check (``python -m ortholog_pipeline_spark.oracle``)
+whenever its SF_DIR is a scaled dir (tests/test_slice_cert.py runs it on a
+2-replica sf0.001 dir); deliberately NOT in the main registry — these are
+certification harness twins of existing entries, not new operators
+(COVERAGE.md stays 1:1 with operators)."""
 
 from __future__ import annotations
 

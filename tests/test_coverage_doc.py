@@ -62,10 +62,10 @@ def test_every_flow_and_section2_query_is_documented():
 
 
 def test_registry_and_oracles_stay_paired():
-    """Every queries() entry has an oracle_sql() entry or is a declared
-    rows-only op; oracle keys never dangle."""
+    """Every queries() entry has an oracle_sql() entry and no oracle key
+    dangles: there are no rows-only entries."""
     from ortholog_pipeline_spark.queries import oracle_sql
 
     q, o = set(queries()), set(oracle_sql())
-    dangling = sorted(o - q)
-    assert not dangling, f"oracle_sql() keys without queries(): {dangling}"
+    assert not q - o, f"queries() entries without an oracle: {sorted(q - o)}"
+    assert not o - q, f"oracle_sql() keys without queries(): {sorted(o - q)}"

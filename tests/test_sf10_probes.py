@@ -1,5 +1,5 @@
 """Regime-preservation pins for the 100x probe constructions (VERDICT r5 item
-2) and the floors() shared with tools/certify_scale.py.
+2) and the scale-floor computations in tools/sf10_probes.py.
 
 The r5 scaled-dir lesson (NOTES.md): a volume-scaled fixture is only evidence
 if the replica construction preserves the operator's REGIME — collision-group
@@ -28,15 +28,6 @@ def _load_probes():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
-
-
-def test_certify_scale_floors_import_path():
-    """tools/certify_scale.py runs `from tools.sf10_probes import floors` in a
-    subprocess — pin that the module loads and exposes a callable floors, so
-    the one-command certification can't silently lose its floors stage again
-    (it shipped in r6 referencing a module that didn't exist yet)."""
-    mod = _load_probes()
-    assert callable(mod.floors)
 
 
 def test_suffixed_documents_zero_cross_replica_overlap(spark):

@@ -1,9 +1,9 @@
 """Materialize an ~10x-scaled testdata directory from an existing sf_dir, so
-`tools/driver_sim.py` can run the driver's EXACT oracle comparison at the next
-scale up (sf0.1 -> ~sf1): both engines read the SAME scaled parquet files, so
-the Spark-vs-DuckDB comparison stays exact at any scale — this lifts the
-"correctness sweeps are bounded by the largest generated sf" limit noted in
-VERDICT r2.
+`python -m ortholog_pipeline_spark.oracle` can run the driver's EXACT oracle
+comparison at the next scale up (sf0.1 -> ~sf1): both engines read the SAME
+scaled parquet files, so the Spark-vs-DuckDB comparison stays exact at any
+scale — this lifts the "correctness sweeps are bounded by the largest
+generated sf" limit noted in VERDICT r2.
 
 Replication mirrors bench.py's scaling-probe formulas (the shapes chosen there
 to isolate volume growth rather than manufacture pathologies):
@@ -22,7 +22,10 @@ to isolate volume growth rather than manufacture pathologies):
 - nation/region are dimension tables and copy as-is.
 
 Run: python tools/make_scaled_dir.py [src_sf_dir] [dst_dir] [replicas]
-Then: python tools/driver_sim.py <dst_dir> [query ...]
+Then: python -m ortholog_pipeline_spark.oracle <dst_dir> [query ...]
+(the check sees the Spark-written table directories and runs the five
+declared-quadratic oracles as their slice twins, float-free outputs by
+checksum)
 """
 
 from __future__ import annotations

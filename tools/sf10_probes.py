@@ -1,5 +1,5 @@
 """100x-regime probes for the scale-critical operator families (VERDICT r5
-item 2) + the shared quality-floor computations used by tools/certify_scale.py.
+item 2) + the quality-floor computations measured at the probe dir.
 
 The 10x probes in bench.py and the ~sf1 certification pin one decade of
 scaling; the brief's bar is 100x. This tool materializes a ~sf10 probe dir
@@ -56,9 +56,9 @@ git HEAD, elapsed. Run:
     python tools/sf10_probes.py            # ~15-25 min end to end
     python tools/sf10_probes.py --replicas 10 --dir /tmp/sf10x_smoke
 
-`floors(spark, sf_dir)` is importable (used by tools/certify_scale.py): the
-ANN recall@10 and MinHash completeness floors of tests/test_scale_floors.py,
-returned as values so certification artifacts carry the numbers.
+`floors(spark, sf_dir)` is importable: the ANN recall@10 and MinHash
+completeness floors of tests/test_scale_floors.py, returned as values so the
+probe artifact carries the numbers.
 """
 
 from __future__ import annotations
@@ -80,8 +80,8 @@ OFF = 10_000_000
 
 
 # ---------------------------------------------------------------------------
-# Quality floors (shared with tools/certify_scale.py and mirrored by
-# tests/test_scale_floors.py — keep the three in sync).
+# Quality floors (mirrored by tests/test_scale_floors.py — keep the two in
+# sync).
 # ---------------------------------------------------------------------------
 
 def floors(spark, sf_dir: str) -> dict:
