@@ -8,9 +8,9 @@ and its flags:
     python -m ortholog_pipeline_spark --fix-xref-data-set --state-dir ...
 
 Each flag dispatches one of the three flows in ``plans/`` against the snapshot
-state store. File inputs are read from the landing layout written by
-``sources.download`` (S1); the AGR freshness gate runs before a species load just
-as the reference does.
+state store. File inputs are read from the landing layout
+``<landing-dir>/<source>/dt=*/`` (S1: fetching into it is outside the engine);
+the AGR freshness gate runs before a species load just as the reference does.
 """
 
 from __future__ import annotations
@@ -76,6 +76,15 @@ def _species_relations(
     return rel
 
 
+def _at_least_one(text: str) -> int:
+    """``--keep-versions``: a count below 1 would keep every version while the
+    run still reported success, so argparse refuses it (exit 2)."""
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="ortholog_pipeline_spark")
     mode = ap.add_mutually_exclusive_group(required=True)
@@ -111,14 +120,14 @@ def main(argv: list[str] | None = None) -> int:
     mode.add_argument(
         "--vacuum-state",
         action="store_true",
-        help="vacuum old snapshot versions + compact current ones",
+        help="delete snapshot versions older than the newest --keep-versions",
     )
     ap.add_argument("--state-dir", required=True)
     ap.add_argument("--landing-dir")
     ap.add_argument("--report-out", help="output dir for --report (TSV)")
     ap.add_argument(
         "--keep-versions",
-        type=int,
+        type=_at_least_one,
         default=2,
         help="snapshot versions to retain under --vacuum-state",
     )
@@ -143,8 +152,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if res.ok else 1
 
     if args.vacuum_state:
-        import os
-
         tables = sorted(
             d
             for d in (os.listdir(args.state_dir) if os.path.isdir(args.state_dir) else [])

@@ -58,15 +58,3 @@ def pii_count(col: Column | str) -> Column:
         + F.regexp_count(c, F.lit(IPV4_RE))
         + F.regexp_count(c, F.lit(PHONE_RE))
     ).cast("long")
-
-
-def normalize_ws(col: Column | str) -> Column:
-    """Collapse runs of whitespace (incl. tabs/newlines) to one space + trim."""
-    return F.trim(F.regexp_replace(_c(col), r"\s+", " "))
-
-
-def strip_control_chars(col: Column | str) -> Column:
-    """Drop C0 control characters except \\t and \\n (mojibake/binary bleed)."""
-    return F.regexp_replace(
-        _c(col), "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", ""
-    )

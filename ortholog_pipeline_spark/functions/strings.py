@@ -118,10 +118,3 @@ def strip_quotes(col: Column | str) -> Column:
     (OrthoTool.java:119-124)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(F.trim(c), r'^"(.*)"$', "$1"))
-
-
-def signed_diff(new: Column | str, old: Column | str) -> Column:
-    """`+N` / `-N` / `0` formatted count delta (Manager.java:145-148)."""
-    n = F.col(new) if isinstance(new, str) else new
-    o = F.col(old) if isinstance(old, str) else old
-    return F.format_string("%+d", (n - o).cast("long"))

@@ -7,13 +7,10 @@ no image/audio libraries, so ``decode_*`` tries the real library first
 (``PIL`` / ``soundfile``) and otherwise falls back to a clearly-marked deterministic
 fake derived from the payload bytes (``_FAKE_DECODE=True`` in the output marks rows
 produced by the stub). Swapping in the real codec changes ONE function body; the
-distributed plan — scan → repartition by size → mapInPandas → downstream joins —
-is unchanged.
+distributed plan — scan → mapInPandas → downstream joins — is unchanged.
 
 Scale notes: payloads never pass through Python row-at-a-time — Arrow moves each
-partition in columnar batches; ``repartition_for_payloads`` right-sizes partitions so
-a batch of payloads fits executor memory (the multimodal analogue of
-``spark.sql.files.maxPartitionBytes``).
+partition in columnar batches.
 """
 
 from __future__ import annotations
@@ -57,13 +54,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("channels", T.IntegerType()),
         T.StructField("mean_intensity", T.DoubleType()),
         T.StructField("is_fake_decode", T.BooleanType()),
-    ]
-)
-
-EMBEDDING_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
     ]
 )
 
@@ -140,25 +130,6 @@ def decode_image_features(media: DataFrame) -> DataFrame:
     )
 
 
-def extract_embeddings(media: DataFrame, dim: int = 64) -> DataFrame:
-    """payload → feature vector. Stub model: unit-normalized pseudo-embedding seeded
-    from the payload digest (a real model swaps into the same batch signature —
-    loading weights once per PARTITION, not per row, is the pattern)."""
-
-    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-partition setup would load the model here, once
-        for pdf in pdfs:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                seed = int.from_bytes(_payload_digest(payload)[:4], "big")
-                v = np.random.default_rng(seed).standard_normal(dim)
-                v = (v / np.linalg.norm(v)).astype(np.float32)
-                rows.append({"media_id": media_id, "embedding": v.tolist()})
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "payload").mapInPandas(batches, EMBEDDING_SCHEMA)
-
-
 def sample_frames(media: DataFrame, every_nth: int = 10) -> DataFrame:
     """video payload → sampled frame payloads (frame extraction stubbed: slices of
     the payload stand in for decoded frames). One output row per sampled frame."""
@@ -187,18 +158,6 @@ def sample_frames(media: DataFrame, every_nth: int = 10) -> DataFrame:
         .select("media_id", "payload", F.col("meta.n_frames").alias("n_frames"))
         .mapInPandas(batches, FRAME_SCHEMA)
     )
-
-
-def repartition_for_payloads(
-    media: DataFrame, target_partition_bytes: int = 128 * 1024 * 1024
-) -> DataFrame:
-    """Right-size partitions by total payload bytes so an Arrow batch of payloads
-    fits executor memory — count partitions from the actual byte volume."""
-    total = media.agg(
-        F.sum(F.coalesce(F.length("payload"), F.lit(0))).alias("b")
-    ).collect()[0].b
-    n = max(1, int((total or 0) // target_partition_bytes) + 1)
-    return media.repartition(n, "media_id")
 
 
 def synthesize_media_from_documents(documents: DataFrame) -> DataFrame:

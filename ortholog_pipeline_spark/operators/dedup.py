@@ -927,7 +927,7 @@ def incremental_minhash_dedup(
     EXISTING corpus — the shape a 100 TB ingest actually runs, where re-hashing
     the whole corpus per batch is off the table. Only the batch side is hashed
     fresh; in production the index side's band keys are precomputed and stored
-    (`ann_index.append_ann_index` is the same pattern for embeddings), so the
+    (`dedup_index.probe_dedup_index` is that stored-index twin), so the
     per-batch cost is batch-size-proportional: hash the batch, broadcast its
     band keys against the index's band-bucket table, verify the (tiny)
     candidate set exactly. Batch-internal duplicates are NOT reported (run

@@ -11,9 +11,7 @@ Two derived tables per index (both partitioned for the probe's access path):
 ``probe_dedup_index`` is the stored-state twin of
 ``dedup.incremental_minhash_dedup`` (which recomputes the index side from raw
 text): hash the batch, broadcast its band keys against the stored band table,
-exact-verify candidates against the stored shingle table. ``append_to_index``
-then admits the batch's survivors — the same grow-under-snapshot-isolation
-contract as ``ann_index.append_ann_index``.
+exact-verify candidates against the stored shingle table.
 
 Cites: reference has no dedup surface; this extends the engine the way
 SURVEY.md §7 "beyond the reference" prescribes.
@@ -108,29 +106,4 @@ def probe_dedup_index(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("batch_id", "index_id", "jaccard")
-    )
-
-
-def append_to_index(
-    store: StateStore,
-    batch: DataFrame,
-    name: str = "dedup_index",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> None:
-    """Admit a batch into the index (idempotent: already-indexed ids are
-    skipped), publishing new snapshot versions of both derived tables. Both
-    take the store's append path: the previous files are hardlinked and the
-    band table keeps its ``band`` layout."""
-    existing = store.read(f"{name}_shingles").select(F.col(id_col))
-    fresh = batch.dropDuplicates([id_col]).join(existing, id_col, "left_anti")
-    hashed, banded = _hashed_and_banded(
-        fresh, text_col, id_col, k, num_hashes, bands
-    )
-    store.apply_changes(f"{name}_shingles", inserts=hashed.select(id_col, "h31"))
-    store.apply_changes(
-        f"{name}_bands", inserts=banded.select("band", "band_key", id_col)
     )

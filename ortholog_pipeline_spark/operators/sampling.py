@@ -34,14 +34,6 @@ def sample_bucket(key: Column, salt: str) -> Column:
     return F.pmod(hex_hash64(F.concat(F.lit(salt), key.cast("string"))), F.lit(BUCKETS))
 
 
-def hash_bernoulli_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = "s0"
-) -> DataFrame:
-    """Keep each row iff its key's hash bucket falls below ``fraction`` — a
-    reproducible Bernoulli sample, map-side only."""
-    return df.filter(sample_bucket(F.col(key_col), salt) < int(fraction * BUCKETS))
-
-
 def train_holdout_split(
     df: DataFrame, key_col: str, holdout_fraction: float = 0.1, salt: str = "s0"
 ) -> DataFrame:

@@ -9,7 +9,7 @@ it.
 
 Usage shape (driver decides the hot keys from stats, not per-row logic):
 
-    hot = detect_hot_keys(big, ["k"], threshold=1_000_000)
+    hot = big.groupBy("k").count().filter("count > 1000000").select("k")
     out = salted_join(big, dim, ["k"], num_salts=16, hot_keys=hot)
 """
 
@@ -19,19 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "_salt"
-
-
-def detect_hot_keys(
-    df: DataFrame, key_cols: list[str], threshold: int = 1_000_000
-) -> DataFrame:
-    """Keys whose row count exceeds ``threshold`` — one aggregation, driver reads
-    only the (small) hot-key list."""
-    return (
-        df.groupBy(*key_cols)
-        .count()
-        .filter(F.col("count") > threshold)
-        .select(*key_cols)
-    )
 
 
 def salted_join(

@@ -124,22 +124,6 @@ def reconcile_reverse_associations(
     return kept_inserts, kept_deletes
 
 
-def stale_rows(
-    existing: DataFrame,
-    touched: DataFrame,
-    key_cols: list[str],
-    protected: F.Column | None = None,
-) -> DataFrame:
-    """Staleness watermark on mutable state (SURVEY.md §2.9): rows of the snapshot not
-    touched by this run are delete candidates — an anti-join, with an optional
-    protection predicate (e.g. never delete manual `RGD` rows,
-    OrthologRelationDao.java:483-489)."""
-    stale = existing.join(touched.select(*key_cols).dropDuplicates(), key_cols, "left_anti")
-    if protected is not None:
-        stale = stale.filter(~protected)
-    return stale
-
-
 def touch_last_modified(
     existing: DataFrame,
     touched_keys: DataFrame,

@@ -393,8 +393,8 @@ def run_agr_load(
         )
 
         # stale = existing rows untouched this run (§2.9 watermark) — exactly the
-        # DELETE verdicts of the full-outer sync (sync.stale_rows's anti-join and
-        # the full-outer's incoming-null side are the same set), so the churn
+        # DELETE verdicts of the full-outer sync (its incoming-null side is the
+        # anti-join of the snapshot against this run's keys), so the churn
         # guard's numerator, its denominator (every verdict with an existing side
         # = every snapshot row), AND the two result counts all come from ONE
         # aggregation job over the checkpointed verdicts instead of four actions.

@@ -683,8 +683,7 @@ def j_scd2_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (intervals partition the timeline — a guarantee the SCD2 builder's
     LAG/LEAD construction provides structurally), so the revenue totals are
     conserved; purchases are themselves change events, making every match
-    deterministic. At 100 TB both sides bucket by user_id (bucketed.py) and
-    the join is shuffle-free."""
+    deterministic."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changes = ev.select(

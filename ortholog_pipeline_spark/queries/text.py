@@ -695,10 +695,8 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency, total occurrences, and the head of the sorted posting list.
     Postings are collected per term AFTER a (doc, term) distinct — the
     distinct's partial aggregation dedups map-side so the term shuffle carries
-    one row per (doc, term), not per occurrence. At 100 TB posting lists are
-    written bucketed by term (state.py's bucketed publisher) so search-time
-    term lookups prune to one bucket; the head-5 projection here keeps the
-    oracle comparison bounded while pinning list order (sorted doc ids)."""
+    one row per (doc, term), not per occurrence. The head-5 projection keeps
+    the oracle comparison bounded while pinning list order (sorted doc ids)."""
     docs = _t(spark, sf_dir, "documents")
     occ = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")

@@ -251,11 +251,10 @@ def w_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_rate_limit_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window rate limiting (batch reference semantics for the
-    streaming token bucket in streaming/rate_limit.py): an event is flagged
-    when its user has ≥ 3 events inside the trailing 60 s — one partitioned
-    RANGE-frame window over integer seconds, one user shuffle. Output: per
-    user, total events and flagged events (users with any flag)."""
+    """Sliding-window rate limiting: an event is flagged when its user has
+    ≥ 3 events inside the trailing 60 s — one partitioned RANGE-frame window
+    over integer seconds, one user shuffle. Output: per user, total events
+    and flagged events (users with any flag)."""
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("long").alias("sec")
     )

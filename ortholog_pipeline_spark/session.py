@@ -127,23 +127,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-#: The driver's testdata tables (TESTDATA.md) — the names oracle SQL uses.
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Register every testdata parquet table as a temp view so users can run
-    `spark.sql(...)` directly — the same names the DuckDB oracles use, making
-    any oracle_sql() string (minus DuckDB-specific functions) runnable against
-    Spark SQL too. The events view gets the same NANOS/NTZ normalization as
-    `queries._t`."""
-    from ortholog_pipeline_spark import queries as _q
-
-    for t in TESTDATA_TABLES:
-        _q._t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return list(TESTDATA_TABLES)

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ortholog_pipeline_spark.functions.strings import sanitize_evidence_set
-from ortholog_pipeline_spark.operators import iterate as IT
 from ortholog_pipeline_spark.schemas import AGR_SCHEMA, HCOP_SCHEMA, HUMAN, NCBI_SCHEMA
 
 HUMAN_TAX_ID = "9606"
@@ -123,94 +122,3 @@ def read_homologene(spark: SparkSession, path: str) -> DataFrame:
         .schema(HOMOLOGENE_SCHEMA)
         .csv(path)
     )
-
-
-def homologene_to_relations(homologene: DataFrame, tax_to_species: dict[str, int]) -> DataFrame:
-    """J13 — each HomoloGene group expands to all n·(n−1) directed member pairs
-    (HomologeneLoader.java:306-343): a per-group self-join on the group id with an
-    index inequality, then both directions via union. ``tax_to_species`` maps
-    taxonomic ids to species keys; unmapped rows are dropped (the reference skips
-    unsupported species)."""
-    mapping = F.create_map(
-        *[F.lit(x) for kv in tax_to_species.items() for x in kv]
-    )
-    members = homologene.select(
-        "homologene_id",
-        F.col("gene_id"),
-        mapping[F.col("tax_id")].alias("species_type_key"),
-    ).filter(F.col("species_type_key").isNotNull())
-
-    a = members.select(
-        "homologene_id",
-        F.col("gene_id").alias("src_other_id"),
-        F.col("species_type_key").alias("src_species_type_key"),
-    )
-    b = members.select(
-        "homologene_id",
-        F.col("gene_id").alias("dest_other_id"),
-        F.col("species_type_key").alias("dest_species_type_key"),
-    )
-    pairs = a.join(b, "homologene_id").filter(
-        F.col("src_other_id") != F.col("dest_other_id")
-    )
-    return pairs.select(
-        "src_other_id",
-        "dest_other_id",
-        "src_species_type_key",
-        "dest_species_type_key",
-        F.lit("HomoloGene").alias("data_source"),
-        F.concat(F.lit("homologene:"), F.col("homologene_id")).alias("data_set_name"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-corpus ingest: JSONL documents (the common LLM-corpus interchange)
-# ---------------------------------------------------------------------------
-
-def _documents_jsonl_schema():
-    """documents-table shape plus the corrupt-record capture column."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("_corrupt_record", T.StringType()),
-        ]
-    )
-
-
-def read_jsonl_documents(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """JSONL corpus scan → (documents, corrupt_lines).
-
-    Explicit schema (never inferred — inference is a full extra pass at 100 TB),
-    PERMISSIVE mode with the corrupt line captured whole, gzip handled by the
-    codec from the extension. The split mirrors the engine's audit-stream
-    pattern: bad lines land in a reviewable frame instead of killing the run.
-    The scan is checkpointed before filtering — Spark requires the
-    corrupt-record column be materialized before it can be referenced in a
-    filter."""
-    raw = IT.round_checkpoint(
-        spark.read.schema(_documents_jsonl_schema())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-    good = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    bad = raw.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("line")
-    )
-    return good, bad
-
-
-def write_jsonl_documents(df: DataFrame, path: str, compress: bool = True) -> None:
-    """JSONL corpus sink (gzip by default) — the write half of the interchange."""
-    w = df.write.mode("overwrite")
-    if compress:
-        w = w.option("compression", "gzip")
-    w.json(path)

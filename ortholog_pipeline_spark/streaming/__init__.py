@@ -1,45 +1,22 @@
 """Structured Streaming surface of the engine.
 
 The reference is batch-only (SURVEY.md §2.9): its "streaming-like" semantics are a
-staleness watermark on mutable state and an incremental sync. This package provides
-the true streaming counterparts, built so every stream reuses the batch operators:
+staleness watermark on mutable state and an incremental sync. This package holds
+what the bench's stream-state probe runs; the registry's windowed queries reuse
+the same plans in batch mode:
 
-* ``sources``   — ``readStream`` over schema'd landing directories (the streaming
-  twin of ``ortholog_pipeline_spark.sources.files``).
-* ``windows``   — event-time tumbling/sliding aggregations with watermarks.
-* ``sync``      — ``foreachBatch`` adapter running the batch CDC sync (J10) per
-  micro-batch against the snapshot state store.
-* ``stateful``  — ``applyInPandasWithState`` custom stateful operators
-  (per-key sessionization with timeout — the shape Spark lacks as a built-in).
+* ``sources``     — ``readStream`` over an events landing directory.
+* ``windows``     — event-time tumbling/sliding aggregations with watermarks.
+* ``state_conf``  — the RocksDB state-store default every stateful stream gets.
 """
 
-from ortholog_pipeline_spark.streaming.ann_ingest import (
-    ann_ingest_stream,
-    read_stream_embeddings,
-)
-from ortholog_pipeline_spark.streaming.joins import interval_equi_join
-from ortholog_pipeline_spark.streaming.sources import read_stream_events, read_stream_tsv
+from ortholog_pipeline_spark.streaming.sources import read_stream_events
 from ortholog_pipeline_spark.streaming.state_conf import ensure_state_store_conf
-from ortholog_pipeline_spark.streaming.stateful import sessionize
-from ortholog_pipeline_spark.streaming.sync import foreach_batch_sync
-from ortholog_pipeline_spark.streaming.windows import (
-    dedup_stream,
-    session_agg,
-    sliding_counts,
-    tumbling_agg,
-)
+from ortholog_pipeline_spark.streaming.windows import sliding_counts, tumbling_agg
 
 __all__ = [
     "ensure_state_store_conf",
     "read_stream_events",
-    "read_stream_tsv",
     "tumbling_agg",
     "sliding_counts",
-    "dedup_stream",
-    "foreach_batch_sync",
-    "sessionize",
-    "session_agg",
-    "interval_equi_join",
-    "ann_ingest_stream",
-    "read_stream_embeddings",
 ]

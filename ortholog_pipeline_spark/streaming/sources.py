@@ -1,16 +1,12 @@
-"""Streaming sources: ``readStream`` over landing directories.
+"""Streaming source: ``readStream`` over an events landing directory.
 
-The batch flow downloads source files into a landing dir and scans them (S1-S4,
-SURVEY.md §2.1). The streaming twin watches the same directory: each newly landed
-date-stamped file becomes a micro-batch, so incremental loads run continuously
-instead of per-cron. ``maxFilesPerTrigger`` bounds per-batch work so one giant drop
-can't blow executor memory at scale.
+Each newly landed file becomes a micro-batch. ``maxFilesPerTrigger`` bounds
+per-batch work so one giant drop can't blow executor memory at scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ortholog_pipeline_spark.streaming.state_conf import ensure_state_store_conf
@@ -41,29 +37,3 @@ def read_stream_events(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(landing_dir)
-
-
-def read_stream_tsv(
-    spark: SparkSession,
-    landing_dir: str,
-    schema: T.StructType,
-    sep: str = "\t",
-    comment: str = "#",
-    header: bool = False,
-    max_files_per_trigger: int | None = 1,
-) -> DataFrame:
-    """Streaming twin of the batch TSV scans (S2-S4): same schema'd csv options,
-    applied per newly landed file. The batch parsers' projections/filters compose on
-    top unchanged — a streaming DataFrame accepts the same narrow transformations."""
-    ensure_state_store_conf(spark)
-    reader = (
-        spark.readStream.format("csv")
-        .schema(schema)
-        .option("sep", sep)
-        .option("comment", comment)
-        .option("header", header)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.load(landing_dir)
-    return df.withColumn("_ingest_file", F.col("_metadata.file_path"))

@@ -42,69 +42,6 @@ def tumbling_agg(
     )
 
 
-def dedup_stream(
-    df: DataFrame,
-    key_cols: list[str] | None = None,
-    text_col: str | None = None,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming dedup for continuous ingest — the training-data pipeline's
-    "same document lands twice" guard, bounded-state by construction.
-
-    Keys: explicit ``key_cols``, or a normalized-md5 content fingerprint when
-    ``text_col`` is given (the streaming twin of ``dedup.exact_dedup``). On a
-    stream, ``dropDuplicatesWithinWatermark`` holds a key's state only until the
-    watermark passes its event time, so state is O(keys per watermark window),
-    not O(stream history) — the only dedup that survives an unbounded run. On a
-    batch frame the same call degrades to plain ``dropDuplicates`` semantics,
-    keeping plans batch/stream symmetric like the rest of this package."""
-    if (key_cols is None) == (text_col is None):
-        raise ValueError("exactly one of key_cols / text_col is required")
-    from ortholog_pipeline_spark.functions.text import fingerprint
-
-    src = df
-    if text_col is not None:
-        src = src.withColumn("fp", fingerprint(text_col))
-        key_cols = ["fp"]
-    if src.isStreaming:
-        ensure_state_store_conf(src.sparkSession)
-        src = src.withWatermark(ts_col, watermark)
-        return src.dropDuplicatesWithinWatermark(key_cols)
-    return src.dropDuplicates(key_cols)
-
-
-def session_agg(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Gap-based session windows per user: events closer than ``gap`` merge into
-    one session whose end is last-event + gap. On a stream the watermark bounds
-    session state (a session closes once the watermark passes its end); in batch
-    the identical groupBy is what ``stream_session_window`` checks against the
-    gaps-and-islands DuckDB oracle."""
-    src = events
-    if src.isStreaming:
-        ensure_state_store_conf(src.sparkSession)
-        src = src.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(F.session_window(F.col(ts_col), gap), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def sliding_counts(
     events: DataFrame,
     window_size: str = "1 hour",

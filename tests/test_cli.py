@@ -97,6 +97,18 @@ def test_vacuum_state_via_cli(spark, tmp_path, capsys):
     assert len(versions) == 1
 
 
+@pytest.mark.parametrize("keep", ["0", "-1"])
+def test_cli_rejects_keep_versions_below_one(tmp_path, capsys, keep):
+    # keep < 1 vacuums nothing, so a success exit would hide the mistake
+    with pytest.raises(SystemExit) as exc:
+        main(
+            ["--vacuum-state", "--state-dir", str(tmp_path / "state"),
+             "--keep-versions", keep]
+        )
+    assert exc.value.code == 2
+    assert "--keep-versions: must be at least 1" in capsys.readouterr().err
+
+
 def test_cli_rejects_unknown_species(spark, tmp_path):
     (tmp_path / "state").mkdir()
     with pytest.raises(SystemExit):
@@ -104,25 +116,6 @@ def test_cli_rejects_unknown_species(spark, tmp_path):
             ["--species", "unicorn", "--state-dir", str(tmp_path / "state"),
              "--landing-dir", str(tmp_path), "--skip-freshness-gate"]
         )
-
-
-def test_register_testdata_views_sql_surface(spark):
-    """spark.sql over the registered views must agree with the DataFrame path
-    (incl. the events NANOS normalization)."""
-    from pyspark.sql import functions as F
-
-    from ortholog_pipeline_spark.session import register_testdata_views
-
-    names = register_testdata_views(spark, "/root/testdata/sf0.001")
-    assert "lineitem" in names
-    got = spark.sql(
-        "SELECT l_returnflag, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) q "
-        "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"
-    ).collect()
-    assert len(got) >= 2 and all(r.q > 0 for r in got)
-    # events ts must be queryable as a timestamp (NANOS handled)
-    mx = spark.sql("SELECT MAX(ts) m FROM events").collect()[0].m
-    assert mx is not None and hasattr(mx, "year")
 
 
 def test_homologene_via_cli(spark, tmp_path, capsys):

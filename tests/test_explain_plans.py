@@ -100,43 +100,6 @@ def test_pricing_summary_partial_aggregation(spark):
     assert plan.index("partial_sum") < plan.index("Exchange") or "HashAggregate" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two snapshots bucketed on the same key sort-merge-join WITHOUT a shuffle:
-    the physical plan must contain no Exchange on either side. This is the
-    co-location contract publish_bucketed exists to provide."""
-    from pyspark.sql import functions as F
-
-    from ortholog_pipeline_spark.sources.bucketed import (
-        publish_bucketed,
-        read_bucketed,
-    )
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orth = spark.range(0, 10_000).select(
-            F.col("id").alias("src_rgd_id"),
-            (F.col("id") % 7).alias("dest_rgd_id"),
-        )
-        xref = spark.range(0, 10_000).select(
-            F.col("id").alias("src_rgd_id"),
-            F.concat(F.lit("acc"), F.col("id")).alias("acc_id"),
-        )
-        publish_bucketed(orth, "orth_b", "src_rgd_id", buckets=8)
-        publish_bucketed(xref, "xref_b", "src_rgd_id", buckets=8)
-
-        joined = read_bucketed(spark, "orth_b").join(
-            read_bucketed(spark, "xref_b"), "src_rgd_id"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS orth_b")
-        spark.sql("DROP TABLE IF EXISTS xref_b")
-
-
 def test_window_family_single_shuffle(spark):
     """Six analytic functions over the same (partition, order) must collapse to
     window operators fed by ONE exchange — not one shuffle per function."""

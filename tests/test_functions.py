@@ -76,24 +76,13 @@ def test_strip_quotes(spark):
     assert _one(spark, S.strip_quotes(F.lit(' "Abc def" '))) == "Abc def"
 
 
-def test_signed_diff(spark):
-    df = spark.createDataFrame([(5, 3), (3, 5), (4, 4)], ["n", "o"])
-    out = [r.v for r in df.select(S.signed_diff("n", "o").alias("v")).collect()]
-    assert out == ["+2", "-2", "+0"]
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing
 # ---------------------------------------------------------------------------
 
 
 def test_pii_scrub_redacts_and_counts(spark):
-    from ortholog_pipeline_spark.functions.pii import (
-        normalize_ws,
-        pii_count,
-        scrub_pii,
-        strip_control_chars,
-    )
+    from ortholog_pipeline_spark.functions.pii import pii_count, scrub_pii
 
     rows = [
         (1, "mail bob.smith+x@sub.example.co.uk now"),
@@ -114,8 +103,3 @@ def test_pii_scrub_redacts_and_counts(spark):
     assert got[3] == ("call <PHONE> today", 1)
     assert got[4] == ("clean text, no pii 1.2 not-an-ip", 0)
     assert got[5] == ("<EMAIL> and <IP> and <PHONE>", 3)
-
-    norm = df.sparkSession.createDataFrame([("  a\t\tb\nc  ",)], ["t"])
-    assert norm.select(normalize_ws("t").alias("x")).first().x == "a b c"
-    ctrl = df.sparkSession.createDataFrame([("a\x00b\x07c\td",)], ["t"])
-    assert ctrl.select(strip_control_chars("t").alias("x")).first().x == "abc\td"

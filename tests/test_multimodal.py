@@ -35,16 +35,6 @@ def test_decode_image_features_deterministic(spark):
     assert r.is_fake_decode  # container has no codec → the stub path marked itself
 
 
-def test_extract_embeddings_unit_norm(spark):
-    m = _media(spark).limit(10)
-    rows = MM.extract_embeddings(m, dim=16).collect()
-    assert len(rows) == 10
-    for r in rows:
-        assert len(r.embedding) == 16
-        norm = sum(x * x for x in r.embedding) ** 0.5
-        assert abs(norm - 1.0) < 1e-3
-
-
 def test_sample_frames_every_nth(spark):
     m = _media(spark)
     frames = MM.sample_frames(m, every_nth=10)
@@ -59,10 +49,3 @@ def test_sample_frames_every_nth(spark):
     for r in got:
         expected = (vids[r.media_id] + 9) // 10
         assert r["count"] == expected
-
-
-def test_repartition_for_payloads(spark):
-    m = _media(spark)
-    out = MM.repartition_for_payloads(m, target_partition_bytes=1024)
-    assert out.rdd.getNumPartitions() >= 1
-    assert out.count() == m.count()

@@ -325,22 +325,6 @@ def test_reconcile_reverse_associations(spark):
     assert [(r.master_rgd_id, r.detail_rgd_id) for r in dels.collect()] == [(7, 8)]
 
 
-def test_stale_rows_protected(spark):
-    existing = spark.createDataFrame(
-        [(1, 2, "RGD"), (1, 3, "NCBI"), (1, 4, "NCBI")],
-        "src_rgd_id int, dest_rgd_id int, xref_data_src string",
-    )
-    touched = spark.createDataFrame([(1, 4)], "src_rgd_id int, dest_rgd_id int")
-    out = sync.stale_rows(
-        existing,
-        touched,
-        ["src_rgd_id", "dest_rgd_id"],
-        protected=F.col("xref_data_src") == "RGD",
-    )
-    # (1,2) is manual → protected; (1,4) touched; only (1,3) is stale
-    assert [(r.src_rgd_id, r.dest_rgd_id) for r in out.collect()] == [(1, 3)]
-
-
 def test_guard_delete_threshold():
     sync.guard_delete_threshold(5, 100, 10.0)  # 5% ok
     with pytest.raises(RuntimeError, match="threshold"):
@@ -407,45 +391,6 @@ def test_ivf_topk_recall_floor(spark):
     }
     recall = len(brute & ivf) / len(brute)
     assert recall >= 0.7, f"recall@10 = {recall:.3f}"
-
-
-def test_ann_index_build_query_and_partition_pruning(spark, tmp_path):
-    """Persisted IVF index: query results must equal the ad-hoc ivf_topk at the
-    same parameters, and the index scan must prune to the probed cell
-    partitions (PartitionFilters on the partition column, fewer partitions
-    than cells)."""
-    from pyspark.sql import functions as F
-
-    from ortholog_pipeline_spark.operators import similarity as SIM
-    from ortholog_pipeline_spark.operators.ann_index import (
-        build_ann_index,
-        query_ann_index,
-    )
-    from ortholog_pipeline_spark.sources.state import StateStore
-
-    store = StateStore(spark, str(tmp_path / "state"))
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    build_ann_index(store, emb, n_cells=32)
-
-    q = emb.filter(F.col("vec_id") < 5)
-    got = query_ann_index(store, q, k=3, n_probe=4)
-    expected = SIM.ivf_topk(emb, q, k=3, n_cells=32, n_probe=4)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, expected.collect())
-    )
-
-    plan = got._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "PartitionFilters" in plan and "cell" in plan
-    # the scan reads only the probed partitions, not all 32 cells
-    import re
-
-    m = re.search(r"partition count: (\d+)", plan.lower())
-    if m:  # Spark prints the pruned partition count in the scan node
-        assert int(m.group(1)) < 32
 
 
 # ---------------------------------------------------------------------------
@@ -579,15 +524,6 @@ def test_sampling_partition_invariant_and_exact_quota(spark):
     assert per == {s: math.ceil(100 * 0.1) for s in "abc"}
 
 
-def test_hash_bernoulli_no_shuffle(spark):
-    """The Bernoulli sample must stay a map-side filter — zero exchanges."""
-    from ortholog_pipeline_spark.operators.sampling import hash_bernoulli_sample
-
-    df = spark.range(100).withColumnRenamed("id", "k")
-    plan = hash_bernoulli_sample(df, "k", 0.5)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
 # ---------------------------------------------------------------------------
 # Range (interval) join
 # ---------------------------------------------------------------------------
@@ -657,38 +593,6 @@ def test_contamination_check_flags_planted_dup(spark):
     for hid, (_, cont, flag) in got.items():
         if hid != hold_id:
             assert not flag and cont < 0.8
-
-
-def test_append_ann_index_incremental_equals_bulk_append(spark, tmp_path):
-    """Seeds are immutable, so appends must be associative: two incremental
-    appends answer queries identically to one bulk append of the same rows,
-    and the index ends with every vector exactly once."""
-    from ortholog_pipeline_spark.operators.ann_index import (
-        append_ann_index,
-        build_ann_index,
-        query_ann_index,
-    )
-    from ortholog_pipeline_spark.sources.state import StateStore
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    new_a = emb.filter(F.col("vec_id") % 10 == 0)
-    new_b = emb.filter((F.col("vec_id") % 5 == 0) & (F.col("vec_id") % 10 != 0))
-
-    s1 = StateStore(spark, str(tmp_path / "inc"))
-    build_ann_index(s1, base, n_cells=16)
-    assert append_ann_index(s1, new_a) == 1
-    assert append_ann_index(s1, new_b) == 2
-
-    s2 = StateStore(spark, str(tmp_path / "bulk"))
-    build_ann_index(s2, base, n_cells=16)  # same corpus → same seeds
-    append_ann_index(s2, new_a.unionByName(new_b))
-
-    assert s1.read("ann_index").count() == emb.count()
-    q = emb.filter(F.col("vec_id") < 5)
-    got = sorted(map(tuple, query_ann_index(s1, q, k=3, n_probe=4).collect()))
-    want = sorted(map(tuple, query_ann_index(s2, q, k=3, n_probe=4).collect()))
-    assert got == want and len(got) > 0
 
 
 def test_hll_registers_merge_and_error_bound(spark):
@@ -1018,11 +922,9 @@ def test_zorder_interleave_bits(spark):
     assert got[(1, 2)] == 0b1001  # x bit0 -> pos0, y bit1 -> pos3
 
 
-def test_dedup_index_probe_matches_recompute_and_appends_idempotently(
-    spark, tmp_path
-):
+def test_dedup_index_probe_matches_recompute(spark, tmp_path):
     """The stored-index probe must return exactly what the recompute-everything
-    operator returns; appending a batch twice must index it once."""
+    operator returns."""
     from pyspark.sql import functions as F
 
     from ortholog_pipeline_spark.operators import dedup as DD
@@ -1045,38 +947,6 @@ def test_dedup_index_probe_matches_recompute_and_appends_idempotently(
         )
     )
     assert got == want
-
-    n0 = store.read("dedup_index_shingles").count()
-    DI.append_to_index(store, batch)
-    n1 = store.read("dedup_index_shingles").count()
-    DI.append_to_index(store, batch)  # replay: no growth
-    assert store.read("dedup_index_shingles").count() == n1
-    assert n1 > n0
-    # appended docs now collide with themselves when re-probed
-    self_hits = DI.probe_dedup_index(store, batch, threshold=0.99)
-    pairs = {(r.batch_id, r.index_id) for r in self_hits.collect()}
-    assert all(b == i for b, i in pairs) and len(pairs) > 0
-
-
-def test_append_to_index_links_previous_band_files(spark, tmp_path):
-    """Admitting a batch appends to the band table: every previous ``band=``
-    file is hardlinked into the new version, none is rewritten."""
-    from ortholog_pipeline_spark.operators import dedup_index as DI
-    from ortholog_pipeline_spark.sources.state import StateStore
-    from test_state_store import data_files, is_partitioned_by
-
-    docs = spark.createDataFrame(
-        [(i, f"record {i} about gene {i % 7} in species {i % 3}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    store = StateStore(spark, str(tmp_path / "ix"))
-    DI.build_dedup_index(store, docs.filter(F.col("doc_id") % 10 != 7))
-    before = data_files(store, "dedup_index_bands")
-    DI.append_to_index(store, docs.filter(F.col("doc_id") % 10 == 7))
-    after = data_files(store, "dedup_index_bands")
-    assert before.items() <= after.items(), "previous band files must be linked"
-    assert len(after) > len(before)
-    assert is_partitioned_by(store, "dedup_index_bands", "band")
 
 
 def test_bloom_prefilter_actually_filters(spark):

@@ -497,40 +497,6 @@ def test_fix_xref_and_compact_keep_orthologs_layout(spark, tmp_path):
     assert sorted(map(tuple, store.read("orthologs").collect())) == fixed
 
 
-def test_audit_outputs_and_driver_loop(spark, store, tmp_path):
-    from ortholog_pipeline_spark.plans.audit import write_species_load_audit
-    from ortholog_pipeline_spark.plans.driver import (
-        run_all_species,
-        searchable_species_keys,
-    )
-    from ortholog_pipeline_spark.schemas import SPECIES_SCHEMA
-
-    species = [
-        (1, "human", "Homo sapiens", 9606, 1),
-        (RAT, "rat", "Rattus norvegicus", 10116, 1),
-        (4, "chinchilla", "Chinchilla lanigera", 34839, 0),  # not searchable
-    ]
-    store.write("species", spark.createDataFrame(species, SPECIES_SCHEMA))
-    assert searchable_species_keys(store.read("species")) == [RAT]
-
-    results = run_all_species(
-        store,
-        lambda key: _relations(spark),
-        RUN_TS,
-        delete_threshold_pct=100.0,
-    )
-    assert set(results) == {RAT}
-
-    counts = write_species_load_audit(
-        results[RAT], str(tmp_path / "audit"), "r1"
-    )
-    assert counts["unmatched"] == 1  # the r999 line
-    assert counts["inserted"] >= 1 and counts["deleted"] >= 1
-    # audit tables are real parquet, readable back
-    back = spark.read.parquet(str(tmp_path / "audit" / "r1" / "unmatched"))
-    assert back.count() == 1
-
-
 def test_species_load_is_deterministic(spark, tmp_path):
     """Engine policy (SURVEY §7): identical inputs → identical snapshots, surrogate
     keys included (bucketed minting is order-free) — BY CONSTRUCTION, not by stable

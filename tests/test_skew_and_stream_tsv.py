@@ -1,16 +1,10 @@
-"""salted_join equivalence + hot-key detection; streaming TSV source parity with the
-batch parser projections."""
+"""salted_join equivalence with the plain join; the HomoloGene scan."""
 
 from __future__ import annotations
 
-import gzip
-
 from pyspark.sql import functions as F
 
-from ortholog_pipeline_spark.operators.skew import detect_hot_keys, salted_join
-from ortholog_pipeline_spark.schemas import NCBI_SCHEMA
-from ortholog_pipeline_spark.sources.files import ncbi_to_relations
-from ortholog_pipeline_spark.streaming.sources import read_stream_tsv
+from ortholog_pipeline_spark.operators.skew import salted_join
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -23,7 +17,7 @@ def test_salted_join_matches_plain_join(spark):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
 
-    hot = detect_hot_keys(big, ["k"], threshold=1000)
+    hot = big.groupBy("k").count().filter("count > 1000").select("k")
     assert [r.k for r in hot.collect()] == [0]
 
     plain = big.join(other, "k").select("k", "payload", "v")
@@ -47,42 +41,10 @@ def test_salted_join_left_outer(spark):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_read_stream_tsv_matches_batch_parser(spark, tmp_path):
-    landing = tmp_path / "ncbi"
-    landing.mkdir()
-    lines = [
-        "#tax_id\tGeneID\trelationship\tOther_tax_id\tOther_GeneID",
-        "9606\t34\tOrtholog\t10116\t24152",
-        "9606\t35\tOrtholog\t10090\t5555",  # wrong species — filtered
-        "7227\t36\tOrtholog\t10116\t24153",  # non-human — filtered
-    ]
-    with gzip.open(landing / "gene_orthologs.gz", "wt") as f:
-        f.write("\n".join(lines) + "\n")
-
-    stream = read_stream_tsv(spark, str(landing), NCBI_SCHEMA)
-    assert stream.isStreaming
-    rel = ncbi_to_relations(stream.drop("_ingest_file"), "10116", 3)
-    q = (
-        rel.writeStream.format("memory")
-        .queryName("ncbi_stream_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM ncbi_stream_out").collect()
-    assert len(rows) == 1
-    assert (rows[0].src_other_id, rows[0].dest_other_id) == ("34", "24152")
-    assert rows[0].data_source == "NCBI"
-
-
-def test_homologene_scan_and_all_pairs(spark, tmp_path):
+def test_homologene_scan_reads_every_member_row(spark, tmp_path):
     import gzip as _gz
 
-    from ortholog_pipeline_spark.sources.files import (
-        homologene_to_relations,
-        read_homologene,
-    )
+    from ortholog_pipeline_spark.sources.files import read_homologene
 
     p = tmp_path / "homologene.data.gz"
     lines = [
@@ -90,47 +52,13 @@ def test_homologene_scan_and_all_pairs(spark, tmp_path):
         "1\t10116\tg_r1",
         "1\t10090\tg_m1",
         "2\t9606\tg_h2",
-        "1\t9999\tg_x",  # unmapped species — dropped
+        "1\t9999\tg_x",  # unmapped species — kept by the scan, dropped by the flow
     ]
     with _gz.open(p, "wt") as f:
         f.write("\n".join(lines) + "\n")
 
     hg = read_homologene(spark, str(p))
-    rel = homologene_to_relations(
-        hg, {"9606": 1, "10116": 3, "10090": 2}
+    assert hg.columns == ["homologene_id", "tax_id", "gene_id"]
+    assert sorted(map(tuple, hg.collect())) == sorted(
+        (int(g), t, x) for g, t, x in (ln.split("\t") for ln in lines)
     )
-    pairs = {(r.src_other_id, r.dest_other_id) for r in rel.collect()}
-    # group 1 has 3 mapped members -> 6 directed pairs; group 2 is a singleton
-    assert len(pairs) == 6
-    assert ("g_h1", "g_r1") in pairs and ("g_r1", "g_h1") in pairs
-    assert not any("g_x" in p_ for pair in pairs for p_ in pair)
-
-
-def test_jsonl_documents_roundtrip_and_corrupt_split(spark, tmp_path):
-    """JSONL corpus ingest: explicit schema, corrupt lines split to an audit
-    frame, gzip roundtrip through the sink."""
-    import gzip as _gzip
-
-    from ortholog_pipeline_spark.sources.files import (
-        read_jsonl_documents,
-        write_jsonl_documents,
-    )
-
-    src = tmp_path / "corpus"
-    src.mkdir()
-    with _gzip.open(src / "part-0.jsonl.gz", "wt") as f:
-        f.write('{"doc_id": 1, "text": "hello world", "lang": "en", "source": "web", "n_chars": 11}\n')
-        f.write('{"doc_id": 2, "text": "bonjour", "lang": "fr", "source": "web", "n_chars": 7}\n')
-        f.write('NOT JSON AT ALL\n')
-
-    docs, bad = read_jsonl_documents(spark, str(src))
-    assert {r.doc_id for r in docs.collect()} == {1, 2}
-    assert [r.line for r in bad.collect()] == ["NOT JSON AT ALL"]
-
-    out = tmp_path / "out"
-    write_jsonl_documents(docs, str(out))
-    back, bad2 = read_jsonl_documents(spark, str(out))
-    assert {(r.doc_id, r.text) for r in back.collect()} == {
-        (1, "hello world"), (2, "bonjour")
-    }
-    assert bad2.count() == 0

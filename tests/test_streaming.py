@@ -1,26 +1,15 @@
-"""Structured Streaming surface: file-source streams, watermarked windows,
-foreachBatch CDC sync, applyInPandasWithState sessionization.
+"""Structured Streaming surface: a file-source stream through the watermarked
+tumbling window, checked against the same plan in batch mode.
 
-All tests run availableNow (bounded) triggers so they terminate; the plans are the
-same ones an unbounded run would execute.
+The test runs an availableNow (bounded) trigger so it terminates; the plan is the
+same one an unbounded run would execute.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import os
 
-import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ortholog_pipeline_spark.sources.state import StateStore
-from ortholog_pipeline_spark.streaming import (
-    foreach_batch_sync,
-    read_stream_events,
-    sessionize,
-    tumbling_agg,
-)
+from ortholog_pipeline_spark.streaming import read_stream_events, tumbling_agg
 from ortholog_pipeline_spark.streaming.sources import EVENTS_LANDING_SCHEMA
 
 TS0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -74,403 +63,3 @@ def test_tumbling_agg_stream_matches_batch(spark, tmp_path):
         for r in batch.collect()
     }
     assert bg == got
-
-
-def test_foreach_batch_sync_merges_into_state(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    store = StateStore(spark, str(tmp_path / "state"))
-
-    _land(
-        _mk_events(spark, [(0, 1, "view", 1.0), (10, 2, "click", 2.0)]), landing
-    )
-    stream = read_stream_events(spark, landing)
-    q = foreach_batch_sync(
-        stream,
-        store,
-        table="events_latest",
-        unique_key=["user_id"],
-        content_cols=["event_type", "value"],
-        checkpoint_dir=ckpt,
-        transform=lambda df: df.select("user_id", "event_type", "value"),
-    )
-    q.awaitTermination(120)
-    snap = {r.user_id: (r.event_type, r.value) for r in store.read("events_latest").collect()}
-    assert snap == {1: ("view", 1.0), 2: ("click", 2.0)}
-
-    # second drop: user 1 changes type (update), user 3 appears (insert)
-    _land(
-        _mk_events(spark, [(20, 1, "purchase", 9.0), (30, 3, "view", 3.0)]),
-        str(tmp_path / "landing2"),
-    )
-    # replay through a fresh bounded stream over the second landing dir
-    stream2 = read_stream_events(spark, str(tmp_path / "landing2"))
-    q2 = foreach_batch_sync(
-        stream2,
-        store,
-        table="events_latest",
-        unique_key=["user_id"],
-        content_cols=["event_type", "value"],
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-        transform=lambda df: df.select("user_id", "event_type", "value"),
-    )
-    q2.awaitTermination(120)
-    snap = {r.user_id: (r.event_type, r.value) for r in store.read("events_latest").collect()}
-    assert snap == {1: ("purchase", 9.0), 2: ("click", 2.0), 3: ("view", 3.0)}
-
-
-def test_sessionize_emits_gap_separated_sessions(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    # user 1: two sessions separated by a 2h gap; user 2: one session
-    rows = [
-        (0, 1, "view", 1.0),
-        (60, 1, "click", 2.0),
-        (7200 + 60, 1, "view", 4.0),
-        (0, 2, "view", 8.0),
-        # a late sentinel far in the future pushes the watermark past
-        # user 1/2's sessions so their timeouts fire within availableNow
-        (10 * 86400, 99, "view", 0.0),
-    ]
-    _land(_mk_events(spark, rows), landing)
-
-    stream = read_stream_events(spark, landing, max_files_per_trigger=None)
-    out = sessionize(stream, gap_seconds=1800, watermark="1 minute")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.session_start): (r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-    # in-batch gap split emits user 1's first session; the second session and
-    # user 2's single session close via event-time timeout
-    assert got[(1, TS0)] == (2, 3.0)
-    assert got[(1, TS0 + dt.timedelta(seconds=7260))] == (1, 4.0)
-    assert got[(2, TS0)] == (1, 8.0)
-
-
-def test_dedup_stream_drops_watermark_window_duplicates(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: re-landed events inside the watermark window
-    dedup to one survivor per key; batch mode degrades to plain dropDuplicates."""
-    from ortholog_pipeline_spark.streaming import dedup_stream
-
-    landing = str(tmp_path / "landing")
-    rows = [
-        (0, 1, "view", 1.0),
-        (5, 1, "view", 1.0),      # same user+type, inside watermark -> dup
-        (10, 2, "click", 5.0),
-    ]
-    _land(_mk_events(spark, rows), landing)
-
-    stream = read_stream_events(spark, landing)
-    out = dedup_stream(stream, key_cols=["user_id", "event_type"], watermark="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT user_id, event_type FROM dedup_out").collect()
-    assert sorted((r.user_id, r.event_type) for r in got) == [(1, "view"), (2, "click")]
-
-    # batch symmetry: same helper, fingerprint keying
-    batch = spark.createDataFrame(
-        [(1, "Hello  World", TS0), (2, "hello world", TS0), (3, "other", TS0)],
-        "doc_id long, text string, ts timestamp",
-    )
-    kept = dedup_stream(batch, text_col="text").collect()
-    assert len(kept) == 2  # normalized fingerprint collapses the first two
-
-
-def test_session_agg_stream_matches_batch(spark, tmp_path):
-    """Native session_window on a stream: gap-separated events split into
-    sessions (end = last event + gap); identical result in batch mode."""
-    from ortholog_pipeline_spark.streaming.windows import session_agg
-
-    landing = str(tmp_path / "landing")
-    rows = [
-        (0, 1, "view", 1.0),
-        (60, 1, "click", 2.0),
-        (7200, 1, "view", 4.0),   # > 30 min gap: new session
-        (0, 2, "view", 8.0),
-        (10 * 86400, 99, "view", 0.0),  # watermark pusher
-    ]
-    _land(_mk_events(spark, rows), landing)
-
-    stream = read_stream_events(spark, landing, max_files_per_trigger=None)
-    out = session_agg(stream, gap="30 minutes", watermark="1 minute")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("session_agg_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.session_start): (r.session_end, r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM session_agg_out").collect()
-    }
-    gap = dt.timedelta(minutes=30)
-    assert got[(1, TS0)] == (TS0 + dt.timedelta(seconds=60) + gap, 2, 3.0)
-    assert got[(1, TS0 + dt.timedelta(seconds=7200))] == (
-        TS0 + dt.timedelta(seconds=7200) + gap, 1, 4.0)
-    assert got[(2, TS0)] == (TS0 + gap, 1, 8.0)
-
-    batch = session_agg(spark.read.parquet(landing), gap="30 minutes")
-    bg = {
-        (r.user_id, r.session_start): (r.session_end, r.n_events, r.sum_value)
-        for r in batch.collect()
-        if r.user_id != 99  # the watermark-pusher's own session never closes
-    }
-    assert bg == got
-
-
-def test_interval_equi_join_stream_matches_batch(spark, tmp_path):
-    """Stream-stream interval join: purchases pick up same-user clicks within
-    the lookback window; the time bound sits in the join condition so state is
-    evictable; batch run of the same body returns the identical pairs."""
-    from ortholog_pipeline_spark.streaming.joins import interval_equi_join
-
-    landing_l = str(tmp_path / "purchases")
-    landing_r = str(tmp_path / "clicks")
-    # user 1: click at t=100 (inside lookback) and t=5400 (after the purchase);
-    # user 2's click is older than the 1h lookback (strict: t=0 vs t=9000)
-    _land(_mk_events(spark, [(3600, 1, "purchase", 50.0), (9000, 2, "purchase", 9.0)]), landing_l)
-    _land(_mk_events(spark, [(100, 1, "click", 1.0), (5400, 1, "click", 2.0), (0, 2, "click", 3.0)]), landing_r)
-
-    def run(l, r):
-        return interval_equi_join(
-            l, r, key="user_id", ts_col="ts", lookback="1 hour", watermark="1 hour"
-        ).select("l_user_id", "l_event_id", "r_event_id")
-
-    out = run(
-        read_stream_events(spark, landing_l, max_files_per_trigger=None),
-        read_stream_events(spark, landing_r, max_files_per_trigger=None),
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.l_user_id, r.l_event_id, r.r_event_id)
-        for r in spark.sql("SELECT * FROM ssj_out").collect()
-    )
-    assert got == [(1, 0, 0)]  # only user 1's first click is in (ts-1h, ts]
-
-    batch = run(spark.read.parquet(landing_l), spark.read.parquet(landing_r))
-    assert sorted(map(tuple, batch.collect())) == got
-
-
-def test_ann_ingest_stream_grows_index_idempotently(spark, tmp_path):
-    """Landed embedding files grow the index to exactly the bulk-append state;
-    re-streaming the same directory (fresh checkpoint, so every file replays)
-    inserts nothing thanks to the anti-join idempotency guard."""
-    from ortholog_pipeline_spark.operators.ann_index import (
-        append_ann_index,
-        build_ann_index,
-        query_ann_index,
-    )
-    from ortholog_pipeline_spark.streaming.ann_ingest import (
-        ann_ingest_stream,
-        read_stream_embeddings,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    new = emb.filter(F.col("vec_id") % 5 == 0)
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    new.filter(F.col("vec_id") % 10 == 0).coalesce(1).write.parquet(
-        landing + "/batch_a.parquet"
-    )
-    new.filter(F.col("vec_id") % 10 != 0).coalesce(1).write.parquet(
-        landing + "/batch_b.parquet"
-    )
-
-    s1 = StateStore(spark, str(tmp_path / "inc"))
-    build_ann_index(s1, base, n_cells=16)
-    q = ann_ingest_stream(
-        s1, read_stream_embeddings(spark, landing), str(tmp_path / "ckpt1")
-    )
-    q.awaitTermination(120)
-    assert s1.read("ann_index").count() == emb.count()
-
-    # replay everything: fresh checkpoint reprocesses both files, index unchanged
-    q2 = ann_ingest_stream(
-        s1, read_stream_embeddings(spark, landing), str(tmp_path / "ckpt2")
-    )
-    q2.awaitTermination(120)
-    assert s1.read("ann_index").count() == emb.count()
-
-    s2 = StateStore(spark, str(tmp_path / "bulk"))
-    build_ann_index(s2, base, n_cells=16)
-    append_ann_index(s2, new)
-    probe = emb.filter(F.col("vec_id") < 5)
-    got = sorted(map(tuple, query_ann_index(s1, probe, k=3, n_probe=4).collect()))
-    want = sorted(map(tuple, query_ann_index(s2, probe, k=3, n_probe=4).collect()))
-    assert got == want and len(got) > 0
-
-
-def test_dedup_ingest_stream_rejects_dups_admits_novel(spark, tmp_path):
-    """Streamed document batches are admitted only if novel: an exact copy and
-    a near-duplicate of corpus docs are rejected, a genuinely new doc lands;
-    replaying the landing dir (fresh checkpoint) inserts nothing."""
-    from ortholog_pipeline_spark.sources.state import StateStore
-    from ortholog_pipeline_spark.streaming.dedup_ingest import (
-        dedup_ingest_stream,
-        read_stream_documents,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    other = "one two three four five six seven eight nine ten"
-    store = StateStore(spark, str(tmp_path / "st"))
-    corpus = spark.createDataFrame(
-        [(1, base, "en", "s0", len(base)), (2, other, "en", "s0", len(other))],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    store.write("corpus", corpus)
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    novel = "totally fresh unrelated brand new content words here indeed yes"
-    batch = spark.createDataFrame(
-        [
-            (101, base, "en", "s1", len(base)),            # exact dup -> reject
-            (102, base + " lambda", "en", "s1", 5),        # near dup -> reject
-            (103, novel, "en", "s1", len(novel)),          # novel -> admit
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    batch.coalesce(1).write.parquet(landing + "/drop_a.parquet")
-
-    q = dedup_ingest_stream(
-        store, read_stream_documents(spark, landing), str(tmp_path / "ck1")
-    )
-    q.awaitTermination(120)
-    ids = {r.doc_id for r in store.read("corpus").select("doc_id").collect()}
-    assert ids == {1, 2, 103}
-
-    q2 = dedup_ingest_stream(
-        store, read_stream_documents(spark, landing), str(tmp_path / "ck2")
-    )
-    q2.awaitTermination(120)
-    assert store.read("corpus").count() == 3
-
-
-def test_rate_limit_stream_matches_batch_window(spark, tmp_path):
-    """Streaming token-bucket flags == the batch RANGE-frame window reference,
-    per event (same 60s/limit-3 semantics), plus replay sanity."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    from ortholog_pipeline_spark.streaming.rate_limit import rate_limit_flags
-    from ortholog_pipeline_spark.streaming.sources import read_stream_events
-
-    landing = str(tmp_path / "rl_landing")
-    rows = [
-        # user 1: burst of 3 within 60s -> third+fourth flagged
-        (0, 1, "view", 1.0),
-        (10, 1, "view", 1.0),
-        (50, 1, "view", 1.0),
-        (59, 1, "view", 1.0),
-        # then quiet; a later lone event is clean
-        (500, 1, "view", 1.0),
-        # user 2: spaced out, never flagged
-        (0, 2, "view", 1.0),
-        (120, 2, "view", 1.0),
-        (240, 2, "view", 1.0),
-    ]
-    # single landing file -> one micro-batch -> in-event-time-order delivery,
-    # the regime where stream flags must EQUAL the batch window reference
-    # (multi-file cross-batch lateness is exercised separately below)
-    _land(_mk_events(spark, rows).coalesce(1), landing)
-
-    stream = read_stream_events(spark, landing)
-    out = rate_limit_flags(stream, window_seconds=60, limit=3)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("rl_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.sec): r.flagged
-        for r in spark.sql("SELECT * FROM rl_out").collect()
-    }
-
-    batch = spark.read.parquet(landing).select(
-        "user_id", F.col("ts").cast("long").alias("sec")
-    )
-    w = Window.partitionBy("user_id").orderBy("sec").rangeBetween(-59, 0)
-    ref = {
-        (r.user_id, r.sec): r.flagged
-        for r in batch.select(
-            "user_id", "sec", (F.count(F.lit(1)).over(w) >= 3).cast("int").alias("flagged")
-        ).collect()
-    }
-    assert got == ref
-    # and the expected semantics hold
-    t0 = int(_mk_events(spark, [(0, 1, "view", 1.0)]).collect()[0].ts.timestamp())
-    assert got[(1, t0 + 50)] == 1 and got[(1, t0 + 59)] == 1
-    assert got[(1, t0 + 500)] == 0
-    assert all(f == 0 for (u, _), f in got.items() if u == 2)
-
-
-def test_rate_limit_late_arrival_keeps_state(spark, tmp_path):
-    """A late (cross-batch) event must get its OWN correct trailing-window
-    flag and must not evict state needed by newer events."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState
-    from ortholog_pipeline_spark.streaming.rate_limit import make_rate_limit_fn
-
-    fn = make_rate_limit_fn(window_seconds=60, limit=3)
-
-    class FakeState:
-        def __init__(self):
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def setTimeoutTimestamp(self, ts):
-            pass
-
-        def remove(self):
-            self._v = None
-
-    st = FakeState()
-    # batch 1: events at 100, 130 (in order)
-    out1 = pd.concat(list(fn((1,), iter([pd.DataFrame({"sec": [100, 130]})]), st)))
-    assert list(out1["flagged"]) == [0, 0]
-    # batch 2: LATE event at 90 — its window (30, 90] holds only itself -> 0,
-    # and it must not evict 100/130 from state
-    out2 = pd.concat(list(fn((1,), iter([pd.DataFrame({"sec": [90]})]), st)))
-    assert list(out2["flagged"]) == [0]
-    # batch 3: event at 140 — window (80, 140] now holds 90,100,130,140 -> flagged
-    out3 = pd.concat(list(fn((1,), iter([pd.DataFrame({"sec": [140]})]), st)))
-    assert list(out3["flagged"]) == [1]

@@ -2,9 +2,9 @@
 driven through an actual StreamingQuery (file source → memory sink,
 ``.start()`` + ``processAllAvailable()``), not `F.window` over batch frames.
 
-Pinned per operator:
+Pinned for the tumbling window:
   (a) dropped-late semantics — an event older than the watermark never mutates
-      an already-finalized window / re-emits a dedup key;
+      an already-finalized window;
   (b) bounded state — the state store row count tracks open windows/keys and
       SHRINKS when the watermark passes them, across real micro-batches.
 """
@@ -14,10 +14,8 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
-from pyspark.sql import functions as F
 
-from ortholog_pipeline_spark.streaming.joins import interval_equi_join
-from ortholog_pipeline_spark.streaming.windows import dedup_stream, tumbling_agg
+from ortholog_pipeline_spark.streaming.windows import tumbling_agg
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 
@@ -83,148 +81,6 @@ def test_tumbling_window_drops_late_events(spark, land):
         assert _state_rows(q) <= state_open + 1
     finally:
         q.stop()
-
-
-def test_dedup_stream_bounded_state_and_reemit(spark, land):
-    schema = "ts timestamp, k string"
-    src_dir, ck = str(land / "src"), str(land / "ck")
-    _write(spark, src_dir, [(T0, "x"), (T0 + timedelta(seconds=2), "x"),
-                            (T0 + timedelta(seconds=3), "y")], schema)
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    out = dedup_stream(stream, key_cols=["k"], watermark="10 seconds")
-    q = (
-        out.writeStream.format("memory").queryName("dedup")
-        .outputMode("append").option("checkpointLocation", ck).start()
-    )
-    try:
-        q.processAllAvailable()
-        # in-watermark duplicate: dropped
-        _write(spark, src_dir, [(T0 + timedelta(seconds=5), "x")], schema)
-        q.processAllAvailable()
-        assert spark.table("dedup").filter(F.col("k") == "x").count() == 1
-        state_held = _state_rows(q)
-        assert state_held >= 2  # x and y keys held
-
-        # advance the watermark far past both keys' event times → state evicted
-        _write(spark, src_dir, [(T0 + timedelta(seconds=100), "z")], schema)
-        q.processAllAvailable()
-        _write(spark, src_dir, [(T0 + timedelta(seconds=101), "w")], schema)
-        q.processAllAvailable()
-        # (b) x/y state dropped — the store holds only the fresh tail keys
-        assert _state_rows(q) <= state_held
-
-        # a NEW x after its watermark window expired is a fresh key: re-emitted
-        # (the documented dropDuplicatesWithinWatermark contract — state is
-        # bounded, so guarantees only span the watermark horizon)
-        _write(spark, src_dir, [(T0 + timedelta(seconds=102), "x")], schema)
-        q.processAllAvailable()
-        assert spark.table("dedup").filter(F.col("k") == "x").count() == 2
-    finally:
-        q.stop()
-
-
-def test_interval_join_matches_and_evicts_state(spark, land):
-    lschema = "ts timestamp, user_id long, amount double"
-    rschema = "ts timestamp, user_id long, page string"
-    ldir, rdir, ck = str(land / "l"), str(land / "r"), str(land / "ck")
-    # clicks at t0 and t0+5 for user 1; unrelated user 2 click
-    _write(spark, rdir, [(T0, 1, "a"), (T0 + timedelta(seconds=5), 1, "b"),
-                         (T0 + timedelta(seconds=1), 2, "c")], rschema)
-    # purchase at t0+8 for user 1 → must join both user-1 clicks (10s lookback)
-    _write(spark, ldir, [(T0 + timedelta(seconds=8), 1, 9.99)], lschema)
-    lstream = spark.readStream.schema(lschema).parquet(ldir)
-    rstream = spark.readStream.schema(rschema).parquet(rdir)
-    out = interval_equi_join(
-        lstream, rstream, key="user_id", lookback="10 seconds",
-        watermark="10 seconds",
-    )
-    q = (
-        out.writeStream.format("memory").queryName("ij")
-        .outputMode("append").option("checkpointLocation", ck).start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.table("ij").collect()
-        assert sorted(r["r_page"] for r in rows) == ["a", "b"]
-        state_full = _state_rows(q)
-        assert state_full > 0
-
-        # advance both watermarks far ahead; buffered rows must be evicted
-        far = T0 + timedelta(seconds=300)
-        _write(spark, rdir, [(far, 9, "zz")], rschema)
-        _write(spark, ldir, [(far, 8, 1.0)], lschema)
-        q.processAllAvailable()
-        _write(spark, rdir, [(far + timedelta(seconds=1), 9, "zz2")], rschema)
-        _write(spark, ldir, [(far + timedelta(seconds=1), 8, 2.0)], lschema)
-        q.processAllAvailable()
-        # (b) the t0-era buffered rows are gone from the join state
-        assert _state_rows(q) <= state_full
-        # (a) a left row whose lookback window lies entirely before the
-        # watermark produces no resurrected matches
-        _write(spark, ldir, [(T0 + timedelta(seconds=9), 1, 5.0)], lschema)
-        q.processAllAvailable()
-        assert spark.table("ij").filter(F.col("l_amount") == 5.0).count() == 0
-    finally:
-        q.stop()
-
-
-def test_foreach_batch_sync_checkpoint_recovery(spark, land):
-    """Kill-and-resume (VERDICT r3 item 6): a foreach_batch_sync query dies
-    mid-stream AFTER committing its first micro-batch; a restart from the same
-    checkpoint must (a) never re-apply the committed batch — its rows do not
-    re-enter foreachBatch — and (b) leave no gap: the uncommitted batch is
-    re-planned and the final snapshot holds every key exactly once."""
-    from ortholog_pipeline_spark.sources.state import StateStore
-    from ortholog_pipeline_spark.streaming.sync import foreach_batch_sync
-
-    schema = "k int, v string"
-    src, ck = str(land / "src"), str(land / "ck")
-    store = StateStore(spark, str(land / "state"))
-    # two files -> two micro-batches under maxFilesPerTrigger=1
-    _write(spark, src, [(1, "a1"), (2, "a2")], schema)
-    _write(spark, src, [(3, "b1"), (4, "b2")], schema)
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    # phase 1: crash on the SECOND batch (the first is already committed)
-    calls = {"n": 0}
-
-    def crash_on_second(df):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            raise RuntimeError("injected mid-stream crash")
-        return df
-
-    q1 = foreach_batch_sync(
-        stream(), store, "t", ["k"], ["v"], ck, transform=crash_on_second
-    )
-    with pytest.raises(Exception, match="injected mid-stream crash"):
-        q1.awaitTermination()
-    struct = spark.createDataFrame([], schema).schema
-    mid = {r.k for r in store.read("t", struct).collect()}
-    assert len(mid) == 2, "exactly one micro-batch must have committed"
-
-    # phase 2: restart from the SAME checkpoint, recording what replays
-    replayed: list[set] = []
-
-    def record(df):
-        replayed.append({r.k for r in df.collect()})
-        return df
-
-    q2 = foreach_batch_sync(stream(), store, "t", ["k"], ["v"], ck, transform=record)
-    q2.awaitTermination(300)
-
-    final = {(r.k, r.v) for r in store.read("t", struct).collect()}
-    # (b) no gap, no duplicate: all four keys exactly once, content intact
-    assert final == {(1, "a1"), (2, "a2"), (3, "b1"), (4, "b2")}
-    # (a) the committed batch never re-entered the sink
-    seen_again = set().union(*replayed) if replayed else set()
-    assert seen_again == {1, 2, 3, 4} - mid
 
 
 def test_engine_default_state_store_is_rocksdb_changelog(spark, land):
