@@ -68,3 +68,12 @@ def round_checkpoint(df: DataFrame) -> DataFrame:
             )
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
+
+
+def materialized(df: DataFrame) -> DataFrame:
+    """``df`` stored with :func:`round_checkpoint` and written now, by one
+    ``count`` job: the form a flow submits to run in the background, so its
+    jobs finish there and not in the first consumer."""
+    df = round_checkpoint(df)
+    df.count()
+    return df

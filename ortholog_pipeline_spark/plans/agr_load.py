@@ -11,6 +11,12 @@ Resolution cascade per curie (resolveGene, AgrTsvLoader.java:306-393):
   3. symbol lookup within the species (case-insensitive, active genes);
   4. residue (non rat/mouse/human) → mint a new gene (S13, Dao.java:621-642).
 Expressed as left joins + one ``coalesce`` precedence chain.
+
+Execution: the snapshot-only work (the curie and symbol dims, and the key
+high-water marks) runs on the run scope's workers (`RunScope.submit`) while the
+calling thread parses and stores the file's lines; the two sides join at the
+resolution join. The mint commits then stage in the background while the
+caller builds the upsert verdicts.
 """
 
 from __future__ import annotations
@@ -113,6 +119,34 @@ def _resolve_side(
     return out
 
 
+def _resolution_dims(
+    xrefs: DataFrame, genes: DataFrame, rgd_ids: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The curie dim (AGR curie xref → rgd_id) and the symbol dim (lower-cased
+    symbol + species → the least active rgd_id), stored and materialized.
+
+    Both feed a broadcast join PER SIDE, and the per-side column renames make
+    the two broadcast subplans non-identical, so ReuseExchange cannot dedup
+    them — without the checkpoint the gene-scan + groupBy behind symbol_dim
+    runs twice (measured 2 s each at sf0.1). Both frames are dimension-sized
+    (bounded by the gene/xref universe, not the file)."""
+    curie_dim = IT.materialized(
+        xrefs.filter(F.col("xdb_key") == XDB_KEY_AGR_GENE).select("acc_id", "rgd_id")
+    )
+    active = rgd_ids.filter(F.col("object_status") == "ACTIVE").select("rgd_id")
+    symbol_dim = IT.materialized(
+        genes.join(active, "rgd_id", "left_semi")
+        .select(
+            F.lower("gene_symbol").alias("gene_symbol_lc"),
+            "species_type_key",
+            "rgd_id",
+        )
+        .groupBy("gene_symbol_lc", "species_type_key")
+        .agg(F.min("rgd_id").alias("rgd_id"))  # first-wins determinism (§7)
+    )
+    return curie_dim, symbol_dim
+
+
 def run_agr_load(
     store: StateStore,
     agr_lines: DataFrame,
@@ -135,11 +169,32 @@ def run_agr_load(
         xrefs = store.read("xrefs")
         agr = store.read("agr_orthologs")
 
-        # F7 species filter both sides + recodes (C7 pipe-sort, C13 Yes/No)
+        # The high-water-mark job and the resolution dims read only SNAPSHOT
+        # tables and share no producer edge with the file, so `run.submit`
+        # runs them in the background, one per worker, while this thread parses
+        # the lines; the run scope joins them before it commits or aborts. ONE
+        # job serves both surrogate-key high-water marks (minting needs them
+        # only in the mint branch, but the fused scan of two dimension
+        # snapshots is cheaper than two separate scheduled jobs mid-flow).
+        hw_job = run.submit(
+            rgd_ids.agg(F.max("rgd_id").alias("_mx"))
+            .select(F.lit("rgd").alias("_t"), F.col("_mx").cast("long"))
+            .unionByName(
+                xrefs.agg(F.max("acc_xdb_key").alias("_mx")).select(
+                    F.lit("xref").alias("_t"), F.col("_mx").cast("long")
+                )
+            )
+            .collect
+        )
+        dims_job = run.submit(_resolution_dims, xrefs, genes, rgd_ids)
+
+        # F7 species filter both sides + recodes (C7 pipe-sort, C13 Yes/No).
+        # Stored and written here, concurrently with the background jobs: both
+        # resolution sides and the mint branch read the parsed lines.
         tax_map = F.create_map(
             *[F.lit(x) for kv in AGR_SPECIES_TAXON_IDS.items() for x in kv]
         )
-        lines = (
+        lines = IT.materialized(
             agr_lines.withColumns({
                 "species_type_key_1": tax_map[F.col("gene1_species_taxon_id")],
                 "species_type_key_2": tax_map[F.col("gene2_species_taxon_id")],
@@ -155,51 +210,17 @@ def run_agr_load(
             .withColumn("is_best_score", yes_no_to_yn("is_best_score"))
             .withColumn("is_best_rev_score", yes_no_to_yn("is_best_rev_score"))
         )
-
-        # Both dims feed a broadcast join PER SIDE, and the per-side column
-        # renames make the two broadcast subplans non-identical, so ReuseExchange
-        # cannot dedup them — without the checkpoint the gene-scan + groupBy behind
-        # symbol_dim runs twice (measured 2 s each at sf0.1). Both frames are
-        # dimension-sized (bounded by the gene/xref universe, not the file).
-        curie_dim = IT.round_checkpoint(
-            xrefs.filter(F.col("xdb_key") == XDB_KEY_AGR_GENE)
-            .select("acc_id", "rgd_id")
-        )
-        active = rgd_ids.filter(F.col("object_status") == "ACTIVE").select("rgd_id")
-        symbol_dim = IT.round_checkpoint(
-            genes.join(active, "rgd_id", "left_semi")
-            .select(
-                F.lower("gene_symbol").alias("gene_symbol_lc"),
-                "species_type_key",
-                "rgd_id",
-            )
-            .groupBy("gene_symbol_lc", "species_type_key")
-            .agg(F.min("rgd_id").alias("rgd_id"))  # first-wins determinism (§7)
-        )
+        curie_dim, symbol_dim = dims_job.result()
 
         # consumed by minting (2 branches), resolved, unresolved, and the merge
-        # input — lazily localCheckpointed so parse+resolution runs once AND its
+        # input — lazily localCheckpointed so resolution runs once AND its
         # lineage drops out of every downstream plan (same plan-tree lesson as
         # plans/species_load.py: with this many consumers, planning cost compounds)
         resolved_lines = _resolve_side(
             _resolve_side(lines, 1, curie_dim, symbol_dim), 2, curie_dim, symbol_dim
         )
         resolved_lines = IT.round_checkpoint(resolved_lines)
-
-        # ONE job for both surrogate-key high-water marks (minting needs them
-        # only in the mint branch, but the fused scan of two dimension snapshots
-        # is cheaper than two separate scheduled jobs mid-flow)
-        _hw = {
-            r["_t"]: r["_mx"]
-            for r in rgd_ids.agg(F.max("rgd_id").alias("_mx"))
-            .select(F.lit("rgd").alias("_t"), F.col("_mx").cast("long"))
-            .unionByName(
-                xrefs.agg(F.max("acc_xdb_key").alias("_mx")).select(
-                    F.lit("xref").alias("_t"), F.col("_mx").cast("long")
-                )
-            )
-            .collect()
-        }
+        _hw = {r["_t"]: r["_mx"] for r in hw_job.result()}
         max_rgd_hw, max_xref_hw = _hw["rgd"] or 0, _hw["xref"] or 0
 
         # S13 — cascade step 4 (insertAgrGene, Dao.java:621-642): an unresolvable side

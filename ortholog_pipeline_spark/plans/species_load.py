@@ -6,6 +6,15 @@ dataset-wide join/window over immutable snapshots (SURVEY.md §3.1 "Spark
 restatement"). Order-dependent DB mutation becomes compute-all-sets-then-reconcile
 set algebra (§7 hard parts), so the flow is deterministic and replayable.
 
+Execution: the DAG runs as two sides joined at the cascade. The snapshot side
+(the symbol dim, the manual + Alliance tiers, the W4 ranking of existing rows,
+and the key high-water marks) reads only snapshot tables, so it runs on the run
+scope's workers (`RunScope.submit`) while the calling thread parses, resolves
+and merges the landing files into ``closed``. Later, the surrogate-keyed inserts
+build in the background while the caller derives the deletes and runs the churn
+guard, and the orthologs commit stages while the caller builds the association
+sync, which reads only the current snapshots.
+
 Scale notes: the resolution dim and the per-key tier candidates are bounded by the
 xref/state tables → broadcast joins; the wide ops are the group-merge shuffle and the
 full-outer conflict join, both keyed on (src_rgd_id, dest_species_type_key) — a key
@@ -49,19 +58,21 @@ class SpeciesLoadResult:
     associations_version: int
 
 
-def _tier_candidates(
-    closed: DataFrame,
-    genes: DataFrame,
-    existing_orthologs: DataFrame,
-    agr_orthologs: DataFrame,
-) -> DataFrame:
-    """One row per (key, tier): the tier's candidate dest (or a conflict marker).
+def _symbol_dim(genes: DataFrame) -> DataFrame:
+    """The gene-symbol dim: ``rgd_id``, ``gene_symbol`` (best-fit tie-breaks,
+    W1) and its lower-cased ``_sym_lc`` (the W3/W4 comparator)."""
+    return genes.select(
+        "rgd_id", "gene_symbol", F.lower("gene_symbol").alias("_sym_lc")
+    )
 
-    Manual (J3) and Alliance (J2) tiers contribute their single candidate, or a
-    `blocked` row when >1 candidates exist (A8 conflict ⇒ pick none, and the cascade
-    STOPS at that tier — Loader.java:468-471, 479-481). HGNC/NCBI tiers (F4 + W1)
-    always produce exactly one candidate per key via the best-fit window.
-    """
+
+def _snapshot_tiers(
+    genes: DataFrame, existing_orthologs: DataFrame, agr_orthologs: DataFrame
+) -> DataFrame:
+    """The manual (J3) and Alliance (J2) tiers: one row per (key, tier), read
+    from the snapshots alone. Each contributes its single candidate, or a
+    `blocked` row when >1 candidates exist (A8 conflict ⇒ pick none, and the
+    cascade STOPS at that tier — Loader.java:468-471, 479-481)."""
     # -- tier 1: manual orthologs (xref_data_src='RGD') for the key (F5, J3)
     manual = (
         existing_orthologs.filter(F.col("xref_data_src") == "RGD")
@@ -116,22 +127,26 @@ def _tier_candidates(
             F.when(F.col("_n") == 1, F.col("_methods")).alias("xref_data_set"),
         )
     )
+    return manual.unionByName(alliance)
 
-    # -- tiers 3/4: per-source best-fit over the resolved relations (F4 + W1),
-    # with gene symbols joined in for the tie-break rules
-    # checkpointed: broadcast twice under src/dest renames (see _conflict_verdicts)
-    sym = IT.round_checkpoint(genes.select("rgd_id", "gene_symbol"))
+
+def _file_tiers(closed: DataFrame, sym: DataFrame) -> DataFrame:
+    """The HGNC and NCBI tiers (F4 + W1): per-source best-fit over the resolved
+    relations, with gene symbols joined in for the tie-break rules. Each
+    produces exactly one candidate per key via the best-fit window."""
     with_syms = (
         closed.join(
-            F.broadcast(sym.withColumnsRenamed(
-                {"rgd_id": "src_rgd_id", "gene_symbol": "src_gene_symbol"}
+            F.broadcast(sym.select(
+                F.col("rgd_id").alias("src_rgd_id"),
+                F.col("gene_symbol").alias("src_gene_symbol"),
             )),
             "src_rgd_id",
             "left",
         )
         .join(
-            F.broadcast(sym.withColumnsRenamed(
-                {"rgd_id": "dest_rgd_id", "gene_symbol": "dest_gene_symbol"}
+            F.broadcast(sym.select(
+                F.col("rgd_id").alias("dest_rgd_id"),
+                F.col("gene_symbol").alias("dest_gene_symbol"),
             )),
             "dest_rgd_id",
             "left",
@@ -157,9 +172,7 @@ def _tier_candidates(
             F.col("data_set_name").alias("xref_data_set"),
         )
 
-    hgnc = file_tier("HGNC", TIER_HGNC)
-    ncbi = file_tier("NCBI", TIER_NCBI)
-    return manual.unionByName(alliance).unionByName(hgnc).unionByName(ncbi)
+    return file_tier("HGNC", TIER_HGNC).unionByName(file_tier("NCBI", TIER_NCBI))
 
 
 def _cascade_pick(tiers: DataFrame) -> DataFrame:
@@ -189,40 +202,27 @@ def _cascade_pick(tiers: DataFrame) -> DataFrame:
     )
 
 
-def _conflict_verdicts(
-    picks: DataFrame, existing: DataFrame, genes: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """J7 — incoming pick vs existing ortholog for the same key, as one full-outer
-    join + the W3 comparator encoded in a when/otherwise chain
-    (OrthologRelationDao.java:107-159, comparator :164-188).
+def _lc_syms(sym: DataFrame, key: str, name: str) -> DataFrame:
+    """The lower-cased symbol dim keyed by ``key``, its symbol named ``name``."""
+    return F.broadcast(
+        sym.select(F.col("rgd_id").alias(key), F.col("_sym_lc").alias(name))
+    )
 
-    The full comparator has four stages (compareOrthologs): source priority
-    (RGD > Alliance > HGNC > NCBI), evidence count, src-symbol-matches-dest-symbol,
-    then descending case-insensitive dest symbol. The symbol stages break
-    priority+evidence ties both between in-DB rows (the ex-best window) and between
-    the surviving in-DB row and the incoming candidate (the verdict chain).
 
-    Verdicts: INSERT (no existing), MATCH (same dest → touch), DELETE_EXISTING
-    (incoming outranks existing → replace), DOWNGRADE (existing outranks → incoming
-    becomes a weak association), STALE (existing with no incoming pick).
-
-    Returns ``(verdicts, ex_ranked)``: ``ex_ranked`` carries every existing row with
-    its per-key comparator rank ``_rn`` (1 = best) plus ownership flags, so the
-    caller can emit surplus deletes (rank > 1 of picked keys, Dao.java:121-133) and
-    REQUIREMENT-2-guarded stale deletes (Dao.java:92-99).
-    """
+def _rank_existing(existing: DataFrame, sym: DataFrame) -> DataFrame:
+    """W4 — every existing row with its per-key comparator rank ``_rn`` (1 =
+    best) plus ownership flags. The comparator is W3's full one
+    (compareOrthologs, OrthologRelationDao.java:164-188): source priority
+    (RGD > Alliance > HGNC > NCBI), evidence count,
+    dest-symbol-matches-src-symbol, then descending case-insensitive dest
+    symbol. Rank 1 enters the conflict join; the rest are surplus
+    (Dao.java:121-133 sorts and keeps one), and the ranks also order the
+    REQUIREMENT-2-guarded stale deletes (Dao.java:92-99)."""
     from ortholog_pipeline_spark.functions.strings import (
         evidence_count,
         source_priority,
     )
 
-    # checkpointed: the symbol dim feeds FOUR broadcast joins under different
-    # renames (src/ex-dest on the existing side, src/inc-dest on the incoming
-    # side) — non-identical subtrees, so ReuseExchange would rebuild the gene
-    # scan per join without the checkpoint (same lesson as the AGR dims)
-    sym = F.broadcast(IT.round_checkpoint(
-        genes.select("rgd_id", F.lower("gene_symbol").alias("_sym_lc"))
-    ))
     ex = (
         existing.select(
             *KEY,
@@ -232,21 +232,11 @@ def _conflict_verdicts(
             F.col("genetogene_key").alias("ex_key"),
             F.col("created_by").alias("ex_created_by"),
         )
+        .join(_lc_syms(sym, "src_rgd_id", "_src_sym"), "src_rgd_id", "left")
         .join(
-            sym.withColumnsRenamed({"rgd_id": "src_rgd_id", "_sym_lc": "_src_sym"}),
-            "src_rgd_id",
-            "left",
-        )
-        .join(
-            sym.withColumnsRenamed(
-                {"rgd_id": "ex_dest_rgd_id", "_sym_lc": "_ex_dest_sym"}
-            ),
-            "ex_dest_rgd_id",
-            "left",
+            _lc_syms(sym, "ex_dest_rgd_id", "_ex_dest_sym"), "ex_dest_rgd_id", "left"
         )
     )
-    # W4: rank existing rows per key by the full W3 comparator; rank 1 enters the
-    # conflict join, the rest are surplus (Dao.java:121-133 sorts and keeps one)
     w = Window.partitionBy(*KEY).orderBy(
         source_priority("ex_src").desc(),
         evidence_count("ex_set").desc(),
@@ -254,20 +244,33 @@ def _conflict_verdicts(
         F.col("_ex_dest_sym").desc_nulls_last(),
         F.col("ex_key").asc(),
     )
-    ex_ranked = ex.withColumn("_rn", F.row_number().over(w))
+    return ex.withColumn("_rn", F.row_number().over(w))
+
+
+def _conflict_verdicts(
+    picks: DataFrame, ex_ranked: DataFrame, sym: DataFrame
+) -> DataFrame:
+    """J7 — incoming pick vs the comparator-best existing ortholog for the same
+    key (rank 1 of `_rank_existing`), as one full-outer join + the W3
+    comparator encoded in a when/otherwise chain (OrthologRelationDao.java:
+    107-159, comparator :164-188). The symbol stages break priority+evidence
+    ties between the surviving in-DB row and the incoming candidate.
+
+    Verdicts: INSERT (no existing), MATCH (same dest → touch), DELETE_EXISTING
+    (incoming outranks existing → replace), DOWNGRADE (existing outranks → incoming
+    becomes a weak association), STALE (existing with no incoming pick).
+    """
+    from ortholog_pipeline_spark.functions.strings import (
+        evidence_count,
+        source_priority,
+    )
+
     ex_best = ex_ranked.filter(F.col("_rn") == 1).drop(
         "_rn", "ex_created_by", "_src_sym"
     )
-
     inc = picks.join(
-        sym.withColumnsRenamed({"rgd_id": "dest_rgd_id", "_sym_lc": "_inc_dest_sym"}),
-        "dest_rgd_id",
-        "left",
-    ).join(
-        sym.withColumnsRenamed({"rgd_id": "src_rgd_id", "_sym_lc": "_src_sym"}),
-        "src_rgd_id",
-        "left",
-    )
+        _lc_syms(sym, "dest_rgd_id", "_inc_dest_sym"), "dest_rgd_id", "left"
+    ).join(_lc_syms(sym, "src_rgd_id", "_src_sym"), "src_rgd_id", "left")
     j = inc.join(ex_best, KEY, "full_outer")
     inc_rank = source_priority("xref_data_src") * 1000 + evidence_count("xref_data_set")
     ex_rank = source_priority("ex_src") * 1000 + evidence_count("ex_set")
@@ -291,10 +294,28 @@ def _conflict_verdicts(
         )
         .otherwise(F.lit("DOWNGRADE"))
     )
-    verdicts = j.withColumn("verdict", verdict).drop(
+    return j.withColumn("verdict", verdict).drop(
         "_src_sym", "_inc_dest_sym", "_ex_dest_sym"
     )
-    return verdicts, ex_ranked
+
+
+def _snapshot_side(
+    genes: DataFrame, species_scope: DataFrame, agr: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The flow's frames that read only snapshot tables, stored and
+    materialized: the symbol dim, the manual + Alliance tiers and the W4
+    ranking of the existing rows. They share no producer edge with the
+    landing files, so the flow runs this while ``closed`` materializes."""
+    # the symbol dim feeds six broadcast joins under different renames (two in
+    # the HGNC/NCBI tiers, two in W4, two on the incoming side of the conflict
+    # join) — non-identical subtrees that ReuseExchange cannot dedup, so each
+    # would rescan genes without the checkpoint (same lesson as the AGR dims)
+    sym = IT.materialized(_symbol_dim(genes))
+    return (
+        sym,
+        IT.materialized(_snapshot_tiers(genes, species_scope, agr)),
+        IT.materialized(_rank_existing(species_scope, sym)),
+    )
 
 
 def run_species_load(
@@ -318,6 +339,39 @@ def run_species_load(
         orthologs = store.read("orthologs")
         associations = store.read("associations")
         agr = store.read("agr_orthologs")
+
+        # existing orthologs relevant to this run: keys of either direction
+        in_scope = (F.col("dest_species_type_key") == dest_species_type_key) | (
+            F.col("src_species_type_key") == dest_species_type_key
+        )
+        species_scope = orthologs.filter(in_scope)
+        # ONE job serves all three driver-side scalars: the ortholog surrogate-key
+        # high-water mark, the churn-guard denominator (max() already visits every
+        # partition, so the conditional count rides the same scan), AND the
+        # association high-water mark — the union of the two 1-row aggregates runs
+        # both table scans as parallel stages of a single action (flow job-count
+        # budget, VERDICT r4 item 1).
+        _stats_plan = (
+            orthologs.agg(
+                F.max("genetogene_key").alias("_mx"),
+                F.sum(F.when(in_scope, 1).otherwise(0)).alias("_n_scope"),
+            )
+            .select(F.lit("orth").alias("_t"), "_mx", "_n_scope")
+            .unionByName(
+                associations.agg(F.max("assoc_key").alias("_mx")).select(
+                    F.lit("assoc").alias("_t"),
+                    "_mx",
+                    F.lit(None).cast("long").alias("_n_scope"),
+                )
+            )
+        )
+        # The stats job and the snapshot side read only the SNAPSHOT tables and
+        # share no producer edge with the parse→resolve→merge chain, so
+        # `run.submit` runs them in the background, one per worker, while
+        # `closed` materializes on this thread; the run scope joins them before
+        # it commits or aborts.
+        stats_job = run.submit(_stats_plan.collect)
+        snapshot_job = run.submit(_snapshot_side, genes, species_scope, agr)
 
         # J1 resolution via broadcast dimension join
         dim = resolve.build_resolution_dim(xrefs, genes, rgd_ids)
@@ -356,40 +410,9 @@ def run_species_load(
         # checkpointed, not cached: closed's parse->resolve->merge
         # lineage re-enters EVERY downstream plan (tiers, weak candidates,
         # conflict join); truncating it here shrinks each of those plan trees
-        # and the per-action planning cost with them
+        # and the per-action planning cost with them. The call itself runs the
+        # merge's AQE shuffle stages, concurrently with the background jobs.
         closed = IT.round_checkpoint(closed)
-
-        # existing orthologs relevant to this run: keys of either direction
-        in_scope = (F.col("dest_species_type_key") == dest_species_type_key) | (
-            F.col("src_species_type_key") == dest_species_type_key
-        )
-        species_scope = orthologs.filter(in_scope)
-        # ONE job serves all three driver-side scalars: the ortholog surrogate-key
-        # high-water mark, the churn-guard denominator (max() already visits every
-        # partition, so the conditional count rides the same scan), AND the
-        # association high-water mark — the union of the two 1-row aggregates runs
-        # both table scans as parallel stages of a single action (flow job-count
-        # budget, VERDICT r4 item 1).
-        #
-        # The job reads only the SNAPSHOT tables and shares no producer edge with
-        # the parse→resolve→merge chain, so `run.submit` runs it in the background
-        # while `closed` materializes (r11, guide §2.6); the run scope joins it
-        # before it commits or aborts.
-        _stats_plan = (
-            orthologs.agg(
-                F.max("genetogene_key").alias("_mx"),
-                F.sum(F.when(in_scope, 1).otherwise(0)).alias("_n_scope"),
-            )
-            .select(F.lit("orth").alias("_t"), "_mx", "_n_scope")
-            .unionByName(
-                associations.agg(F.max("assoc_key").alias("_mx")).select(
-                    F.lit("assoc").alias("_t"),
-                    "_mx",
-                    F.lit(None).cast("long").alias("_n_scope"),
-                )
-            )
-        )
-        stats_job = run.submit(_stats_plan.collect)
         closed.count()
         if human_guard.get["n_nonhuman"]:
             raise ValueError("ortholog group keyed by a non-human source gene")
@@ -399,20 +422,20 @@ def run_species_load(
         max_key_row = _stats["orth"]["_mx"]
         n_scope = _stats["orth"]["_n_scope"] or 0
         max_ak = _stats["assoc"]["_mx"]
+        sym, snapshot_tiers, ex_ranked = snapshot_job.result()
 
-        # 4-tier cascade → per-key pick. Persisted: the conflict join, the
+        # 4-tier cascade → per-key pick. Checkpointed: the conflict join, the
         # pick_keys semi/anti probes in the delete derivation, and the result
-        # object all re-enter this frame, and its lineage (4-way tier union with
-        # two best-fit windows) is the most expensive recompute in the plan.
-        tiers = _tier_candidates(closed, genes, species_scope, agr)
-        picks = IT.round_checkpoint(_cascade_pick(tiers))
+        # object all re-enter this frame, and its lineage (two best-fit windows
+        # over ``closed``) is the most expensive recompute in the plan.
+        picks = IT.round_checkpoint(
+            _cascade_pick(snapshot_tiers.unionByName(_file_tiers(closed, sym)))
+        )
 
         # J7 conflict verdicts vs existing — consumed by inserts, deletes,
         # stale, touch, downgrades and the result object: checkpoint to stop 6×
         # recomputation of the cascade + full-outer join lineage
-        verdicts, ex_ranked = _conflict_verdicts(picks, species_scope, genes)
-        verdicts = IT.round_checkpoint(verdicts)
-        ex_ranked = IT.round_checkpoint(ex_ranked)
+        verdicts = IT.round_checkpoint(_conflict_verdicts(picks, ex_ranked, sym))
 
         ts = F.lit(run_ts)
         species_of = F.broadcast(
@@ -450,19 +473,18 @@ def run_species_load(
         inserts_raw = _mk_orthologs(
             verdicts.filter(F.col("verdict").isin("INSERT", "DELETE_EXISTING"))
         )
-        # checkpointed (NOT merely cached): consumed by the
-        # provisional snapshot (W2 input), BOTH concurrent snapshot commits, and
-        # the result object. A cache would keep the full keygen+cascade lineage
-        # in every consumer's logical plan — and with the association commit now
-        # built on the logical next-snapshot frame instead of a parquet re-read,
-        # those plan trees compound until planning itself is the cost (measured:
-        # tree stringification alone OOMed an 8g driver late in a bench run).
-        # The checkpoint truncates the plan to a LogicalRDD leaf.
-        inserts = (
+        # stored (NOT merely cached): consumed by the provisional snapshot (W2
+        # input), BOTH concurrent snapshot commits, and the result object. A cache
+        # would keep the full keygen+cascade lineage in every consumer's logical
+        # plan, and those plan trees compound until planning itself is the cost
+        # (measured: tree stringification alone OOMed an 8g driver late in a
+        # bench run); the checkpoint truncates the plan to a LogicalRDD leaf.
+        # Keygen runs its own jobs, so it builds in the background while this
+        # thread derives the deletes and runs the churn guard.
+        inserts_job = run.submit(lambda: IT.materialized(
             next_surrogate_keys(inserts_raw, (max_key_row or 0), "genetogene_key")
             .select(*[f.name for f in orthologs.schema.fields])
-        )
-        inserts = IT.round_checkpoint(inserts)
+        ))
 
         # deletes, three sources (all manual-guarded, churn-gated before commit):
         #   replaced — best existing outranked by the incoming pick
@@ -515,17 +537,18 @@ def run_species_load(
         )
         if n_scope:
             sync.guard_delete_threshold(deletes.count(), n_scope, delete_threshold_pct)
+        inserts = inserts_job.result()
 
         # W2 duplicate cleanup over the would-be next snapshot
         provisional = (
             orthologs.join(deletes, "genetogene_key", "left_anti").unionByName(inserts)
         )
         _, dup_deletes = bestfit.duplicate_cleanup(provisional, PIPELINE_USER_ID)
-        # lazily localCheckpointed: BOTH concurrent commits consume this key list
-        # (the ortholog anti-join and the assoc thread's next-snapshot pair frame).
-        # The checkpoint (a) computes the W2 duplicate-cleanup window once instead
-        # of once per commit, and (b) truncates the cascade lineage out of both
-        # commit plans — see the `inserts` note above for why plan-tree size is
+        # stored: the orthologs commit (its anti-join) and the association sync
+        # (the next-snapshot pair frame) consume this key list concurrently. The
+        # checkpoint (a) computes the W2 duplicate-cleanup window once instead
+        # of once per consumer, and (b) truncates the cascade lineage out of
+        # both plans — see the `inserts` note above for why plan-tree size is
         # the real constraint here.
         all_deletes = IT.round_checkpoint(
             deletes.unionByName(dup_deletes.select("genetogene_key"))
@@ -537,6 +560,21 @@ def run_species_load(
         )
         touched = sync.touch_last_modified(
             orthologs, matched_keys, ["genetogene_key"], run_ts, PIPELINE_USER_ID
+        )
+
+        # Both snapshot commits stage in the background under the run scope
+        # (VERDICT r4 item 1, r5 item 1): they touch different tables and share no
+        # producer/consumer edge, so the flow pays max(commit₁, commit₂) instead of
+        # their sum, and the orthologs commit starts as soon as its three inputs
+        # exist. The churn guard already ran (deletes.count() above), so a guard
+        # abort still precedes ANY staging.
+        run.stage(
+            "orthologs",
+            inserts=inserts,
+            deletes=all_deletes,
+            delete_key=["genetogene_key"],
+            updates=touched,
+            update_key=["genetogene_key"],
         )
 
         # associations: every closed relation is a weak candidate (Loader.java:116-136),
@@ -613,22 +651,12 @@ def run_species_load(
             .select(*[f.name for f in associations.schema.fields])
         )
 
-        # Both snapshot commits stage in the background under the run scope
-        # (VERDICT r4 item 1, r5 item 1): they touch different tables and share no
-        # producer/consumer edge, so the flow pays max(commit₁, commit₂) instead of
-        # their sum. On a clean exit the scope publishes both _CURRENT markers with
-        # one atomic manifest flip; on any failure it joins both writers and then
-        # rolls back — readers never see orthologs advanced without associations
-        # or vice versa. The churn guard already ran (deletes.count() above), so a
-        # guard abort still precedes ANY staging.
-        run.stage(
-            "orthologs",
-            inserts=inserts,
-            deletes=all_deletes,
-            delete_key=["genetogene_key"],
-            updates=touched,
-            update_key=["genetogene_key"],
-        )
+        # The association sync above reads only the CURRENT snapshots, never the
+        # staged orthologs version, so it overlapped that commit; this one stages
+        # in the background too. On a clean exit the scope publishes both
+        # _CURRENT markers with one atomic manifest flip; on any failure it joins
+        # both writers and then rolls back — readers never see orthologs advanced
+        # without associations or vice versa.
         run.stage(
             "associations",
             inserts=a_ins,

@@ -253,7 +253,7 @@ _SPECIES_FLOW_SQL = f"""
       SELECT * FROM seed_orth
       WHERE dest_species_type_key = 3 OR src_species_type_key = 3
     ),
-    -- tier 1: manual (J3/F5, plans/species_load.py:64)
+    -- tier 1: manual (J3/F5, plans/species_load._snapshot_tiers)
     t_manual AS (
       SELECT src_rgd_id, dest_species_type_key, 1 AS tier,
              CASE WHEN COUNT(*) = 1 THEN MIN(dest_rgd_id) END AS dest_rgd_id,
@@ -262,7 +262,7 @@ _SPECIES_FLOW_SQL = f"""
       FROM scope WHERE xref_data_src = 'RGD'
       GROUP BY 1, 2
     ),
-    -- tier 2: Alliance mutual-best (J2/U2/F8, species_load.py:82)
+    -- tier 2: Alliance mutual-best (J2/U2/F8, species_load._snapshot_tiers)
     t_alliance AS (
       SELECT u.src_rgd_id, g.species_type_key AS dest_species_type_key, 2 AS tier,
              CASE WHEN COUNT(*) = 1 THEN MIN(u.partner) END AS dest_rgd_id,
@@ -322,7 +322,7 @@ _SPECIES_FLOW_SQL = f"""
             FROM tiers)
       WHERE crn = 1 AND NOT blocked
     ),
-    -- W3/W4 comparator rank over existing rows (species_load.py:227)
+    -- W3/W4 comparator rank over existing rows (species_load._rank_existing)
     ex_ranked AS (
       SELECT *, ROW_NUMBER() OVER (
                PARTITION BY src_rgd_id, dest_species_type_key
@@ -339,7 +339,7 @@ _SPECIES_FLOW_SQL = f"""
         LEFT JOIN genes gs ON gs.rgd_id = s.src_rgd_id
         LEFT JOIN genes gd ON gd.rgd_id = s.dest_rgd_id)
     ),
-    -- J7 conflict verdicts (species_load.py:239-273)
+    -- J7 conflict verdicts (species_load._conflict_verdicts)
     conf AS (
       SELECT coalesce(p.src_rgd_id, e.src_rgd_id) AS src_rgd_id,
              coalesce(p.dest_species_type_key, e.dest_species_type_key)
@@ -428,7 +428,7 @@ _SPECIES_FLOW_SQL = f"""
         FROM prov)
       WHERE NOT (rn2 > 1 AND created_by = 70)
     ),
-    -- weak associations (J5 + J10 + J9, species_load.py:439-504)
+    -- weak associations (J5 + J10 + J9, species_load.run_species_load)
     weak_cand AS (
       SELECT master_rgd_id, detail_rgd_id, MIN(assoc_subtype) AS assoc_subtype
       FROM (

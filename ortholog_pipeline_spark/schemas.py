@@ -1,4 +1,4 @@
-"""Explicit schemas for source files and state-table snapshots.
+"""Explicit schemas for the landing files, and the engine's shared constants.
 
 The reference hard-codes column positions in its parsers (HCOP cols 0/1/8/15 at
 OrthologRelationParser.java:139-143; NCBI cols 0-4 at :86-101; Alliance cols 0-12 at
@@ -67,107 +67,6 @@ AGR_SCHEMA = T.StructType(
     ]
 )
 
-#: In-flight relation record (OrthologRelation.java:7-16).
-RELATION_SCHEMA = T.StructType(
-    [
-        T.StructField("src_other_id", T.StringType()),
-        T.StructField("dest_other_id", T.StringType()),
-        T.StructField("src_species_type_key", T.IntegerType()),
-        T.StructField("dest_species_type_key", T.IntegerType()),
-        T.StructField("data_source", T.StringType()),
-        T.StructField("data_set_name", T.StringType()),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# State tables (SURVEY.md §1.2; FIXTURES.md state-table fixtures)
-# ---------------------------------------------------------------------------
-
-GENES_SCHEMA = T.StructType(
-    [
-        T.StructField("rgd_id", T.IntegerType()),
-        T.StructField("gene_symbol", T.StringType()),
-        T.StructField("gene_type_lc", T.StringType()),
-        T.StructField("ensembl_gene_symbol", T.StringType()),
-        T.StructField("species_type_key", T.IntegerType()),
-    ]
-)
-
-RGD_IDS_SCHEMA = T.StructType(
-    [
-        T.StructField("rgd_id", T.IntegerType()),
-        T.StructField("object_status", T.StringType()),  # ACTIVE/WITHDRAWN/RETIRED
-        T.StructField("species_type_key", T.IntegerType()),
-        T.StructField("object_key", T.IntegerType()),
-        T.StructField("replaced_by_rgd_id", T.IntegerType()),  # nullable; 0/null=none
-    ]
-)
-
-XREFS_SCHEMA = T.StructType(
-    [
-        T.StructField("acc_xdb_key", T.IntegerType()),
-        T.StructField("rgd_id", T.IntegerType()),
-        T.StructField("acc_id", T.StringType()),
-        T.StructField("xdb_key", T.IntegerType()),  # 3=EntrezGene, 63=AGR curie
-        T.StructField("src_pipeline", T.StringType()),
-        T.StructField("modification_date", T.TimestampType()),
-    ]
-)
-
-ORTHOLOGS_SCHEMA = T.StructType(
-    [
-        T.StructField("genetogene_key", T.LongType()),
-        T.StructField("src_rgd_id", T.IntegerType()),
-        T.StructField("dest_rgd_id", T.IntegerType()),
-        T.StructField("src_species_type_key", T.IntegerType()),
-        T.StructField("dest_species_type_key", T.IntegerType()),
-        T.StructField("group_id", T.IntegerType()),
-        T.StructField("xref_data_src", T.StringType()),  # RGD/Alliance/HGNC/NCBI
-        T.StructField("xref_data_set", T.StringType()),  # ", "-joined sorted set
-        T.StructField("ortholog_type_key", T.IntegerType()),  # 11=direct
-        T.StructField("percent_homology", T.DoubleType()),
-        T.StructField("created_by", T.IntegerType()),  # 70 = this pipeline
-        T.StructField("created_date", T.TimestampType()),
-        T.StructField("last_modified_by", T.IntegerType()),
-        T.StructField("last_modified_date", T.TimestampType()),
-    ]
-)
-
-ASSOCIATIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("assoc_key", T.LongType()),
-        T.StructField("assoc_type", T.StringType()),  # 'weak_ortholog'
-        T.StructField("assoc_subtype", T.StringType()),  # evidence set
-        T.StructField("master_rgd_id", T.IntegerType()),
-        T.StructField("detail_rgd_id", T.IntegerType()),
-        T.StructField("creation_date", T.TimestampType()),
-        T.StructField("src_pipeline", T.StringType()),
-    ]
-)
-
-AGR_ORTHOLOGS_SCHEMA = T.StructType(
-    [
-        T.StructField("gene_rgd_id_1", T.IntegerType()),
-        T.StructField("gene_rgd_id_2", T.IntegerType()),
-        T.StructField("confidence", T.StringType()),
-        T.StructField("is_best_score", T.StringType()),  # 'Y'/'N'
-        T.StructField("is_best_rev_score", T.StringType()),
-        T.StructField("methods_matched", T.StringType()),  # '|'-joined sorted set
-        T.StructField("created_date", T.TimestampType()),
-        T.StructField("last_update_date", T.TimestampType()),
-    ]
-)
-
-SPECIES_SCHEMA = T.StructType(
-    [
-        T.StructField("species_type_key", T.IntegerType()),
-        T.StructField("common_name", T.StringType()),
-        T.StructField("taxonomic_name", T.StringType()),
-        T.StructField("taxonomic_id", T.IntegerType()),
-        T.StructField("is_searchable", T.IntegerType()),
-    ]
-)
-
 #: Species constants (decompiled rgdcore SpeciesType; SURVEY.md §1.2).
 SPECIES = {
     "human": (1, 9606, "Homo sapiens"),
@@ -192,7 +91,6 @@ XDB_KEY_ENTREZ = 3
 XDB_KEY_AGR_GENE = 63
 PIPELINE_USER_ID = 70  # created_by for pipeline-owned rows (AppConfigure.xml:17)
 ORTHOLOG_TYPE_DIRECT = 11
-ORTHOLOG_TYPE_TRANSITIVE = 13
 
 #: HomoloGene homologene.data (deprecated flow, HomologeneLoader.java:70-95).
 HOMOLOGENE_SCHEMA = T.StructType(

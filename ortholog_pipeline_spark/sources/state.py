@@ -24,6 +24,7 @@ import time
 from collections.abc import Iterator
 from concurrent.futures import Future, ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -846,8 +847,13 @@ class RunScope:
         self.versions: dict[str, int] = {}  # table → committed version
 
     def submit(self, fn, *args, **kwargs) -> Future:
-        """Run ``fn`` in the background; the scope joins it before it ends."""
-        fut = self._pool.submit(fn, *args, **kwargs)
+        """Run ``fn`` in the background; the scope joins it before it ends.
+        ``fn`` runs with the caller's Spark local properties and session tags
+        as they are at this call (job group, scheduler pool, description), so
+        its jobs are counted and cancelled with the caller's."""
+        fut = self._pool.submit(
+            inheritable_thread_target(self._store.spark)(fn), *args, **kwargs
+        )
         self._futures.append(fut)
         return fut
 

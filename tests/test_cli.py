@@ -10,8 +10,8 @@ import gzip
 import pytest
 
 from ortholog_pipeline_spark.__main__ import _latest_landing, _species_relations, main
-from ortholog_pipeline_spark.schemas import ASSOCIATIONS_SCHEMA, ORTHOLOGS_SCHEMA
 from ortholog_pipeline_spark.sources.state import StateStore
+from table_schemas import ASSOCIATIONS_SCHEMA, ORTHOLOGS_SCHEMA
 
 OLD_TS = dt.datetime(2025, 12, 1)
 
@@ -57,7 +57,7 @@ def test_species_relations_union_of_sources(spark, tmp_path):
 
 
 def test_report_via_cli(spark, tmp_path, capsys):
-    from ortholog_pipeline_spark.schemas import AGR_ORTHOLOGS_SCHEMA, GENES_SCHEMA
+    from table_schemas import AGR_ORTHOLOGS_SCHEMA, GENES_SCHEMA
 
     store = StateStore(spark, str(tmp_path / "state"))
     genes = [
@@ -119,7 +119,7 @@ def test_cli_rejects_unknown_species(spark, tmp_path):
 
 
 def test_homologene_via_cli(spark, tmp_path, capsys):
-    from ortholog_pipeline_spark.schemas import XREFS_SCHEMA
+    from table_schemas import XREFS_SCHEMA
 
     store = StateStore(spark, str(tmp_path / "state"))
     xrefs = [(1, 101, "EG1", 3, "E", OLD_TS), (2, 102, "EG2", 3, "E", OLD_TS)]

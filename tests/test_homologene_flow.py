@@ -10,8 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from ortholog_pipeline_spark.plans.homologene import run_homologene_load
-from ortholog_pipeline_spark.schemas import HOMOLOGENE_SCHEMA, ORTHOLOGS_SCHEMA, XREFS_SCHEMA
+from ortholog_pipeline_spark.schemas import HOMOLOGENE_SCHEMA
 from ortholog_pipeline_spark.sources.state import StateStore
+from table_schemas import ORTHOLOGS_SCHEMA, XREFS_SCHEMA
 from test_state_store import is_partitioned_by
 
 TS = datetime(2024, 1, 2)

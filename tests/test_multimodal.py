@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ortholog_pipeline_spark import multimodal as MM
+from table_schemas import MEDIA_SCHEMA
 
 
 def _media(spark):
@@ -19,7 +20,7 @@ def test_media_schema_and_types(spark):
     m = _media(spark)
     # nullability flags differ between literal-built and declared schemas;
     # the structural shape is what the contract pins
-    assert m.schema.simpleString() == MM.MEDIA_SCHEMA.simpleString()
+    assert m.schema.simpleString() == MEDIA_SCHEMA.simpleString()
     types = {r.media_type for r in m.select("media_type").distinct().collect()}
     assert types == {"image", "audio", "video"}
 

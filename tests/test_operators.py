@@ -9,11 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ortholog_pipeline_spark.operators import bestfit, grouping, resolve, sync
-from ortholog_pipeline_spark.schemas import (
-    GENES_SCHEMA,
-    RGD_IDS_SCHEMA,
-    XREFS_SCHEMA,
-)
+from table_schemas import GENES_SCHEMA, RGD_IDS_SCHEMA, XREFS_SCHEMA
 
 TS = datetime.datetime(2026, 1, 1)
 

@@ -309,13 +309,11 @@ def test_tier_candidates_one_row_per_key_and_tier(spark, symbols, closed, manual
     from ortholog_pipeline_spark.plans.species_load import (
         KEY,
         _cascade_pick,
-        _tier_candidates,
+        _file_tiers,
+        _snapshot_tiers,
+        _symbol_dim,
     )
-    from ortholog_pipeline_spark.schemas import (
-        AGR_ORTHOLOGS_SCHEMA,
-        GENES_SCHEMA,
-        ORTHOLOGS_SCHEMA,
-    )
+    from table_schemas import AGR_ORTHOLOGS_SCHEMA, GENES_SCHEMA, ORTHOLOGS_SCHEMA
 
     genes = spark.createDataFrame(
         [(g, sym, "protein-coding", None, 1 if g in HUMAN_IDS else 3)
@@ -335,7 +333,9 @@ def test_tier_candidates_one_row_per_key_and_tier(spark, symbols, closed, manual
     agr_df = spark.createDataFrame(
         [(a, b, "c", y, y, "m", None, None) for a, b, y in agr], AGR_ORTHOLOGS_SCHEMA
     )
-    tiers = _tier_candidates(closed_df, genes, existing, agr_df).persist()
+    tiers = _snapshot_tiers(genes, existing, agr_df).unionByName(
+        _file_tiers(closed_df, _symbol_dim(genes))
+    ).persist()
     try:
         dup = tiers.groupBy(*KEY, "tier").count().filter(F.col("count") > 1)
         assert dup.count() == 0

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -288,9 +290,6 @@ def test_agr_load_abort_waits_for_mint_writers(spark, tmp_path, monkeypatch):
     raises) must abort only after every staging writer has finished: no
     apply_changes may still run when abort_run starts, no staged v= dir may
     outlive the abort, and all four tables read their before-state."""
-    import threading
-    import time
-
     from ortholog_pipeline_spark.operators import sync
 
     tables = ("genes", "rgd_ids", "xrefs", "agr_orthologs")
@@ -342,6 +341,145 @@ def test_agr_load_abort_waits_for_mint_writers(spark, tmp_path, monkeypatch):
         assert cur == before_v[t], t
         assert _rows(store, t) == before[t], t
     assert not os.path.exists(store._pending_path)
+
+
+def test_run_submit_jobs_join_the_callers_group(spark, tmp_path):
+    """Work submitted to the run scope runs with the caller's Spark local
+    properties: a job it runs on a scope worker lands in the job group the
+    caller set, so the flows' job-budget pins count every job."""
+    store = _two_table_store(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("run_submit_group", "submitted work inherits the group")
+    try:
+        with store.run(["t1"]) as run:
+            worker = run.submit(lambda: (
+                threading.current_thread().name, spark.range(10).count()
+            ))
+            name, n = worker.result()
+    finally:
+        sc.setJobGroup(None, None)
+    assert name.startswith("state-store-run") and n == 10
+    assert sc.statusTracker().getJobIdsForGroup("run_submit_group")
+
+
+def _fail_first_background_checkpoint(monkeypatch):
+    """Make the first `round_checkpoint` called on a run-scope worker raise."""
+    from ortholog_pipeline_spark.operators import iterate as IT
+
+    real = IT.round_checkpoint
+
+    def failing(df):
+        if threading.current_thread().name.startswith("state-store-run"):
+            raise RuntimeError("injected failure in a background job")
+        return real(df)
+
+    monkeypatch.setattr(IT, "round_checkpoint", failing)
+
+
+def _assert_run_left_nothing(store, before_v, before_rows):
+    """Every table reads its before-version and rows, no staged ``v=`` dir is
+    left, no manifest is pending and no run-scope worker is alive."""
+    for t, v in before_v.items():
+        cur = store.current_version(t)
+        staged = [
+            d for d in os.listdir(os.path.join(store.root, t))
+            if d.startswith("v=") and int(d.split("=", 1)[1]) > cur
+        ]
+        assert staged == [], (t, staged)
+        assert cur == v, t
+        assert _rows(store, t) == before_rows[t], t
+    assert not os.path.exists(store._pending_path)
+    assert [
+        t.name for t in threading.enumerate()
+        if t.name.startswith("state-store-run")
+    ] == []
+
+
+SPECIES_TABLES = ("orthologs", "associations")
+AGR_TABLES = ("genes", "rgd_ids", "xrefs", "agr_orthologs")
+
+
+def test_species_snapshot_side_failure_rolls_back(spark, tmp_path, monkeypatch):
+    """The species load materializes its snapshot side (symbol dim, manual +
+    Alliance tiers, W4 ranking) on a run-scope worker while the caller builds
+    ``closed``. A failure in that job aborts the whole run."""
+    store = _seed_store(spark, tmp_path / "snapside")
+    before_v = {t: store.current_version(t) for t in SPECIES_TABLES}
+    before_rows = {t: _rows(store, t) for t in SPECIES_TABLES}
+    _fail_first_background_checkpoint(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_species_load(
+            store, _relations(spark), RUN_TS, RAT, delete_threshold_pct=100.0
+        )
+    monkeypatch.undo()
+    _assert_run_left_nothing(store, before_v, before_rows)
+
+
+def test_species_guard_abort_waits_for_inserts_job(spark, tmp_path, monkeypatch):
+    """The surrogate-keyed inserts build on a run-scope worker while the caller
+    runs the churn guard. A guard abort in that window must wait for the
+    inserts job before it rolls back, and leave the run's tables untouched."""
+    from ortholog_pipeline_spark.operators import sync
+    from ortholog_pipeline_spark.plans import species_load
+
+    store = _seed_store(spark, tmp_path / "guardwindow")
+    before_v = {t: store.current_version(t) for t in SPECIES_TABLES}
+    before_rows = {t: _rows(store, t) for t in SPECIES_TABLES}
+
+    lock = threading.Lock()
+    started = threading.Event()
+    running = {"n": 0}
+    at_guard, at_abort = [], []
+    real_keys = species_load.next_surrogate_keys
+    real_guard, real_abort = sync.guard_delete_threshold, StateStore.abort_run
+
+    def slow_keys(*args, **kwargs):
+        with lock:
+            running["n"] += 1
+        started.set()
+        try:
+            time.sleep(2.0)  # keep the inserts job busy past the guard
+            return real_keys(*args, **kwargs)
+        finally:
+            with lock:
+                running["n"] -= 1
+
+    def watched_guard(*args, **kwargs):
+        assert started.wait(60)
+        with lock:
+            at_guard.append(running["n"])
+        return real_guard(*args, **kwargs)
+
+    def recording_abort(self):
+        with lock:
+            at_abort.append(running["n"])
+        return real_abort(self)
+
+    monkeypatch.setattr(species_load, "next_surrogate_keys", slow_keys)
+    monkeypatch.setattr(sync, "guard_delete_threshold", watched_guard)
+    monkeypatch.setattr(StateStore, "abort_run", recording_abort)
+    with pytest.raises(RuntimeError, match="threshold"):
+        # default 10% cap: the stale + replaced deletes exceed it on this fixture
+        run_species_load(store, _relations(spark), RUN_TS, RAT)
+    monkeypatch.undo()
+
+    assert at_guard == [1], "the guard should fire while the inserts job runs"
+    assert at_abort == [0], f"abort_run started while {at_abort} keygen jobs ran"
+    _assert_run_left_nothing(store, before_v, before_rows)
+
+
+def test_agr_dims_failure_rolls_back(spark, tmp_path, monkeypatch):
+    """The AGR load materializes its curie and symbol dims on a run-scope
+    worker while the caller stores the parsed lines. A failure in that job
+    aborts the whole run: no table moves, nothing is minted."""
+    store = _seed_store(spark, tmp_path / "agrdims")
+    before_v = {t: store.current_version(t) for t in AGR_TABLES}
+    before_rows = {t: _rows(store, t) for t in AGR_TABLES}
+    _fail_first_background_checkpoint(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_agr_load(store, _agr_lines(spark), RUN_TS, delete_threshold_pct=100.0)
+    monkeypatch.undo()
+    _assert_run_left_nothing(store, before_v, before_rows)
 
 
 # ---------------------------------------------------------------------------
