@@ -1,6 +1,7 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness: runs the headline queries and the scaling probes
+(``tools/probes.py``) at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints two JSON lines, the full record and then
+the compact one: {"metric": ..., "value": total_sec, "unit": "sec", ...}.
 
 Each query is forced with a count() so the full plan executes; a warmup query runs
 first so JVM/codegen startup isn't billed to the first measurement.
@@ -10,12 +11,15 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
-from ortholog_pipeline_spark import queries as Q
-from ortholog_pipeline_spark.session import get_spark
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from ortholog_pipeline_spark import queries as Q  # noqa: E402
+from ortholog_pipeline_spark.oracle import git_head  # noqa: E402
+from ortholog_pipeline_spark.session import get_spark  # noqa: E402
+from tools import probes as P  # noqa: E402
 
 #: Headline set: one per operator family — aggregation, join+topk, windows, CDC,
 #: set-closure, anti-joins, text analytics, dedup (exact/LSH/jaccard), ANN.
@@ -340,53 +344,38 @@ HEADLINE = [
 HISTORY_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_history.json")
 
 
-def _git_head() -> str:
-    """HEAD of this checkout, stamped into every JSON file the bench writes."""
-    return subprocess.run(
-        ["git", "rev-parse", "HEAD"],
-        capture_output=True, text=True, cwd=os.path.dirname(os.path.abspath(__file__)),
-    ).stdout.strip()
+def read_history(sf) -> tuple[list, dict]:
+    """(every recorded run, the last run at scale factor ``sf`` or {}): a run
+    at another sf must not poison the ratios."""
+    try:
+        with open(HISTORY_PATH) as fh:
+            hist = json.load(fh)
+    except (OSError, json.JSONDecodeError):
+        return [], {}
+    same_sf = [h for h in hist if str(h.get("sf")) == str(sf)]
+    return hist, same_sf[-1] if same_sf else {}
 
 
 def calibration_probe(spark) -> float:
-    """Fixed environment anchor (VERDICT r6 item 3): a pinned-size pure-JVM
-    workload — range → md5 → group-sort-agg, no I/O, no Python, no data
-    dependence — whose code never changes between rounds. Each round runs on
-    a FRESH VM (r6 measured a uniform ~1.3x shift vs the r5 box on unchanged
-    code); recording this number per run turns that narrative into a
-    measured ratio, and the regression bar scales by it instead of by the
-    median of all entry ratios (ADVICE r6: a code change that slows most
-    entries uniformly raises the median and masks itself — a sentinel whose
-    code is known-unchanged can't be fooled that way). One untimed warmup
-    (the probe's own codegen) then min-of-5: the anchor must be the most
-    stable number in the artifact (measured: min-of-3 straight after session
-    start still caught a 1.5x JIT transient; min-of-5 post-warmup sits in a
-    ±12% band standalone).
+    """Fixed environment anchor: a pinned-size pure-JVM workload — range →
+    md5 → group-sort-agg, no I/O, no Python, no data dependence — whose code
+    never changes. Each run may land on a different VM (a uniform ~1.3x
+    shift was measured on unchanged code); recording this number per run
+    turns that into a measured ratio, and the regression bar scales by it
+    instead of by the median of all entry ratios (a code change that slows
+    most entries uniformly raises the median and masks itself — a sentinel
+    whose code is known-unchanged can't be fooled that way). One untimed
+    warmup (the probe's own codegen) then min-of-5: min-of-3 straight after
+    session start still caught a 1.5x JIT transient; min-of-5 post-warmup
+    sits in a ±12% band standalone.
 
-    The probe additionally PINS the session confs its plan depends on
-    (ADVICE r7): the anchor runs under the same SparkSession as the bench,
-    so a uniform session-config regression (e.g. a get_spark default
-    change to shuffle partitions / AQE / codegen) would otherwise slow the
-    sentinel too, inflate env_shift, raise the 1.5x bar, AND suppress the
-    median-vs-calibration review note — exactly the masking the anchor
-    exists to prevent. Hardcoding the config per probe run (saved and
-    restored around it) closes that channel: only the BOX can move this
-    number, never session-level code."""
+    The session confs its plan depends on are pinned for the probe: it runs
+    under the bench's SparkSession, so a session-config regression (shuffle
+    partitions, AQE, codegen) would otherwise slow the sentinel too, inflate
+    env_shift, raise the bar and suppress the median-vs-calibration review
+    note — exactly the masking the anchor exists to prevent. Only the BOX
+    can move this number, never session-level code."""
     from pyspark.sql import functions as F
-
-    pinned = {
-        "spark.sql.shuffle.partitions": "32",
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.codegen.wholeStage": "true",
-        "spark.sql.execution.sortBeforeRepartition": "true",
-    }
-    saved: dict[str, str | None] = {}
-    for k, v in pinned.items():
-        try:
-            saved[k] = spark.conf.get(k, None)
-        except Exception:  # noqa: BLE001
-            saved[k] = None
-        spark.conf.set(k, v)
 
     def run():
         (
@@ -399,288 +388,19 @@ def calibration_probe(spark) -> float:
             .count()
         )
 
-    try:
+    with P.pinned_conf(spark, {
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.codegen.wholeStage": "true",
+        "spark.sql.execution.sortBeforeRepartition": "true",
+    }):
         run()  # untimed: the anchor's own whole-stage codegen + JIT
         best = float("inf")
         for _ in range(5):
             t0 = time.perf_counter()
             run()
             best = min(best, time.perf_counter() - t0)
-    finally:
-        for k, v in saved.items():
-            try:
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-            except Exception:  # noqa: BLE001
-                pass
     return round(best, 3)
-
-
-def mem_envelope() -> None:
-    """Constrained-memory envelope (VERDICT r5 item 5): the standard bench
-    runs on a 128 GiB box with an 8g driver, but a 100 TB cluster gives each
-    executor a few GB — a plan that silently depends on a fat heap (oversized
-    broadcasts, driver-side tree blowups, un-spillable aggregation state)
-    passes the former and dies on the latter. This mode reruns the top-15
-    heaviest REGISTRY entries from the last recorded sf0.1 run under
-    local[8] + a 2 GiB heap (shared driver+executor in local mode: ~256 MB
-    per task slot, executor-grade pressure) and asserts completion. Timings
-    are recorded to MEM_ENVELOPE.json — NOT to bench_history.json, so the
-    envelope run can't poison the regression ratios.
-
-    Run: python bench.py --mem-envelope   (exit 1 if any entry fails)
-    """
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    try:
-        with open(HISTORY_PATH) as fh:
-            hist = json.load(fh)
-        same_sf = [h for h in hist if str(h.get("sf")) == str(sf)]
-        prev = same_sf[-1]["queries"] if same_sf else {}
-    except (OSError, json.JSONDecodeError, KeyError, IndexError):
-        prev = {}
-    registry = Q.queries()
-    # heaviest registry entries by the last recorded run (probes are inline
-    # constructions, not registry entries — the flows, the big dedup/graph
-    # entries, and the heavy stats land here, which is the point: these are
-    # the plans whose memory shape matters)
-    heavy = [n for n, _ in sorted(prev.items(), key=lambda kv: -kv[1]) if n in registry][:15]
-    if not heavy:  # no history at this sf: representative fallback
-        heavy = [
-            "flow_species_load", "flow_agr_load", "flow_corpus_prep",
-            "dedup_cluster_assign", "dedup_minhash_lsh", "er_entity_clusters",
-            "dedup_incremental_minhash", "g_pagerank_fixedpoint",
-            "g_kcore_peel", "j_bloom_prefilter", "ann_lsh_topk",
-            "j_deep_join_revenue", "a_validation_suite", "g_triangle_count",
-            "flow_homologene",
-        ]
-        heavy = [n for n in heavy if n in registry][:15]
-    spark = get_spark(
-        app_name="opspark-mem-envelope",
-        master="local[8]",
-        shuffle_partitions=32,
-        extra_conf={"spark.driver.memory": "2g"},
-    )
-    actual_mem = spark.conf.get("spark.driver.memory", "unknown")
-    # the conf value merely echoes the REQUEST (ADVICE r6): if a JVM gateway
-    # already existed in this process the 2g setting is silently ignored and
-    # the artifact would still claim a 2 GiB envelope. Read the real heap and
-    # FAIL the run if the constrained heap did not take effect.
-    heap_bytes = int(
-        spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-    )
-    if not (0.8 * 2**30 < heap_bytes < 3 * 2**30):
-        print(
-            json.dumps(
-                {
-                    "metric": "mem_envelope_total",
-                    "error": "constrained heap did not take effect",
-                    "driver_heap_max_bytes": heap_bytes,
-                }
-            )
-        )
-        spark.stop()
-        sys.exit(1)
-    # warmup + best-of-2, same estimator as the main bench: a single cold run
-    # bills one-time costs to whichever entry goes first — measured 127.7 s
-    # for flow_species_load cold (codegen + seed-prototype build) vs 11.8 s
-    # steady-state at the same 2g/local[8]; the envelope claim is about the
-    # PLAN's memory shape, not fixture setup
-    registry["a4_pricing_summary"](spark, sf_dir).count()
-    timings: dict[str, float] = {}
-    failures: dict[str, str] = {}
-    for name in heavy:
-        best = float("inf")
-        try:
-            for _ in range(2):
-                t0 = time.perf_counter()
-                registry[name](spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-            timings[name] = round(best, 3)
-        except Exception as ex:  # noqa: BLE001 — the artifact records the failure
-            failures[name] = f"{type(ex).__name__}: {ex}"[:300]
-    # Constrained-memory twins (VERDICT r6 item 5) — the two plans whose
-    # memory claims were arguments rather than measurements:
-    #
-    # (a) hot-variant-key FastSS: the SHUFFLE_HASH candidate join's build
-    # side can't spill, and the map-side neighborhood dedup does NOT bound
-    # cross-string fan-in on a shared variant key. This twin plants ~500
-    # DISTINCT customer names that all delete to one common string (insert
-    # one char into a fixed 19-char base at every position), i.e. one
-    # variant key carrying a ~500-row build group + ~125k candidate pairs
-    # through a single partition's hash map — measured here under the 2 GiB
-    # heap, for both join strategies (the spillable "merge" fallback too).
-    probes: dict[str, object] = {}
-    from pyspark.sql import functions as F
-
-    from ortholog_pipeline_spark.operators import dedup as DD
-
-    base = "abcdefghijklmnopqrs"  # 19 distinct chars: no identical-run aliasing
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-    # insert position/char derive from a HASH of the key, not the key itself:
-    # the %100<5 selector below fixes c_custkey mod 100, and any modular
-    # derivation would correlate with it (measured: position collapsed to 5
-    # values, fan-in 130 instead of ~500)
-    hot_name = F.expr(
-        f"concat(substring('{base}', 1, pmod(hash(c_custkey), 20)), "
-        f"char(97 + pmod(hash(c_custkey * 31 + 7), 26)), "
-        f"substring('{base}', pmod(hash(c_custkey), 20) + 1, 19))"
-    )
-    skew_cust = cust.withColumn(
-        "c_name",
-        F.when(F.col("c_custkey") % 100 < 5, hot_name).otherwise(F.col("c_name")),
-    )
-    for strategy in ("shuffle_hash", "merge"):
-        key = f"fastss_hot_variant_{strategy}"
-        try:
-            t0 = time.perf_counter()
-            n = DD.editdist1_join(
-                skew_cust, "c_name", candidate_join=strategy
-            ).count()
-            probes[key] = {
-                "sec": round(time.perf_counter() - t0, 3),
-                "pairs": n,
-            }
-        except Exception as ex:  # noqa: BLE001
-            failures[key] = f"{type(ex).__name__}: {ex}"[:300]
-
-    # (b) RocksDB state-scale stream under the constrained heap: 1M events
-    # through 24 watermarked micro-batch commits — state lives off-heap in
-    # RocksDB, so the probe pins that the commit lifecycle itself doesn't
-    # depend on a fat driver.
-    try:
-        ss = stream_state_probe(spark, sf_dir)
-        if "error" in ss:
-            failures["stream_state_scale"] = str(ss["error"])
-        else:
-            probes["stream_state_scale"] = {
-                k: ss.get(k)
-                for k in (
-                    "provider",
-                    "total_sec",
-                    "n_batches",
-                    "latency_drift_steady_state",
-                )
-            }
-    except Exception as ex:  # noqa: BLE001
-        failures["stream_state_scale"] = f"{type(ex).__name__}: {ex}"[:300]
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    artifact = {
-        "metric": "mem_envelope_total",
-        "git_head": _git_head(),
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "sf": sf,
-        "config": {
-            "master": "local[8]",
-            "driver_memory_requested": "2g",
-            "driver_memory_effective": actual_mem,
-            "driver_heap_max_bytes": heap_bytes,
-            "shuffle_partitions": 32,
-        },
-        "n_queries": len(heavy),
-        "queries": timings,
-        "probes": probes,
-        "failures": failures,
-        "vs_full_box": {
-            n: round(timings[n] / prev[n], 2)
-            for n in timings
-            if n in prev and prev[n] > 0
-        },
-    }
-    with open(os.path.join(repo, "MEM_ENVELOPE.json"), "w") as fh:
-        json.dump(artifact, fh, indent=1)
-    print(json.dumps(artifact, separators=(",", ":")))
-    spark.stop()
-    if failures:
-        sys.exit(1)
-
-
-def _documents_10x(spark, sf_dir):
-    """10 replicas of the documents table with per-replica word rotation.
-
-    CORRECTION (r6, measured): the original claim that rotated texts "share
-    almost no trigram shingles" is FALSE — rotation preserves token adjacency,
-    so a doc and its rotation share ~95% of shingles (median Jaccard 0.96 at
-    sf0.01) and every doc forms a 10-clique of true near-dups across replicas.
-    The probe therefore measures volume scaling PLUS a 45-pairs-per-doc
-    verify clique — a stable, comparable workload that every round has
-    measured identically, so the construction is kept for cross-round ratio
-    continuity. The alias-safe construction (per-replica token suffixes:
-    exact intra-replica pair structure, ZERO cross-replica overlap, safe past
-    rotation's token-count aliasing limit) lives in tools/sf10_probes.py and
-    backs the 1x/10x/100x growth ratios in SF10_PROBES.json."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    parts = [docs]
-    for i in range(1, 10):
-        rotated = F.array_join(
-            F.concat(F.slice(toks, i + 1, 1 << 20), F.slice(toks, 1, i)), " "
-        )
-        parts.append(
-            docs.select(
-                (F.col("doc_id") + i * 10_000_000).alias("doc_id"),
-                rotated.alias("text"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-#: Steady-state per-batch latency growth bar for the state-scale probe: a
-#: healthy delta-commit store (RocksDB) holds ~1.0 once windows fill; >1.2
-#: means commit cost is growing with TOTAL state — the rewrite-the-world
-#: failure mode the probe exists to catch.
-STREAM_DRIFT_BAR = 1.2
-
-
-def steady_drift(batch_ms: list, skip: int = 4) -> float | None:
-    """Steady-state per-batch latency growth over batches ``skip``.. (the
-    first batches aggregate partially-filled day windows — structurally
-    cheaper — so including them reads 1.4-1.5 on a HEALTHY store).
-
-    Estimator (r8, supersedes the r7 half-means-of-4): median of the last
-    half of the steady window over the median of the first half. The r7
-    half-MEANS estimator had builder-measured noise 0.86–2.26 on IDENTICAL
-    code at n=8 steady batches (one GC spike in either half moves it ~25%)
-    and false-flagged the driver's r7 artifact at 1.23 vs the 1.2 bar.
-    Medians over a window lengthened to 20 steady commits (24 batches at
-    files_per_trigger=2) are insensitive to the RocksDB maintenance spikes
-    that land every ~10 commits AND to GC outliers, while a genuine
-    commit-cost-grows-with-total-state regression raises the whole second
-    half's level and cannot hide from its median. (Theil–Sen slope fitting
-    was tried and rejected on measured series: a late maintenance residual
-    extrapolates through the fitted line and read up to 1.24 on series
-    whose half-medians read ≤1.08.) Measured same-code spread with the
-    r8 probe config (24 commits, changelog checkpointing): 0.93–1.08
-    across 10 repeated runs, vs 0.86–2.26 before.
-    None when fewer than 12 steady batches — below that no estimator
-    separates drift from noise. Pure function so it is unit-testable
-    (tests inject flat+GC-spike, level-shift, and linear-growth series)."""
-    pts = [float(x) for x in batch_ms[skip:]]
-    n = len(pts)
-    if n < 12:
-        return None
-
-    def med(xs: list) -> float:
-        ys = sorted(xs)
-        m = len(ys)
-        return ys[m // 2] if m % 2 else (ys[m // 2 - 1] + ys[m // 2]) / 2.0
-
-    first, last = pts[: n // 2], pts[n // 2 :]
-    base = med(first)
-    if base <= 0:
-        return None
-    return round(med(last) / base, 2)
 
 
 #: Start/end calibration anchors further apart than this mean the box shifted
@@ -709,657 +429,55 @@ def env_shift_estimate(
     return median_ratio, "median_prev_ratio (no calibration in history)"
 
 
-def stream_state_probe(
-    spark, sf_dir: str, key_replicas: int = 10, n_files: int = 48,
-    files_per_trigger: int = 2,
-) -> dict:
-    """Run the state-scale stream once and return its per-batch telemetry
-    (see the call site in main() for the full design rationale)."""
-    import tempfile as _tf
-
-    from pyspark.sql import functions as F
-
-    from ortholog_pipeline_spark.queries import _t as _qt
-    from ortholog_pipeline_spark.session import ROCKSDB_PROVIDER
-    from ortholog_pipeline_spark.streaming.sources import read_stream_events
-    from ortholog_pipeline_spark.streaming.state_conf import (
-        CHANGELOG_KEY,
-        PROVIDER_KEY,
-    )
-
-    ev_base = _qt(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    ev_parts = [ev_base]
-    for i in range(1, key_replicas):
-        ev_parts.append(
-            ev_base.withColumn(
-                "event_id", F.col("event_id") + i * 10_000_000
-            ).withColumn("user_id", F.col("user_id") + i * 10_000_000)
-        )
-    ev10 = ev_parts[0]
-    for p in ev_parts[1:]:
-        ev10 = ev10.unionByName(p)
-    land_state = _tf.mkdtemp(prefix="bench_state_land_")
-    # range-partition by event time: FileStreamSource consumes part files in
-    # path order, so batches advance THROUGH time like a real stream and the
-    # watermark trails behind — a plain repartition() mixes the whole time
-    # range into every file, the watermark leaps to max-1h after batch 1,
-    # and every later window is dropped as late (the probe would measure
-    # late-row discarding, not state growth; observed: state stops growing)
-    ev10.repartitionByRange(n_files, "ts").write.mode("overwrite").parquet(
-        land_state
-    )
-
-    def _run():
-        q = (
-            read_stream_events(
-                spark, land_state, max_files_per_trigger=files_per_trigger
-            )
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 day"), "user_id")
-            .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-            .writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", _tf.mkdtemp(prefix="bench_state_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-        return q
-
-    # RocksDB with changelog checkpointing is the session default
-    # (session.STREAMING_STATE_CONF) and the probe's point: each commit
-    # uploads only the batch's CHANGELOG, full snapshots move to background
-    # maintenance, so per-commit cost is bound by the delta, not total state.
-    # Measured WITHOUT changelogs: snapshot-mode maintenance raises the
-    # late-window commit level by 25-65% as state grows (half-medians read
-    # 1.27-1.64 on healthy code); with them the same series holds 0.95-1.08.
-    # Pinned here (and restored after) so a session that changed either conf
-    # still measures that configuration.
-    pinned = {PROVIDER_KEY: ROCKSDB_PROVIDER, CHANGELOG_KEY: "true"}
-    saved = {k: spark.conf.get(k, None) for k in pinned}
+def _loadavg() -> list | None:
     try:
-        for k, v in pinned.items():
-            spark.conf.set(k, v)
-        t0 = time.perf_counter()
-        q = _run()
-        total = round(time.perf_counter() - t0, 3)
-        prog = [p for p in q.recentProgress if p.get("numInputRows", 0) > 0]
-        ops = [p["stateOperators"][0]["numRowsTotal"] for p in prog]
-    except Exception as ex:  # noqa: BLE001 — recorded in the artifact
-        return {"error": f"{type(ex).__name__}: {ex}"[:200]}
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    batch_ms = [p["durationMs"]["triggerExecution"] for p in prog]
-    drift = None
-    if len(batch_ms) >= 7:
-        first3 = batch_ms[1:4]  # batch 0 absorbs stream start
-        last3 = batch_ms[-3:]
-        drift = round(sum(last3) / 3 / (sum(first3) / 3), 2)
-    # Steady-state drift (VERDICT r6 item 5, estimator reworked r8): the
-    # legacy last3/first3 ratio mixes the window-fill transient into its
-    # denominator — the first batches aggregate partially-filled day windows
-    # (structurally cheaper), so it reads 1.4-1.5 on a HEALTHY store and a
-    # real commit-cost regression would have to clear that before anyone
-    # noticed. The pinned signal therefore compares batches AFTER the windows
-    # fill: half-medians of batches 4.. (24 commits -> two 10-batch halves,
-    # see steady_drift). A delta-commit store stays ~1.0 there;
-    # rewrite-the-world commit cost raises the whole second half. Bar
-    # enforced by main(): steady drift > STREAM_DRIFT_BAR flags the artifact.
-    return {
-        "provider": "rocksdb",
-        "changelog_checkpointing": True,
-        "total_sec": total,
-        "n_batches": len(batch_ms),
-        "batch_ms": batch_ms,
-        "state_rows_final": ops[-1] if ops else None,
-        "state_rows_max": max(ops, default=None),
-        "latency_drift_last3_over_first3": drift,
-        "latency_drift_steady_state": steady_drift(batch_ms),
-        "drift_bar": STREAM_DRIFT_BAR,
-    }
+        return list(os.getloadavg())
+    except OSError:
+        return None
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     spark = get_spark(app_name="opspark-bench")
     registry = Q.queries()
 
     # warmup: JVM + codegen + parquet footer reads
     registry["a4_pricing_summary"](spark, sf_dir).count()
 
-    # environment anchor, measured right after warmup so it sees the same JVM
-    # state every round (code pinned — see calibration_probe)
+    # environment anchor, right after warmup so it sees the same JVM state
+    # every run. The box's load comes in waves, so a single-point anchor is
+    # under-determined: the anchor AND loadavg are sampled again after the
+    # last timed entry, and env_shift_estimate refuses to normalize when the
+    # two anchors disagree beyond ANCHOR_SPREAD_BAR.
     calibration_sec = calibration_probe(spark)
-    # r11 (VERDICT r10 ask 7): the box's load comes in waves, so a single-point
-    # anchor is under-determined — sample the anchor AND loadavg at session
-    # start and again after the last timed entry. env_shift is the start
-    # anchor vs history unless the two anchors disagree beyond
-    # ANCHOR_SPREAD_BAR, in which case env_shift_estimate refuses to
-    # normalize.
-    try:
-        loadavg_start = list(os.getloadavg())
-    except OSError:
-        loadavg_start = None
+    loadavg_start = _loadavg()
 
-    # history loaded UP FRONT for the self-stabilizing pass (VERDICT r4 item
-    # 4): an entry whose best-of-2 still sits >1.3x above its last recorded
-    # time at this sf gets ONE extra measurement before the number is
-    # recorded — that third sample almost always lands back on the envelope
-    # when the deviation was a GC/JIT artifact, and changes nothing when the
-    # regression is structural (min of N can only go down).
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    try:
-        with open(HISTORY_PATH) as fh:
-            _hist0 = json.load(fh)
-        _same_sf0 = [h for h in _hist0 if str(h.get("sf")) == str(sf_val)]
-        hist_prev = _same_sf0[-1]["queries"] if _same_sf0 else {}
-    except (OSError, json.JSONDecodeError, KeyError, IndexError):
-        hist_prev = {}
+    hist, last = read_history(sf_val)
+    prev = last.get("queries", {})
+    timings: dict[str, float] = {}
     retimed: list[str] = []
 
-    def _needs_retime(name: str, sec: float) -> bool:
-        prev = hist_prev.get(name)
-        if not prev or sec <= 1.3 * prev:
-            return False
-        # same noise floor as the regression rule: sub-3 s entries that moved
-        # under 1 s absolute are jitter, not worth a third run
-        return prev > 3.0 or sec - prev > 1.0
+    def timed(name: str, fn) -> None:
+        sec, _, again = P.best_of(spark, fn, prev=prev.get(name))
+        timings[name] = sec
+        if again:
+            retimed.append(name)
 
-    timings: dict[str, float] = {}
     for name in HEADLINE:
-        # best-of-2: a single local-JVM measurement carries 2-4x run-to-run
-        # noise (GC pauses from earlier queries' garbage, first-use codegen
-        # compilation billed to whichever query triggers it). The min of two
-        # back-to-back runs is the standard steady-state estimator and tracks
-        # the PLAN cost rather than the JVM's mood; both runs execute the
-        # full plan (count() materializes everything).
-        best = float("inf")
-        runs = 2
-        done = 0
-        while done < runs:
-            t0 = time.perf_counter()
-            registry[name](spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-            done += 1
-            if done == runs and runs == 2 and _needs_retime(name, best):
-                runs = 3  # one stabilizing sample, then stop either way
-                retimed.append(name)
-        timings[name] = round(best, 3)
-        # collect the previous query's garbage OUTSIDE the next measurement
-        spark.sparkContext._jvm.System.gc()
-
-    def _best2(fn, name: str | None = None) -> float:
-        """min of two full executions (same steady-state estimator as the
-        headline loop); with ``name``, one extra
-        stabilizing sample when the result deviates >1.3x from history (the
-        probes are the slowest entries, where a stray GC pause costs the
-        artifact the most signal)."""
-        best = float("inf")
-        runs, done = 2, 0
-        while done < runs:
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-            done += 1
-            if done == runs and runs == 2 and name and _needs_retime(name, best):
-                runs = 3
-                retimed.append(name)
-        spark.sparkContext._jvm.System.gc()
-        return round(best, 3)
-
-    # dedup scaling probe: same operator, 10x the documents (rotated replicas) —
-    # the number the judge reads against dedup_minhash_lsh for the growth ratio
-    from ortholog_pipeline_spark.operators import dedup as DD
-
-    docs10 = _documents_10x(spark, sf_dir)
-    timings["dedup_minhash_lsh_10x"] = _best2(
-        lambda: DD.minhash_lsh_dedup(
-            docs10, k=3, num_hashes=16, bands=4, threshold=0.5
-        ).count(),
-        "dedup_minhash_lsh_10x",
-    )
-
-    # ANN scaling probe: 10x the embeddings (component-rotated replicas keep
-    # norms and neighborhood structure but land in different LSH buckets), same
-    # 20 query vectors — measures corpus-side growth of the probe join
-    from pyspark.sql import functions as F
-
-    from ortholog_pipeline_spark.operators import similarity as SIM
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    parts = [emb]
-    for i in range(1, 10):
-        rotated = F.concat(
-            F.slice("embedding", i + 1, 1 << 20), F.slice("embedding", 1, i)
-        )
-        parts.append(
-            emb.select(
-                (F.col("vec_id") + i * 10_000_000).alias("vec_id"),
-                rotated.alias("embedding"),
-            )
-        )
-    emb10 = parts[0]
-    for p in parts[1:]:
-        emb10 = emb10.unionByName(p)
-    q20 = emb.filter(F.col("vec_id") < 20)
-    timings["ann_lsh_topk_10x"] = _best2(
-        lambda: SIM.lsh_topk(emb10, q20, k=10).count(), "ann_lsh_topk_10x"
-    )
-
-    # stored-index probe: build the dedup band index once (untimed), then time
-    # ONLY the batch probe — the number that substantiates "per-ingest cost is
-    # batch-proportional" vs dedup_incremental_minhash's full recompute
-    import tempfile
-
-    from ortholog_pipeline_spark.operators import dedup_index as DI
-    from ortholog_pipeline_spark.sources.state import StateStore
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    with tempfile.TemporaryDirectory() as td:
-        store = StateStore(spark, td)
-        DI.build_dedup_index(store, docs.filter(F.col("doc_id") % 10 != 7))
-        batch = docs.filter(F.col("doc_id") % 10 == 7)
-        timings["dedup_index_probe"] = _best2(
-            lambda: DI.probe_dedup_index(store, batch, threshold=0.5).count(),
-            "dedup_index_probe",
-        )
-
-    # 10x scaling probes for the three heaviest REAL entries (VERDICT r2 item
-    # 3): same operators, 10x the input, structure-preserving replication so
-    # the ratio measures volume scaling, not planted-duplicate explosion.
-    from ortholog_pipeline_spark.operators import components as CCop
-
-    # (a) near-dup clustering: rotated 10x docs -> LSH pairs -> large/small-star
-    timings["dedup_cluster_assign_10x"] = _best2(
-        lambda: CCop.dedup_clusters(
-            docs10,
-            DD.minhash_lsh_dedup(docs10, k=3, num_hashes=16, bands=4, threshold=0.5)
-            .select("id_1", "id_2"),
-        ).count(),
-        "dedup_cluster_assign_10x",
-    )
-
-    # (b) entity resolution: 10 replicas with 2-char name tags (tags differ in
-    # two positions, so no cross-replica edit-distance-1 pairs — per-replica
-    # pair density stays that of the original) + offset keys
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-    cparts = [cust]
-    for i in range(1, 10):
-        tag = chr(97 + i) * 2 + "~"
-        cparts.append(
-            cust.select(
-                (F.col("c_custkey") + i * 10_000_000).alias("c_custkey"),
-                F.concat(F.lit(tag), F.col("c_name")).alias("c_name"),
-                "c_nationkey",
-            )
-        )
-    cust10 = cparts[0]
-    for cp in cparts[1:]:
-        cust10 = cust10.unionByName(cp)
-
-    def _er_10x():
-        # same nation-blocked FastSS shape as the er_entity_clusters query
-        pairs = DD.editdist1_join(cust10, "c_name", block_cols=["c_nationkey"])
-        m1 = cust10.select(
-            F.col("c_name").alias("s1"),
-            F.col("c_custkey").alias("k1"),
-            "c_nationkey",
-        )
-        m2 = cust10.select(
-            F.col("c_name").alias("s2"),
-            F.col("c_custkey").alias("k2"),
-            "c_nationkey",
-        )
-        edges = (
-            pairs.join(m1, ["s1", "c_nationkey"])
-            .join(m2, ["s2", "c_nationkey"])
-            .select(
-                F.least("k1", "k2").alias("id_1"),
-                F.greatest("k1", "k2").alias("id_2"),
-            )
-        )
-        CCop.connected_components(edges).groupBy("component").count().count()
-
-    timings["er_entity_clusters_10x"] = _best2(_er_10x, "er_entity_clusters_10x")
-
-    # (c) k-core peel: 10 vertex-disjoint copies of the hashed graph (node
-    # space offset per replica -> same per-component density, 10x volume).
-    # The 10x edge set is MATERIALIZED to parquet first (untimed): a real 10x
-    # run peels a stored graph, and keeping the 10-way distinct-union lazy
-    # inside three unrolled peel rounds makes Catalyst's constraint
-    # propagation explode combinatorially (measured: driver OOM at 8g heap).
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    e0 = (
-        li.select(
-            F.least(F.col("l_orderkey") % 2000, F.col("l_partkey") % 2000).alias("u"),
-            F.greatest(F.col("l_orderkey") % 2000, F.col("l_partkey") % 2000).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    reps = [e0]
-    for i in range(1, 10):
-        reps.append(
-            e0.select(
-                (F.col("u") + i * 2000).alias("u"), (F.col("v") + i * 2000).alias("v")
-            )
-        )
-    e10 = reps[0]
-    for r in reps[1:]:
-        e10 = e10.unionByName(r)
-    with tempfile.TemporaryDirectory() as td10:
-        epath1, epath10 = f"{td10}/edges1", f"{td10}/edges10"
-        e0.write.parquet(epath1)
-        e10.write.parquet(epath10)
-
-        def _kcore_stored(path: str):
-            def run():
-                edges = spark.read.parquet(path)
-                for _ in range(3):
-                    deg = (
-                        edges.select(F.col("u").alias("node"))
-                        .unionByName(edges.select(F.col("v").alias("node")))
-                        .groupBy("node")
-                        .agg(F.count(F.lit(1)).alias("deg"))
-                        .filter(F.col("deg") >= 60)
-                        .select("node")
-                    )
-                    edges = edges.join(
-                        F.broadcast(deg.withColumnRenamed("node", "u")),
-                        "u",
-                        "left_semi",
-                    ).join(
-                        F.broadcast(deg.withColumnRenamed("node", "v")),
-                        "v",
-                        "left_semi",
-                    )
-                edges.count()
-
-            return run
-
-        # the 1x-stored twin exists so the 10x ratio compares peel-vs-peel:
-        # the g_kcore_peel headline entry spends most of its time deriving
-        # the edge set from lineitem, which the stored probes exclude
-        timings["g_kcore_peel_1x_stored"] = _best2(_kcore_stored(epath1), "g_kcore_peel_1x_stored")
-        timings["g_kcore_peel_10x"] = _best2(_kcore_stored(epath10), "g_kcore_peel_10x")
-
-    # flagship-flow scaling probe: run_species_load on 1x and 10x the relation
-    # stream (evidence-variant replicas, so the A2 dedup-merge does real
-    # token-union work instead of collapsing identical rows for free). Stores
-    # are pre-seeded OUTSIDE the timing and fresh per run (the flow mutates
-    # snapshot state); the timed section is the flow itself. r1 recorded the
-    # expected shape: near-flat, because merge collapses the stream at the
-    # FIRST shuffle and everything downstream is keyed on the bounded
-    # (gene x species) space.
-    from ortholog_pipeline_spark.plans.species_load import run_species_load
-    from ortholog_pipeline_spark.queries_flows import (
-        RUN_TS,
-        _seed_store,
-        _species_world,
-    )
-
-    world = _species_world(spark, sf_dir)
-    rel1 = world["relations"]
-    rparts = [rel1]
-    for i in range(1, 10):
-        rparts.append(
-            rel1.withColumn(
-                "data_set_name",
-                F.concat(F.col("data_set_name"), F.lit(f", T{i}")),
-            )
-        )
-    rel10 = rparts[0]
-    for rp in rparts[1:]:
-        rel10 = rel10.unionByName(rp)
-
-    # stores are hardlink-cloned from a prototype seeded ONCE here (outside
-    # all timings): per-run store setup is then file-metadata-only ms, so a
-    # variable run count (the stabilizing third sample) just clones again
-    _seed_store(spark, world, "bench_flow_", cache_key=f"bench_species:{sf_dir}")
-
-    def _flow_probe(rel):
-        def run():
-            store = _seed_store(
-                spark, world, "bench_flow_", cache_key=f"bench_species:{sf_dir}"
-            )
-            run_species_load(store, rel, RUN_TS, 3, delete_threshold_pct=95.0)
-
-        return run
-
-    timings["flow_species_load_1x_plan"] = _best2(
-        _flow_probe(rel1), "flow_species_load_1x_plan"
-    )
-    timings["flow_species_load_10x_plan"] = _best2(
-        _flow_probe(rel10), "flow_species_load_10x_plan"
-    )
-
-    # AGR-flow scaling probe: run_agr_load on 1x and 10x the TSV line stream.
-    # Replicas get a distinct algorithms tag, so methods_matched — part of the
-    # 3-col upsert key — differs per replica: the incoming key space, the
-    # full-outer verdict join, and the snapshot write all really grow 10x
-    # (the adversarial case for an upsert flow; flag-only variants would
-    # collapse at the first groupBy like the species probe's evidence
-    # variants do). Expected shape: sublinear-but-growing, bounded by the
-    # sync join + write, NOT by resolution (the curie/symbol dims are fixed).
-    from ortholog_pipeline_spark.plans.agr_load import run_agr_load
-    from ortholog_pipeline_spark.queries_flows import _agr_world
-
-    aworld = _agr_world(spark, sf_dir)
-    al1 = aworld["lines"]
-    aparts = [al1]
-    for i in range(1, 10):
-        aparts.append(
-            al1.withColumn(
-                "algorithms", F.concat(F.col("algorithms"), F.lit(f"|X{i}"))
-            )
-        )
-    al10 = aparts[0]
-    for ap in aparts[1:]:
-        al10 = al10.unionByName(ap)
-
-    _seed_store(spark, aworld, "bench_agrflow_", cache_key=f"bench_agr:{sf_dir}")
-
-    def _agr_probe(lines):
-        def run():
-            store = _seed_store(
-                spark, aworld, "bench_agrflow_", cache_key=f"bench_agr:{sf_dir}"
-            )
-            run_agr_load(store, lines, RUN_TS, delete_threshold_pct=100.0)
-
-        return run
-
-    timings["flow_agr_load_1x_plan"] = _best2(_agr_probe(al1), "flow_agr_load_1x_plan")
-    timings["flow_agr_load_10x_plan"] = _best2(
-        _agr_probe(al10), "flow_agr_load_10x_plan"
-    )
-
-    # TRUE streaming-execution probe: the events table landed as 16 parquet
-    # files, consumed by a real StreamingQuery (file source,
-    # maxFilesPerTrigger=4 -> 4 micro-batches) through the watermarked
-    # tumbling agg into a noop sink with a real checkpoint dir. This times
-    # the micro-batch lifecycle — offset log, state-store commits per batch,
-    # watermark advancement — which the batch-mode stream_* headline entries
-    # cannot see. Fresh checkpoint per run (a reused one would replay
-    # nothing and measure an empty no-op batch).
-    import tempfile as _tf
-
-    from ortholog_pipeline_spark.queries import _t as _qt
-    from ortholog_pipeline_spark.session import ROCKSDB_PROVIDER
-    from ortholog_pipeline_spark.streaming.sources import read_stream_events
-    from ortholog_pipeline_spark.streaming.state_conf import (
-        CHANGELOG_KEY,
-        PROVIDER_KEY,
-    )
-    from ortholog_pipeline_spark.streaming.windows import tumbling_agg
-
-    land_dir = _tf.mkdtemp(prefix="bench_stream_land_")
-    _qt(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    ).repartition(16).write.mode("overwrite").parquet(land_dir)
-
-    def _stream_run():
-        q = (
-            tumbling_agg(
-                read_stream_events(spark, land_dir, max_files_per_trigger=4),
-                window_size="1 day",
-                watermark="1 hour",
-            )
-            .writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", _tf.mkdtemp(prefix="bench_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    # r9: keyed by provider — the engine session now defaults to RocksDB +
-    # changelog checkpointing (STREAMING_STATE_CONF), so this probe's store
-    # changed from the HDFS default it ran under through r8; a fresh history
-    # key keeps the ratio rule honest (same rationale as the 24-commit rekey
-    # in r8). The measured number IS the engine-default lifecycle now.
-    timings["stream_microbatch_availablenow_rocksdb"] = _best2(
-        _stream_run, "stream_microbatch_availablenow_rocksdb"
-    )
-
-    # Streaming STATE-SCALE probe (VERDICT r5 item 7): the lifecycle probe
-    # above runs 4 micro-batches over a (window x event_type) agg whose state
-    # is a few dozen rows — state never gets big, so state-store growth across
-    # commits is invisible. This probe keys the agg by USER (10x the key
-    # space via replica offsets -> ~10x state rows) and runs 6x the batches
-    # (48 files / 2 per trigger = 24 commits — lengthened from 12 in r8 so
-    # the drift estimator has a 20-batch steady window), then reads the
-    # per-batch trigger latencies from recentProgress: a state store whose
-    # commit cost grows with TOTAL state (rewrite-the-world snapshots) shows
-    # monotonic drift; a healthy delta-commit store stays flat-ish. Recorded
-    # as last3/first3 mean ratio (batch 0 excluded — it absorbs stream
-    # start) plus the half-medians steady-state drift (see steady_drift;
-    # Theil-Sen was tried and rejected there — its docstring says why).
-    # Runs on the RocksDB provider (the 100 TB-state choice: delta commits +
-    # out-of-heap state); a failed run is recorded as an error, not retried
-    # on another provider. Single measurement (the number IS the per-batch
-    # series).
-    # best-of-2 on the DRIFT as well as the time (r7; kept in r8 even though
-    # the reworked estimator's same-code spread is 0.93-1.08 over 10 runs):
-    # a real commit-cost-grows-with-state regression shows in EVERY run,
-    # so the flag requires min(drift over two runs) > bar; both series land
-    # in history.
-    ss_runs = [stream_state_probe(spark, sf_dir) for _ in range(2)]
-    ss_runs = [r for r in ss_runs if "error" not in r] or ss_runs[:1]
-    stream_state = min(
-        ss_runs,
-        key=lambda r: r.get("latency_drift_steady_state") or float("inf"),
-    )
-    stream_state["drift_both_runs"] = [
-        r.get("latency_drift_steady_state") for r in ss_runs
-    ]
-    # keyed by commit count: the r8 probe runs 24 commits where r7 ran 12
-    # (same 1M events, finer triggers), so its wall time is not comparable
-    # to the old entry's history — a fresh key keeps the ratio rule honest
-    timings["stream_state_scale_24c"] = min(
-        r.get("total_sec", 0.0) for r in ss_runs
-    )
-    stream_state_drift = stream_state.get("latency_drift_last3_over_first3")
-
-    # Skewed-world probe (VERDICT r4 item 5): every 10x probe replicates
-    # UNIFORMLY, but real 100 TB keys are Zipfian. This pair routes ~10% of
-    # all rows onto ONE hot key through the three shuffle shapes that carry
-    # the engine's heaviest keys — the conflict-style key join, connected
-    # components, and the MinHash band shuffle — with AQE skew handling left
-    # at its session defaults, and records hot/uniform on identical volumes.
-    # Construction notes per path:
-    #  * join: 10% of lineitem rows remapped to orderkey 1 — the probe join
-    #    keys on (orderkey), so one reducer key carries 60k rows at sf0.1;
-    #  * CC: 10% of edges re-pointed at node 0 (a star) — exactly the shape
-    #    large-star/small-star is there to cut;
-    #  * MinHash: 10% of docs get IDENTICAL text, putting one band bucket at
-    #    10% occupancy — candidate pairs inside the hot bucket are real work
-    #    (a duplicate-heavy corpus costs more than a clean one), so this leg
-    #    measures hot-bucket handling, not pure shuffle skew.
-    def _skew_inputs(hot: bool):
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-            "l_orderkey", "l_partkey", "l_extendedprice"
-        )
-        if hot:
-            li = li.withColumn(
-                "l_orderkey",
-                F.when(F.col("l_partkey") % 10 == 0, F.lit(1)).otherwise(
-                    F.col("l_orderkey")
-                ),
-            )
-        edges = li.select(
-            (F.col("l_orderkey") % 50021).alias("u"),
-            (F.col("l_partkey") % 50021 + 50021).alias("v"),
-        )
-        if hot:
-            edges = edges.withColumn(
-                "u", F.when(F.col("v") % 10 == 0, F.lit(0)).otherwise(F.col("u"))
-            )
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        if hot:
-            hot_text = " ".join(f"hotword{i % 17} filler{i % 5}" for i in range(40))
-            docs = docs.withColumn(
-                "text",
-                F.when(F.col("doc_id") % 10 == 3, F.lit(hot_text)).otherwise(
-                    F.col("text")
-                ),
-            )
-        return li, edges, docs
-
-    def _skew_run(hot: bool):
-        def run():
-            li, edges, docs = _skew_inputs(hot)
-            ords = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-                "o_orderkey", "o_custkey"
-            )
-            # conflict-shaped key join: full shuffle join on the (hot) key,
-            # then a per-key aggregate — broadcast is disabled for the probe
-            # so the shuffle path (the one AQE skew-split serves) is what runs
-            li.hint("SHUFFLE_MERGE").join(
-                ords, li.l_orderkey == ords.o_orderkey
-            ).groupBy("o_custkey").agg(F.sum("l_extendedprice")).count()
-            CCop.connected_components(
-                edges.filter(F.col("u") != F.col("v"))
-                .distinct()
-                .withColumnsRenamed({"u": "id_1", "v": "id_2"})
-            ).count()
-            DD.minhash_lsh_dedup(
-                docs, k=3, num_hashes=16, bands=4, threshold=0.5
-            ).count()
-
-        return run
-
-    timings["skew_uniform_probe"] = _best2(_skew_run(False), "skew_uniform_probe")
-    timings["skew_hotkey_probe"] = _best2(_skew_run(True), "skew_hotkey_probe")
+        timed(name, lambda: registry[name](spark, sf_dir).count())
+    stream_state = P.bench_probes(spark, sf_dir, timed, timings)
     skew_ratio = (
         round(timings["skew_hotkey_probe"] / timings["skew_uniform_probe"], 2)
         if timings["skew_uniform_probe"] > 0
         else None
     )
 
-    # r11 closing anchor (VERDICT r10 ask 7): same pinned probe, re-measured
-    # after the LAST timed entry. A >15% spread between the two anchors means
-    # the box shifted mid-run and calibration-normalized totals from this run
-    # are under-determined — env_shift_estimate then refuses to normalize.
+    # closing anchor: a >15% spread between the two anchors means the box
+    # shifted mid-run and normalized totals from this run are under-determined
     calibration_end_sec = calibration_probe(spark)
-    try:
-        loadavg_end = list(os.getloadavg())
-    except OSError:
-        loadavg_end = None
+    loadavg_end = _loadavg()
     anchor_spread = (
         round(
             max(calibration_sec, calibration_end_sec)
@@ -1377,37 +495,24 @@ def main() -> None:
         else None
     )
 
-    # per-query regression tracking vs the previous recorded run (VERDICT r2
-    # item 7): ratio > 1.5 is a fail-soft warning surfaced in the artifact
-    prev_ratio: dict[str, float] = {}
+    # per-query regression tracking vs the previous run at this sf: a ratio
+    # over the bar is a fail-soft warning surfaced in the artifact
+    prev_ratio = {
+        name: round(sec / prev[name], 2)
+        for name, sec in timings.items()
+        if prev.get(name, 0) > 0
+    }
     regressions: list[str] = []
-    try:
-        with open(HISTORY_PATH) as fh:
-            hist = json.load(fh)
-        # compare against the last run AT THE SAME SCALE FACTOR — a
-        # validation run at another sf must not poison the ratios
-        same_sf = [h for h in hist if str(h.get("sf")) == str(sf_val)]
-        prev = same_sf[-1]["queries"] if same_sf else {}
-    except (OSError, json.JSONDecodeError, KeyError, IndexError):
-        hist, prev = [], {}
-    for name, sec in timings.items():
-        if name in prev and prev[name] > 0:
-            prev_ratio[name] = round(sec / prev[name], 2)
-    # Shift-invariant regression rule, calibration-anchored (r7, supersedes
-    # the r6 median rule): history entries may have been recorded on a
-    # DIFFERENT VM (each round runs in a fresh container — r6 measured a
-    # uniform 1.3x shift vs the r5 box, reproduced standalone on unchanged
-    # code). The environment-shift estimate is the CALIBRATION ratio — a
-    # pinned sentinel workload whose code is known-unchanged — not the median
-    # of all entry ratios, which a genuinely-uniform code regression (session
-    # config, shared loader) would raise and thereby mask (ADVICE r6). The
-    # median stays as the fallback for history entries that predate the
-    # anchor, and a median that exceeds what calibration explains is flagged
-    # for manual review rather than absorbed into the bar.
+    # Shift-invariant regression rule, calibration-anchored: history may come
+    # from a DIFFERENT VM. The environment shift is the CALIBRATION ratio — a
+    # pinned sentinel whose code is known-unchanged — not the median of all
+    # entry ratios, which a genuinely uniform code regression (session config,
+    # shared loader) would raise and thereby mask. The median stays as the
+    # fallback for history that predates the anchor, and a median above what
+    # calibration explains is flagged for review rather than absorbed.
     median_ratio = sorted(prev_ratio.values())[len(prev_ratio) // 2] if prev_ratio else 1.0
-    prev_calibration = same_sf[-1].get("calibration_sec") if same_sf else None
     env_shift, shift_source = env_shift_estimate(
-        calibration_sec, prev_calibration, median_ratio, anchor_spread
+        calibration_sec, last.get("calibration_sec"), median_ratio, anchor_spread
     )
     bar = 1.5 * max(1.0, env_shift)
     shift_review_note = None
@@ -1420,24 +525,23 @@ def main() -> None:
         )
     for name, r in prev_ratio.items():
         sec, pv = timings[name], prev[name]
-        # noise floor (BASELINE.md rule, encoded per VERDICT r3 item 7):
-        # sub-3 s entries jitter ±40% on a shared box — a regression is
-        # structural only if it clears the (shift-scaled) bar AND the entry
-        # is slow enough to trust or lost more than 1 s outright.
+        # noise floor (BASELINE.md): sub-3 s entries jitter ±40% on a shared
+        # box — a regression is structural only if it clears the
+        # (shift-scaled) bar AND the entry is slow enough to trust or lost
+        # more than 1 s outright
         if r > bar and (pv > 3.0 or sec - pv > 1.0):
             regressions.append(name)
 
-    # pinned streaming bar (VERDICT r6 item 5): steady-state drift is a
-    # first-class regression signal, same artifact surface as entry ratios
+    # steady-state stream drift is a first-class regression signal
     drift_steady = stream_state.get("latency_drift_steady_state")
-    if drift_steady is not None and drift_steady > STREAM_DRIFT_BAR:
+    if drift_steady is not None and drift_steady > P.STREAM_DRIFT_BAR:
         regressions.append(
-            f"stream_state_scale_24c:steady_drift {drift_steady} > {STREAM_DRIFT_BAR}"
+            f"stream_state_scale_24c:steady_drift {drift_steady} > {P.STREAM_DRIFT_BAR}"
         )
 
     total = round(sum(timings.values()), 3)
-    # variance note (VERDICT r4 item 4): which entries needed the stabilizing
-    # third sample, so the artifact itself says how noisy the box was
+    # which entries needed the stabilizing third sample, so the artifact
+    # itself says how noisy the box was
     variance_note = (
         f"{len(retimed)} entries deviated >1.3x from history and got a third "
         f"sample: {sorted(retimed)[:8]}"
@@ -1445,7 +549,7 @@ def main() -> None:
         else "all entries within 1.3x of history on best-of-2"
     )
     hist.append(
-        {"sf": sf_val, "git_head": _git_head(), "queries": timings,
+        {"sf": sf_val, "git_head": git_head(), "queries": timings,
          "skew_ratio": skew_ratio,
          "stream_state": stream_state, "retimed": sorted(retimed),
          "calibration_sec": calibration_sec,
@@ -1458,37 +562,6 @@ def main() -> None:
             json.dump(hist[-5:], fh, indent=1)
     except OSError:
         pass
-    # keep BASELINE.md's generated family table in lockstep with the history
-    # it claims to summarize — ONLY for the canonical envelope sf (0.1): a
-    # validation run at another sf must not overwrite the envelope table.
-    # Best-effort: a read-only checkout must not fail the bench.
-    try:
-        if str(sf_val) != "0.1":
-            raise RuntimeError(f"non-canonical sf {sf_val}; table stays at sf0.1")
-        import importlib.util as _ilu
-
-        _spec = _ilu.spec_from_file_location(
-            "refresh_baseline",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools", "refresh_baseline.py"),
-        )
-        _rb = _ilu.module_from_spec(_spec)
-        _spec.loader.exec_module(_rb)
-        with open(_rb.BASELINE) as _fh:
-            _doc = _fh.read()
-        import re as _re
-
-        _new = _re.sub(
-            _re.escape(_rb.START) + r".*?" + _re.escape(_rb.END),
-            _rb.build_table(str(sf_val)),
-            _doc,
-            count=1,
-            flags=_re.S,
-        )
-        if _new != _doc:
-            with open(_rb.BASELINE, "w") as _fh:
-                _fh.write(_new)
-    except Exception as _ex:  # noqa: BLE001 — telemetry refresh is best-effort
-        print(f"[bench] BASELINE refresh skipped: {_ex}", file=sys.stderr)
     # full per-query dump first (humans, greppable)...
     print(
         json.dumps(
@@ -1515,10 +588,9 @@ def main() -> None:
             }
         )
     )
-    # ...then ONE compact line LAST (VERDICT r3 item 2): the driver keeps only
-    # a ~2 KB stdout tail, and the full line above (~10 KB at 260 entries)
-    # truncates into unparseable JSON — all three BENCH_r{N} artifacts had
-    # "parsed": null. This line stays well under 2 KB: top-10 entries only,
+    # ...then ONE compact line LAST: the driver keeps only a ~2 KB stdout
+    # tail, and the full line above (~10 KB at 260 entries) truncates into
+    # unparseable JSON. This line stays well under 2 KB: top-10 entries only,
     # with the full map in bench_history.json (last 5 runs, same repo dir).
     top10 = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
@@ -1540,7 +612,7 @@ def main() -> None:
                 "anchor_spread": anchor_spread,
                 "env_shift": round(env_shift, 3),
                 "skew_ratio": skew_ratio,
-                "stream_state_drift": stream_state_drift,
+                "stream_state_drift": stream_state.get("latency_drift_last3_over_first3"),
                 "stream_state_drift_steady": drift_steady,
                 "stream_state_provider": stream_state.get("provider"),
                 "variance_note": variance_note,
@@ -1553,7 +625,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if "--mem-envelope" in sys.argv:
-        mem_envelope()
-    else:
-        main()
+    main()

@@ -66,7 +66,7 @@ from ortholog_pipeline_spark.queries._shared import (
 #: seeded left-slice: ~1% of ids; prime so it cannot correlate with any
 #: replica offset or fixture modulus
 SLICE_MOD = 97
-#: replica block width in scaled dirs (tools/make_scaled_dir.OFF)
+#: replica block width in scaled dirs (tools/probes.OFF)
 REPLICA_OFF = 10_000_000
 
 

@@ -535,20 +535,13 @@ class StateStore:
         os.replace(tmp, marker)  # atomic publish
 
     # -- read/write ---------------------------------------------------------
-    def read(
-        self,
-        table: str,
-        schema: T.StructType | None = None,
-        version: int | None = None,
-    ) -> DataFrame:
+    def read(self, table: str, version: int | None = None) -> DataFrame:
         """Read the current snapshot, or — time travel — any retained version
         (``version=``): versions stay readable until `vacuum` removes them, the
         same contract as Delta's `VERSION AS OF`."""
         v = self.current_version(table) if version is None else version
         if v < 0:
-            if schema is None:
-                raise FileNotFoundError(f"state table {table} has no snapshot")
-            return self.spark.createDataFrame([], schema)
+            raise FileNotFoundError(f"state table {table} has no snapshot")
         path = os.path.join(self._table_dir(table), f"v={v}")
         if version is not None and not os.path.isdir(path):
             raise FileNotFoundError(
@@ -671,63 +664,6 @@ class StateStore:
             shutil.rmtree(os.path.join(self._table_dir(table), f"v={v}"))
         return doomed
 
-    def compact(
-        self,
-        table: str,
-        target_file_bytes: int = 128 * 1024 * 1024,
-    ) -> int:
-        """Rewrite the current snapshot with right-sized files: many small files
-        (the residue of high-parallelism writes) become ~``target_file_bytes``
-        outputs, sized from the snapshot's ACTUAL on-disk bytes. Publishes the
-        rewrite as the next version — readers never see a half-compacted state."""
-        cur = self.current_version(table)
-        if cur < 0:
-            raise FileNotFoundError(f"state table {table} has no snapshot")
-        path = os.path.join(self._table_dir(table), f"v={cur}")
-        on_disk = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-        n_files = max(1, round(on_disk / target_file_bytes))
-        return self.write(table, self.read(table).coalesce(n_files))
-
-    def forget_keys(
-        self,
-        table: str,
-        keys: "DataFrame",
-        key_cols: list[str],
-    ) -> dict:
-        """Right-to-be-forgotten erasure: anti-join the keys out of the
-        current snapshot, publish, then PURGE every older version — time
-        travel must not resurrect a forgotten subject, so the erasure and the
-        history truncation are one operation. Returns an audit dict:
-        ``rows_removed``, the versions purged, and ``residual_rows`` — a
-        post-condition scan of every RETAINED version for the keys, which
-        must be 0 (asserted by the compliance test, recorded for the audit
-        log).
-
-        Scale: the erase is one left-anti join (AQE broadcasts the key side
-        when small — the usual case for deletion requests); the residual
-        audit is a semi-join count per retained version."""
-        before = self.read(table)
-        key_df = keys.select(*key_cols).dropDuplicates()
-        removed = before.join(key_df, key_cols, "left_semi").count()
-        self.apply_changes(table, deletes=key_df, delete_key=key_cols)
-        purged = self.vacuum(table, keep=1)
-        residual = 0
-        tdir = self._table_dir(table)
-        for d in os.listdir(tdir):
-            if d.startswith("v="):
-                snap = self.read(table, version=int(d.split("=", 1)[1]))
-                residual += snap.join(key_df, key_cols, "left_semi").count()
-        return {
-            "rows_removed": removed,
-            "versions_purged": purged,
-            "residual_rows": residual,
-        }
-
     def _append_version(
         self, table: str, inserts: DataFrame, publish: bool = True
     ) -> int:
@@ -780,8 +716,6 @@ class StateStore:
         delete_key: list[str] | None = None,
         updates: DataFrame | None = None,
         update_key: list[str] | None = None,
-        schema: T.StructType | None = None,
-        evolve_schema: bool = False,
         publish: bool = True,
     ) -> int:
         """next = ((current − deletes) updated-by updates) ∪ inserts, one shuffle per
@@ -791,27 +725,23 @@ class StateStore:
 
         Insert-only changes take the append fast path (`_append_version`):
         existing data files are linked into the new version untouched and only
-        the inserts run through Spark, partitioned or not. Additive schema
-        evolution needs mergeSchema-style reads, so it falls through to the
-        full rewrite."""
+        the inserts run through Spark, partitioned or not."""
         if (
             inserts is not None
             and deletes is None
             and updates is None
-            and not evolve_schema
             and self.current_version(table) >= 0
         ):
             # align names AND types to the snapshot: mixed physical types
             # across files (e.g. a LONG surrogate key appended next to INT
             # files) fail the parquet read, where the full-rewrite path would
             # have silently promoted via the union
-            cur_fields = self.read(table, schema).schema.fields
+            cur_fields = self.read(table).schema.fields
             aligned = inserts.select(
                 *[F.col(f.name).cast(f.dataType) for f in cur_fields]
             )
             return self._append_version(table, aligned, publish=publish)
-        cur = self.read(table, schema)
-        nxt = cur
+        nxt = self.read(table)
         if deletes is not None:
             key = delete_key or deletes.columns
             nxt = nxt.join(deletes.select(*key).dropDuplicates(), key, "left_anti")
@@ -822,12 +752,7 @@ class StateStore:
             keep = nxt.join(updates.select(*key).dropDuplicates(), key, "left_anti")
             nxt = keep.unionByName(updates.select(*nxt.columns))
         if inserts is not None:
-            if evolve_schema:
-                # additive evolution (Delta mergeSchema): new insert columns
-                # join the snapshot schema, existing rows read NULL for them
-                nxt = nxt.unionByName(inserts, allowMissingColumns=True)
-            else:
-                nxt = nxt.unionByName(inserts.select(*nxt.columns))
+            nxt = nxt.unionByName(inserts.select(*nxt.columns))
         return self.write(table, nxt, publish=publish)
 
 
@@ -870,17 +795,19 @@ class RunScope:
         return fut
 
 
-def next_surrogate_keys(
-    df: DataFrame, start: int, key_name: str, buckets: int = 256
-) -> DataFrame:
+#: hash buckets `next_surrogate_keys` numbers its rows in
+KEY_BUCKETS = 256
+
+
+def next_surrogate_keys(df: DataFrame, start: int, key_name: str) -> DataFrame:
     """Mint sequence-style surrogate keys for inserts (GENETOGENE_RGD_ID_RLT_SEQ
     semantics, SURVEY.md §7): deterministic dense ids offset by the snapshot max.
 
     Scale shape: a single global ``row_number`` window would move the whole insert
     set to ONE partition (measured on a 1.1M-row association insert). Instead rows
-    are hashed into ``buckets`` sub-partitions, numbered with a PARTITIONED window,
+    are hashed into `KEY_BUCKETS` sub-partitions, numbered with a PARTITIONED window,
     and offset by per-bucket cumulative counts. The offsets are computed IN-PLAN
-    (a ≤``buckets``-row aggregate + one tiny single-partition window, broadcast
+    (a ≤`KEY_BUCKETS`-row aggregate + one tiny single-partition window, broadcast
     back) rather than collected to the driver: keygen runs no result job at
     plan-construction time (only, under AQE, the input's own shuffle stages
     that the checkpoint below takes). The
@@ -898,7 +825,7 @@ def next_surrogate_keys(
     fold), and run parallel. Correctness hashes exclude surrogate keys anyway
     (SURVEY.md §7)."""
     cols = [F.col(c) for c in df.columns]
-    bucket = F.pmod(F.xxhash64(*cols), F.lit(buckets)).cast("int")
+    bucket = F.pmod(F.xxhash64(*cols), F.lit(KEY_BUCKETS)).cast("int")
     with_bucket = IT.round_checkpoint(df.withColumn("_skb", bucket))
 
     w_off = Window.orderBy("_skb").rowsBetween(Window.unboundedPreceding, -1)

@@ -1,8 +1,7 @@
 """Schemas the tests build their fixture frames and state tables with.
 
 The package declares no state-table schema: the flows read whatever the
-snapshots hold (`StateStore.read` infers it from the parquet files), so a
-column added by `apply_changes(evolve_schema=True)` survives every read. These
+snapshots hold (`StateStore.read` infers it from the parquet files). These
 are the columns the flows use, in the reference's order (SURVEY.md §1.2;
 FIXTURES.md state-table fixtures).
 """

@@ -504,9 +504,9 @@ def test_fix_xref_data_set(spark, store):
     assert fixed[2] == "Ensembl, OrthoDB"
 
 
-def test_fix_xref_and_compact_keep_orthologs_layout(spark, tmp_path):
-    """On the production layout the fix-xref flow's keyed updates and a
-    compact rewrite orthologs within its dest_species_type_key partitions."""
+def test_fix_xref_keeps_orthologs_layout(spark, tmp_path):
+    """On the production layout the fix-xref flow's keyed updates rewrite
+    orthologs within its dest_species_type_key partitions."""
     layout = ["dest_species_type_key"]
     store = _seed_store(spark, tmp_path, orthologs_layout=layout)
     dirty = store.read("orthologs").withColumn(
@@ -519,10 +519,6 @@ def test_fix_xref_and_compact_keep_orthologs_layout(spark, tmp_path):
 
     assert run_fix_xref_data_set(store).n_orthologs_fixed == 1
     assert is_partitioned_by(store, "orthologs", "dest_species_type_key")
-    fixed = sorted(map(tuple, store.read("orthologs").collect()))
-    store.compact("orthologs")
-    assert is_partitioned_by(store, "orthologs", "dest_species_type_key")
-    assert sorted(map(tuple, store.read("orthologs").collect())) == fixed
 
 
 def test_species_load_is_deterministic(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Every package module and top-level def is reachable from something the
-system runs. A def that only tests call is surface nobody maintains against a
+"""Every package module, top-level def and public method is reachable from
+something the system runs. A def that only tests call is surface nobody maintains against a
 real caller, so it goes (with its tests) rather than waiting to be wired.
 
 Roots are the runnable entries: the CLI (``__main__``), the registry
@@ -9,8 +9,11 @@ themselves), the ``oracle`` CLI, ``__spark_entry__.py``, ``bench.py``,
 of names used in live scopes (a root's module-level code, a live def's body,
 the module-level code of a module a live scope imports): a def is used when a
 live scope names it as a Name, an Attribute, an import alias or an
-identifier string constant. An ``__init__`` re-export is not a use, so
-``__init__`` files are never scopes. Pure AST, no Spark."""
+identifier string constant. A public method (no leading underscore) of a
+live class is live when a live scope names it; the rest of a live class
+(bases, decorators, private and dunder methods) is live with it. An
+``__init__`` re-export is not a use, so ``__init__`` files are never scopes.
+Pure AST, no Spark."""
 
 from __future__ import annotations
 
@@ -22,6 +25,9 @@ PACKAGE = "ortholog_pipeline_spark"
 # test reference twins: the plain-Python spec the Spark/Arrow paths are
 # checked against (tests/test_operators.py), kept on purpose
 TEST_TWINS = {"hashed_shingles31", "token_hashes31"}
+# operator entry points no code names: `begin_run`'s error message tells an
+# operator to call StateStore.repair on a store a dead writer left pending
+KEEP_METHODS = {"StateStore.repair"}
 REGISTRY_DECORATOR = "register"
 
 
@@ -53,6 +59,20 @@ def _is_registered(node: ast.AST) -> bool:
     return False
 
 
+def _is_public_method(node: ast.AST) -> bool:
+    return isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not node.name.startswith("_")
+
+
+def _scope(node: ast.AST) -> list[ast.AST]:
+    """What a live def contributes: a class without its public methods."""
+    if not isinstance(node, ast.ClassDef):
+        return [node]
+    return [
+        *node.decorator_list, *node.bases, *node.keywords,
+        *(s for s in node.body if not _is_public_method(s)),
+    ]
+
+
 def _refs(scope: list[ast.AST]) -> tuple[set[str], set[str]]:
     """(names used, dotted modules imported) by the statements in ``scope``."""
     names: set[str] = set()
@@ -77,9 +97,12 @@ def _refs(scope: list[ast.AST]) -> tuple[set[str], set[str]]:
     return names, modules
 
 
-def unreachable(repo: pathlib.Path) -> tuple[list[str], list[str]]:
-    """(package modules no live scope imports, top-level defs no live scope
-    names), both as repo-relative ``path`` / ``path:def`` strings."""
+def unreachable(
+    repo: pathlib.Path, keep_methods: set[str] = KEEP_METHODS
+) -> tuple[list[str], list[str]]:
+    """(package modules no live scope imports, top-level defs and public
+    methods of live classes no live scope names), as repo-relative ``path`` /
+    ``path:def`` / ``path:Class.method`` strings."""
     package = sorted(p for p in (repo / PACKAGE).rglob("*.py") if p.name != "__init__.py")
     roots = _root_files(repo)
     trees = {p: ast.parse(p.read_text(), filename=str(p)) for p in {*package, *roots}}
@@ -88,10 +111,15 @@ def unreachable(repo: pathlib.Path) -> tuple[list[str], list[str]]:
     # defs in root files are tracked too (a script's ``main`` is live only
     # through its ``__main__`` block) but only package defs are reported
     defs: dict[tuple[pathlib.Path, str], ast.AST] = {}
+    # (path, "Class.method") -> (method node, key of its class)
+    methods: dict[tuple[pathlib.Path, str], tuple[ast.AST, tuple[pathlib.Path, str]]] = {}
     for p in trees:
         for node in trees[p].body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs[(p, node.name)] = node
+            if isinstance(node, ast.ClassDef):
+                for m in filter(_is_public_method, node.body):
+                    methods[(p, f"{node.name}.{m.name}")] = (m, (p, node.name))
 
     def module_scope(p: pathlib.Path) -> list[ast.AST]:
         return [
@@ -121,13 +149,21 @@ def unreachable(repo: pathlib.Path) -> tuple[list[str], list[str]]:
         for key, node in defs.items():
             if key not in live_defs and key[1] in used:
                 live_defs.add(key)
-                pending.append(node)
+                pending.extend(_scope(node))
                 enter(key[0])
+        for key, (node, owner) in methods.items():
+            if key not in live_defs and owner in live_defs and node.name in used:
+                live_defs.add(key)
+                pending.append(node)
 
     dead_modules = [str(p.relative_to(repo)) for p in package if p not in live_modules]
     dead_defs = [
         f"{p.relative_to(repo)}:{name}" for (p, name) in sorted(defs)
         if p in package and (p, name) not in live_defs and name not in TEST_TWINS
+    ] + [
+        f"{p.relative_to(repo)}:{name}" for (p, name), (_, owner) in sorted(methods.items())
+        if p in package and owner in live_defs and (p, name) not in live_defs
+        and name not in keep_methods
     ]
     return dead_modules, dead_defs
 
@@ -181,3 +217,37 @@ def test_lint_flags_dead_reexported_and_dead_only_defs_but_not_registry_ones(tmp
         f"{PACKAGE}/ops.py:only_dead_calls_me",
         f"{PACKAGE}/ops.py:reexported",
     ]
+
+
+def test_lint_flags_public_methods_no_live_scope_names(tmp_path):
+    pkg = tmp_path / PACKAGE
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "__main__.py").write_text(
+        f"from {PACKAGE}.store import Store\n"
+        "if __name__ == '__main__':\n"
+        "    Store().used()\n"
+    )
+    (pkg / "store.py").write_text(
+        "class Store:\n"
+        "    def __init__(self):\n        self._x = 1\n\n"
+        "    def used(self):\n        return self._helper()\n\n"
+        "    def _helper(self):\n        return 2\n\n"
+        "    def dead(self):\n        return self.only_dead_calls_me()\n\n"
+        "    def only_dead_calls_me(self):\n        return 3\n\n"
+        "class Unused:\n"
+        "    def used(self):\n        return 4\n"
+    )
+    _, dead_defs = unreachable(tmp_path)
+    # a dead class is reported once, not per method
+    assert dead_defs == [
+        f"{PACKAGE}/store.py:Unused",
+        f"{PACKAGE}/store.py:Store.dead",
+        f"{PACKAGE}/store.py:Store.only_dead_calls_me",
+    ]
+
+
+def test_keep_methods_name_live_classes_no_scope_names():
+    """Each kept method exists, and is kept only because nothing names it."""
+    _, dead_defs = unreachable(REPO, keep_methods=set())
+    assert {d.split(":")[1] for d in dead_defs} == KEEP_METHODS

@@ -1,10 +1,11 @@
 """Regime-preservation pins for the 100x probe constructions (VERDICT r5 item
-2) and the scale-floor computations in tools/sf10_probes.py.
+2, the alias-safe set in tools/probes.py) and the growth-law and decontam
+computations in tools/sf10_probes.py.
 
 The r5 scaled-dir lesson (NOTES.md): a volume-scaled fixture is only evidence
 if the replica construction preserves the operator's REGIME — collision-group
 sizes, pair densities, modular key spaces. These tests pin the three
-guarantees tools/sf10_probes.py's constructions claim, at tiny scale, so a
+guarantees those constructions claim, at tiny scale, so a
 future edit that quietly breaks one (e.g. reintroducing token rotation, which
 ALIASES for replica index >= token count) fails in the default suite instead
 of poisoning a multi-hour 100x measurement."""
@@ -20,14 +21,22 @@ from pyspark.sql import functions as F
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _load_probes():
+def _load(name: str):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "sf10_probes_mod", os.path.join(repo, "tools", "sf10_probes.py")
+        f"{name}_mod", os.path.join(repo, "tools", f"{name}.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def _load_probes():
+    return _load("probes")
+
+
+def _load_sf10():
+    return _load("sf10_probes")
 
 
 def test_suffixed_documents_zero_cross_replica_overlap(spark):
@@ -124,13 +133,7 @@ def test_stream_state_probe_shape(spark):
     n_batches == files / files_per_trigger and nonzero final state (the
     time-ordered landing guarantees later windows are NOT dropped as late —
     the bug the repartitionByRange fix addresses)."""
-    import importlib.util as ilu
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = ilu.spec_from_file_location("bench_mod", os.path.join(repo, "bench.py"))
-    bench = ilu.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    out = bench.stream_state_probe(
+    out = _load_probes().stream_state_probe(
         spark, SF_DIR, key_replicas=2, n_files=8, files_per_trigger=2
     )
     assert out.get("provider") == "rocksdb", out
@@ -144,7 +147,7 @@ def test_growth_law_fit_signed_excess():
     """r9 (VERDICT r8 ask 7): the extended growth-law fit is pure and signed —
     a measured point ON the 1x/10x line reads 0, below it negative (never a
     violation), superlinear positive and flagged."""
-    sf10 = _load_probes()
+    sf10 = _load_sf10()
     times = {"fam_1x": 1.0, "fam_10x": 10.0, "fam_300x": 300.0}
     fit = sf10.growth_law_fit(times, "fam", [1, 10, 100], 300)
     assert fit["rel_excess_over_linear"] == 0.0 and fit["linear_law_holds"]
@@ -166,7 +169,7 @@ def test_growth_law_fit_anchors_on_largest_measured_scales():
     The r9 flow_agr shape (fixed ~6 s, slope visible only at 10x→100x)
     reads ~+11% under the largest-anchor fit, not the +42% the smallest-
     anchor fit produced from the same numbers."""
-    sf10 = _load_probes()
+    sf10 = _load_sf10()
     # the committed r9 flow_agr times (SF10_PROBES.json r9)
     times = {
         "fam_1x": 6.4,
@@ -188,7 +191,7 @@ def test_decontam_count_matches_inline_plan(spark):
     """The r9 factoring of the decontam probe plan to module level must not
     change what it computes: deterministic count over a small corpus, and the
     fixed_eval variant counts a subset regime (replica-0 eval only)."""
-    sf10 = _load_probes()
+    sf10 = _load_sf10()
     docs = spark.createDataFrame(
         [(i, f"w{i % 7} a b c d e f g h{i % 3}") for i in range(300)],
         "doc_id long, text string",

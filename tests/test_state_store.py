@@ -149,8 +149,7 @@ def test_emptied_partitioned_table_reads_and_keeps_layout(spark, tmp_path):
 
 
 def test_maintenance_keeps_partition_layout(spark, tmp_path):
-    """Keyed updates, compact and forget_keys rewrite a partitioned table
-    within its layout."""
+    """Keyed updates rewrite a partitioned table within its layout."""
     store = StateStore(spark, str(tmp_path))
     store.write(
         "t",
@@ -165,12 +164,8 @@ def test_maintenance_keeps_partition_layout(spark, tmp_path):
         update_key=["k"],
     )
     assert is_partitioned_by(store, "t", "sp")
-    store.compact("t")
-    assert is_partitioned_by(store, "t", "sp")
-    store.forget_keys("t", spark.createDataFrame([(5,)], "k long"), ["k"])
-    assert is_partitioned_by(store, "t", "sp")
     got = {r.k: r.sp for r in store.read("t").collect()}
-    assert len(got) == 19 and 5 not in got and got[4] == 2
+    assert len(got) == 20 and got[4] == 2
 
 
 def test_sliding_counts_batch(spark):
@@ -209,23 +204,6 @@ def test_vacuum_keeps_current_and_n_newest(spark, tmp_path):
     assert store.vacuum("t", keep=2) == []  # idempotent
 
 
-def test_compact_rewrites_small_files_and_publishes(spark, tmp_path):
-    from ortholog_pipeline_spark.sources.state import StateStore
-
-    store = StateStore(spark, str(tmp_path))
-    # 32-way write of a tiny frame -> many small files
-    df = spark.range(1000).withColumnRenamed("id", "k").repartition(32)
-    store.write("t", df)
-    import glob
-    v0_files = glob.glob(str(tmp_path / "t" / "v=0" / "*.parquet"))
-    assert len(v0_files) > 8
-    v = store.compact("t")
-    assert v == 1 and store.current_version("t") == 1
-    v1_files = glob.glob(str(tmp_path / "t" / "v=1" / "*.parquet"))
-    assert len(v1_files) == 1  # tiny snapshot -> one right-sized file
-    assert store.read("t").count() == 1000
-
-
 def test_time_travel_read_and_history(spark, tmp_path):
     """Every retained version stays readable by number; history lists them
     oldest-first with the current flag; vacuumed versions raise."""
@@ -252,51 +230,6 @@ def test_time_travel_read_and_history(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         store.read("t", version=0)
     assert store.read("t", version=2).count() == 6
-
-
-def test_apply_changes_schema_evolution(spark, tmp_path):
-    """evolve_schema=True admits inserts with a NEW column: old rows read NULL
-    for it, and the evolved schema persists; without the flag the new column
-    is dropped by the align-to-current projection."""
-    from pyspark.sql import functions as F
-
-    from ortholog_pipeline_spark.sources.state import StateStore
-
-    store = StateStore(spark, str(tmp_path / "ev"))
-    store.write("t", spark.range(2).select(F.col("id").alias("k")))
-    newrows = spark.range(2, 4).select(
-        F.col("id").alias("k"), F.lit("x").alias("tag")
-    )
-    store.apply_changes("t", inserts=newrows, evolve_schema=True)
-    got = store.read("t")
-    assert set(got.columns) == {"k", "tag"}
-    vals = {r.k: r.tag for r in got.collect()}
-    assert vals[0] is None and vals[2] == "x"
-
-
-def test_forget_keys_erases_history(spark, tmp_path):
-    """Right-to-be-forgotten: the subject's rows leave the current snapshot
-    AND every retained time-travel version; the audit reports zero residual."""
-    from pyspark.sql import Row
-
-    store = StateStore(spark, str(tmp_path / "state"))
-    rows = [Row(user_id=i, payload=f"p{i}") for i in range(10)]
-    store.write("profiles", spark.createDataFrame(rows))
-    # a second version so history exists
-    store.apply_changes(
-        "profiles",
-        inserts=spark.createDataFrame([Row(user_id=99, payload="p99")]),
-    )
-    assert store.read("profiles").count() == 11
-
-    doomed = spark.createDataFrame([Row(user_id=3), Row(user_id=99)])
-    audit = store.forget_keys("profiles", doomed, ["user_id"])
-    assert audit["rows_removed"] == 2
-    assert audit["residual_rows"] == 0
-    left = {r.user_id for r in store.read("profiles").collect()}
-    assert 3 not in left and 99 not in left and len(left) == 9
-    # older versions that contained the subject are gone from disk
-    assert audit["versions_purged"], "history must be truncated"
 
 
 def test_append_only_fast_path_links_old_files(spark, tmp_path):

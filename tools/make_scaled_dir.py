@@ -5,15 +5,17 @@ scaled parquet files, so the Spark-vs-DuckDB comparison stays exact at any
 scale — this lifts the "correctness sweeps are bounded by the largest
 generated sf" limit noted in VERDICT r2.
 
-Replication mirrors bench.py's scaling-probe formulas (the shapes chosen there
-to isolate volume growth rather than manufacture pathologies):
+Replication uses the rotation set of `tools/probes.py` (the shapes bench's
+10x probes use, chosen to isolate volume growth rather than manufacture
+pathologies):
 
 - every table key is offset by i*10_000_000 per replica i, and FOREIGN keys get
   the same offset, so joins stay within a replica (referential integrity);
 - c_name / s_name get a per-replica 2-char tag differing in two positions — no
   cross-replica edit-distance-1 pairs, per-replica ER pair density unchanged;
-- document text is word-rotated per replica — rotated texts share almost no
-  trigram shingles, near-dup density stays that of the original corpus;
+- document text is word-rotated per replica — a doc and its rotations share
+  ~95% of their trigram shingles, so every doc forms a near-dup clique
+  across replicas;
 - embeddings are component-rotated per replica — norms and neighborhood
   structure preserved, different LSH buckets;
 - events keep their timestamps (10x density per window, same window set) but
@@ -35,183 +37,30 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from ortholog_pipeline_spark.queries import _t  # noqa: E402
 from ortholog_pipeline_spark.session import get_spark  # noqa: E402
+from tools import probes as P  # noqa: E402
 
-OFF = 10_000_000
-
-
-def _union(parts):
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+#: each table's replica variant; nation and region are dimensions, copied as-is
+VARIANTS = {
+    "customer": P.tagged("c_custkey", "c_name"),
+    "supplier": P.tagged("s_suppkey", "s_name"),
+    "part": P.offset("p_partkey"),
+    "orders": P.offset("o_orderkey", "o_custkey"),
+    "lineitem": P.offset("l_orderkey", "l_partkey", "l_suppkey"),
+    "events": P.offset("event_id", "user_id"),  # _t normalizes NANOS ts
+    "documents": P.rotated_words,
+    "embeddings": P.rotated_components,
+}
 
 
 def replicate(spark, src: str, dst: str, replicas: int = 10) -> None:
     os.makedirs(dst, exist_ok=True)
-
-    def write(name, df):
-        df.write.mode("overwrite").parquet(os.path.join(dst, f"{name}.parquet"))
-
-    # dims copy as-is
-    for t in ("nation", "region"):
-        write(t, _t(spark, src, t))
-
-    cust = _t(spark, src, "customer")
-    write(
-        "customer",
-        _union(
-            [cust]
-            + [
-                cust.select(
-                    (F.col("c_custkey") + i * OFF).alias("c_custkey"),
-                    F.concat(
-                        F.lit(chr(97 + i) * 2 + "~"), F.col("c_name")
-                    ).alias("c_name"),
-                    "c_nationkey",
-                    "c_acctbal",
-                    "c_mktsegment",
-                )
-                for i in range(1, replicas)
-            ]
-        ),
-    )
-
-    supp = _t(spark, src, "supplier")
-    write(
-        "supplier",
-        _union(
-            [supp]
-            + [
-                supp.select(
-                    (F.col("s_suppkey") + i * OFF).alias("s_suppkey"),
-                    F.concat(
-                        F.lit(chr(97 + i) * 2 + "~"), F.col("s_name")
-                    ).alias("s_name"),
-                    "s_nationkey",
-                    "s_acctbal",
-                )
-                for i in range(1, replicas)
-            ]
-        ),
-    )
-
-    part = _t(spark, src, "part")
-    write(
-        "part",
-        _union(
-            [part]
-            + [
-                part.select(
-                    (F.col("p_partkey") + i * OFF).alias("p_partkey"),
-                    "p_name",
-                    "p_brand",
-                    "p_type",
-                    "p_size",
-                    "p_retailprice",
-                )
-                for i in range(1, replicas)
-            ]
-        ),
-    )
-
-    orders = _t(spark, src, "orders")
-    write(
-        "orders",
-        _union(
-            [orders]
-            + [
-                orders.select(
-                    (F.col("o_orderkey") + i * OFF).alias("o_orderkey"),
-                    (F.col("o_custkey") + i * OFF).alias("o_custkey"),
-                    "o_orderstatus",
-                    "o_totalprice",
-                    "o_orderdate",
-                    "o_orderpriority",
-                )
-                for i in range(1, replicas)
-            ]
-        ),
-    )
-
-    li = _t(spark, src, "lineitem")
-    write(
-        "lineitem",
-        _union(
-            [li]
-            + [
-                li.select(
-                    (F.col("l_orderkey") + i * OFF).alias("l_orderkey"),
-                    (F.col("l_partkey") + i * OFF).alias("l_partkey"),
-                    (F.col("l_suppkey") + i * OFF).alias("l_suppkey"),
-                    "l_linenumber",
-                    "l_quantity",
-                    "l_extendedprice",
-                    "l_discount",
-                    "l_tax",
-                    "l_returnflag",
-                    "l_linestatus",
-                    "l_shipdate",
-                )
-                for i in range(1, replicas)
-            ]
-        ),
-    )
-
-    ev = _t(spark, src, "events")  # normalizes NANOS -> session timestamps
-    write(
-        "events",
-        _union(
-            [ev]
-            + [
-                ev.select(
-                    (F.col("event_id") + i * OFF).alias("event_id"),
-                    "ts",
-                    (F.col("user_id") + i * OFF).alias("user_id"),
-                    "event_type",
-                    "value",
-                    "props",
-                )
-                for i in range(1, replicas)
-            ]
-        ),
-    )
-
-    docs = _t(spark, src, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    dparts = [docs]
-    for i in range(1, replicas):
-        rotated = F.array_join(
-            F.concat(F.slice(toks, i + 1, 1 << 20), F.slice(toks, 1, i)), " "
-        )
-        dparts.append(
-            docs.select(
-                (F.col("doc_id") + i * OFF).alias("doc_id"),
-                rotated.alias("text"),
-                "lang",
-                "source",
-                F.length(rotated).alias("n_chars"),
-            )
-        )
-    write("documents", _union(dparts))
-
-    emb = _t(spark, src, "embeddings")
-    eparts = [emb]
-    for i in range(1, replicas):
-        rotated = F.concat(
-            F.slice("embedding", i + 1, 1 << 20), F.slice("embedding", 1, i)
-        )
-        eparts.append(
-            emb.select(
-                (F.col("vec_id") + i * OFF).alias("vec_id"),
-                rotated.alias("embedding"),
-                "label",
-            )
-        )
-    write("embeddings", _union(eparts))
+    for t in ("nation", "region", *VARIANTS):
+        df = _t(spark, src, t)
+        if t in VARIANTS:
+            df = P.replicate(df, replicas, VARIANTS[t])
+        df.write.mode("overwrite").parquet(os.path.join(dst, f"{t}.parquet"))
 
 
 def main() -> None:

@@ -13,33 +13,14 @@ two growth ratios are like-for-like.
 Replica construction — the bench rotation scheme does NOT survive 100
 replicas (documents are 10-99 tokens: rotation by i >= n_tokens aliases to an
 EXACT copy, and even rotation-by-1 keeps ~95% trigram overlap), so this tool
-uses constructions that are regime-preserving at ANY replica count:
-
-- documents: every token gets a per-replica fixed-width suffix ("07z").
-  A uniform token bijection preserves shingle EQUALITY within a replica, so
-  per-replica TRUE near-dup pair structure is EXACTLY that of the original
-  corpus; cross-replica shingle overlap is zero (the synthetic vocabulary is
-  alphabetic, suffixed tokens collide with nothing). The REPORTED pair count
-  is banded-LSH catch, a per-replica probabilistic draw over the rehashed
-  shingles, so it is checked against R * n_pairs(1) within 10% (the
-  per-replica catch variance averages out across replicas) and the result is
-  recorded as `linearity_ok` rather than raised mid-run.
-- embeddings: per-replica deterministic sign-flip pattern. cos(Dx, Dy) =
-  cos(x, y) for any diagonal +-1 matrix D, so intra-replica neighborhoods are
-  exactly preserved (brute-force top-k per replica is the original's, id-
-  shifted) while replicas land in different hyperplane-LSH buckets. Unlike
-  component rotation this cannot alias (rotation by i >= dim=64 is identity).
-- customer: names prefixed with a doubled-decimal tag (str(i//10)*2 +
-  str(i%10)*2 + "~"): any two distinct tags differ in >= 2 positions, so no
-  cross-replica edit-distance-1 pairs exist and per-replica FastSS pair
-  density stays that of the original (same guarantee the 2-letter bench tags
-  give, extended past 26 replicas).
-- species-flow relations: evidence-variant replicas (per-replica
-  data_set_name tag), the same construction bench.py uses — the A2
-  dedup-merge does real token-union work instead of collapsing for free.
-  The 100-way union is MATERIALIZED to parquet before the timed flow run
-  (the k-core lesson: a wide lazy union inside a deep DAG explodes Catalyst
-  constraint propagation).
+uses the alias-safe set of `tools/probes.py` (token suffixes, sign flips,
+doubled-decimal tags), regime-preserving at ANY replica count. The REPORTED
+MinHash pair count is banded-LSH catch, a per-replica probabilistic draw over
+the rehashed shingles, so it is checked against R * n_pairs(1) within 10% and
+recorded as `linearity_ok` rather than raised mid-run. The flows replicate
+their inputs as bench does (evidence / algorithms tags), MATERIALIZED to
+parquet before each timed run (a wide lazy union inside a deep DAG explodes
+Catalyst constraint propagation).
 
 Skew leg: the CC star probe (10% of edges re-pointed at node 0) scales
 linearly and runs at the full 100x corpus. The MinHash hot-bucket leg plants
@@ -50,8 +31,9 @@ the pair-list semantics, not of the implementation — so holding the cluster
 size constant isolates what the probe is for: skewed-shuffle handling.
 
 Emits SF10_PROBES.json at the repo root: wall times per scale, growth
-ratios, pair/cluster counts, quality floors AT the 100x dir, skew ratio,
-git HEAD, elapsed. Run:
+ratios, pair/cluster counts, quality floors AT the 100x dir, skew ratio, the
+extra-decade AGR leg's spill (read from the session's event log after it
+stops), git HEAD, elapsed. Run:
 
     python tools/sf10_probes.py            # ~15-25 min end to end
     python tools/sf10_probes.py --replicas 10 --dir /tmp/sf10x_smoke
@@ -66,17 +48,26 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
+import shutil
 import sys
 import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
+import eventlog  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-OFF = 10_000_000
+from ortholog_pipeline_spark.oracle import git_head  # noqa: E402
+from tools import probes as P  # noqa: E402
+from tools.probes import (  # noqa: E402
+    OFF,
+    signflip_embeddings,
+    suffixed_documents,
+    tagged_customers,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -137,9 +128,7 @@ def floors(spark, sf_dir: str) -> dict:
     if truth:
         found = {
             (r.id_1, r.id_2)
-            for r in DD.minhash_lsh_dedup(
-                docs, k=3, num_hashes=16, bands=4, threshold=0.5
-            )
+            for r in P.lsh_pairs(docs)
             .filter(F.col("id_1") % 97 == 0)
             .select("id_1", "id_2")
             .collect()
@@ -152,79 +141,6 @@ def floors(spark, sf_dir: str) -> dict:
         ),
         "n_true_pairs": len(truth),
     }
-
-
-# ---------------------------------------------------------------------------
-# Regime-preserving replica constructions (safe at any replica count <= 100).
-# ---------------------------------------------------------------------------
-
-def suffixed_documents(spark, src: str, replicas: int):
-    """Per-replica token-suffix variants: exact intra-replica pair structure,
-    zero cross-replica shingle overlap (see module docstring)."""
-    docs = spark.read.parquet(f"{src}/documents.parquet").select("doc_id", "text")
-    parts = [docs]
-    for i in range(1, replicas):
-        suffixed = F.regexp_replace("text", r"(\S+)", rf"$1{i:02d}z")
-        parts.append(
-            docs.select(
-                (F.col("doc_id") + i * OFF).alias("doc_id"),
-                suffixed.alias("text"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def signflip_embeddings(spark, src: str, replicas: int):
-    """Per-replica deterministic sign flips: intra-replica cosines exactly
-    preserved, replicas scattered across hyperplane-LSH buckets."""
-    emb = spark.read.parquet(f"{src}/embeddings.parquet")
-    elem_type = emb.schema["embedding"].dataType.simpleString()
-    def _flip(i: int):
-        return lambda x, j: x * F.when(
-            ((F.lit(i * 2654435761) + j * 40503) % 97) % 2 == 0, F.lit(1.0)
-        ).otherwise(F.lit(-1.0))
-
-    parts = [emb.select("vec_id", "embedding", "label")]
-    for i in range(1, replicas):
-        flipped = F.transform("embedding", _flip(i)).cast(elem_type)
-        parts.append(
-            emb.select(
-                (F.col("vec_id") + i * OFF).alias("vec_id"),
-                flipped.alias("embedding"),
-                "label",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def tagged_customers(spark, src: str, replicas: int):
-    """Doubled-decimal name tags: pairwise tag edit distance >= 2, so the
-    FastSS/ER pair set is exactly per-replica."""
-    cust = spark.read.parquet(f"{src}/customer.parquet").select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
-    )
-    parts = [cust]
-    for i in range(1, replicas):
-        tag = str(i // 10) * 2 + str(i % 10) * 2 + "~"
-        parts.append(
-            cust.select(
-                (F.col("c_custkey") + i * OFF).alias("c_custkey"),
-                F.concat(F.lit(tag), F.col("c_name")).alias("c_name"),
-                "c_nationkey",
-                "c_acctbal",
-                "c_mktsegment",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def build_dir(spark, src: str, dst: str, replicas: int) -> None:
@@ -243,39 +159,6 @@ def build_dir(spark, src: str, dst: str, replicas: int) -> None:
 # ---------------------------------------------------------------------------
 # Probes
 # ---------------------------------------------------------------------------
-
-def _timed(fn, repeat: int = 2):
-    """min-of-``repeat`` wall time (VERDICT r6 item 7: best-of-2 removes the
-    GC-pause bias the r6 artifact acknowledged in its timing_note — a stray
-    pause on a 100x entry biased growth ratios UP). The returned payload is
-    the first run's (all runs are equal by construction).
-
-    Between runs the finished run's storage is released: operators store
-    frames as lazy checkpoints, whose blocks are freed only after the Python
-    references die and the ContextCleaner processes them, and the 100x ER
-    probe's SECOND run otherwise OOMs on the first run's accumulated blocks
-    (measured: UNABLE_TO_ACQUIRE_MEMORY in stage-1493 aggregation at 100x
-    customers). gc + JVM gc + a short cleaner drain bound the resident set at
-    one run's worth."""
-    import gc
-
-    from pyspark.sql import SparkSession
-
-    best, out = float("inf"), None
-    for i in range(repeat):
-        t0 = time.perf_counter()
-        r = fn()
-        best = min(best, time.perf_counter() - t0)
-        if i == 0:
-            out = r
-        gc.collect()
-        s = SparkSession.getActiveSession()
-        if s is not None:
-            s.sparkContext._jvm.System.gc()
-        if i + 1 < repeat:
-            time.sleep(2)  # let the async ContextCleaner drain
-    return round(best, 2), out
-
 
 def decontam_count(docs, fixed_eval: bool) -> int:
     """The decontamination probe plan — same shape as
@@ -314,90 +197,55 @@ def decontam_count(docs, fixed_eval: bool) -> int:
     return tot.join(hit, "doc_id").count()
 
 
-def _docs_at(spark, src: str, dir100: str, scale: int, replicas: int):
+def _at(spark, src: str, dir100: str, scale: int, replicas: int, table: str, build):
+    """``table`` at ``scale``: the materialized dir at the full replica count,
+    else built from ``src``."""
     if scale == replicas:
-        return spark.read.parquet(f"{dir100}/documents.parquet")
-    if scale == 1:
-        return spark.read.parquet(f"{src}/documents.parquet").select("doc_id", "text")
-    return suffixed_documents(spark, src, scale)
+        return spark.read.parquet(f"{dir100}/{table}.parquet")
+    return build(spark, src, scale)
 
 
-def _cust_at(spark, src: str, dir100: str, scale: int, replicas: int):
-    if scale == replicas:
-        return spark.read.parquet(f"{dir100}/customer.parquet")
-    if scale == 1:
-        return spark.read.parquet(f"{src}/customer.parquet")
-    return tagged_customers(spark, src, scale)
+def _stored(spark, df, path: str):
+    """``df`` written to ``path`` and read back: the timed flows read stored
+    replicas, never a wide lazy union."""
+    df.write.parquet(path)
+    return spark.read.parquet(path)
 
 
 def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
                skip_flow: bool = False) -> dict:
     from ortholog_pipeline_spark.operators import components as CC
-    from ortholog_pipeline_spark.operators import dedup as DD
 
     out: dict = {"times": {}, "counts": {}}
 
+    def timed(key: str, fn, count_key: str | None = None) -> None:
+        sec, n, _ = P.best_of(spark, fn)
+        out["times"][key] = sec
+        if count_key:
+            out["counts"][count_key] = n
+
     # warmup (untimed): JVM + codegen + parquet footers, so the 1x entries —
     # the denominators of every growth ratio — aren't billed for startup
-    warm = _docs_at(spark, src, dir100, 1, replicas)
-    DD.minhash_lsh_dedup(warm, k=3, num_hashes=16, bands=4, threshold=0.5).count()
+    P.lsh_pairs(suffixed_documents(spark, src, 1)).count()
 
     for s in scales:
-        docs = _docs_at(spark, src, dir100, s, replicas)
-        sec, n_pairs = _timed(
-            lambda: DD.minhash_lsh_dedup(
-                docs, k=3, num_hashes=16, bands=4, threshold=0.5
-            ).count()
+        docs = _at(spark, src, dir100, s, replicas, "documents", suffixed_documents)
+        timed(f"minhash_{s}x", lambda: P.lsh_pairs(docs).count(), f"minhash_pairs_{s}x")
+        timed(
+            f"cluster_assign_{s}x",
+            lambda: CC.dedup_clusters(docs, P.lsh_pairs(docs).select("id_1", "id_2")).count(),
+            f"cluster_rows_{s}x",
         )
-        out["times"][f"minhash_{s}x"] = sec
-        out["counts"][f"minhash_pairs_{s}x"] = n_pairs
+        cust = _at(spark, src, dir100, s, replicas, "customer", tagged_customers)
+        timed(f"er_{s}x", lambda: P.er_clusters(cust), f"er_clusters_{s}x")
 
-        sec, n_comp = _timed(
-            lambda: CC.dedup_clusters(
-                docs,
-                DD.minhash_lsh_dedup(
-                    docs, k=3, num_hashes=16, bands=4, threshold=0.5
-                ).select("id_1", "id_2"),
-            ).count()
-        )
-        out["times"][f"cluster_assign_{s}x"] = sec
-        out["counts"][f"cluster_rows_{s}x"] = n_comp
-
-        cust = _cust_at(spark, src, dir100, s, replicas)
-
-        def _er():
-            pairs = DD.editdist1_join(cust, "c_name", block_cols=["c_nationkey"])
-            m1 = cust.select(
-                F.col("c_name").alias("s1"), F.col("c_custkey").alias("k1"),
-                "c_nationkey",
-            )
-            m2 = cust.select(
-                F.col("c_name").alias("s2"), F.col("c_custkey").alias("k2"),
-                "c_nationkey",
-            )
-            edges = (
-                pairs.join(m1, ["s1", "c_nationkey"])
-                .join(m2, ["s2", "c_nationkey"])
-                .select(
-                    F.least("k1", "k2").alias("id_1"),
-                    F.greatest("k1", "k2").alias("id_2"),
-                )
-            )
-            return (
-                CC.connected_components(edges).groupBy("component").count().count()
-            )
-
-        sec, n_cl = _timed(_er)
-        out["times"][f"er_{s}x"] = sec
-        out["counts"][f"er_clusters_{s}x"] = n_cl
-
-        # benchmark decontamination (VERDICT r6 item 7) — same plan as
+        # benchmark decontamination — same plan as
         # queries/text.py:text_decontaminate_ngrams: distinct word 4-grams,
         # eval suite = doc_id % 97, BROADCAST eval-gram semi-probe over the
         # training grams. Under the suffix construction eval grams only match
         # train docs of the SAME replica (suffixed tokens collide with
         # nothing), so the matched-doc workload grows exactly linearly.
-        # Two eval-suite regimes (r8, VERDICT r7 ask 5):
+        # Two eval-suite regimes:
         #   * growing: eval docs drawn across ALL replicas — eval-gram
         #     broadcast grows linearly with the corpus (the synthetic
         #     worst case; this is the family whose last-decade ratio the
@@ -406,15 +254,12 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
         #     broadcast, the PRODUCTION regime (a benchmark suite does not
         #     grow because the training corpus did), isolating the pure
         #     scan-proportional component.
-        def _decontam(fixed_eval: bool):
-            return lambda: decontam_count(docs, fixed_eval)
-
-        sec, n_hit = _timed(_decontam(False))
-        out["times"][f"decontam_{s}x"] = sec
-        out["counts"][f"decontam_hits_{s}x"] = n_hit
-        sec, n_hit = _timed(_decontam(True))
-        out["times"][f"decontam_fixed_eval_{s}x"] = sec
-        out["counts"][f"decontam_fixed_eval_hits_{s}x"] = n_hit
+        timed(f"decontam_{s}x", lambda: decontam_count(docs, False), f"decontam_hits_{s}x")
+        timed(
+            f"decontam_fixed_eval_{s}x",
+            lambda: decontam_count(docs, True),
+            f"decontam_fixed_eval_hits_{s}x",
+        )
 
     # linear-regime check: TRUE pairs grow exactly linearly under the suffix
     # construction; REPORTED pairs are per-replica banded-LSH catches, so a
@@ -435,118 +280,39 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
                 )
     out["linearity_ok"] = lin_ok
 
-    # species-flow plan at each scale: evidence-variant relation replicas,
-    # MATERIALIZED before the timed run; store seeded outside the timing
+    # both flows at each scale on stored replicas, each run on a freshly
+    # cloned store; one untimed run first so the 1x ratio denominator isn't
+    # billed for the flow DAG's first-use codegen
     if not skip_flow:
-        from ortholog_pipeline_spark.plans.species_load import run_species_load
-        from ortholog_pipeline_spark.queries_flows import (
-            RUN_TS,
-            _seed_store,
-            _species_world,
-        )
+        from ortholog_pipeline_spark.queries_flows import _agr_world, _species_world
 
-        world = _species_world(spark, src)
-        rel1 = world["relations"]
-        # warmup (untimed): one full flow run, so the 1x ratio denominator
-        # isn't billed for the flow DAG's first-use codegen
-        run_species_load(
-            _seed_store(spark, world, "sf10_flow_", cache_key=f"sf10_species:{src}"),
-            rel1, RUN_TS, 3, delete_threshold_pct=95.0,
-        )
-        with tempfile.TemporaryDirectory(prefix="sf10_rel_") as td:
-            for s in scales:
-                parts = [rel1] + [
-                    rel1.withColumn(
-                        "data_set_name",
-                        F.concat(F.col("data_set_name"), F.lit(f", T{i}")),
-                    )
-                    for i in range(1, s)
-                ]
-                rel = parts[0]
-                for p in parts[1:]:
-                    rel = rel.unionByName(p)
-                path = os.path.join(td, f"rel{s}x")
-                rel.write.parquet(path)
-                stored = spark.read.parquet(path)
-
-                def _flow_run():
-                    # reseed per measurement (hardlink clone, metadata-only
-                    # ms): the flow mutates snapshot state, so best-of-2 must
-                    # start each run from the identical before-state
-                    st = _seed_store(
-                        spark, world, "sf10_flow_", cache_key=f"sf10_species:{src}"
-                    )
-                    run_species_load(
-                        st, stored, RUN_TS, 3, delete_threshold_pct=95.0
-                    )
-
-                sec, _ = _timed(_flow_run)
-                out["times"][f"flow_species_{s}x"] = sec
-
-        # AGR upsert flow (VERDICT r6 item 7): replicas tag `algorithms`, so
-        # methods_matched — part of the 3-col upsert key — differs per
-        # replica: the incoming key space, the full-outer verdict join, and
-        # the snapshot write all really grow with scale (the adversarial
-        # case for an upsert flow; same construction as bench.py's 10x
-        # probe, extended to 100x). Lines are MATERIALIZED before the timed
-        # run, store reseeded per measurement.
-        from ortholog_pipeline_spark.plans.agr_load import run_agr_load
-        from ortholog_pipeline_spark.queries_flows import _agr_world
-
-        aworld = _agr_world(spark, src)
-        al1 = aworld["lines"]
-        run_agr_load(
-            _seed_store(spark, aworld, "sf10_agr_", cache_key=f"sf10_agr:{src}"),
-            al1, RUN_TS, delete_threshold_pct=100.0,
-        )  # warmup (untimed): flow DAG first-use codegen
-        with tempfile.TemporaryDirectory(prefix="sf10_agr_") as td:
-            for s in scales:
-                parts = [al1] + [
-                    al1.withColumn(
-                        "algorithms",
-                        F.concat(F.col("algorithms"), F.lit(f"|X{i}")),
-                    )
-                    for i in range(1, s)
-                ]
-                lines = parts[0]
-                for p in parts[1:]:
-                    lines = lines.unionByName(p)
-                path = os.path.join(td, f"lines{s}x")
-                lines.write.parquet(path)
-                stored_lines = spark.read.parquet(path)
-
-                def _agr_run():
-                    st = _seed_store(
-                        spark, aworld, "sf10_agr_", cache_key=f"sf10_agr:{src}"
-                    )
-                    run_agr_load(
-                        st, stored_lines, RUN_TS, delete_threshold_pct=100.0
-                    )
-
-                sec, _ = _timed(_agr_run)
-                out["times"][f"flow_agr_{s}x"] = sec
+        for world, key, variant, flow, name in (
+            (_species_world(spark, src), "relations", P.evidence_tagged, P.species_flow, "flow_species"),
+            (_agr_world(spark, src), "lines", P.algorithms_tagged, P.agr_flow, "flow_agr"),
+        ):
+            flow(spark, world, world[key], "sf10", src)()
+            with tempfile.TemporaryDirectory(prefix="sf10_flow_") as td:
+                for s in scales:
+                    rows = _stored(spark, P.replicate(world[key], s, variant), f"{td}/{key}{s}x")
+                    timed(f"{name}_{s}x", flow(spark, world, rows, "sf10", src))
 
     # skew legs at the biggest scale: CC star (linear) at full fraction;
     # MinHash hot bucket as a FIXED 500-doc identical cluster (constant
     # absolute hot-bucket load — see module docstring for why fractional
     # hot clusters are output-quadratic by semantics)
     top = max(scales)
-    docs_top = _docs_at(spark, src, dir100, top, replicas)
-    hot_text = " ".join(f"hotword{i % 17} filler{i % 5}" for i in range(40))
-    docs_hot = docs_top.withColumn(
-        "text",
-        F.when(F.col("doc_id") % OFF < 5, F.lit(hot_text)).otherwise(F.col("text")),
-    )
+    docs_top = _at(spark, src, dir100, top, replicas, "documents", suffixed_documents)
 
-    def _skew_minhash(d):
-        return lambda: DD.minhash_lsh_dedup(
-            d, k=3, num_hashes=16, bands=4, threshold=0.5
-        ).count()
+    def planted(docs, per_replica: int):
+        return docs.withColumn(
+            "text",
+            F.when(F.col("doc_id") % OFF < per_replica, F.lit(P.HOT_TEXT)).otherwise(F.col("text")),
+        )
 
-    sec_u, _ = _timed(_skew_minhash(docs_top))
-    sec_h, _ = _timed(_skew_minhash(docs_hot))
-    out["times"][f"skew_minhash_uniform_{top}x"] = sec_u
-    out["times"][f"skew_minhash_hot500_{top}x"] = sec_h
+    timed(f"skew_minhash_uniform_{top}x", lambda: P.lsh_pairs(docs_top).count())
+    docs_hot = planted(docs_top, 5)
+    timed(f"skew_minhash_hot500_{top}x", lambda: P.lsh_pairs(docs_hot).count())
+    sec_u, sec_h = (out["times"][f"skew_minhash_{k}_{top}x"] for k in ("uniform", "hot500"))
     out["skew_minhash_ratio"] = round(sec_h / sec_u, 2) if sec_u else None
 
     # duplicate-heavy twins: the full pipeline with and without
@@ -560,71 +326,30 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
     # uncollapsed one. One untimed collapse run over the 1x corpus first, so
     # the first timed collapse_exact leg is not billed for its codegen/JIT
     # warm-up.
-    docs_warm = (
-        spark.read.parquet(f"{src}/documents.parquet")
-        .select("doc_id", "text")
-        .withColumn(
-            "text",
-            F.when(F.col("doc_id") % OFF < 50, F.lit(hot_text)).otherwise(
-                F.col("text")
-            ),
-        )
-    )
-    DD.minhash_lsh_dedup(
-        docs_warm, k=3, num_hashes=16, bands=4, threshold=0.5, collapse_exact=True
-    ).count()
-
-    docs_big = docs_top.withColumn(
-        "text",
-        F.when(F.col("doc_id") % OFF < 200, F.lit(hot_text)).otherwise(
-            F.col("text")
-        ),
-    )
+    P.lsh_pairs(planted(suffixed_documents(spark, src, 1), 50), collapse_exact=True).count()
+    docs_big = planted(docs_top, 200)
     for collapse in (False, True):
-        sec, n = _timed(
-            lambda: DD.minhash_lsh_dedup(
-                docs_big, k=3, num_hashes=16, bands=4, threshold=0.5,
-                collapse_exact=collapse,
-            ).count()
-        )
         key = "collapsed" if collapse else "uncollapsed"
-        out["times"][f"dupheavy_g20k_{key}_full_{top}x"] = sec
-        out["counts"][f"dupheavy_g20k_pairs_{key}_{top}x"] = n
+        timed(
+            f"dupheavy_g20k_{key}_full_{top}x",
+            lambda: P.lsh_pairs(docs_big, collapse_exact=collapse).count(),
+            f"dupheavy_g20k_pairs_{key}_{top}x",
+        )
 
-    edges = (
-        spark.read.parquet(f"{src}/lineitem.parquet")
-        .select(
-            (F.col("l_orderkey") % 50021).alias("u"),
-            (F.col("l_partkey") % 50021 + 50021).alias("v"),
-        )
-    )
-    reps = [edges] + [
-        edges.select(
-            (F.col("u") + i * 100043).alias("u"), (F.col("v") + i * 100043).alias("v")
-        )
-        for i in range(1, top)
-    ]
-    e_top = reps[0]
-    for r in reps[1:]:
-        e_top = e_top.unionByName(r)
+    edges = spark.read.parquet(f"{src}/lineitem.parquet")
+    e_top = P.replicate(P.cc_edges(edges), top, P.offset("u", "v", step=100043))
     with tempfile.TemporaryDirectory(prefix="sf10_cc_") as td:
         for hot in (False, True):
-            e = e_top
-            if hot:
-                e = e.withColumn(
-                    "u", F.when(F.col("v") % 10 == 0, F.lit(0)).otherwise(F.col("u"))
-                )
-            path = os.path.join(td, f"edges_{hot}")
-            e.filter(F.col("u") != F.col("v")).distinct().write.parquet(path)
-            stored = spark.read.parquet(path)
-            sec, _ = _timed(
+            e = P.star(e_top) if hot else e_top
+            stored = _stored(
+                spark, e.filter(F.col("u") != F.col("v")).distinct(), f"{td}/edges_{hot}"
+            )
+            timed(
+                f"skew_cc_{'hot' if hot else 'uniform'}_{top}x",
                 lambda: CC.connected_components(
                     stored.withColumnsRenamed({"u": "id_1", "v": "id_2"})
-                ).count()
+                ).count(),
             )
-            out["times"][
-                f"skew_cc_{'hot' if hot else 'uniform'}_{top}x"
-            ] = sec
     u, h = (
         out["times"][f"skew_cc_uniform_{top}x"],
         out["times"][f"skew_cc_hot_{top}x"],
@@ -635,124 +360,61 @@ def run_probes(spark, src: str, dir100: str, replicas: int, scales: list[int],
 
 def extra_growth_decade(spark, src: str, extra: int, times: dict,
                         skip_flow: bool = False) -> dict:
-    """One more decade for the two INPUT-GROWTH families (VERDICT r8 ask 7):
-    decontamination is input-linear by law and the AGR flow grows with its
-    upsert key space, so each gets a single ~sf30 point (extra x the sf0.1
-    base) beyond the 1x/10x/100x grid. Cheap by construction — only the
-    documents corpus and the AGR line set scale; nothing else is re-run.
+    """One more decade for the two INPUT-GROWTH families: decontamination is
+    input-linear by law and the AGR flow grows with its upsert key space, so
+    each gets a single ~sf30 point (extra x the sf0.1 base) beyond the
+    1x/10x/100x grid. Cheap by construction — only the documents corpus and
+    the AGR line set scale; nothing else is re-run.
 
     The decontam corpus is MATERIALIZED to parquet first (a 300-branch
     in-memory union would bill Catalyst analysis and a serial generate stage
     to the measurement; cached under /tmp across reruns like the 100x dir).
-    The AGR leg scales shuffle partitions with the data (the cluster rule —
-    partitions grow with input) so the single local JVM's per-task state
-    stays at the 100x leg's level instead of tripling."""
+    The AGR leg runs under the engine's cluster profile and records its
+    epoch-seconds window (``agr_window_at_extra``), whose spill main() reads
+    from the event log once the session has stopped."""
     import hashlib
 
     out: dict = {"extra_scale": extra}
 
-    # cache keyed by SOURCE as well as scale (ADVICE r9: a scale-only key
-    # silently reused another --src's materialized corpus)
+    # cache keyed by SOURCE as well as scale: a scale-only key silently
+    # reused another --src's materialized corpus
     src_tag = hashlib.sha256(os.path.abspath(src).encode()).hexdigest()[:10]
     dpath = f"/tmp/sf{extra}x_docs_{src_tag}"
-    legacy = f"/tmp/sf{extra}x_docs"
-    if not os.path.exists(os.path.join(dpath, "_SUCCESS")) and os.path.exists(
-        os.path.join(legacy, "_SUCCESS")
-    ) and src == "/root/testdata/sf0.1":
-        dpath = legacy  # pre-r10 cache for the default src: still valid
     if not os.path.exists(os.path.join(dpath, "_SUCCESS")):
-        suffixed_documents(spark, src, extra).write.mode("overwrite").parquet(
-            dpath
-        )
+        suffixed_documents(spark, src, extra).write.mode("overwrite").parquet(dpath)
     docs = spark.read.parquet(dpath)
-    sec, n_hit = _timed(lambda: decontam_count(docs, False))
+    sec, n_hit, _ = P.best_of(spark, lambda: decontam_count(docs, False))
     times[f"decontam_{extra}x"] = sec
     out[f"decontam_hits_{extra}x"] = n_hit
 
     if not skip_flow:
-        from ortholog_pipeline_spark.plans.agr_load import run_agr_load
-        from ortholog_pipeline_spark.queries_flows import (
-            RUN_TS,
-            _agr_world,
-            _seed_store,
-        )
+        from ortholog_pipeline_spark.queries_flows import _agr_world
         from ortholog_pipeline_spark.session import cluster_profile_conf
 
         aworld = _agr_world(spark, src)
-        al1 = aworld["lines"]
-        base_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        scaled_parts = max(int(base_parts), 32) * max(1, extra // 100)
-        aqe_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+        scaled_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 32) * max(1, extra // 100)
         with tempfile.TemporaryDirectory(prefix="sf10_agr_extra_") as td:
-            parts = [al1] + [
-                al1.withColumn(
-                    "algorithms",
-                    F.concat(F.col("algorithms"), F.lit(f"|X{i}")),
-                )
-                for i in range(1, extra)
-            ]
-            lines = parts[0]
-            for p in parts[1:]:
-                lines = lines.unionByName(p)
-            path = os.path.join(td, f"lines{extra}x")
-            lines.write.parquet(path)
-            stored_lines = spark.read.parquet(path)
-
-            def _agr_run():
-                st = _seed_store(
-                    spark, aworld, "sf10_agr_", cache_key=f"sf10_agr:{src}"
-                )
-                run_agr_load(
-                    st, stored_lines, RUN_TS, delete_threshold_pct=100.0
-                )
-
-            base_initial = spark.conf.get(aqe_key, None)
-            try:
-                # r11 (VERDICT r10 ask 2): the FITTED extra-decade leg now
-                # runs under the engine's cluster profile (session.
-                # cluster_profile_conf: shuffle.partitions=2000 + AQE
-                # initialPartitionNum=2000, coalesced down per stage) — the
-                # configuration a production run AT this regime uses, and
-                # the one AGR_DIAGNOSIS_r10 measured 19% faster than the
-                # hand-scaled 96 partitions (the finer sort splits away the
-                # straggling spill tail; ~3.5 GiB memoryBytesSpilled remains
-                # an inherent one-JVM effect of 45M keys in 24g — quantified
-                # below via the stage metrics when the UI is reachable).
-                for k, v in cluster_profile_conf().items():
-                    spark.conf.set(k, v)
-                spill_before = _spill_totals(spark)
-                sec, _ = _timed(_agr_run)
-                spill_after = _spill_totals(spark)
-                if spill_before is not None and spill_after is not None:
-                    out["agr_spill_at_extra_mb"] = {
-                        k: round(
-                            (spill_after[k] - spill_before[k]) / 2**20
-                        )
-                        for k in spill_after
-                    }
-                # hand-rule comparison datum (the pre-r11 fitted config:
-                # partitions scaled linearly with the data, no AQE initial
-                # override) — kept so the artifact carries the A/B the
-                # cluster-profile default is justified by.
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(scaled_parts)
-                )
-                if base_initial is None:
-                    spark.conf.unset(aqe_key)
-                else:
-                    spark.conf.set(aqe_key, base_initial)
-                sec_h, _ = _timed(_agr_run, repeat=1)
-                times[f"flow_agr_{extra}x_hand_rule"] = sec_h
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", base_parts)
-                if base_initial is None:
-                    try:
-                        spark.conf.unset(aqe_key)
-                    except Exception:  # noqa: BLE001
-                        pass
-                else:
-                    spark.conf.set(aqe_key, base_initial)
-        times[f"flow_agr_{extra}x"] = sec
+            lines = _stored(
+                spark, P.replicate(aworld["lines"], extra, P.algorithms_tagged), f"{td}/lines{extra}x"
+            )
+            run = P.agr_flow(spark, aworld, lines, "sf10", src)
+            # the FITTED leg runs under the engine's cluster profile
+            # (session.cluster_profile_conf: shuffle.partitions=2000 + AQE
+            # initialPartitionNum=2000, coalesced down per stage) — the
+            # configuration a production run AT this regime uses, measured
+            # 19% faster than the hand-scaled 96 partitions in
+            # AGR_DIAGNOSIS_r10 (the finer sort splits away the straggling
+            # spill tail; the spill that remains is an inherent one-JVM
+            # effect of 45M keys in 24g, quantified from the event log)
+            with P.pinned_conf(spark, cluster_profile_conf()):
+                t0 = time.time()
+                times[f"flow_agr_{extra}x"] = P.best_of(spark, run)[0]
+                out["agr_window_at_extra"] = [t0, time.time()]
+            # hand-rule comparison datum (partitions scaled linearly with the
+            # data, no AQE initial override) — kept so the artifact carries
+            # the A/B the cluster-profile default is justified by
+            with P.pinned_conf(spark, {"spark.sql.shuffle.partitions": str(scaled_parts)}):
+                times[f"flow_agr_{extra}x_hand_rule"] = P.best_of(spark, run, runs=1)[0]
         out["agr_config_at_extra"] = {
             "fitted_leg": {
                 "shuffle_partitions": 2000,
@@ -765,32 +427,6 @@ def extra_growth_decade(spark, src: str, extra: int, times: dict,
                                 "runs": 1},
         }
     return out
-
-
-def _spill_totals(spark) -> dict | None:
-    """Sum spill bytes over all completed stages via the UI REST API (None
-    when the UI is disabled/unreachable — spill then goes unquantified, not
-    wrong)."""
-    import urllib.request
-
-    try:
-        app = spark.sparkContext.applicationId
-        url = (
-            f"http://localhost:4040/api/v1/applications/{app}"
-            "/stages?status=complete"
-        )
-        with urllib.request.urlopen(url, timeout=10) as r:
-            stages = json.loads(r.read())
-        return {
-            "memoryBytesSpilled": sum(
-                int(s.get("memoryBytesSpilled") or 0) for s in stages
-            ),
-            "diskBytesSpilled": sum(
-                int(s.get("diskBytesSpilled") or 0) for s in stages
-            ),
-        }
-    except Exception:  # noqa: BLE001
-        return None
 
 
 def growth_law_fit(times: dict, fam: str, scales: list[int],
@@ -856,12 +492,9 @@ def main() -> int:
 
     from ortholog_pipeline_spark.session import get_spark
 
-    # UI on for the spill quantification of the extra-decade AGR leg
-    # (VERDICT r10 ask 2): the AppStatusListener runs regardless of this
-    # flag, so serving the REST endpoint adds no work to the timed legs.
-    spark = get_spark(
-        app_name="sf10-probes", extra_conf={"spark.ui.enabled": "true"}
-    )
+    # the event log (UI off) quantifies the extra-decade AGR leg's spill
+    log_dir = tempfile.mkdtemp(prefix="sf10_eventlog_")
+    spark = get_spark(app_name="sf10-probes", extra_conf=eventlog.conf(log_dir))
     spark.sparkContext.setLogLevel("ERROR")
     t_all = time.monotonic()
 
@@ -944,9 +577,6 @@ def main() -> int:
                     }
                 ext_fits[fam] = fit
 
-    head = subprocess.run(
-        ["git", "rev-parse", "HEAD"], capture_output=True, text=True, cwd=REPO
-    ).stdout.strip()
     artifact = {
         "src": args.src,
         "dir": args.dir,
@@ -991,14 +621,22 @@ def main() -> int:
         "driver_heap_max_bytes": int(
             spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
         ),
-        "git_head": head,
+        "git_head": git_head(),
         "stages": stages,
         "total_sec": round(time.monotonic() - t_all, 1),
     }
+    cores = spark.sparkContext.defaultParallelism
+    spark.stop()  # closes the event log
+    window = (extra_info or {}).get("agr_window_at_extra")
+    if window:
+        log = eventlog.parse(eventlog.find_log(log_dir))
+        extra_info["agr_spill_at_extra_mb"] = round(
+            eventlog.window(log, *window, cores)["spill_mb"]
+        )
+    shutil.rmtree(log_dir, ignore_errors=True)
     with open(args.out, "w") as f:
         json.dump(artifact, f, indent=1)
     print(json.dumps(artifact, indent=1))
-    spark.stop()
     return 0
 
 
